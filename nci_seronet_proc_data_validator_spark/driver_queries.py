@@ -889,18 +889,6 @@ def q_familiarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     return familiarity_features(docs).orderBy("doc_id")
 
 
-def q_repetition_familiarity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Within-document repetition + corpus-bigram familiarity fused into
-    ONE bigram pass (operators/text_quality.bigram_profile) — profiling a
-    corpus with both signals must not scan the text twice — plus the
-    CCNet head/middle/tail perplexity tercile per language
-    (``text_quality.ccnet_buckets``)."""
-    from nci_seronet_proc_data_validator_spark.operators.text_quality import (
-        ccnet_buckets)
-    docs = read_table(spark, sf_dir, "documents")
-    return ccnet_buckets(docs).orderBy("doc_id")
-
-
 def q_quality_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The per-document curation profile in ONE result row per doc:
     Gopher-style quality gates (``quality_features``) joined with the

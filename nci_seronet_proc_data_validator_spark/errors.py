@@ -104,8 +104,23 @@ def empty_findings(spark: SparkSession) -> DataFrame:
     return local_rows_df(spark, [], FINDING_SCHEMA)
 
 
-def empty_column_findings(spark: SparkSession) -> DataFrame:
-    return local_rows_df(spark, [], COLUMN_FINDING_SCHEMA)
+def sql_string_map(spark: SparkSession, pairs) -> str:
+    """``(key, value)`` string pairs as ONE Spark SQL ``map(...)``
+    literal — per-entry ``F.lit`` Columns cost a py4j round-trip each
+    (2N at an N-submission burst).
+
+    The literals escape backslash and quote with a backslash, which the
+    parser decodes only while ``spark.sql.parser.escapedStringLiterals``
+    is false (the default). Under the legacy setting every escaped key
+    would silently change, so the render refuses instead."""
+    if spark.conf.get("spark.sql.parser.escapedStringLiterals",
+                      "false").lower() != "false":
+        raise ValueError("sql_string_map needs "
+                         "spark.sql.parser.escapedStringLiterals=false")
+
+    def q(s: str) -> str:
+        return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    return "map(" + ", ".join(f"{q(k)}, {q(v)}" for k, v in pairs) + ")"
 
 
 def finding_struct(severity: Column | str, sheet: Column | str,

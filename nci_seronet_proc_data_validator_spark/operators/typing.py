@@ -93,14 +93,6 @@ _DATELIKE = (f"^([0-9]{{1,4}}[-/:]|[0-9]{{1,2}} {_MONTHS}"
              f"|{_MONTHS}[a-z]* [0-9])")
 
 
-def timestamp_shadow(c: Column) -> Column:
-    """TIMESTAMP shadow: float() failed, date parse succeeded, no '_'."""
-    parsed = F.coalesce(*[F.try_to_timestamp(c, F.lit(fmt))
-                          for fmt in _TS_FORMATS])
-    return F.when(~c.contains("_") & c.try_cast("double").isNull()
-                  & c.rlike(_DATELIKE), parsed)
-
-
 def _num_shadow_sql(c: str) -> str:
     """``numeric_shadow`` as Spark-SQL text (identical semantics: CASE with
     a false/null condition yields NULL, same as the guarded ``F.when``)."""
@@ -191,16 +183,3 @@ def with_typed_shadows(df: DataFrame, columns: list[str] | None = None,
         exprs.append(_ts_shadow_sql(c))
     return df.selectExpr("*", *exprs) if exprs else df
 
-
-def is_number(c: str) -> Column:
-    return F.col(num_col(c)).isNotNull()
-
-
-def is_date(c: str) -> Column:
-    return F.col(ts_col(c)).isNotNull()
-
-
-def is_string(c: str) -> Column:
-    """Reference semantics: a cell is a "string" iff convert_data_type left
-    it a string (neither float nor date parsed)."""
-    return F.col(num_col(c)).isNull() & F.col(ts_col(c)).isNull()

@@ -10,16 +10,17 @@ blocking behind the largest one.
 
 Spark-first shape:
 
-- **One session, many scheduler pools.** Each submission validates on
-  its own thread inside the SAME SparkSession, with
-  ``spark.scheduler.pool`` set to a per-submission FAIR pool (the
+- **One session, many scheduler pools.** Each submission (or
+  same-schema group of submissions, :func:`validate_groups`) validates
+  on its own thread inside the SAME SparkSession, with
+  ``spark.scheduler.pool`` set to a per-group FAIR pool (the
   session factory enables FAIR mode). FAIR pools share executor slots
   round-robin, so a 10-sheet submission cannot starve a 1-sheet one;
   under a FIFO scheduler the same code still overlaps jobs, just
   without the fairness guarantee.
 - **Thread-per-submission is driver-side only.** The threads never touch
-  each other's state: ``SubmissionValidator.validate`` registers its
-  temp views under a per-invocation uuid, and all data movement happens
+  each other's state: the compile (:func:`validate_batched`) registers
+  its temp views under a per-invocation uuid, and all data movement happens
   in executor tasks. PySpark's pinned-thread mode maps each Python
   thread to its own JVM thread, so the pool-local property cannot leak
   across submissions.
@@ -31,6 +32,7 @@ Spark-first shape:
 
 from __future__ import annotations
 
+import logging
 import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
@@ -39,17 +41,18 @@ from typing import Any, Callable
 from pyspark.sql import SparkSession
 
 from nci_seronet_proc_data_validator_spark.submission import (
-    SubmissionValidator,
     ValidationResult,
 )
 
 __all__ = ["CBC_COL", "ConcurrentOutcome", "SUB_COL", "validate_batched",
-           "validate_batched_results", "validate_concurrent"]
+           "validate_batched_results", "validate_concurrent",
+           "validate_groups"]
 
 
 @dataclass
 class ConcurrentOutcome:
-    """Per-submission outcome of :func:`validate_concurrent`."""
+    """Per-submission outcome of :func:`validate_groups` (and so of
+    :func:`validate_concurrent`)."""
     result: ValidationResult | None     # None when the submission errored
     materialized: Any                   # return of the materialize hook
     seconds: float                      # wall time inside the worker
@@ -81,54 +84,27 @@ def validate_concurrent(
     ``expected_columns``, ``today``, ... Results are keyed back by the
     same ids.
 
-    ``materialize`` runs INSIDE the worker thread after ``validate()``
-    and must touch the findings (default: severity counts) — Spark plans
-    are lazy, so without an action per thread nothing would actually
-    overlap. A submission that raises is captured in its outcome
-    (``error`` set, ``result`` None) without failing the others — the
-    reference's per-submission retry model, where one bad zip marks its
-    own status row and the batch continues.
+    Each submission is its own group of :func:`validate_groups` — its
+    own compile, on its own worker thread and FAIR pool. ``materialize``
+    runs INSIDE the worker thread after the compile and must touch the
+    findings (default: severity counts) — Spark plans are lazy, so
+    without an action per thread nothing would actually overlap. A
+    submission that raises is captured in its outcome (``error`` set,
+    ``result`` None) without failing the others — the reference's
+    per-submission retry model, where one bad zip marks its own status
+    row and the batch continues.
     """
-    materialize = materialize or _default_materialize
-
-    def _run(item: tuple[str, dict]) -> tuple[str, ConcurrentOutcome]:
-        sub_id, kwargs = item
-        return sub_id, _run_one(spark, sub_id, kwargs, materialize)
-
-    width = max(1, min(max_parallel, len(submissions) or 1))
-    with ThreadPoolExecutor(max_workers=width,
-                            thread_name_prefix="submission") as pool:
-        return dict(pool.map(_run, submissions.items()))
-
-
-def _run_one(spark: SparkSession, sub_id: str, kwargs: dict,
-             materialize: Callable[[ValidationResult], Any]
-             ) -> ConcurrentOutcome:
-    """One submission's worker body. Pool + description are THREAD-LOCAL
-    job properties (pinned thread mode) tagging exactly this submission's
-    jobs; the finally clears them so nothing later on the same thread
-    inherits a submission's pool."""
-    sc = spark.sparkContext
-    t0 = time.time()
-    sc.setLocalProperty("spark.scheduler.pool", f"submission-{sub_id}")
-    sc.setJobDescription(f"validate submission {sub_id}")
-    try:
-        res = SubmissionValidator(spark, **kwargs).validate()
-        mat = materialize(res)
-        return ConcurrentOutcome(
-            result=res, materialized=mat, seconds=time.time() - t0)
-    except Exception as exc:  # noqa: BLE001 — isolate per submission
-        return ConcurrentOutcome(
-            result=None, materialized=None,
-            seconds=time.time() - t0, error=exc)
-    finally:
-        sc.setLocalProperty("spark.scheduler.pool", None)
-        sc.setJobDescription(None)
+    return validate_groups(
+        spark, submissions, [[sid] for sid in submissions],
+        materialize=materialize or _default_materialize,
+        max_parallel=max_parallel)
 
 
 # --------------------------------------------------------------- batched
 SUB_COL = "__submission_id"
 CBC_COL = "__cbc_id"
+
+log = logging.getLogger(__name__)
 
 
 def validate_batched(spark: SparkSession,
@@ -137,85 +113,74 @@ def validate_batched(spark: SparkSession,
                      pinned_out: "list | None" = None,
                      clean_out: "dict | None" = None
                      ) -> "DataFrame":
-    """N same-shape submissions through ONE compiled plan: findings for
-    every submission, tagged ``__submission_id``, from a single
-    spark.sql statement per leg family.
+    """THE rulebook compile: N same-shape submissions (N >= 1) through
+    ONE compiled plan — findings for every submission, tagged
+    ``__submission_id``, from a single spark.sql statement.
 
-    Batched mode tags every sheet row with its submission id, unions
-    same-named sheets, and compiles the rulebook ONCE — driver build is
-    O(distinct sheet schemas) (measured 2.6 s for 8 submissions vs
-    9.8 s of serialized per-submission builds), executor work scales
-    with rows, and the submission count rides along as an ordinary
-    grouping column. The spine joins, dup-ID groupings, enrichment
-    joins, and the dedup key all include the tag, so submissions can
-    never observe each other
+    Every entry mode runs through here: ``SubmissionValidator.validate``
+    is the N=1 batch, the batch CLI and the completion watcher compile
+    one batch per schema group (:func:`validate_groups`). Each sheet's
+    rows are tagged with their submission id, same-named sheets unioned,
+    and the rulebook compiled ONCE — driver build is O(distinct sheet
+    schemas) (measured 2.6 s for 8 submissions vs 9.8 s of serialized
+    per-submission builds), executor work scales with rows, and the
+    submission count rides along as an ordinary grouping column. The
+    spine joins, dup-ID groupings, enrichment joins, and the dedup key
+    all include the tag, so submissions can never observe each other
     (pinned by tests/test_orchestrate.py::test_batched_matches_serial).
 
-    **When to use which** (measured, BENCH_NOTES r12, cold JVM per run,
-    end-to-end through the CLI): batched wins once the batch shares
-    schemas — 8 x 5k-row submissions: batched 40.5 s vs 45.7 s
-    ``--jobs 8`` vs 63.5 s serial; 24 tiny submissions: batched 89.9 s
-    vs 99.9 s ``--jobs 8``. The r11 guidance that concurrent wins at
-    24 subs measured a since-fixed lineage-analysis tax in the batched
-    tail (see :func:`validate_batched_results`), not the plan.
-    Concurrent remains right for few or schema-heterogeneous
-    submissions; past ~20 submissions, sharding a batched run across
-    driver PROCESSES adds another ~1.4x (GIL escape, BENCH_NOTES r12).
-
-    v2 scope/constraints (ValueError otherwise):
+    Constraints (ValueError otherwise):
     - every submission shares ``today`` and ``fix_reference_bugs`` (the
       rulebook binding is per those values); ``cbc_id`` MAY differ per
-      submission (the production shape — the reference resolves the CBC
-      per submission, File_Submission_Object.py:82-87): every row is
-      tagged ``__cbc_id`` at load and the C5 prefix checks + cross-sheet
-      well-formed-ID scopes render as CASEs over that column, one
-      literal-regex branch per distinct CBC;
-    - every submission has an IDENTICAL sheet-name set: the >=2
-      cross-sheet family gates and the enrichment-parent availability
-      are computed over the batch union, so a submission missing a
-      family sheet the others have would silently receive spine
-      findings / NULL-joined dependency columns that serial validate()
-      would never produce;
-    - same-named sheets share an identical column set (one schema → one
-      compiled rule set);
+      submission (the reference resolves the CBC per submission,
+      File_Submission_Object.py:82-87): every row is tagged ``__cbc_id``
+      and the C5 prefix checks + cross-sheet well-formed-ID scopes
+      render as CASEs over that column, one branch per distinct CBC;
+    - every submission has an IDENTICAL sheet-name set and an identical
+      ``db_merged_tables`` name set: the >=2 cross-sheet family gates
+      and the enrichment-parent availability are computed over the
+      batch union, so a submission missing a family sheet the others
+      have would silently receive spine findings / NULL-joined
+      dependency columns it would never get on its own;
+    - same-named sheets (and same-named fallback tables) share an
+      identical column set (one schema → one compiled rule set);
     - every bound check must render as SQL text (always true for the
-      built-in rulebook; a Column-valued custom rule has no text form
-      and only the serial path's DataFrame fallback can evaluate it);
+      built-in rulebook; a Column-valued custom rule has no text form);
     - ``icd10_codes`` may be passed in any submission's kwargs; the
       first non-None wins (it is a shared dictionary by nature).
-    Count reconciliation (A4), the quality gate, and the per-submission
-    summary stay per-submission driver logic — run them on each
-    submission's slice of the returned findings.
+
+    ``db_merged_tables`` (the S5 JDBC fallback parents for sheets not
+    submitted, File_Submission_Object.py:501-527) are per-submission
+    side inputs: each submission's frame is tagged like its sheets and
+    the tagged frames are unioned per sheet name (one frame object
+    shared by every submission is tagged once, by a cross join with the
+    batch's submission ids); a submitted sheet always overrides its
+    fallback. A fallback may live on another
+    session than ``spark`` (foreachBatch compiles on the streaming
+    clone session); its views then register as global temp views.
+
+    Count reconciliation (A4), the P10 header findings and the summary
+    are per-submission driver logic on top — see
+    :func:`validate_batched_results`.
 
     ``pretagged``: optional {sheet_name: DataFrame} where each frame is
     ONE multi-file scan already carrying ``__submission_id`` and a
     per-file ``row_index`` (``sources.readers.read_sheet_csv_tagged``) —
     the 100 TB scan shape: N submissions are just N files of one
     datasource, not N unioned single-file scan nodes. When provided, the
-    per-submission tag+union step is skipped (the remaining
-    per-submission driver cost), and THIS function reads
-    ``subs[sid]["sheets"]`` only for its KEYS (the sheet-name-set
-    constraint) — but :func:`validate_batched_results` additionally
-    dereferences the per-submission sheet DataFrames in its tail (A4
-    count reconciliation and the P10 column findings), so callers of
-    THAT entry point must supply real frames, not placeholders; callers
-    must build both structures from the same listing either way.
+    per-submission tag+union step is skipped and ``subs[sid]["sheets"]``
+    is read only for its KEYS (its values may be probed column-name
+    lists); callers build both structures from the same listing.
 
     ``clean_out``: optional dict the function fills with its per-sheet
-    CLEANED tagged union frames ({sheet_name: DataFrame carrying
-    ``__submission_id``/``__cbc_id``}) — the exact frames the findings
-    compiled from, for callers that need batch-wide derived work over
-    the same rows (:func:`validate_batched_results`' one-job A4).
+    CLEANED tagged union frames — the exact frames the findings compiled
+    from (:func:`validate_batched_results`' one-job A4).
 
     ``pinned_out``: optional list the function APPENDS its per-sheet
-    persisted union frames to. Those persists are data-scale (N
-    submissions' parsed CSVs) and multi-consumer within the one
-    compiled statement, but once a caller has materialized the findings
-    (e.g. :func:`validate_batched_results`' eager checkpoint) they are
-    dead weight until the ContextCleaner notices — pass a list and
-    ``unpersist()`` each after your materializing action for
-    deterministic release (a resident watcher must; a batch CLI may
-    skip it and let process exit clean up).
+    persisted union frames to. Those persists are data-scale and
+    multi-consumer within the one compiled statement; once a caller has
+    materialized the findings, ``unpersist()`` each for deterministic
+    release (a resident watcher must).
 
     Returns a DataFrame with ``__submission_id`` + the six finding
     columns, deduplicated per submission with the standard key.
@@ -227,6 +192,8 @@ def validate_batched(spark: SparkSession,
     from nci_seronet_proc_data_validator_spark.errors import (
         FINDING_COLUMNS,
         empty_findings,
+        local_rows_df,
+        sql_string_map,
     )
     from nci_seronet_proc_data_validator_spark.functions.checks import (
         PerRowCbc,
@@ -242,11 +209,12 @@ def validate_batched(spark: SparkSession,
         with_typed_shadows,
     )
     from nci_seronet_proc_data_validator_spark.plans.rulebook import (
+        _icd10_flag,
         bind_sheet_rules_cached,
     )
     from nci_seronet_proc_data_validator_spark.plans.rules import (
         dup_id_findings_sql,
-        sheet_findings_sql,
+        sheet_findings_sql_cached,
     )
     from nci_seronet_proc_data_validator_spark.sources.readers import (
         cleanup_sheet,
@@ -265,25 +233,23 @@ def validate_batched(spark: SparkSession,
             f"got {sorted(map(str, shared))} — group submissions by "
             f"those values, one batch each")
     today, fix_bugs = next(iter(shared))
-    sheet_sets = {sid: frozenset(n for n in kw["sheets"]
-                                 if n not in SKIP_VALIDATION)
-                  for sid, kw in subs.items()}
-    if len(set(sheet_sets.values())) > 1:
+    sheet_sets = {frozenset(n for n in kw["sheets"]
+                            if n not in SKIP_VALIDATION)
+                  for kw in subs.values()}
+    if len(sheet_sets) > 1:
         raise ValueError(
             "batched mode needs an identical sheet-name set per "
             "submission (the cross-sheet family gates and enrichment "
             "parents are computed over the batch union); got "
-            f"{sorted({tuple(sorted(s)) for s in sheet_sets.values()})}"
+            f"{sorted(tuple(sorted(s)) for s in sheet_sets)}"
             " — group submissions by sheet set, one batch each")
-    with_db = sorted(sid for sid, kw in subs.items()
-                     if kw.get("db_merged_tables"))
-    if with_db:
+    db_sets = {frozenset(kw.get("db_merged_tables") or ())
+               for kw in subs.values()}
+    if len(db_sets) > 1:
         raise ValueError(
-            f"batched mode does not support db_merged_tables (the JDBC "
-            f"fallback parents are per-submission side inputs the "
-            f"tagged-union enrichment cannot express); submissions "
-            f"{with_db} pass one — validate them serially or via "
-            f"validate_concurrent")
+            "batched mode needs an identical db_merged_tables sheet-name "
+            f"set per submission; got "
+            f"{sorted(tuple(sorted(s)) for s in db_sets)}")
     cbc_by_sub = {sid: str(kw.get("cbc_id", "0"))
                   for sid, kw in subs.items()}
     cbc = PerRowCbc(column=CBC_COL,
@@ -291,76 +257,86 @@ def validate_batched(spark: SparkSession,
     icd10 = next((kw["icd10_codes"] for kw in subs.values()
                   if kw.get("icd10_codes") is not None), None)
 
+    def tag(df, sid: str):
+        return df.withColumns({SUB_COL: F.lit(sid),
+                               CBC_COL: F.lit(cbc_by_sub[sid])})
+
+    def union_one_schema(name: str, legs: list):
+        if len({tuple(sorted(leg.columns)) for leg in legs}) > 1:
+            raise ValueError(
+                f"batched mode needs one schema per sheet name; {name} "
+                f"has distinct column sets across submissions")
+        u = legs[0]
+        for leg in legs[1:]:
+            u = u.unionByName(leg)
+        return u
+
     clean: dict[str, "DataFrame"] = {}
     if pretagged is not None:
-        wanted = {n for kw in subs.values() for n in kw["sheets"]
-                  if n not in SKIP_VALIDATION}
+        wanted = next(iter(sheet_sets))
         missing_pre = wanted - set(pretagged)
         if missing_pre:
             raise ValueError(f"pretagged is missing sheets "
                              f"{sorted(missing_pre)}")
         # cbc per row from the submission tag; unknown tags fail loud
         # (a pretagged frame with a sid outside `subs` would otherwise
-        # silently validate under no CBC). ONE SQL map literal — per-
-        # entry F.lit Columns cost a py4j round-trip each, 2N per burst
-        # (the r7 model-as-literal lesson, r14).
-        def _q(s: str) -> str:
-            return s.replace("\\", "\\\\").replace("'", "\\'")
-        cbc_map_sql = "map(" + ", ".join(
-            f"'{_q(sid)}', '{_q(c)}'"
-            for sid, c in sorted(cbc_by_sub.items())) + ")"
+        # silently validate under no CBC)
         cbc_expr = F.coalesce(
-            F.expr(cbc_map_sql)[F.col(SUB_COL)],
+            F.expr(sql_string_map(spark, sorted(cbc_by_sub.items())))[
+                F.col(SUB_COL)],
             F.raise_error(F.concat(
                 F.lit("validate_batched: pretagged row with unknown "
                       "submission id "), F.col(SUB_COL))))
+        tagged_sheets = {}
         for name in sorted(wanted):
-            df = pretagged[name]
-            if SUB_COL not in df.columns:
+            if SUB_COL not in pretagged[name].columns:
                 raise ValueError(f"pretagged[{name}] lacks {SUB_COL}")
-            u = df.withColumn(CBC_COL, cbc_expr)
-            clean[name] = cleanup_sheet(
-                u, fix_bugs, carry_cols=(SUB_COL, CBC_COL)).persist()
-            if pinned_out is not None:
-                pinned_out.append(clean[name])
+            tagged_sheets[name] = pretagged[name].withColumn(CBC_COL,
+                                                             cbc_expr)
     else:
-        # -- tag + union same-named sheets, one cleanup per sheet name
         by_sheet: dict[str, list] = {}
         for sid, kw in subs.items():
             for name, df in kw["sheets"].items():
-                if name in SKIP_VALIDATION:
-                    continue
-                by_sheet.setdefault(name, []).append(
-                    df.withColumns({SUB_COL: F.lit(sid),
-                                    CBC_COL: F.lit(cbc_by_sub[sid])}))
-        for name, legs in by_sheet.items():
-            cols = {tuple(sorted(leg.columns)) for leg in legs}
-            if len(cols) > 1:
-                raise ValueError(
-                    f"batched mode needs one schema per sheet name; "
-                    f"{name} has {len(cols)} distinct column sets")
-            u = legs[0]
-            for leg in legs[1:]:
-                u = u.unionByName(leg)
-            # Persist: the union is a MULTI-consumer base (findings
-            # chunks, dup-ID leg, Merged_Table projections, submitted-id
-            # views) — unpersisted, every consumer re-parses N
-            # submissions' multiLine CSVs from text. One parse fills the
-            # cache; consumers scan columnar blocks. Freed by the
-            # ContextCleaner when the plan is garbage-collected (same
-            # note as semdedup's localCheckpoint).
-            clean[name] = cleanup_sheet(
-                u, fix_bugs, carry_cols=(SUB_COL, CBC_COL)).persist()
-            if pinned_out is not None:
-                pinned_out.append(clean[name])
+                if name not in SKIP_VALIDATION:
+                    by_sheet.setdefault(name, []).append(tag(df, sid))
+        tagged_sheets = {name: union_one_schema(name, legs)
+                         for name, legs in by_sheet.items()}
+    for name, u in tagged_sheets.items():
+        # Persist: the union is a MULTI-consumer base (findings chunks,
+        # dup-ID leg, Merged_Table projections, submitted-id views) —
+        # unpersisted, every consumer re-parses N submissions' multiLine
+        # CSVs from text. One parse fills the cache; consumers scan
+        # columnar blocks.
+        clean[name] = cleanup_sheet(
+            u, fix_bugs, carry_cols=(SUB_COL, CBC_COL)).persist()
+        if pinned_out is not None:
+            pinned_out.append(clean[name])
     if clean_out is not None:
         clean_out.update(clean)
 
     # -- per-submission-keyed Merged_Tables (tags carried: the submission
     # id keys every join; the CBC tag rides along for the cross-sheet
     # scope CASEs — functionally dependent on the id, so joining on both
-    # never changes multiplicity)
-    merged: dict[str, "DataFrame"] = {}
+    # never changes multiplicity). DB fallbacks first, submitted sheets
+    # override them.
+    def fallback(name: str):
+        frames = [kw["db_merged_tables"][name] for kw in subs.values()]
+        if len(frames) > 1 and all(f is frames[0] for f in frames):
+            # ONE fallback shared by the batch (the watcher's
+            # bind_kwargs): tag it once against a local (sid, cbc)
+            # relation — a constant-size plan, not an N-leg union of
+            # the same scan
+            ids = local_rows_df(frames[0].sparkSession,
+                                sorted(cbc_by_sub.items()),
+                                f"{SUB_COL} string, {CBC_COL} string")
+            return frames[0].crossJoin(F.broadcast(ids))
+        return union_one_schema(name, [
+            tag(kw["db_merged_tables"][name], sid)
+            for sid, kw in subs.items()])
+
+    merged: dict[str, "DataFrame"] = {
+        name: fallback(name)
+        for name in sorted(next(iter(db_sets)) - set(clean))}
     for name, df in clean.items():
         mc = [c for c in MERGE_COLS.get(name, []) if c in df.columns]
         if mc:
@@ -368,15 +344,36 @@ def validate_batched(spark: SparkSession,
 
     run_id = _uuid.uuid4().hex[:8]
     sql_legs: list[str] = []
-    view_names: list[str] = []
+    views: list[tuple[bool, str]] = []
 
-    def reg(df, tag: str) -> str:
-        v = f"__batched_{run_id}_{tag}"
-        df.createOrReplaceTempView(v)
-        view_names.append(v)
-        return v
+    def reg(df, tag_: str) -> str:
+        v = f"__batched_{run_id}_{tag_}"
+        # A temp view registers in the DATAFRAME's session, but the SQL
+        # below runs on `spark` — fine until a caller-provided side
+        # input (a db_merged_tables fallback) was created on a DIFFERENT
+        # session: foreachBatch hands the compile the streaming CLONE
+        # session while the fallback frame lives on the original, and
+        # the view would land in a catalog spark.sql never consults.
+        # Global temp views are the public cross-session mechanism; use
+        # one exactly when the sessions differ.
+        sess = df.sparkSession
+        if sess is spark or sess._jsparkSession.equals(
+                spark._jsparkSession):
+            df.createOrReplaceTempView(v)
+            views.append((False, v))
+            return v
+        df.createOrReplaceGlobalTempView(v)
+        views.append((True, v))
+        return f"global_temp.{v}"
 
-    defaults = {           # _ensure_columns twin (submission.py)
+    # Dependency columns referenced by rules arrive via the enrichment
+    # joins and are absent when the parent sheet was not submitted and
+    # no DB fallback exists (e.g. the SARS column without
+    # prior_clinical_test; the reference always has the MySQL
+    # fallback). Sentinels: '' disables dependency-scoped rules; NULL
+    # makes assay resolution (C9) flag everything as unresolved — "not
+    # found in database or submitted file" is then literally true.
+    defaults = {
         "SARS_CoV_2_PCR_Test_Result": F.lit(""),
         "Biospecimen_Type": F.lit(""),
         "Assay_Name": F.lit(None).cast("string"),
@@ -389,6 +386,8 @@ def validate_batched(spark: SparkSession,
                                            extra_keys=(SUB_COL,))
         enriched = with_typed_shadows(
             enriched, skip=("row_index", SUB_COL, CBC_COL))
+        # Memoized: every batch sharing this sheet schema skips both the
+        # rule binding and the 459-check SQL render below.
         bound = bind_sheet_rules_cached(
             name, original_cols, cbc, drop_list=drop_list,
             today=today, fix_reference_bugs=fix_bugs)
@@ -398,9 +397,7 @@ def validate_batched(spark: SparkSession,
             raise ValueError(
                 f"batched mode compiles findings as SQL text; sheet "
                 f"{name} bound a Column-valued check (custom caller "
-                f"rule) that has no text form — validate it serially "
-                f"(SubmissionValidator falls back to the DataFrame "
-                f"compile for such sheets)")
+                f"rule) that has no text form")
         missing = {c: v for c, v in defaults.items()
                    if c not in enriched.columns}
         if missing:
@@ -408,26 +405,30 @@ def validate_batched(spark: SparkSession,
         for c in bound.icd10_columns:
             if icd10 is not None:
                 enriched = icd10_flag_join(enriched, c, icd10,
-                                           c + "__icd10_valid")
+                                           _icd10_flag(c))
             else:
-                enriched = enriched.withColumn(c + "__icd10_valid",
-                                               F.lit(False))
+                enriched = enriched.withColumn(_icd10_flag(c), F.lit(False))
         view = reg(enriched, f"s{i}")
         # codegen_chunk=9: the fused full-width findings projection
         # exceeds HotSpot's JIT size ceiling and runs interpreted (the
-        # rulebook's measured lesson, plans/rules.py) — at 8x-unioned
-        # batched volume that is the dominant cost, not a nicety.
-        sql_legs.extend(sheet_findings_sql(view, name, bound.column_rules,
-                                           codegen_chunk=9,
-                                           carry_cols=(SUB_COL,)))
+        # rulebook's measured lesson, plans/rules.py) — at batched
+        # volume that is the dominant cost, not a nicety.
+        sql_legs.extend(sheet_findings_sql_cached(
+            view, name, bound, codegen_chunk=9, carry_cols=(SUB_COL,)))
         if bound.dup_id_columns:
+            # over the CLEAN sheet, not the enriched one: enrichment
+            # joins must not influence dup multiplicity
             dview = reg(df, f"d{i}")
             sql_legs.extend(
                 dup_id_findings_sql(dview, name, c, group_cols=(SUB_COL,))
                 for c in bound.dup_id_columns)
 
     # -- cross-sheet, spine keys include the tag
-    def submitted_view(family: tuple, key: str, tag: str) -> str | None:
+    def submitted_view(family: tuple, key: str, tag_: str) -> str | None:
+        """Union of IDs present in SUBMITTED sheets (get_submitted_ids
+        intent, File_Submission_Object.py:356-367 — reference bug
+        §2.9.2: its merge result was discarded; we apply the
+        restriction)."""
         if not fix_bugs:
             return None
         parts = [df.select(SUB_COL, CBC_COL, key)
@@ -438,37 +439,40 @@ def validate_batched(spark: SparkSession,
         u = parts[0]
         for p_ in parts[1:]:
             u = u.unionByName(p_)
-        return reg(u.distinct(), tag)
+        return reg(u.distinct(), tag_)
 
     part_family = ("prior_clinical_test.csv", "demographic.csv",
                    "biospecimen.csv", "confirmatory_clinical_test.csv")
     part_srcs = {n: merged.get(n) for n in part_family}
     if sum(v is not None for v in part_srcs.values()) >= 2:
-        views = {n: (reg(src, f"p{j}") if src is not None else None)
-                 for j, (n, src) in enumerate(part_srcs.items())}
+        pviews = {n: (reg(src, f"p{j}") if src is not None else None)
+                  for j, (n, src) in enumerate(part_srcs.items())}
         sv = submitted_view(part_family, "Research_Participant_ID", "psub")
         sql_legs.append(participant_cross_sql(
-            views, cbc, sv, group_col=SUB_COL, extra_keys=(CBC_COL,)))
+            pviews, cbc, sv, group_col=SUB_COL, extra_keys=(CBC_COL,)))
     bio_family = ("biospecimen.csv", "aliquot.csv", "equipment.csv",
                   "reagent.csv", "consumable.csv")
     bio_srcs = {n: merged.get(n) for n in bio_family}
     if sum(v is not None for v in bio_srcs.values()) >= 2:
-        views = {n: (reg(src, f"b{j}") if src is not None else None)
-                 for j, (n, src) in enumerate(bio_srcs.items())}
+        bviews = {n: (reg(src, f"b{j}") if src is not None else None)
+                  for j, (n, src) in enumerate(bio_srcs.items())}
         type_sources = {n for n, src in bio_srcs.items()
                         if src is not None
                         and "Biospecimen_Type" in src.columns}
         sv = submitted_view(bio_family, "Biospecimen_ID", "bsub")
         sql_legs.append(biospecimen_cross_sql(
-            views, cbc, sv, type_sources=type_sources,
+            bviews, cbc, sv, type_sources=type_sources,
             group_col=SUB_COL, extra_keys=(CBC_COL,)))
 
-    if not sql_legs:
+    findings = spark.sql(" UNION ALL ".join(sql_legs)) if sql_legs else None
+    for is_global, v in views:     # resolved eagerly by spark.sql above
+        if is_global:
+            spark.catalog.dropGlobalTempView(v)
+        else:
+            spark.catalog.dropTempView(v)
+    if findings is None:
         out = empty_findings(spark).withColumn(SUB_COL, F.lit(""))
         return out.select(SUB_COL, *FINDING_COLUMNS)
-    findings = spark.sql(" UNION ALL ".join(sql_legs))
-    for v in view_names:       # resolved eagerly by spark.sql above
-        spark.catalog.dropTempView(v)
     # per-submission dedup: the standard key, tag prepended
     return findings.dropDuplicates(
         [SUB_COL, "CSV_Sheet_Name", "Row_Index", "Column_Name",
@@ -481,42 +485,35 @@ def validate_batched_results(
         pretagged: "dict[str, DataFrame] | None" = None,
         combined_out: "list | None" = None
         ) -> "dict[str, ValidationResult]":
-    """CLI-grade batched validation: ONE compiled plan for the findings
+    """Full validation of a batch: ONE compiled plan for the findings
     (:func:`validate_batched`), then the per-submission driver tail —
     count reconciliation (A4), header/column findings (P10), and the
-    sheet × severity summary — on each tagged slice, returning full
-    :class:`ValidationResult` objects keyed like
-    :func:`validate_concurrent`.
+    sheet × severity summary — returning :class:`ValidationResult`
+    objects keyed like ``subs``. ``SubmissionValidator.validate`` is
+    this call with one submission.
 
     The tail COMPARISONS are per-submission by contract (the declared
     counts come from each submission's own ``submission.csv``, and the
     reconciling comparison is driver logic in the reference too,
     File_Submission_Object.py:397-415) — but the COUNTS they compare
     against are computed batch-wide: one grouped anti-join job per ID
-    family over the tagged clean frames, keyed by the submission tag,
-    instead of up to two driver actions per submission (r13: the
-    per-submission A4 actions were the last O(N)-actions stage of a
-    completion burst). Per-submission work is thereafter pure driver
-    logic: dict lookups, P10 header set algebra, and lazy summary plan
-    construction — no actions.
+    family over the tagged clean frames, keyed by the submission tag.
+    Per-submission work is thereafter pure driver logic: dict lookups,
+    P10 header set algebra, and lazy plan construction — no actions.
 
-    Sheets register into the participant/biospecimen reconciliation
-    exactly as in serial ``validate()``: the ID column is present in
-    the sheet's own (pre-enrichment) columns — the bound flag reduces
-    to column membership because enrichment-added columns are disjoint
-    from the sheet's own by construction (``merge_tables`` only adds
-    absent columns), and sheet schemas are batch-uniform (the
-    validate_batched constraint), so the batch-wide family equals every
-    submission's own family.
+    A sheet registers into the participant/biospecimen reconciliation
+    when the family's ID column is among its own (pre-enrichment)
+    columns — enrichment-added columns are disjoint from the sheet's own
+    by construction (``merge_tables`` only adds absent columns), and
+    sheet schemas are batch-uniform, so the batch-wide family equals
+    every submission's own family.
 
-    ``pretagged`` callers note: unlike :func:`validate_batched`, this
-    entry point DEREFERENCES ``subs[sid]["sheets"]`` values — the tail
-    computes the P10 column findings from each submission's own sheet
-    COLUMN NAMES. With ``pretagged`` the values may therefore be plain
-    column-name lists (e.g. probed headers) instead of DataFrames —
-    the cheap shape for bursts, where per-submission DataFrame
-    construction is pure py4j overhead; without ``pretagged`` they must
-    be real DataFrames (the tag+union compile reads their rows).
+    ``subs[sid]["sheets"]`` values are read for their column NAMES (P10);
+    with ``pretagged`` they may be plain column-name lists (e.g. probed
+    headers) — the cheap shape for bursts, where per-submission
+    DataFrame construction is pure py4j overhead; without ``pretagged``
+    they must be real DataFrames (the tag+union compile reads their
+    rows).
 
     ``combined_out``: optional list that receives ONE DataFrame holding
     the whole batch's row findings (the six columns + the
@@ -526,26 +523,16 @@ def validate_batched_results(
     a re-union of the per-submission ``findings`` slices — N slices of
     the same checkpoint execute as N× its partitions in one job
     (measured: 96 tiny submissions → ~3000 tasks, 57 s, for 576 rows),
-    while the combined frame is one scan + one local leg. Contents are
-    identical (each slice is a partition of the combined frame by tag).
+    while the combined frame is one scan + one local leg.
     """
     from pyspark.sql import functions as F
 
-    from nci_seronet_proc_data_validator_spark.errors import (
-        COLUMN_FINDING_SCHEMA,
-        findings_summary,
-        local_rows_df,
-        union_findings,
-    )
-    from nci_seronet_proc_data_validator_spark.sources.readers import (
-        cleanup_columns,
-        cleanup_sheet,
-    )
+    from nci_seronet_proc_data_validator_spark.errors import local_rows_df
     from nci_seronet_proc_data_validator_spark.submission import (
         A4_FAMILIES,
         A4_ROW_SCHEMA,
-        SKIP_VALIDATION,
         a4_mismatch_tuple,
+        column_finding_rows,
     )
 
     # localCheckpoint, not persist: every per-submission tail/summary
@@ -555,13 +542,11 @@ def validate_batched_results(
     # for each derived action even when execution hits the cache.
     # Measured at 24 tiny submissions: ~3 s of driver analysis per
     # summary, 78 s total. The eager checkpoint truncates lineage to a
-    # leaf scan (executor-resident blocks, same ContextCleaner lifetime
-    # note as semdedup's) — findings are error-bounded, not data-scale.
-    # The per-sheet union persists (data-scale: N submissions' parsed
-    # CSVs) have exactly one consumer tree, the checkpoint
-    # materialization — free them deterministically the moment it is
-    # done, instead of pinning executor storage until GC (a resident
-    # watcher compiles bursts for the query's lifetime).
+    # leaf scan (executor-resident blocks freed by the ContextCleaner) —
+    # findings are error-bounded, not data-scale. The per-sheet union
+    # persists (data-scale) have exactly one consumer tree, the
+    # checkpoint materialization and the A4 job below — free them
+    # deterministically right after.
     pinned: list = []
     clean_tagged: dict = {}
     tagged = validate_batched(
@@ -569,14 +554,8 @@ def validate_batched_results(
         clean_out=clean_tagged).localCheckpoint(eager=True)
 
     # -- batched A4: ONE grouped anti-join job per ID family for the
-    # WHOLE batch, replacing up to two driver actions per submission.
-    # The per-submission tail was the last O(N)-actions stage of a
-    # completion burst (~2.5 s/submission marginal at a 96-submission
-    # burst — the compile itself is O(distinct schemas)); the grouped
-    # form is the same math keyed by the submission tag: anti-join ids
-    # against same-sheet ID findings on (sub, sheet, value), then
-    # count DISTINCT (sub, id) per sub. Runs before the unpersist below
-    # so it reads the still-cached parses.
+    # WHOLE batch: anti-join ids against same-sheet ID findings on
+    # (sub, sheet, value), then count DISTINCT (sub, id) per sub.
     a4_counts: "dict[str, dict[str, int]]" = {}
     declared_of = {
         "Research_Participant_ID": "declared_participants",
@@ -608,9 +587,11 @@ def validate_batched_results(
     for df in pinned:
         df.unpersist()
 
-    # A4 comparisons from the batch-wide counts — pure driver logic,
-    # computed once as tuples so the per-submission results AND the
-    # combined batch frame are built from the same rows
+    # A4 comparisons (reference bug §2.9.6: the emitted Column_Value
+    # reads an attribute that was never set; we emit the declared count,
+    # the evident intent) as driver tuples, then ONE local relation for
+    # every A4 row in the batch: the per-submission frames are filters
+    # of it and the combined batch frame unions it whole.
     a4_rows: "dict[str, list[tuple]]" = {}
     for sid, kw in subs.items():
         rows = []
@@ -626,12 +607,6 @@ def validate_batched_results(
                 rows.append(tup)
         if rows:
             a4_rows[sid] = rows
-
-    # ONE local relation for every A4 row in the batch: per-submission
-    # local_rows_df calls would each pay an RDD parallelize + DDL-schema
-    # parse round trip; the per-submission frames below are filters of
-    # this shared relation (values identical), and the combined batch
-    # frame unions it whole (r14).
     a4_all = None
     if a4_rows:
         a4_all = local_rows_df(
@@ -641,43 +616,124 @@ def validate_batched_results(
             f"{SUB_COL} string, {A4_ROW_SCHEMA}")
 
     if combined_out is not None:
-        combined = tagged
-        if a4_all is not None:
-            combined = combined.unionByName(a4_all)
-        combined_out.append(combined)
+        combined_out.append(tagged if a4_all is None
+                            else tagged.unionByName(a4_all))
 
-    def _tail(item: "tuple[str, dict]") -> "tuple[str, ValidationResult]":
-        sid, kw = item
-        sv = SubmissionValidator(spark, **kw)
-        clean = {n: (cleanup_columns(df) if isinstance(df, list)
-                     else cleanup_sheet(df, sv.fix_reference_bugs))
-                 for n, df in kw["sheets"].items()
-                 if n not in SKIP_VALIDATION}
+    def findings_of(sid: str):
+        f = tagged.filter(F.col(SUB_COL) == sid).drop(SUB_COL)
+        if sid in a4_rows:
+            f = f.unionByName(
+                a4_all.filter(F.col(SUB_COL) == sid).drop(SUB_COL))
+        return f
 
-        # Frames as THUNKS (built on first access): every frame here is
-        # tens of py4j round-trips of plan construction, and a burst
-        # consumer (the completion watcher) sinks the COMBINED frame and
-        # reads only column_finding_rows — eagerly building N filters,
-        # unions and pivots was the tail pool's whole cost (r14).
-        def _findings(sid=sid):
-            f = tagged.filter(F.col(SUB_COL) == sid).drop(SUB_COL)
-            if sid in a4_rows:
-                f = union_findings([
-                    f, a4_all.filter(F.col(SUB_COL) == sid).drop(SUB_COL)])
-            return f
+    return {sid: ValidationResult(
+                spark, findings_thunk=lambda sid=sid: findings_of(sid),
+                column_finding_rows=column_finding_rows(
+                    kw["sheets"], kw.get("expected_columns")))
+            for sid, kw in subs.items()}
 
-        col_rows = sv._column_finding_rows(clean)
-        return sid, ValidationResult(
-            findings_thunk=_findings,
-            column_findings_thunk=lambda: local_rows_df(
-                spark, col_rows, COLUMN_FINDING_SCHEMA),
-            summary_thunk=lambda s=_findings: findings_summary(s()),
-            column_finding_rows=col_rows)
 
-    # The tail is now action-free per submission (A4 counts precomputed
-    # batch-wide above; P10 is header set algebra; the summary is a
-    # lazy plan) — the pool overlaps the remaining per-submission py4j
-    # plan construction, same isolation model as validate_concurrent.
-    with ThreadPoolExecutor(max_workers=min(8, len(subs)),
-                            thread_name_prefix="batched-tail") as pool:
-        return dict(pool.map(_tail, subs.items()))
+def validate_groups(spark: SparkSession,
+                    subs: "dict[str, dict]",
+                    groups: "list[list[str]]",
+                    pretag: "Callable[[list[str]], dict] | None" = None,
+                    combined_out: "list | None" = None,
+                    materialize: "Callable[[ValidationResult], Any] | None"
+                    = None,
+                    max_parallel: int = 4
+                    ) -> "dict[str, ConcurrentOutcome]":
+    """Validate ``subs`` one schema group at a time, each group through
+    ONE :func:`validate_batched_results` compile, with per-submission
+    failure isolation — the one multi-submission driver: the batch CLI,
+    the completion watcher and :func:`validate_concurrent` (singleton
+    groups) all run through it.
+
+    ``groups`` partitions the submission ids by the caller's schema
+    signature (a group of one is an ordinary N=1 batch). ``pretag``
+    optionally builds a group's ``pretagged`` multi-file scans from its
+    member ids; ``combined_out`` collects each successful group's
+    combined batch frame; ``materialize`` runs per member inside the
+    group's worker (see :func:`validate_concurrent`).
+
+    Each group runs on its own worker thread (the calling thread when
+    there is only one group), at most ``max_parallel`` at once: the
+    per-group work is driver-build-heavy and the GIL serializes builds
+    past ~4 threads (BENCH_NOTES r11). Its jobs carry a per-group FAIR
+    pool (``submission-<first member>``) and job description, THREAD-
+    LOCAL properties (pinned thread mode) restored when the worker ends,
+    so nothing later on the same thread inherits them.
+
+    Isolation (the reference's "Moving onto Next Submitted File" loop,
+    nci-seronet-data-validator.py:70,109-111): when a group's compile
+    fails, each member is retried as its own group, so only the
+    genuinely poisoned member fails — without it one malformed
+    submission would fail every submission sharing its schema. A
+    member whose ``materialize`` raises fails alone too.
+
+    Returns a :class:`ConcurrentOutcome` per id: ``result`` set, or
+    ``error`` set and ``result`` None; ``seconds`` is the wall time of
+    the member's group worker.
+    """
+    sc = spark.sparkContext
+
+    def settle(members: list, res: dict, t0: float) -> dict:
+        def one(sid: str) -> tuple[str, ConcurrentOutcome]:
+            try:
+                mat = materialize(res[sid]) if materialize else None
+                return sid, ConcurrentOutcome(
+                    result=res[sid], materialized=mat,
+                    seconds=time.time() - t0)
+            except Exception as exc:  # noqa: BLE001 — isolate per submission
+                return sid, ConcurrentOutcome(
+                    result=None, materialized=None,
+                    seconds=time.time() - t0, error=exc)
+        if materialize is None or len(members) == 1:
+            return dict(map(one, members))
+        # independent per-member actions over the shared checkpoint
+        with ThreadPoolExecutor(max_workers=min(8, len(members)),
+                                thread_name_prefix="materialize") as tp:
+            return dict(tp.map(one, members))
+
+    def isolated(members: list) -> dict:
+        t0 = time.time()
+        prev = [(k, sc.getLocalProperty(k))
+                for k in ("spark.scheduler.pool", "spark.job.description")]
+        sc.setLocalProperty("spark.scheduler.pool",
+                            f"submission-{members[0]}")
+        sc.setJobDescription(
+            f"validate submission {members[0]}" if len(members) == 1
+            else f"validate {len(members)} submissions ({members[0]}, ...)")
+        try:
+            try:
+                frames: list = []
+                res = validate_batched_results(
+                    spark, {s: subs[s] for s in members},
+                    pretagged=pretag(members) if pretag else None,
+                    combined_out=frames)
+            except Exception as exc:  # noqa: BLE001 — isolate per submission
+                if len(members) == 1:
+                    return {members[0]: ConcurrentOutcome(
+                        result=None, materialized=None,
+                        seconds=time.time() - t0, error=exc)}
+                log.warning("batched group compile failed (%s); retrying "
+                            "each of %s as its own group", exc, members)
+                out: dict = {}
+                for sid in members:
+                    out.update(isolated([sid]))
+                return out
+            if combined_out is not None:
+                combined_out.extend(frames)
+            return settle(members, res, t0)
+        finally:
+            for k, v in prev:
+                sc.setLocalProperty(k, v)
+
+    if len(groups) == 1:
+        return isolated(groups[0])
+    out: dict = {}
+    with ThreadPoolExecutor(max_workers=max(1, min(max_parallel,
+                                                   len(groups))),
+                            thread_name_prefix="submission") as pool:
+        for o in pool.map(isolated, groups):
+            out.update(o)
+    return out

@@ -207,15 +207,20 @@ def with_per_file_row_index(df: DataFrame, offset: int = 2,
 
     ``input_file_name()`` is projected ONCE below the self-join —
     Spark's PreReadCheck rejects the expression over any plan with more
-    than one file source — and normalized from URI form
-    (``file:///abs/path`` → ``/abs/path``). Works on any file-source
-    DataFrame, including the per-micro-batch frames ``foreachBatch``
-    hands a streaming watcher.
+    than one file source — and normalized from URI form to the plain
+    local path (``file:///abs/a%20b/s.csv`` → ``/abs/a b/s.csv``): the
+    scheme is stripped and the percent-encoding decoded. The source
+    leaves ``+`` literal in a URI path, so it is escaped before
+    ``url_decode`` (which would read it as a space). Works on any
+    file-source DataFrame, including the per-micro-batch frames
+    ``foreachBatch`` hands a streaming watcher.
     """
     from pyspark.sql import Window
 
     data_cols = list(df.columns)
-    file_norm = F.regexp_replace(F.input_file_name(), "^file:/+", "/")
+    file_norm = F.url_decode(F.regexp_replace(
+        F.regexp_replace(F.input_file_name(), "^file:/+", "/"),
+        r"\+", "%2B"))
     # Probe for file metadata. inputFiles() first: a plan with no file
     # leaves (e.g. the LogicalRDD frames foreachBatch hands a streaming
     # watcher) can never resolve _metadata, and probing it with select()
@@ -279,13 +284,13 @@ def read_sheet_csv_tagged(spark: SparkSession,
     grouped relation has one row per FILE, never data-scale; no wide
     shuffle).
 
-    File→tag resolution normalizes ``input_file_name()``'s URI form
-    (``file:///abs/path`` → ``/abs/path``); paths must be local or
-    already in the URI form the source reports (percent-encoded paths
-    — spaces etc. — are the caller's responsibility, as are DISTINCT
-    schemas: the CSV source takes the header from one file, so callers
-    group same-schema submissions first, exactly like validate_batched
-    requires).
+    File→tag resolution compares ``os.path.abspath`` of each given
+    path with the decoded local path :func:`with_per_file_row_index`
+    derives from ``input_file_name()``, so directory names with spaces,
+    ``%``, ``#`` or ``+`` resolve. DISTINCT schemas are the caller's
+    responsibility: the CSV source takes the header from one file, so
+    callers group same-schema submissions first, exactly like
+    validate_batched requires.
 
     ``columns``: the probed header (``csv_header``) as an explicit
     all-string schema, same contract as :func:`read_sheet_csv` — skips
@@ -321,15 +326,10 @@ def read_sheet_csv_tagged(spark: SparkSession,
     # The tag lookup is total by construction (the scan reads exactly
     # norm's keys); a NULL lookup would mean URI normalization broke —
     # fail loud (raise_error), never silently drop rows into no
-    # submission. Rendered as ONE SQL map literal: per-entry F.lit
-    # Columns cost a py4j round-trip each — ~2N round-trips per sheet
-    # at an N-submission burst (the r7 model-as-literal lesson, r14).
-    def _q(s: str) -> str:
-        return s.replace("\\", "\\\\").replace("'", "\\'")
-    map_sql = "map(" + ", ".join(
-        f"'{_q(p)}', '{_q(t)}'" for p, t in sorted(norm.items())) + ")"
+    # submission. Rendered as ONE SQL map literal.
+    from nci_seronet_proc_data_validator_spark.errors import sql_string_map
     tag = F.coalesce(
-        F.expr(map_sql)[F.col(file_col)],
+        F.expr(sql_string_map(spark, sorted(norm.items())))[F.col(file_col)],
         F.raise_error(F.concat(
             F.lit("read_sheet_csv_tagged: unmatched input file "),
             F.col(file_col))))

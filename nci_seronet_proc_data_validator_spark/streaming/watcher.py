@@ -65,7 +65,7 @@ def _sheet_batch_findings(df: DataFrame, epoch_id: int, sheet_name: str,
     from nci_seronet_proc_data_validator_spark.plans.rulebook import (
         bind_sheet_rules_cached)
     from nci_seronet_proc_data_validator_spark.plans.rules import (
-        sheet_findings_sql)
+        sheet_findings_sql_cached)
 
     df = with_typed_shadows(df, list(columns))
     # Memoized: long-lived watchers re-bind identical rules every
@@ -82,8 +82,8 @@ def _sheet_batch_findings(df: DataFrame, epoch_id: int, sheet_name: str,
     # sheet name would collide on epoch-keyed names mid-analysis
     view = f"__watch_{_uuid.uuid4().hex[:8]}_{epoch_id}"
     df.createOrReplaceTempView(view)
-    legs = sheet_findings_sql(view, sheet_name, bound.column_rules,
-                              carry_cols=carry_cols)
+    legs = sheet_findings_sql_cached(view, sheet_name, bound,
+                                     carry_cols=carry_cols)
     findings = sess.sql(" UNION ALL ".join(legs))
     sess.catalog.dropTempView(view)     # resolved eagerly by sess.sql
     return findings
@@ -326,8 +326,7 @@ def validate_stream_submissions(spark: SparkSession, root_dir: str,
                                 max_files_per_trigger: int | None = None,
                                 status_cb=None,
                                 complete_cb=None,
-                                failed_cb=None,
-                                batch_threshold: int = 2
+                                failed_cb=None
                                 ) -> "StreamingQuery":
     """Submission-COMPLETENESS-gated watcher: continuous operation with
     the reference's FULL per-submission semantics — per-sheet rules,
@@ -351,9 +350,9 @@ def validate_stream_submissions(spark: SparkSession, root_dir: str,
       idempotence as the findings sink);
     - a submission whose cumulative arrivals first cover
       ``declared_sheets`` IN THIS BATCH is validated through the batch
-      compiler (``SubmissionValidator.validate`` over per-file
-      ``read_sheet_csv`` reads — byte-identical row identity and
-      findings to the batch CLI), and its full findings land in the
+      compiler (``orchestrate.validate_groups`` — the same compile as
+      ``SubmissionValidator.validate`` and the batch CLI, so findings
+      are byte-identical to both), and its full findings land in the
       epoch-keyed findings sink (``<output>/findings``) tagged
       ``__submission_id``.
 
@@ -420,9 +419,9 @@ def validate_stream_submissions(spark: SparkSession, root_dir: str,
     ``Row_Index=ROW_VALIDATION_FAILURE``,
     ``Column_Name='__validation_failure__'``, the exception in
     ``Error_Message``) in the same epoch-keyed sink, and reported via
-    ``failed_cb``. A batched group that fails falls back to
-    per-submission compiles first, so only the genuinely poisoned
-    member is recorded as failed. Replay semantics: if the epoch
+    ``failed_cb``. A schema group that fails is retried member by
+    member (``orchestrate.validate_groups``), so only the genuinely
+    poisoned member is recorded as failed. Replay semantics: if the epoch
     crashes before its checkpoint commit, the replay RETRIES the
     compile (a transient failure heals; a deterministic one re-records
     the identical row); after the commit the submission counts as
@@ -430,17 +429,14 @@ def validate_stream_submissions(spark: SparkSession, root_dir: str,
     revalidate, exactly like re-submitting to the reference pipeline.
 
     100 TB posture: per-batch driver work is O(files in batch) ledger
-    rows plus compiles for the NEWLY COMPLETE submissions — and when
-    ``batch_threshold`` or more of them share a schema (order-sensitive
-    header signature, probed driver-side), the whole group goes through
-    ONE compiled plan with ONE multi-file scan per sheet
-    (``orchestrate.validate_batched_results`` + pretagged
-    ``read_sheet_csv_tagged`` — the CLI --batched machinery, findings
-    byte-identical to per-submission compiles by its pinned contract),
-    so a burst of thousands of same-shape submissions completing in one
-    epoch costs O(distinct schemas) driver builds, not O(N). Submissions
-    whose schema group is smaller than the threshold (or whose headers
-    the probe refuses) compile per submission on a bounded thread pool.
+    rows plus compiles for the NEWLY COMPLETE submissions, grouped by
+    schema (order-sensitive header signature, probed driver-side): each
+    group goes through ONE compiled plan with ONE multi-file scan per
+    sheet (``orchestrate.validate_batched_results`` + pretagged
+    ``read_sheet_csv_tagged``), so a burst of thousands of same-shape
+    submissions completing in one epoch costs O(distinct schemas)
+    driver builds, not O(N). A submission whose headers the probe
+    refuses forms its own group.
     Arrival state is driver-resident and incremental: the full ledger
     (one metadata row per file ever arrived) is read ONCE per query run,
     then each batch adds only its own rows — a resident watcher's
@@ -532,23 +528,23 @@ def validate_stream_submissions(spark: SparkSession, root_dir: str,
             if declared <= set(m) and s not in complete_before)
 
         findings = None
-        results: dict = {}
         if complete_now:
-            from concurrent.futures import ThreadPoolExecutor
+            import warnings
 
+            from nci_seronet_proc_data_validator_spark.errors import (
+                FINDING_COLUMNS, FINDING_SCHEMA, ROW_VALIDATION_FAILURE)
+            from nci_seronet_proc_data_validator_spark.orchestrate import (
+                SUB_COL, validate_groups)
             from nci_seronet_proc_data_validator_spark.sources.readers \
-                import csv_header, read_sheet_csv
+                import csv_header, read_sheet_csv, read_sheet_csv_tagged
             from nci_seronet_proc_data_validator_spark.submission import (
-                SubmissionValidator,
+                SKIP_VALIDATION,
                 parse_submission_metadata,
                 parse_submission_metadata_local,
             )
             cbc = {str(k): str(v)
                    for k, v in (_resolve(cbc_map) or {}).items()}
             icd = _resolve(icd10_codes)
-
-            from nci_seronet_proc_data_validator_spark.submission \
-                import SKIP_VALIDATION
 
             # headers probed driver-side ONCE per file (the grouping
             # signature and the explicit-schema reads below share this
@@ -558,36 +554,24 @@ def validate_stream_submissions(spark: SparkSession, root_dir: str,
                          for sub in complete_now
                          for pth in have[sub].values()}
 
-            def _kwargs_for(sub: str, frames: bool = True) -> dict:
-                # probed header -> explicit schema -> the reads cost no
-                # Spark jobs (csv_header contract); metadata parsed
-                # driver-side too (parse_submission_metadata_local) —
-                # the DataFrame parse is one small Spark job per
-                # submission, a real slice of a 96-submission burst.
-                # frames=False (the batched-group path): sheet values
-                # are the probed COLUMN LISTS — the batched tail only
-                # ever reads names (P10), so a burst pays zero
-                # per-submission DataFrame construction (measured
-                # 26 s of py4j plan building at a 96-submission burst).
-                sheets = {}
-                for name, pth in sorted(have[sub].items()):
-                    cols = hdr_cache[pth]
-                    if frames or cols is None:
-                        sheets[name] = read_sheet_csv(sess, pth,
-                                                      columns=cols)
-                    else:
-                        sheets[name] = list(cols)
+            def _kwargs_for(sub: str) -> dict:
+                # Sheet values are the probed COLUMN LISTS: the compile
+                # reads rows from the pretagged group scans and the tail
+                # only ever reads names (P10), so a burst pays zero
+                # per-submission DataFrame construction (measured 26 s
+                # of py4j plan building at a 96-submission burst). A
+                # probe-refused header reads its DataFrame for the
+                # names. Metadata is parsed driver-side too — the
+                # DataFrame parse is one small Spark job per submission.
+                sheets = {name: (list(cols) if (cols := hdr_cache[pth])
+                                 is not None else read_sheet_csv(sess, pth))
+                          for name, pth in sorted(have[sub].items())}
                 if "submission.csv" in sheets:
-                    meta = parse_submission_metadata_local(
-                        have[sub]["submission.csv"], cbc)
+                    pth = have[sub]["submission.csv"]
+                    meta = parse_submission_metadata_local(pth, cbc)
                     if meta is None:       # probe-refused: Spark parse
-                        sub_df = sheets["submission.csv"]
-                        if isinstance(sub_df, list):
-                            sub_df = read_sheet_csv(
-                                sess, have[sub]["submission.csv"],
-                                columns=hdr_cache[
-                                    have[sub]["submission.csv"]])
-                        meta = parse_submission_metadata(sub_df, cbc)
+                        meta = parse_submission_metadata(read_sheet_csv(
+                            sess, pth, columns=hdr_cache[pth]), cbc)
                 else:
                     meta = {"cbc_id": "0",
                             "declared_participants": None,
@@ -602,7 +586,7 @@ def validate_stream_submissions(spark: SparkSession, root_dir: str,
 
             failures: dict[str, str] = {}
 
-            def _compile_one(sub: str):
+            def _fail(sub: str, exc: Exception) -> None:
                 # Per-submission error isolation — the reference's
                 # "Moving onto Next Submitted File" loop
                 # (nci-seronet-data-validator.py:70,109-111). Without
@@ -612,119 +596,63 @@ def validate_stream_submissions(spark: SparkSession, root_dir: str,
                 # forever — a permanent wedge blocking every LATER
                 # submission. Record the failure (durably, as one
                 # finding row below) and move on.
-                import warnings
-                try:
-                    return SubmissionValidator(
-                        sess, **_kwargs_for(sub)).validate()
-                except Exception as exc:
-                    failures[sub] = f"{type(exc).__name__}: " \
-                                    f"{str(exc)[:300]}"
-                    warnings.warn(f"validation FAILED for submission "
-                                  f"{sub}: {failures[sub]}; moving on")
-                    return None
+                failures[sub] = f"{type(exc).__name__}: {str(exc)[:300]}"
+                warnings.warn(f"validation FAILED for submission "
+                              f"{sub}: {failures[sub]}; moving on")
 
             # Group completing submissions by order-sensitive header
-            # signature (probe driver-side, no Spark): a group of
-            # batch_threshold+ compiles through ONE plan with ONE
-            # multi-file scan per sheet — the CLI --batched machinery.
-            # A probe-refused header (None) keys on its path, which
-            # never merges distinct schemas.
+            # signature (probe driver-side, no Spark): the pretagged
+            # group scan reads N files as ONE CSV source positionally,
+            # so only identical headers may share it. A probe-refused
+            # header (None) keys on its path, which never merges
+            # distinct schemas.
+            subs: dict = {}
             groups: dict = {}
             for sub in complete_now:
+                try:
+                    subs[sub] = _kwargs_for(sub)
+                except Exception as exc:  # noqa: BLE001
+                    _fail(sub, exc)
+                    continue
                 key = tuple(
                     (name, tuple(cols) if (cols := hdr_cache[pth])
                      is not None else ("?", pth))
                     for name, pth in sorted(have[sub].items())
                     if name not in SKIP_VALIDATION)
                 groups.setdefault(key, []).append(sub)
-            # a db_merged_tables side input is per-submission by nature;
-            # validate_batched rejects it — don't even form groups
-            if (bind_kwargs or {}).get("db_merged_tables"):
-                batched, singles = [], list(complete_now)
-            else:
-                batched = [m for m in groups.values()
-                           if len(m) >= max(2, batch_threshold)]
-                singles = [s for m in groups.values()
-                           if len(m) < max(2, batch_threshold) for s in m]
 
-            group_frames: list = []      # one combined frame per group
-            grouped_sids: set = set()
-            for members in batched:
-                from nci_seronet_proc_data_validator_spark.orchestrate \
-                    import SUB_COL, validate_batched_results
-                from nci_seronet_proc_data_validator_spark.sources.readers \
-                    import read_sheet_csv_tagged
-                try:
-                    subs_kw = {s: _kwargs_for(s, frames=False)
-                               for s in members}
-                    names = [n for n in subs_kw[members[0]]["sheets"]
-                             if n not in SKIP_VALIDATION]
-                    # probed header -> explicit schema: the group key
-                    # guarantees every member shares it, and without it
-                    # the multi-file scan runs a header-inference job
-                    # reading EVERY member file (one 96-task job per
-                    # sheet at a 96-submission burst, r14)
-                    pretagged = {
-                        n: read_sheet_csv_tagged(
+            def _pretag(members: list) -> dict:
+                # probed header -> explicit schema: the group key
+                # guarantees every member shares it, and without it the
+                # multi-file scan runs a header-inference job reading
+                # EVERY member file (r14)
+                first = have[members[0]]
+                return {n: read_sheet_csv_tagged(
                             sess, {s: have[s][n] for s in members},
-                            SUB_COL,
-                            columns=hdr_cache[have[members[0]][n]])
-                        for n in names}
-                    combined: list = []
-                    results.update(validate_batched_results(
-                        sess, subs_kw, pretagged=pretagged,
-                        combined_out=combined))
-                    # sink the group's WHOLE batch frame, not N re-union
-                    # slices of the same checkpoint (N slices execute
-                    # as N x its partitions in one job — the dominant
-                    # burst cost once compiles batch)
-                    group_frames.extend(combined)
-                    grouped_sids.update(members)
-                except Exception as exc:
-                    # an eligibility rejection (ValueError: Column-valued
-                    # custom check, mixed bind config) or any one
-                    # member's poison (unrenderable column name, ...)
-                    # must NOT wedge the stream: the batch would fail,
-                    # replay the same grouping, and fail identically
-                    # forever. Fall back to per-submission compiles —
-                    # identical findings semantics, and the singles path
-                    # then isolates WHICH member is at fault.
-                    import warnings
-                    warnings.warn(
-                        f"batched completion-group compile rejected "
-                        f"({exc}); falling back to per-submission "
-                        f"compiles for {members}")
-                    singles.extend(members)
-            # Singletons/sub-threshold groups are independent compiles
-            # (memoized binds make repeated schemas cheap); overlap
-            # their driver builds + small reconciliation actions on a
-            # bounded pool — validate_concurrent's model, width 4 (the
-            # measured GIL ceiling for plan builds, BENCH_NOTES r11)
-            if len(singles) == 1:
-                compiled = [_compile_one(singles[0])]
-            elif singles:
-                with ThreadPoolExecutor(
-                        max_workers=min(4, len(singles)),
-                        thread_name_prefix="watch-complete") as pool:
-                    compiled = list(pool.map(_compile_one, singles))
-            else:
-                compiled = []
-            results.update((s, r) for s, r in zip(singles, compiled)
-                           if r is not None)
-            parts = group_frames + [
-                r.findings.withColumn("__submission_id", F.lit(sub))
-                for sub, r in results.items() if sub not in grouped_sids]
+                            SUB_COL, columns=hdr_cache[first[n]])
+                        for n in first if n not in SKIP_VALIDATION}
+
+            # sink each group's WHOLE batch frame, not N re-union slices
+            # of the same checkpoint (N slices execute as N x its
+            # partitions in one job — the dominant burst cost)
+            parts: list = []
+            outcomes = validate_groups(
+                sess, subs, list(groups.values()), pretag=_pretag,
+                combined_out=parts)
+            results = {}
+            for sub, oc in sorted(outcomes.items()):
+                if oc.error is not None:
+                    _fail(sub, oc.error)
+                else:
+                    results[sub] = oc.result
             if failures:
                 # durable failure record: one row per failed submission
                 # in the SAME findings sink (the reference's jobs-table
                 # "File_Error" twin) — replay-idempotent like every
                 # other row of the epoch partition
-                from nci_seronet_proc_data_validator_spark.errors import (
-                    FINDING_SCHEMA, ROW_VALIDATION_FAILURE, local_rows_df)
                 fail_schema = T.StructType(
                     list(FINDING_SCHEMA.fields)
-                    + [T.StructField("__submission_id",
-                                     T.StringType(), False)])
+                    + [T.StructField(SUB_COL, T.StringType(), False)])
                 parts.append(local_rows_df(
                     sess,
                     [("Error", "__submission__",
@@ -732,10 +660,8 @@ def validate_stream_submissions(spark: SparkSession, root_dir: str,
                       None, msg, sub)
                      for sub, msg in sorted(failures.items())],
                     fail_schema))
-            from nci_seronet_proc_data_validator_spark.errors import (
-                FINDING_COLUMNS)
-            findings = union_findings(parts).select(
-                *FINDING_COLUMNS, "__submission_id")
+            findings = union_findings(parts).select(*FINDING_COLUMNS,
+                                                    SUB_COL)
             _epoch_sink(findings, epoch_id, findings_dir)
             if complete_cb is not None and results:
                 complete_cb(results, epoch_id)
@@ -743,14 +669,6 @@ def validate_stream_submissions(spark: SparkSession, root_dir: str,
                 failed_cb(dict(failures), epoch_id)
         if status_cb is not None:
             status_cb(findings, epoch_id)
-        # a RESIDENT watcher validates submissions for the query's
-        # lifetime — release each result's findings cache after the
-        # LAST consumer (status_cb included: its actions must hit the
-        # cache, not a recompute whose dedup could pick a different
-        # duplicate representative than the sinked rows), or pinned
-        # storage blocks accumulate forever
-        for r in results.values():
-            r.release()
 
     return (raw.writeStream
             .foreachBatch(process)

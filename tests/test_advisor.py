@@ -248,7 +248,9 @@ def test_validate_plan_sweeps_clean_with_row_index_allowance(spark,
     """r11: the full submission validate() plan is advisor-clean. The
     one prior hit was with_row_index's per-split offset window (cumsum
     over one row PER PARTITION — bounded by parallelism, not data),
-    now a documented allowance keyed on its synthetic __sg_pid column."""
+    now a documented allowance keyed on its synthetic __sg_pid column.
+    validate() returns findings over a local checkpoint, so the compile
+    plan behind it (validate_batched) is swept as well."""
     import datetime
 
     from nci_seronet_proc_data_validator_spark.plans.advisor import (
@@ -265,10 +267,15 @@ def test_validate_plan_sweeps_clean_with_row_index_allowance(spark,
                  "14_000001,14_000001_001,PBMC\n")
     sheets = {"demographic.csv": read_sheet_csv(spark, str(p)),
               "biospecimen.csv": read_sheet_csv(spark, str(b))}
-    res = SubmissionValidator(spark, sheets=sheets, cbc_id="14",
-                              today=datetime.date(2026, 1, 1)).validate()
+    kw = dict(sheets=sheets, cbc_id="14", today=datetime.date(2026, 1, 1))
+    res = SubmissionValidator(spark, **kw).validate()
     res.findings.count()
     assert advise_plan(res.findings, warn=False) == []
+    from nci_seronet_proc_data_validator_spark.orchestrate import (
+        validate_batched)
+    compiled = validate_batched(spark, {"s": kw})
+    compiled.count()
+    assert advise_plan(compiled, warn=False) == []
 
 
 def test_warn_deep_lineage(spark):

@@ -79,15 +79,37 @@ def test_concurrent_isolates_failures(spark, tmp_path):
     assert out["ok"].materialized["errors"] > 0
 
 
+def test_group_member_materialize_failure_is_isolated(spark, tmp_path):
+    """A materialize hook that raises for one member of a batched group
+    fails that member alone: the other member keeps its result and its
+    materialized value."""
+    from nci_seronet_proc_data_validator_spark.orchestrate import (
+        _default_materialize, validate_groups)
+    subs = {f"sub{i}": _load(spark, tmp_path, i) for i in range(2)}
+
+    def materialize(res):
+        if "Race_1" in {r["Column_Value"] for r in res.findings.collect()}:
+            raise RuntimeError("severity count failed")
+        return _default_materialize(res)
+
+    out = validate_groups(spark, subs, [["sub0", "sub1"]],
+                          materialize=materialize)
+    assert isinstance(out["sub1"].error, RuntimeError)
+    assert out["sub1"].result is None
+    assert out["sub0"].error is None
+    assert out["sub0"].materialized["errors"] > 0
+
+
 def test_scheduler_pool_set_during_and_cleared_after(spark, tmp_path):
     """The worker's finally clears the pool tag — later jobs on the SAME
     thread must not inherit a submission's FAIR pool. Local properties
     are per-thread (pinned mode), so the clear is only observable on the
-    thread that set it: drive the worker body (_run_one) directly on
-    THIS thread, assert the pool is tagged while the submission's jobs
-    run (inside the materialize hook) and cleared afterwards."""
+    thread that set it: a single group's worker runs on the calling
+    thread — drive it on THIS thread, assert the pool is tagged while
+    the submission's jobs run (inside the materialize hook) and cleared
+    afterwards."""
     from nci_seronet_proc_data_validator_spark.orchestrate import (
-        _default_materialize, _run_one)
+        _default_materialize, validate_groups)
     sc = spark.sparkContext
     seen = {}
 
@@ -95,13 +117,16 @@ def test_scheduler_pool_set_during_and_cleared_after(spark, tmp_path):
         seen["during"] = sc.getLocalProperty("spark.scheduler.pool")
         return _default_materialize(res)
 
-    oc = _run_one(spark, "s0", _load(spark, tmp_path, 0), materialize)
+    oc = validate_groups(spark, {"s0": _load(spark, tmp_path, 0)},
+                         [["s0"]], materialize=materialize)["s0"]
     assert oc.error is None
     assert seen["during"] == "submission-s0"
     assert sc.getLocalProperty("spark.scheduler.pool") in (None, "")
     # the clear also runs on the error path
-    oc2 = _run_one(spark, "bad", {"sheets": {"demographic.csv": None},
-                                  "cbc_id": "14"}, materialize)
+    oc2 = validate_groups(
+        spark, {"bad": {"sheets": {"demographic.csv": None},
+                        "cbc_id": "14"}},
+        [["bad"]], materialize=materialize)["bad"]
     assert oc2.error is not None
     assert sc.getLocalProperty("spark.scheduler.pool") in (None, "")
 
@@ -140,13 +165,14 @@ def test_concurrent_job_status_upserts_one_db(spark, tmp_path):
 
     subs = {f"sub{i}": _load(spark, tmp_path, i) for i in range(3)}
     # per-submission materialize: close over the id
-    from nci_seronet_proc_data_validator_spark.orchestrate import _run_one
+    from nci_seronet_proc_data_validator_spark.orchestrate import (
+        validate_groups)
     from concurrent.futures import ThreadPoolExecutor
     with ThreadPoolExecutor(max_workers=3) as pool:
-        futs = {sid: pool.submit(_run_one, spark, sid, kw,
-                                 materialize_for(sid))
+        futs = {sid: pool.submit(validate_groups, spark, {sid: kw}, [[sid]],
+                                 materialize=materialize_for(sid))
                 for sid, kw in subs.items()}
-        outs = {sid: f.result() for sid, f in futs.items()}
+        outs = {sid: f.result()[sid] for sid, f in futs.items()}
     assert all(oc.error is None for oc in outs.values())
 
     conn = sqlite3.connect(db)
@@ -245,6 +271,27 @@ def test_batched_matches_serial(spark, tmp_path):
     got = {sid: _finding_set(batched.filter(
         batched[SUB_COL] == sid).drop(SUB_COL)) for sid in subs}
     assert got == serial
+
+    # one more input: an all-blank ',,' demographic row kept by
+    # fix_reference_bugs=False. Serial validate() once cleaned sheets
+    # WITHOUT the flag and silently dropped the row (1 finding vs 4).
+    d = tmp_path / "blank"
+    d.mkdir()
+    (d / "demographic.csv").write_text(
+        "Research_Participant_ID,Age,Race\n14_000001,30,White\n,,\n")
+    (d / "biospecimen.csv").write_text(
+        "Research_Participant_ID,Biospecimen_ID,Biospecimen_Type\n"
+        "14_000001,14_000001_001,PBMC\n")
+    blank = {"sheets": {n: read_sheet_csv(spark, str(d / n))
+                        for n in ("demographic.csv", "biospecimen.csv")},
+             "cbc_id": "14", "today": TODAY, "fix_reference_bugs": False}
+    want = _finding_set(SubmissionValidator(spark, **blank).validate()
+                        .findings)
+    assert _finding_set(validate_batched(spark, {"blank": blank})
+                        .drop(SUB_COL)) == want
+    assert sorted(r[3] for r in want
+                  if r[2] == 3 and r[5].startswith("Missing Values")) == [
+        "Age", "Race", "Research_Participant_ID"]
 
     # shared-parameter constraint is enforced (cbc_id may differ — v2 —
     # but today/fix_reference_bugs must not)
@@ -392,11 +439,9 @@ def test_cli_batched_matches_serial(spark, tmp_path, monkeypatch, capsys):
 
 
 def test_batched_rejects_column_valued_checks(spark, tmp_path, monkeypatch):
-    """r12 (ADVICE): a Column-valued CheckExpr (custom caller rule —
-    supported by the serial path's DataFrame-compile fallback,
-    submission.py) has no SQL text form; batched mode must refuse it
-    with a clear ValueError instead of crashing inside render_spark_sql.
-    """
+    """r12 (ADVICE): a Column-valued CheckExpr (custom caller rule) has
+    no SQL text form; the compile must refuse it with a clear ValueError
+    instead of crashing inside render_spark_sql."""
     from pyspark.sql import functions as F
 
     from nci_seronet_proc_data_validator_spark import orchestrate as orch
@@ -415,7 +460,6 @@ def test_batched_rejects_column_valued_checks(spark, tmp_path, monkeypatch):
             "Age", [CheckExpr(F.col("Age") == "13", "unlucky age")])]
         return bound
 
-    import nci_seronet_proc_data_validator_spark.orchestrate as orch_mod
     monkeypatch.setattr(
         "nci_seronet_proc_data_validator_spark.plans.rulebook."
         "bind_sheet_rules_cached", bind_with_column_rule)
@@ -425,21 +469,45 @@ def test_batched_rejects_column_valued_checks(spark, tmp_path, monkeypatch):
         orch.validate_batched(spark, subs)
 
 
-def test_batched_rejects_db_merged_tables(spark, tmp_path):
-    """r12: serial validate() supports JDBC fallback parents
-    (db_merged_tables); the batched tagged-union enrichment cannot
-    express a per-submission side input, and silently ignoring it would
-    diverge from serial without error — clear ValueError instead."""
+def test_batched_db_merged_tables_matches_serial(spark, tmp_path):
+    """Per-submission DB fallback parents (db_merged_tables, the S5 JDBC
+    reads) ride the batched compile: each submission's fallback is
+    tagged like its sheets, so a fallback row enriches and spines only
+    its own submission. Each batched slice equals that submission's own
+    validate(); mismatched fallback name sets are refused."""
     from nci_seronet_proc_data_validator_spark.orchestrate import (
-        validate_batched)
+        SUB_COL, validate_batched)
 
-    sub = _load(spark, tmp_path, 0)
-    fallback = spark.createDataFrame(
-        [("14_000099", "Negative")],
-        "Research_Participant_ID string, SARS_CoV_2_PCR_Test_Result string")
-    bad = {**sub, "db_merged_tables": {"prior_clinical_test.csv": fallback}}
+    subs = {}
+    for i in range(2):
+        kw = _load(spark, tmp_path, i)
+        # sub0's participant 14_000000 has a prior-test row; sub1's
+        # fallback names a participant no sheet of sub1 carries
+        kw["db_merged_tables"] = {"prior_clinical_test.csv":
+                                  spark.createDataFrame(
+            [(f"14_00000{0 if i == 0 else 9}", "Negative")],
+            "Research_Participant_ID string, "
+            "SARS_CoV_2_PCR_Test_Result string")}
+        subs[f"sub{i}"] = kw
+    serial = {sid: _finding_set(
+        SubmissionValidator(spark, **kw).validate().findings)
+        for sid, kw in subs.items()}
+    # the fallback really feeds the participant spine: without it the
+    # 2-sheet submission gets "missing from Prior_Clinical_Test" for all
+    no_db = _finding_set(SubmissionValidator(
+        spark, **{**subs["sub0"], "db_merged_tables": {}}).validate()
+        .findings)
+    assert serial["sub0"] != no_db
+
+    batched = validate_batched(spark, subs).cache()
+    got = {sid: _finding_set(batched.filter(
+        batched[SUB_COL] == sid).drop(SUB_COL)) for sid in subs}
+    assert got == serial
+
+    lopsided = {"a": subs["sub0"],
+                "b": {**subs["sub1"], "db_merged_tables": {}}}
     with pytest.raises(ValueError, match="db_merged_tables"):
-        validate_batched(spark, {"a": bad, "b": sub})
+        validate_batched(spark, lopsided)
 
 
 def test_batched_pretagged_matches_serial(spark, tmp_path):
@@ -478,6 +546,27 @@ def test_batched_pretagged_matches_serial(spark, tmp_path):
     for n, df in pretagged.items():
         p = df._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
         assert p.count("FileScan csv") <= 2, (n, p[:500])
+
+
+def test_sql_string_map_round_trips_and_refuses_legacy_literals(spark):
+    """The one SQL map-literal renderer (pretagged tag and CBC lookups):
+    a quote and a backslash round-trip exactly, and the render refuses
+    under spark.sql.parser.escapedStringLiterals=true, where its
+    backslash escapes would be read literally."""
+    from pyspark.sql import functions as F
+
+    from nci_seronet_proc_data_validator_spark.errors import sql_string_map
+
+    pairs = [("/data/o'brien\\sub 1.csv", "it's\\n"), ("plain", "x")]
+    m = sql_string_map(spark, pairs)
+    got = spark.range(1).select(F.expr(m).alias("m")).first()["m"]
+    assert got == dict(pairs)
+    spark.conf.set("spark.sql.parser.escapedStringLiterals", "true")
+    try:
+        with pytest.raises(ValueError, match="escapedStringLiterals"):
+            sql_string_map(spark, pairs)
+    finally:
+        spark.conf.unset("spark.sql.parser.escapedStringLiterals")
 
 
 def test_batched_results_free_data_scale_caches(spark, tmp_path):

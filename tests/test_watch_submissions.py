@@ -279,6 +279,37 @@ def test_two_submissions_complete_in_one_epoch(spark, tmp_path):
         assert _finding_set(mine) == _finding_set(want), name
 
 
+def test_url_unsafe_submission_dirs_match_batch_compile(spark, tmp_path):
+    """Submission directories whose names the file source reports
+    percent-encoded (space, '%', '#') or keeps literal ('+') still map
+    their rows back to the right submission: the same-schema group
+    validates, nothing fails, and each submission's findings equal its
+    own validate()."""
+    root = tmp_path / "landing"
+    names = ("sub A", "sub%20B#1", "sub+C")
+    paths = {n: _write_submission(root, n, "LabX", i)
+             for i, n in enumerate(names)}
+
+    out, cp = str(tmp_path / "out"), str(tmp_path / "cp")
+    failures: list = []
+    q = validate_stream_submissions(
+        spark, str(root), cp, DECLARED, out, cbc_map=CBC_MAP,
+        bind_kwargs={"today": TODAY},
+        failed_cb=lambda f, e: failures.append(f))
+    q.awaitTermination(600)
+
+    assert failures == []
+    got = spark.read.parquet(os.path.join(out, "findings"))
+    assert {r["__submission_id"] for r in
+            got.select("__submission_id").distinct().collect()} \
+        == set(names)
+    for name, p in paths.items():
+        mine = got.filter(F.col("__submission_id") == name).drop(
+            "__submission_id", "epoch")
+        want = _batch_twin(spark, p).findings
+        assert _finding_set(mine) == _finding_set(want), name
+
+
 def test_complete_watcher_drives_job_status_upserts(spark, tmp_path):
     """The full production loop in continuous mode: arrivals ->
     completeness gate -> batch compile -> S11 jobs-table upsert via
@@ -405,10 +436,10 @@ def test_clean_submission_reports_completed(spark, tmp_path, monkeypatch,
 def test_same_schema_completions_batch_through_one_plan(spark, tmp_path,
                                                         monkeypatch):
     """r13: three same-schema submissions + one different-schema one all
-    completing in ONE epoch — the same-schema group must route through
-    validate_batched_results (ONE compiled plan, pretagged multi-file
-    scans) and the odd one through the per-submission path, with every
-    submission's findings still equal to its own batch compile."""
+    completing in ONE epoch — each schema group routes through ONE
+    validate_batched_results compile with pretagged multi-file scans
+    (the odd one as a group of one), with every submission's findings
+    still equal to its own batch compile."""
     import nci_seronet_proc_data_validator_spark.orchestrate as orch
 
     calls = []
@@ -443,7 +474,8 @@ def test_same_schema_completions_batch_through_one_plan(spark, tmp_path,
         bind_kwargs={"today": TODAY})
     q.awaitTermination(600)
 
-    assert calls == [(["s0", "s1", "s2"], True)]    # one batched group
+    # one compile per schema group (groups may run concurrently)
+    assert sorted(calls) == [(["odd"], True), (["s0", "s1", "s2"], True)]
     got = spark.read.parquet(os.path.join(out, "findings"))
     for name, p in paths.items():
         mine = got.filter(F.col("__submission_id") == name).drop(
@@ -452,75 +484,55 @@ def test_same_schema_completions_batch_through_one_plan(spark, tmp_path,
         assert _finding_set(mine) == _finding_set(want), name
 
 
-def test_batched_group_rejection_falls_back_not_wedges(spark, tmp_path,
-                                                       monkeypatch):
-    """r13 review: a ValueError from the batched compile (e.g. a
-    Column-valued custom rule, which has no SQL text form) must NOT
-    fail the micro-batch — a failed batch replays the same grouping on
-    restart and fails identically forever, wedging the stream. The
-    group must fall back to per-submission serial compiles (which
-    evaluate such rules via the DataFrame path) with findings still
-    equal to each submission's own batch compile."""
-    import warnings
+def test_batched_group_rejection_falls_back_not_wedges(spark, tmp_path):
+    """r13 review: a failing group compile must NOT fail the micro-batch
+    — a failed batch replays the same grouping on restart and fails
+    identically forever, wedging the stream. Here one member of a
+    same-header group is poisoned (its submission.csv declares a
+    non-numeric participant count, which the A4 comparison's int()
+    rejects): the group is retried member by member, the healthy member
+    validates exactly as its own validate(), and only the poisoned one
+    records a failure."""
+    from nci_seronet_proc_data_validator_spark.errors import (
+        ROW_VALIDATION_FAILURE)
 
-    from nci_seronet_proc_data_validator_spark.functions.checks import (
-        CheckExpr)
-    from nci_seronet_proc_data_validator_spark.plans import rulebook as rb
-    from nci_seronet_proc_data_validator_spark.plans.rules import ColumnRules
+    root = tmp_path / "landing"
+    good = _write_submission(root, "good", "LabX", 0)
+    bad = _write_submission(root, "bad", "LabX", 1)
+    with open(bad["submission.csv"], "w") as f:
+        # same header; the declared participant count (data row 2,
+        # the reference's iloc[1][1]) is not a number
+        f.write("key,LabX\nname,bad\np,many\nb,9\n")
 
-    real_bind = rb.bind_sheet_rules_cached
+    out, cp = str(tmp_path / "out"), str(tmp_path / "cp")
+    failures: list[tuple[int, dict]] = []
+    q = validate_stream_submissions(
+        spark, str(root), cp, DECLARED, out, cbc_map=CBC_MAP,
+        bind_kwargs={"today": TODAY},
+        failed_cb=lambda f, e: failures.append((e, f)))
+    q.awaitTermination(600)
 
-    def bind_with_column_rule(sheet, columns, cbc_id, **kw):
-        import copy
-        bound = copy.copy(real_bind(sheet, columns, cbc_id, **kw))
-        if sheet == "demographic.csv":
-            bound.column_rules = [*bound.column_rules, ColumnRules(
-                "Age", [CheckExpr(F.col("Age") == "13", "unlucky age")])]
-        return bound
+    got = spark.read.parquet(os.path.join(out, "findings"))
+    mine = got.filter(F.col("__submission_id") == "good").drop(
+        "__submission_id", "epoch")
+    assert _finding_set(mine) == _finding_set(_batch_twin(spark, good)
+                                              .findings)
+    fail_rows = got.filter(F.col("__submission_id") == "bad").collect()
+    assert len(fail_rows) == 1
+    assert fail_rows[0]["CSV_Sheet_Name"] == "__submission__"
+    assert fail_rows[0]["Row_Index"] == ROW_VALIDATION_FAILURE
+    assert "ValueError" in fail_rows[0]["Error_Message"]
+    assert len(failures) == 1 and set(failures[0][1]) == {"bad"}
 
-    monkeypatch.setattr(
-        "nci_seronet_proc_data_validator_spark.plans.rulebook."
-        "bind_sheet_rules_cached", bind_with_column_rule)
 
+def test_db_merged_tables_drain_matches_serial(spark, tmp_path):
+    """r13 review: bind_kwargs with db_merged_tables (the S5 JDBC
+    fallback, created on the outer session while foreachBatch compiles
+    on the streaming clone) drains to findings equal to each
+    submission's own validate() with the same fallback."""
     root = tmp_path / "landing"
     paths = {f"s{i}": _write_submission(root, f"s{i}", "LabX", i)
              for i in range(2)}               # same schema -> one group
-
-    out, cp = str(tmp_path / "out"), str(tmp_path / "cp")
-    with warnings.catch_warnings(record=True) as caught:
-        warnings.simplefilter("always")
-        q = validate_stream_submissions(
-            spark, str(root), cp, DECLARED, out, cbc_map=CBC_MAP,
-            bind_kwargs={"today": TODAY})
-        q.awaitTermination(600)
-    assert any("falling back to per-submission" in str(w.message)
-               for w in caught), [str(w.message) for w in caught]
-
-    got = spark.read.parquet(os.path.join(out, "findings"))
-    for name, p in paths.items():            # twins under the same patch
-        mine = got.filter(F.col("__submission_id") == name).drop(
-            "__submission_id", "epoch")
-        want = _batch_twin(spark, p).findings
-        assert _finding_set(mine) == _finding_set(want), name
-
-
-def test_db_merged_tables_routes_around_batching(spark, tmp_path,
-                                                 monkeypatch):
-    """r13 review: bind_kwargs with db_merged_tables (the S5 JDBC
-    fallback, a per-submission side input validate_batched rejects)
-    must route every completion through the per-submission path — the
-    batched group would otherwise raise inside foreachBatch and wedge
-    the stream."""
-    import nci_seronet_proc_data_validator_spark.orchestrate as orch
-
-    def boom(*a, **kw):
-        raise AssertionError("batched path must not be reached")
-
-    monkeypatch.setattr(orch, "validate_batched_results", boom)
-
-    root = tmp_path / "landing"
-    paths = {f"s{i}": _write_submission(root, f"s{i}", "LabX", i)
-             for i in range(2)}               # same schema -> groupable
     fallback = spark.createDataFrame(
         [("14_999999", "Negative")],
         "Research_Participant_ID string, "

@@ -15,13 +15,13 @@ submissions, BENCH_NOTES r10/r11). Per-sheet error reports + findings
 parquet land under OUT_DIR (per-submission subdirs in multi mode).
 
 ``--batched`` groups the submissions by schema signature (sheet-name
-set + per-sheet column sets — CBC ids MAY differ, batched v2) and
-compiles each same-shape group of >=2 through ONE plan
-(``orchestrate.validate_batched_results``); singletons fall back to
-per-submission validate(). Findings per submission are identical to
-serial/concurrent mode — batched is the driver-bound regime's shape
-(thousands of tiny submissions, or a driver remote from the cluster):
-its build cost is O(distinct schemas), not O(N submissions).
+set + per-sheet column lists — CBC ids MAY differ) and compiles each
+group through ONE plan (``orchestrate.validate_groups``). Every mode
+runs the same compile — a single submission is a batch of one — so
+findings per submission are identical to serial/concurrent mode;
+batched is the driver-bound regime's shape (thousands of tiny
+submissions, or a driver remote from the cluster): its build cost is
+O(distinct schemas), not O(N submissions).
 """
 
 from __future__ import annotations
@@ -95,7 +95,7 @@ def _report(result, sheets, meta, sub_dir: str, out: str | None) -> bool:
     from nci_seronet_proc_data_validator_spark.submission import (
         check_submission_quality,
     )
-    n_col_errors = result.column_findings.count()
+    n_col_errors = len(result.column_finding_rows)
     ok, why = check_submission_quality(sheets, n_col_errors,
                                        str(meta["cbc_id"]))
     if not ok:
@@ -121,23 +121,23 @@ def _report(result, sheets, meta, sub_dir: str, out: str | None) -> bool:
 
 def _validate_batched_groups(spark, subs: dict) -> dict:
     """--batched mode: group submissions by schema signature (sheet-name
-    set + per-sheet column sets + today/flags — CBC ids may differ,
-    batched v2), compile each group of >=2 through ONE plan
-    (``validate_batched_results``), fall back to serial validate() for
-    singleton schemas. Per-GROUP error isolation: a malformed submission
-    fails its group's outcomes, the other groups still validate.
-    Returns ``ConcurrentOutcome`` per submission dir (``seconds`` is the
-    GROUP wall time for batched members — the plan is shared)."""
-    import time
-
+    set + per-sheet column lists + today/flags — CBC ids may differ) and
+    compile each group through ONE plan (``orchestrate.validate_groups``
+    — a group of one is simply a batch of one; a failing group is
+    retried member by member, so a malformed submission fails only
+    itself; a submission whose severity counts fail fails alone).
+    Returns ``ConcurrentOutcome`` per submission dir (``seconds`` is its
+    group's wall time — the plan is shared)."""
     from nci_seronet_proc_data_validator_spark.orchestrate import (
-        ConcurrentOutcome,
+        SUB_COL,
         _default_materialize,
-        validate_batched_results,
+        validate_groups,
+    )
+    from nci_seronet_proc_data_validator_spark.sources.readers import (
+        read_sheet_csv_tagged,
     )
     from nci_seronet_proc_data_validator_spark.submission import (
         SKIP_VALIDATION,
-        SubmissionValidator,
     )
 
     def sig(kw) -> tuple:
@@ -162,81 +162,19 @@ def _validate_batched_groups(spark, subs: dict) -> dict:
     sizes = sorted((len(m) for m in groups.values()), reverse=True)
     print(f"batched: {len(groups)} schema group(s), sizes {sizes}")
 
-    def _run_group(members: list) -> dict:
-        out: dict = {}
-        t0 = time.time()
-        if len(members) == 1:
-            d = members[0]
-            try:
-                res = SubmissionValidator(spark, **subs[d]).validate()
-                out[d] = ConcurrentOutcome(
-                    result=res, materialized=_default_materialize(res),
-                    seconds=time.time() - t0)
-            except Exception as exc:  # noqa: BLE001 — isolate per group
-                out[d] = ConcurrentOutcome(result=None, materialized=None,
-                                           seconds=time.time() - t0,
-                                           error=exc)
-            return out
-        try:
-            # One multi-file scan per sheet name across the group (the
-            # 100 TB scan shape: N submissions = N files of one
-            # datasource), instead of N per-submission single-file
-            # scans unioned. Same-schema membership is guaranteed by
-            # the signature grouping above; submission.csv et al stay
-            # per-submission (metadata, not validated).
-            from nci_seronet_proc_data_validator_spark.orchestrate import (
-                SUB_COL,
-            )
-            from nci_seronet_proc_data_validator_spark.sources.readers import (
-                read_sheet_csv_tagged,
-            )
-            from nci_seronet_proc_data_validator_spark.submission import (
-                SKIP_VALIDATION as _SKIP,
-            )
-            names = [n for n in subs[members[0]]["sheets"]
-                     if n not in _SKIP]
-            pretagged = {
-                n: read_sheet_csv_tagged(
+    def pretag(members: list) -> dict:
+        # One multi-file scan per sheet name across the group (the
+        # 100 TB scan shape: N submissions = N files of one datasource);
+        # submission.csv et al stay per-submission (metadata, not
+        # validated).
+        return {n: read_sheet_csv_tagged(
                     spark, {d: os.path.join(d, n) for d in members},
                     SUB_COL)
-                for n in names}
-            results = validate_batched_results(
-                spark, {d: subs[d] for d in members},
-                pretagged=pretagged)
-            # materialize (error/warning counts) overlapped: independent
-            # per-submission actions over the already-cached findings
-            from concurrent.futures import ThreadPoolExecutor
-            with ThreadPoolExecutor(max_workers=min(8, len(members)),
-                                    thread_name_prefix="batched-mat") as tp:
-                mats = dict(zip(members, tp.map(
-                    lambda d: _default_materialize(results[d]), members)))
-            for d in members:
-                out[d] = ConcurrentOutcome(
-                    result=results[d], materialized=mats[d],
-                    seconds=time.time() - t0)
-        except Exception as exc:  # noqa: BLE001 — isolate per group
-            for d in members:
-                out[d] = ConcurrentOutcome(result=None, materialized=None,
-                                           seconds=time.time() - t0,
-                                           error=exc)
-        return out
+                for n in subs[members[0]]["sheets"]
+                if n not in SKIP_VALIDATION}
 
-    # Schema groups are independent (separate plans, separate outcomes) —
-    # overlap them on a bounded pool so a small group hides under a big
-    # one instead of queueing behind it. Width 4: the per-group work is
-    # driver-build-heavy and the GIL serializes builds past ~4 threads
-    # (BENCH_NOTES r11 width ceiling).
-    group_lists = list(groups.values())
-    out: dict = {}
-    if len(group_lists) == 1:
-        out.update(_run_group(group_lists[0]))
-    else:
-        from concurrent.futures import ThreadPoolExecutor
-        with ThreadPoolExecutor(max_workers=min(4, len(group_lists)),
-                                thread_name_prefix="batched-group") as gp:
-            for part in gp.map(_run_group, group_lists):
-                out.update(part)
-    return out
+    return validate_groups(spark, subs, list(groups.values()),
+                           pretag=pretag, materialize=_default_materialize)
 
 
 def _run_procs(args) -> int:
@@ -333,8 +271,7 @@ def main() -> int:
                          "(FAIR pool per submission)")
     ap.add_argument("--batched", action="store_true",
                     help="compile same-schema submissions through ONE "
-                         "plan (O(distinct schemas) driver build; "
-                         "singleton schemas fall back to serial)")
+                         "plan (O(distinct schemas) driver build)")
     ap.add_argument("--procs", type=int, default=1,
                     help="shard schema groups across N driver PROCESSES "
                          "(each its own JVM, each running --batched over "

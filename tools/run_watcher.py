@@ -75,11 +75,6 @@ def main() -> int:
                          "mode (unknown keys validate under '0')")
     ap.add_argument("--max-files", type=int, default=None,
                     help="maxFilesPerTrigger bound (backlog sizing)")
-    ap.add_argument("--batch-threshold", type=int, default=2,
-                    help="complete mode: completions sharing a schema "
-                         "compile through one batched plan when the "
-                         "group has at least this many members (a very "
-                         "large value forces per-submission compiles)")
     ap.add_argument("--timeout", type=int, default=600,
                     help="seconds to wait for the drain to finish")
     args = ap.parse_args()
@@ -201,37 +196,14 @@ def _run_complete(args) -> int:
         # column_findings (P10 header-vs-catalog) feed the printout the
         # way the batch CLI's quality gate consumes them; they are not
         # part of the findings sink there either. The rows are pure
-        # driver-side set algebra, carried on the result as plain tuples
-        # (ValidationResult.column_finding_rows) — read them directly:
-        # the old union-of-N-local-frames collect was an N-task Python-
-        # worker wave plus an N-leg analysis for rows the driver already
-        # held (r14). Results missing the tuples (a custom result
-        # object) fall back to ONE collect for the whole batch.
-        by_sub: dict[str, list] = {}
-        legs = []
+        # driver-side set algebra, carried on the result as plain
+        # 4-tuples (ValidationResult.column_finding_rows) — no Spark.
         for sub in sorted(results):
             completed.append(sub)
-            rws = results[sub].column_finding_rows
-            if rws is not None:
-                if rws:
-                    by_sub[sub] = list(rws)
-            else:
-                legs.append(results[sub].column_findings
-                            .withColumn("__submission_id", F.lit(sub)))
-        if legs:
-            u = legs[0]
-            for leg in legs[1:]:
-                u = u.unionByName(leg)
-            for r in u.collect():
-                by_sub.setdefault(r["__submission_id"], []).append(r)
-        for sub, sub_rows in sorted(by_sub.items()):
-            print(f"{sub}: {len(sub_rows)} header/column finding(s):")
-            for r in sub_rows[:50]:
-                # plain 4-tuples (column_finding_rows) or collected Rows
-                mt, sheet, col, msg = (
-                    r if isinstance(r, tuple)
-                    else (r["Message_Type"], r["CSV_Sheet_Name"],
-                          r["Column_Name"], r["Error_Message"]))
+            rows = results[sub].column_finding_rows
+            if rows:
+                print(f"{sub}: {len(rows)} header/column finding(s):")
+            for mt, sheet, col, msg in rows[:50]:
                 print(f"  {mt} {sheet} {col}: {msg}")
 
     def on_failed(failures, epoch_id):
@@ -248,7 +220,7 @@ def _run_complete(args) -> int:
         cbc_map=cbc_map, icd10_codes=load_icd10_codes(spark),
         expected_columns=catalog,
         max_files_per_trigger=args.max_files, complete_cb=on_complete,
-        failed_cb=on_failed, batch_threshold=args.batch_threshold)
+        failed_cb=on_failed)
     q.awaitTermination(args.timeout)
     if q.isActive:
         q.stop()
