@@ -1,4 +1,5 @@
-"""Concurrent multi-submission orchestration.
+"""Multi-submission orchestration: every entry mode's path from
+submissions to findings.
 
 The reference processes submissions ONE AT A TIME in the Lambda body
 (``for zip_file in file_list`` — nci-seronet-data-validator.py:69): each
@@ -8,26 +9,28 @@ are independent (separate sheets, separate findings, separate status
 rows), so their jobs can share the cluster instead of head-of-line
 blocking behind the largest one.
 
-Spark-first shape:
+Three layers, each the only one of its kind:
 
-- **One session, many scheduler pools.** Each submission (or
-  same-schema group of submissions, :func:`validate_groups`) validates
-  on its own thread inside the SAME SparkSession, with
-  ``spark.scheduler.pool`` set to a per-group FAIR pool (the
-  session factory enables FAIR mode). FAIR pools share executor slots
-  round-robin, so a 10-sheet submission cannot starve a 1-sheet one;
-  under a FIFO scheduler the same code still overlaps jobs, just
-  without the fairness guarantee.
-- **Thread-per-submission is driver-side only.** The threads never touch
-  each other's state: the compile (:func:`validate_batched`) registers
-  its temp views under a per-invocation uuid, and all data movement happens
-  in executor tasks. PySpark's pinned-thread mode maps each Python
-  thread to its own JVM thread, so the pool-local property cannot leak
-  across submissions.
-- **Bounded width.** ``max_parallel`` caps in-flight submissions the way
-  ``maxFilesPerTrigger`` caps the streaming backlog
-  (``streaming/watcher.py``): memory and retry cost stay sized by the
-  bound, not the queue length.
+- :func:`validate_dirs` — submission DIRECTORIES to schema groups:
+  driver-side header probe, ``submission.csv`` metadata, the
+  order-sensitive :func:`group_by_schema` signature and one pretagged
+  multi-file scan per sheet. The batch CLI and the completion watcher
+  both call it.
+- :func:`validate_groups` — one compile per schema group, each group on
+  its own worker thread inside the SAME SparkSession with a per-group
+  FAIR pool (``spark.scheduler.pool``; the session factory enables FAIR
+  mode, so a 10-sheet submission cannot starve a 1-sheet one). At most
+  ``max_parallel`` groups run at once, the way ``maxFilesPerTrigger``
+  caps the streaming backlog: memory and retry cost stay sized by the
+  bound, not the queue length. A failing group is retried member by
+  member.
+- :func:`validate_batched_results` / :func:`validate_batched` — THE
+  rulebook compile, N >= 1 submissions through one plan
+  (``SubmissionValidator.validate`` is the N=1 call). Its temp views
+  are registered under a per-invocation uuid, so concurrent groups
+  never touch each other's state; PySpark's pinned-thread mode maps each
+  Python thread to its own JVM thread, so the pool-local property
+  cannot leak across groups.
 """
 
 from __future__ import annotations
@@ -41,18 +44,19 @@ from typing import Any, Callable
 from pyspark.sql import SparkSession
 
 from nci_seronet_proc_data_validator_spark.submission import (
+    SKIP_VALIDATION,
     ValidationResult,
 )
 
-__all__ = ["CBC_COL", "ConcurrentOutcome", "SUB_COL", "validate_batched",
-           "validate_batched_results", "validate_concurrent",
+__all__ = ["CBC_COL", "ConcurrentOutcome", "SUB_COL", "group_by_schema",
+           "validate_batched", "validate_batched_results", "validate_dirs",
            "validate_groups"]
 
 
 @dataclass
 class ConcurrentOutcome:
     """Per-submission outcome of :func:`validate_groups` (and so of
-    :func:`validate_concurrent`)."""
+    :func:`validate_dirs`)."""
     result: ValidationResult | None     # None when the submission errored
     materialized: Any                   # return of the materialize hook
     seconds: float                      # wall time inside the worker
@@ -68,36 +72,6 @@ def _default_materialize(res: ValidationResult) -> dict[str, int]:
                .withColumnRenamed("count", "n").collect())}
     return {"errors": counts.get("Error", 0),
             "warnings": counts.get("Warning", 0)}
-
-
-def validate_concurrent(
-        spark: SparkSession,
-        submissions: dict[str, dict],
-        max_parallel: int = 4,
-        materialize: Callable[[ValidationResult], Any] | None = None,
-) -> dict[str, ConcurrentOutcome]:
-    """Validate many submissions concurrently in one SparkSession.
-
-    ``submissions`` maps a submission id to the ``SubmissionValidator``
-    keyword arguments (everything but ``spark``): ``sheets`` plus any of
-    ``cbc_id``, ``declared_participants``, ``icd10_codes``,
-    ``expected_columns``, ``today``, ... Results are keyed back by the
-    same ids.
-
-    Each submission is its own group of :func:`validate_groups` — its
-    own compile, on its own worker thread and FAIR pool. ``materialize``
-    runs INSIDE the worker thread after the compile and must touch the
-    findings (default: severity counts) — Spark plans are lazy, so
-    without an action per thread nothing would actually overlap. A
-    submission that raises is captured in its outcome (``error`` set,
-    ``result`` None) without failing the others — the reference's
-    per-submission retry model, where one bad zip marks its own status
-    row and the batch continues.
-    """
-    return validate_groups(
-        spark, submissions, [[sid] for sid in submissions],
-        materialize=materialize or _default_materialize,
-        max_parallel=max_parallel)
 
 
 # --------------------------------------------------------------- batched
@@ -201,7 +175,6 @@ def validate_batched(spark: SparkSession,
     from nci_seronet_proc_data_validator_spark.operators.joins import (
         MERGE_COLS,
         biospecimen_cross_sql,
-        icd10_flag_join,
         merge_tables,
         participant_cross_sql,
     )
@@ -209,8 +182,8 @@ def validate_batched(spark: SparkSession,
         with_typed_shadows,
     )
     from nci_seronet_proc_data_validator_spark.plans.rulebook import (
-        _icd10_flag,
         bind_sheet_rules_cached,
+        with_icd10_flags,
     )
     from nci_seronet_proc_data_validator_spark.plans.rules import (
         dup_id_findings_sql,
@@ -218,9 +191,6 @@ def validate_batched(spark: SparkSession,
     )
     from nci_seronet_proc_data_validator_spark.sources.readers import (
         cleanup_sheet,
-    )
-    from nci_seronet_proc_data_validator_spark.submission import (
-        SKIP_VALIDATION,
     )
 
     if not subs:
@@ -402,13 +372,7 @@ def validate_batched(spark: SparkSession,
                    if c not in enriched.columns}
         if missing:
             enriched = enriched.withColumns(missing)
-        for c in bound.icd10_columns:
-            if icd10 is not None:
-                enriched = icd10_flag_join(enriched, c, icd10,
-                                           _icd10_flag(c))
-            else:
-                enriched = enriched.withColumn(_icd10_flag(c), F.lit(False))
-        view = reg(enriched, f"s{i}")
+        view = reg(with_icd10_flags(enriched, bound, icd10), f"s{i}")
         # codegen_chunk=9: the fused full-width findings projection
         # exceeds HotSpot's JIT size ceiling and runs interpreted (the
         # rulebook's measured lesson, plans/rules.py) — at batched
@@ -644,16 +608,17 @@ def validate_groups(spark: SparkSession,
                     ) -> "dict[str, ConcurrentOutcome]":
     """Validate ``subs`` one schema group at a time, each group through
     ONE :func:`validate_batched_results` compile, with per-submission
-    failure isolation — the one multi-submission driver: the batch CLI,
-    the completion watcher and :func:`validate_concurrent` (singleton
-    groups) all run through it.
+    failure isolation — the one multi-submission driver, under
+    :func:`validate_dirs` (the batch CLI and the completion watcher).
 
     ``groups`` partitions the submission ids by the caller's schema
     signature (a group of one is an ordinary N=1 batch). ``pretag``
     optionally builds a group's ``pretagged`` multi-file scans from its
     member ids; ``combined_out`` collects each successful group's
-    combined batch frame; ``materialize`` runs per member inside the
-    group's worker (see :func:`validate_concurrent`).
+    combined batch frame. ``materialize(result)`` runs per member inside
+    the group's worker and should touch the findings (e.g. severity
+    counts): plans are lazy, so without an action in the worker the
+    groups' jobs would not overlap.
 
     Each group runs on its own worker thread (the calling thread when
     there is only one group), at most ``max_parallel`` at once: the
@@ -736,4 +701,128 @@ def validate_groups(spark: SparkSession,
                             thread_name_prefix="submission") as pool:
         for o in pool.map(isolated, groups):
             out.update(o)
+    return out
+
+
+def group_by_schema(dirs: "dict[str, dict[str, str]]",
+                    headers: "dict[str, list[str] | None]"
+                    ) -> "list[list[str]]":
+    """Partition submission ids into schema groups by an ORDER-SENSITIVE
+    signature: the sorted (sheet name, probed header) pairs of the
+    validated sheets. Order matters because a group's multi-file scan
+    takes names from one file and reads the rest POSITIONALLY; a
+    probe-refused header (``headers[path]`` None) keys on its path, so
+    it never merges distinct schemas. ``dirs`` maps id → {sheet: path},
+    ``headers`` path → ``csv_header(path)``.
+    """
+    groups: dict[tuple, list] = {}
+    for sid, sheets in dirs.items():
+        key = tuple(
+            (name, tuple(cols) if (cols := headers[pth]) is not None
+             else ("?", pth))
+            for name, pth in sorted(sheets.items())
+            if name not in SKIP_VALIDATION)
+        groups.setdefault(key, []).append(sid)
+    return list(groups.values())
+
+
+def validate_dirs(spark: SparkSession,
+                  dirs: "dict[str, dict[str, str]]",
+                  *,
+                  cbc_map: dict,
+                  icd10_codes: "DataFrame | None" = None,
+                  expected_columns: "dict | None" = None,
+                  bind_kwargs: "dict | None" = None,
+                  materialize: "Callable[[ValidationResult], Any] | None"
+                  = None,
+                  combined_out: "list | None" = None,
+                  meta_out: "dict | None" = None,
+                  groups_out: "list | None" = None
+                  ) -> "dict[str, ConcurrentOutcome]":
+    """Validate submission DIRECTORIES — the one driver from sheet files
+    to findings, shared by the batch CLI and the completion watcher.
+    ``dirs`` maps a submission id to ``{sheet file name: path}``:
+
+    1. each file's header is probed once, driver-side (``csv_header``);
+    2. ``submission.csv`` is parsed driver-side
+       (``parse_submission_metadata_local``), with the Spark parse as
+       fallback; ``cbc_map`` resolves its lab name (unknown → '0');
+    3. ``sheets`` kwargs are the probed column LISTS (the compile reads
+       rows from the group scans, the tail reads only names), a
+       DataFrame (``read_sheet_csv``) only for a probe-refused header;
+    4. :func:`group_by_schema` groups the submissions, and each group
+       reads every sheet as ONE tagged multi-file scan
+       (``read_sheet_csv_tagged`` with the probed header as ``columns=``,
+       so no header-inference job reads every member file);
+    5. :func:`validate_groups` compiles each group once, passing
+       ``materialize`` and ``combined_out`` through.
+
+    ``icd10_codes``, ``expected_columns`` and ``bind_kwargs`` (``today``,
+    ``fix_reference_bugs``, ``db_merged_tables``) are shared by all.
+    ``meta_out`` receives each submission's parsed metadata,
+    ``groups_out`` the schema groups. A submission whose kwargs cannot
+    be built (unreadable sheet, malformed metadata) gets its own
+    ``ConcurrentOutcome(error=...)``; the rest still validate. Readers
+    are looked up on their module at call time, so wrappers around them
+    (benchmark spans, test spies) see every read.
+    """
+    from nci_seronet_proc_data_validator_spark.sources.readers import (
+        csv_header,
+        read_sheet_csv,
+        read_sheet_csv_tagged,
+    )
+    from nci_seronet_proc_data_validator_spark.submission import (
+        parse_submission_metadata,
+        parse_submission_metadata_local,
+    )
+    cbc = {str(k): str(v) for k, v in (cbc_map or {}).items()}
+    headers = {pth: csv_header(pth)
+               for sheets in dirs.values() for pth in sheets.values()}
+
+    def kwargs_for(sheets: dict) -> tuple[dict, dict]:
+        frames = {name: (list(cols) if (cols := headers[pth]) is not None
+                         else read_sheet_csv(spark, pth))
+                  for name, pth in sorted(sheets.items())}
+        meta = {"cbc_id": "0", "declared_participants": None,
+                "declared_biospecimens": None}
+        if "submission.csv" in sheets:
+            pth = sheets["submission.csv"]
+            meta = (parse_submission_metadata_local(pth, cbc)
+                    or parse_submission_metadata(read_sheet_csv(
+                        spark, pth, columns=headers[pth]), cbc))
+        return dict(
+            sheets=frames, cbc_id=str(meta["cbc_id"]),
+            declared_participants=meta.get("declared_participants"),
+            declared_biospecimens=meta.get("declared_biospecimens"),
+            icd10_codes=icd10_codes, expected_columns=expected_columns,
+            **(bind_kwargs or {})), meta
+
+    subs: dict[str, dict] = {}
+    out: dict[str, ConcurrentOutcome] = {}
+    for sid, sheets in dirs.items():
+        t0 = time.time()
+        try:
+            subs[sid], meta = kwargs_for(sheets)
+        except Exception as exc:  # noqa: BLE001 — isolate per submission
+            out[sid] = ConcurrentOutcome(result=None, materialized=None,
+                                         seconds=time.time() - t0,
+                                         error=exc)
+            continue
+        if meta_out is not None:
+            meta_out[sid] = meta
+    groups = group_by_schema({s: dirs[s] for s in subs}, headers)
+    if groups_out is not None:
+        groups_out.extend(groups)
+
+    def pretag(members: list) -> dict:
+        first = dirs[members[0]]
+        return {n: read_sheet_csv_tagged(
+                    spark, {s: dirs[s][n] for s in members}, SUB_COL,
+                    columns=headers[first[n]])
+                for n in sorted(first) if n not in SKIP_VALIDATION}
+
+    if groups:
+        out.update(validate_groups(spark, subs, groups, pretag=pretag,
+                                   combined_out=combined_out,
+                                   materialize=materialize))
     return out

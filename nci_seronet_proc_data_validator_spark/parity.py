@@ -847,9 +847,9 @@ def q_streaming_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # Watcher end-to-end: a fixture sheet staged as CSV, drained by
     # validate_stream (foreachBatch -> the batch rule compiler), findings
-    # parquet read back and count-aggregated (streaming row ids are
-    # per-batch monotonic, so row identity is not comparable — the
-    # finding multiset is).
+    # parquet read back and count-aggregated (row ids are CSV lines of
+    # Spark's staged part files, which the oracle cannot name — the
+    # finding multiset is comparable).
     watch_arm = _watch_arm(spark, sf_dir)
 
     # Restart-recovery on-disk contract (r11): crash the watcher in the
@@ -870,7 +870,26 @@ def q_streaming_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("arm", "k", "s"))
 
 
-def _watch_arm(spark: SparkSession, sf_dir: str) -> DataFrame:
+_FINDING_KEYS = ("Message_Type", "Column_Name", "Column_Value",
+                 "Error_Message")
+
+
+def _multiset_arm(findings: DataFrame, arm: str, keys) -> DataFrame:
+    """A drained findings sink as parity rows: the multiplicity ``n`` of
+    each ``keys`` combination, ``s`` the keys joined by '|', ``k`` -1."""
+    return (findings.groupBy(*keys)
+            .agg(F.count(F.lit(1)).alias("n"))
+            .select(F.lit(arm).alias("arm"),
+                    F.lit(-1).cast("bigint").alias("k"),
+                    F.concat_ws("|", *keys).alias("s"),
+                    F.col("n"), F.lit(None).cast("double").alias("v")))
+
+
+def _equipment_stream(spark: SparkSession, sf_dir: str, tag: str,
+                      partitions: "int | None" = None):
+    """Stage the EQUIPMENT fixture sheet as CSV part files and return
+    ``(run, out)``: ``run(**kw)`` starts ``validate_stream`` over it with
+    the oracle's CBC and binding, ``out`` is the findings sink."""
     from nci_seronet_proc_data_validator_spark.plans.fixture import (
         EQUIPMENT,
     )
@@ -882,25 +901,26 @@ def _watch_arm(spark: SparkSession, sf_dir: str) -> DataFrame:
         validate_stream,
     )
     spec = EQUIPMENT
-    in_dir, cp, out = (_tmpdir(f"watch_{t}") for t in ("in", "cp", "out"))
-    (read_table(spark, sf_dir, spec.base)
-     .selectExpr(*[f"CAST({e} AS STRING) AS {c}"
-                   for c, e in spec.columns.items()])
-     .write.mode("overwrite").option("header", "true").csv(in_dir))
-    q = validate_stream(
-        spark, in_dir, cp, spec.sheet, list(spec.columns), CBC_ID, out,
-        bind_kwargs={"drop_list": list(spec.drop_list),
-                     "today": FIXED_TODAY})
-    q.awaitTermination(600)
-    return (spark.read.parquet(out)
-            .groupBy("Message_Type", "Column_Name", "Column_Value",
-                     "Error_Message")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .select(F.lit("watch").alias("arm"),
-                    F.lit(-1).cast("bigint").alias("k"),
-                    F.concat_ws("|", "Message_Type", "Column_Name",
-                                "Column_Value", "Error_Message").alias("s"),
-                    F.col("n"), F.lit(None).cast("double").alias("v")))
+    in_dir, cp, out = (_tmpdir(f"{tag}_{t}") for t in ("in", "cp", "out"))
+    staged = (read_table(spark, sf_dir, spec.base)
+              .selectExpr(*[f"CAST({e} AS STRING) AS {c}"
+                            for c, e in spec.columns.items()]))
+    if partitions is not None:
+        staged = staged.repartition(partitions)
+    staged.write.mode("overwrite").option("header", "true").csv(in_dir)
+    bind_kwargs = {"drop_list": list(spec.drop_list), "today": FIXED_TODAY}
+
+    def run(**kw):
+        return validate_stream(spark, in_dir, cp, spec.sheet,
+                               list(spec.columns), CBC_ID, out,
+                               bind_kwargs=bind_kwargs, **kw)
+    return run, out
+
+
+def _watch_arm(spark: SparkSession, sf_dir: str) -> DataFrame:
+    run, out = _equipment_stream(spark, sf_dir, "watch")
+    run().awaitTermination(600)
+    return _multiset_arm(spark.read.parquet(out), "watch", _FINDING_KEYS)
 
 
 def _watch_multi_arm(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -938,16 +958,8 @@ def _watch_multi_arm(spark: SparkSession, sf_dir: str) -> DataFrame:
         # submission id is the grandparent path segment
         sub_pattern=r".*/([^/]+)/[^/]+/[^/]+$")
     q.awaitTermination(600)
-    return (spark.read.parquet(out)
-            .groupBy("__submission_id", "Message_Type", "Column_Name",
-                     "Column_Value", "Error_Message")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .select(F.lit("watch_multi").alias("arm"),
-                    F.lit(-1).cast("bigint").alias("k"),
-                    F.concat_ws("|", "__submission_id", "Message_Type",
-                                "Column_Name", "Column_Value",
-                                "Error_Message").alias("s"),
-                    F.col("n"), F.lit(None).cast("double").alias("v")))
+    return _multiset_arm(spark.read.parquet(out), "watch_multi",
+                         ("__submission_id", *_FINDING_KEYS))
 
 
 # --- watch_complete: the submission-completeness-gated watcher ----------
@@ -1063,16 +1075,10 @@ def _watch_complete_arm(spark: SparkSession, sf_dir: str) -> DataFrame:
         out, cbc_map={lab: cbc for _s, lab, cbc, _p in _WC_SUBS},
         bind_kwargs={"today": FIXED_TODAY}, max_files_per_trigger=1)
     q.awaitTermination(600)
-    return (spark.read.parquet(os.path.join(out, "findings"))
-            .groupBy("__submission_id", "Message_Type", "CSV_Sheet_Name",
-                     "Column_Name", "Column_Value", "Error_Message")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .select(F.lit("watch_complete").alias("arm"),
-                    F.lit(-1).cast("bigint").alias("k"),
-                    F.concat_ws("|", "__submission_id", "Message_Type",
-                                "CSV_Sheet_Name", "Column_Name",
-                                "Column_Value", "Error_Message").alias("s"),
-                    F.col("n"), F.lit(None).cast("double").alias("v")))
+    return _multiset_arm(
+        spark.read.parquet(os.path.join(out, "findings")), "watch_complete",
+        ("__submission_id", "Message_Type", "CSV_Sheet_Name",
+         *_FINDING_KEYS[1:]))
 
 
 def _sql_watch_complete_arm() -> "tuple[str, str]":
@@ -1220,24 +1226,7 @@ def _recovery_arm(spark: SparkSession, sf_dir: str) -> DataFrame:
     same sink (dynamic partition overwrite of its own ``epoch=`` dir),
     and the read-back multiset must equal the batch compile — no
     duplicate from the half-committed write, no gap."""
-    from nci_seronet_proc_data_validator_spark.plans.fixture import (
-        EQUIPMENT,
-    )
-    from nci_seronet_proc_data_validator_spark.plans.sql_oracle import (
-        CBC_ID,
-        FIXED_TODAY,
-    )
-    from nci_seronet_proc_data_validator_spark.streaming.watcher import (
-        validate_stream,
-    )
-    spec = EQUIPMENT
-    in_dir, cp, out = (_tmpdir(f"recov_{t}") for t in ("in", "cp", "out"))
-    (read_table(spark, sf_dir, spec.base)
-     .selectExpr(*[f"CAST({e} AS STRING) AS {c}"
-                   for c, e in spec.columns.items()])
-     .repartition(4)
-     .write.mode("overwrite").option("header", "true").csv(in_dir))
-    bind_kwargs = {"drop_list": list(spec.drop_list), "today": FIXED_TODAY}
+    run, out = _equipment_stream(spark, sf_dir, "recov", partitions=4)
     seen: list[int] = []
 
     def crash_on_second(_findings, epoch_id):
@@ -1246,9 +1235,7 @@ def _recovery_arm(spark: SparkSession, sf_dir: str) -> DataFrame:
             raise RuntimeError(
                 "injected crash after findings write, before commit")
 
-    q = validate_stream(spark, in_dir, cp, spec.sheet, list(spec.columns),
-                        CBC_ID, out, bind_kwargs=bind_kwargs,
-                        status_cb=crash_on_second, max_files_per_trigger=2)
+    q = run(status_cb=crash_on_second, max_files_per_trigger=2)
     try:
         q.awaitTermination(600)
     except Exception:
@@ -1257,19 +1244,9 @@ def _recovery_arm(spark: SparkSession, sf_dir: str) -> DataFrame:
         q.stop()
     # restart from the SAME checkpoint: the uncommitted epoch replays
     # with the same id, overwriting its own partition, then drains
-    q2 = validate_stream(spark, in_dir, cp, spec.sheet, list(spec.columns),
-                         CBC_ID, out, bind_kwargs=bind_kwargs,
-                         max_files_per_trigger=2)
-    q2.awaitTermination(600)
-    return (spark.read.parquet(out)
-            .groupBy("Message_Type", "Column_Name", "Column_Value",
-                     "Error_Message")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .select(F.lit("recovery").alias("arm"),
-                    F.lit(-1).cast("bigint").alias("k"),
-                    F.concat_ws("|", "Message_Type", "Column_Name",
-                                "Column_Value", "Error_Message").alias("s"),
-                    F.col("n"), F.lit(None).cast("double").alias("v")))
+    run(max_files_per_trigger=2).awaitTermination(600)
+    return _multiset_arm(spark.read.parquet(out), "recovery",
+                         _FINDING_KEYS)
 
 
 def _cdc_arm(spark: SparkSession, sf_dir: str) -> DataFrame:

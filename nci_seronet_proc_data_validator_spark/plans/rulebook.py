@@ -116,6 +116,21 @@ def _icd10_flag(column: str) -> str:
     return column + "__icd10_valid"
 
 
+def with_icd10_flags(df, bound: "BoundSheet", icd10_codes):
+    """Attach the ``__icd10_valid`` flag columns the C8 checks read: the
+    J8 broadcast join when a dictionary is given, FALSE otherwise (every
+    non-N/A value then reports as unknown)."""
+    from pyspark.sql import functions as F
+
+    from nci_seronet_proc_data_validator_spark.operators.joins import (
+        icd10_flag_join)
+    for c in bound.icd10_columns:
+        df = (icd10_flag_join(df, c, icd10_codes, _icd10_flag(c))
+              if icd10_codes is not None
+              else df.withColumn(_icd10_flag(c), F.lit(False)))
+    return df
+
+
 #: (sheet, columns, cbc_id, drop_list, today, fix_bugs) → BoundSheet.
 #: Bounded by the rulebook's own shape: ~10 sheet names × the distinct
 #: (schema, cbc, date) combinations a session actually sees — entries

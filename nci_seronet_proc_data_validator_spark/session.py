@@ -88,10 +88,10 @@ def get_spark(app_name: str = "nci_seronet_proc_data_validator_spark",
         .config("spark.sql.optimizer.excludedRules",
                 "org.apache.spark.sql.catalyst.optimizer."
                 "InferFiltersFromGenerate")
-        # FAIR scheduling so concurrent submission validations (see
-        # orchestrate.validate_concurrent) share executor slots round-
-        # robin across per-submission pools instead of head-of-line
-        # blocking behind the largest submission. With one caller thread
+        # FAIR scheduling so concurrent schema-group validations (see
+        # orchestrate.validate_groups) share executor slots round-robin
+        # across per-group pools instead of head-of-line blocking
+        # behind the largest group. With one caller thread
         # the behavior is identical to FIFO (one pool, one job at a
         # time), so batch/bench paths are unaffected. Static conf —
         # effective on fresh JVMs only.

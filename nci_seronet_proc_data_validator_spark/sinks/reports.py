@@ -219,8 +219,8 @@ def upsert_job_status(status: DataFrame, connection_factory,
 
     The default single-column key matches the reference's per-submission
     Lambda granularity (one submission's sheets per jobs-table scope).
-    When MANY submissions share one jobs table — the concurrent
-    orchestration model (``orchestrate.validate_concurrent``) — pass the
+    When MANY submissions share one jobs table — the multi-submission
+    drivers (``orchestrate.validate_dirs``) — pass the
     composite row identity ``key=["orig_file_id", "file_name"]`` or
     submissions with same-named sheets clobber each other's rows.
 

@@ -127,6 +127,32 @@ def csv_header(path: str) -> "list[str] | None":
     return cols
 
 
+def sheet_csv_options(reader, columns: "list[str] | None" = None,
+                      multiline: bool = True):
+    """The submission-sheet CSV options on ``spark.read`` or
+    ``spark.readStream`` — one definition, so the batch and streaming
+    readers parse records identically:
+
+    - ``header`` true, ``inferSchema`` false: every column a string;
+    - ``nullValue`` NUL and ``emptyValue`` '': nothing parses as null,
+      a blank cell stays the empty string;
+    - ``multiLine`` per :func:`read_sheet_csv`;
+    - ``columns``, when given, as an explicit all-string schema (a
+      stream source requires one).
+    """
+    from pyspark.sql import types as T
+    reader = (reader
+              .option("header", "true")
+              .option("inferSchema", "false")
+              .option("nullValue", "\u0000")
+              .option("emptyValue", "")
+              .option("multiLine", "true" if multiline else "false"))
+    if columns is not None:
+        reader = reader.schema(T.StructType(
+            [T.StructField(c, T.StringType(), True) for c in columns]))
+    return reader
+
+
 def read_sheet_csv(spark: SparkSession, path: str | list[str],
                    offset: int = 2, multiline: bool = True,
                    columns: "list[str] | None" = None) -> DataFrame:
@@ -163,18 +189,7 @@ def read_sheet_csv(spark: SparkSession, path: str | list[str],
         from nci_seronet_proc_data_validator_spark.plans.advisor import (
             warn_nonsplittable_csv)
         warn_nonsplittable_csv(path)
-    from pyspark.sql import types as T
-    reader = (spark.read
-          .option("header", "true")
-          .option("inferSchema", "false")
-          # Make nothing parse as null: empty stays empty string.
-          .option("nullValue", "\u0000")
-          .option("emptyValue", "")
-          .option("multiLine", "true" if multiline else "false"))
-    if columns is not None:
-        reader = reader.schema(T.StructType(
-            [T.StructField(c, T.StringType(), True) for c in columns]))
-    df = reader.csv(path)
+    df = sheet_csv_options(spark.read, columns, multiline).csv(path)
     # Defensive: any residual nulls (e.g. short rows) become ''.
     df = df.na.fill("")
     return with_row_index(df, offset=offset)
@@ -307,17 +322,7 @@ def read_sheet_csv_tagged(spark: SparkSession,
         from nci_seronet_proc_data_validator_spark.plans.advisor import (
             warn_nonsplittable_csv)
         warn_nonsplittable_csv(list(norm))
-    reader = (spark.read
-              .option("header", "true")
-              .option("inferSchema", "false")
-              .option("nullValue", "\u0000")
-              .option("emptyValue", "")
-              .option("multiLine", "true" if multiline else "false"))
-    if columns is not None:
-        from pyspark.sql import types as T
-        reader = reader.schema(T.StructType(
-            [T.StructField(c, T.StringType(), True) for c in columns]))
-    df = reader.csv(sorted(norm))
+    df = sheet_csv_options(spark.read, columns, multiline).csv(sorted(norm))
     df = df.na.fill("")
     data_cols = list(df.columns)
     file_col = "__sg_file"

@@ -20,24 +20,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
-def _icd10_flags(df: DataFrame, bound, icd10_codes) -> DataFrame:
-    """Attach the ``__icd10_valid`` flag columns C8 checks read: the J8
-    broadcast join when a dictionary is provided (re-broadcast per
-    micro-batch, picking up dictionary updates between batches), a
-    FALSE literal otherwise — the same contract as batch validate()
-    without ``icd10_codes`` (every non-N/A value reports as unknown)."""
-    from nci_seronet_proc_data_validator_spark.operators.joins import (
-        icd10_flag_join)
-    from nci_seronet_proc_data_validator_spark.plans.rulebook import (
-        _icd10_flag)
-    for c in bound.icd10_columns:
-        if icd10_codes is not None:
-            df = icd10_flag_join(df, c, icd10_codes, _icd10_flag(c))
-        else:
-            df = df.withColumn(_icd10_flag(c), F.lit(False))
-    return df
-
-
 def _resolve(value_or_fn):
     """Per-micro-batch resolution of a watcher side input: a callable is
     re-evaluated at every batch (the stream-static pattern — a CBC
@@ -46,47 +28,6 @@ def _resolve(value_or_fn):
     per-submission MySQL resolution, File_Submission_Object.py:82-87); a
     plain value is used as-is."""
     return value_or_fn() if callable(value_or_fn) else value_or_fn
-
-
-def _sheet_batch_findings(df: DataFrame, epoch_id: int, sheet_name: str,
-                          columns: list, cbc, bind_kwargs: dict | None,
-                          icd10_codes,
-                          carry_cols: tuple = ()) -> DataFrame:
-    """The shared per-micro-batch findings body of every watcher:
-    typed shadows → memoized rule bind → dependency-column defaults →
-    ICD-10 flags → ONE rendered findings statement. ``df`` must already
-    carry ``row_index`` plus any ``carry_cols``; ``cbc`` is a literal id
-    or a :class:`PerRowCbc`. Registered against the MICRO-BATCH session
-    (foreachBatch hands a df bound to a batch-cloned session; the view
-    must live and be queried there, not on the outer session a closure
-    would capture)."""
-    from nci_seronet_proc_data_validator_spark.operators.typing import (
-        with_typed_shadows)
-    from nci_seronet_proc_data_validator_spark.plans.rulebook import (
-        bind_sheet_rules_cached)
-    from nci_seronet_proc_data_validator_spark.plans.rules import (
-        sheet_findings_sql_cached)
-
-    df = with_typed_shadows(df, list(columns))
-    # Memoized: long-lived watchers re-bind identical rules every
-    # micro-batch; the cache keys on (sheet, columns, cbc, date) so a
-    # midnight rollover still refreshes expiration cutoffs.
-    bound = bind_sheet_rules_cached(sheet_name, list(columns), cbc,
-                                    **(bind_kwargs or {}))
-    if "SARS_CoV_2_PCR_Test_Result" not in df.columns:
-        df = df.withColumn("SARS_CoV_2_PCR_Test_Result", F.lit(""))
-    df = _icd10_flags(df, bound, icd10_codes)
-    import uuid as _uuid
-    sess = df.sparkSession
-    # uuid, not (sheet, epoch): two concurrent watchers on the same
-    # sheet name would collide on epoch-keyed names mid-analysis
-    view = f"__watch_{_uuid.uuid4().hex[:8]}_{epoch_id}"
-    df.createOrReplaceTempView(view)
-    legs = sheet_findings_sql_cached(view, sheet_name, bound,
-                                     carry_cols=carry_cols)
-    findings = sess.sql(" UNION ALL ".join(legs))
-    sess.catalog.dropTempView(view)     # resolved eagerly by sess.sql
-    return findings
 
 
 def _epoch_sink(findings: DataFrame, epoch_id: int, output_dir: str,
@@ -127,92 +68,28 @@ def validate_stream(spark: SparkSession, input_dir: str, checkpoint: str,
                     max_files_per_trigger: int | None = None,
                     icd10_codes: DataFrame | None = None
                     ) -> "StreamingQuery":
-    """Continuously validate CSV sheets landing in ``input_dir``.
+    """Continuously validate CSV sheets of ONE lab landing in
+    ``input_dir``: :func:`validate_stream_multi` with a one-entry CBC map
+    that every file resolves to (``sub_pattern`` extracts '' from every
+    path), so no directory naming can demote a row to the unknown-lab
+    CBC '0'. Findings cite each file's own CSV line and carry an empty
+    ``__submission_id``.
 
-    Each micro-batch runs the SAME batch rule compiler via foreachBatch —
-    one code path for batch and streaming (the Spark idiom for exactly this
-    Lambda-trigger pattern). AvailableNow drains pending files then stops;
-    swap the trigger for processingTime to run resident.
-
-    ``max_files_per_trigger``: bound on files per micro-batch. At 100 TB
-    a cold start (or a long outage) faces the WHOLE backlog at once;
-    unbounded, availableNow would put every pending file into one giant
-    batch — one shuffle-sized-by-the-backlog, one retry domain, one
-    commit. With the bound set, availableNow still drains the full
-    backlog to completion but in bounded micro-batches (each its own
-    checkpointed commit), so executor memory and retry cost are sized by
-    the bound, not the outage length. Findings are identical either way
-    up to the per-batch ``row_index`` (see below); keep it unset only
-    when batches are known-small (the reference's per-submission Lambda
-    granularity, nci-seronet-data-validator.py:152-159).
-
-    ``status_cb(findings_df, epoch_id)``: optional per-batch hook after
-    the findings write — the wiring point for the S11 job-status upsert
-    (``sinks.reports.job_status_rows`` + ``upsert_job_status``), so a
-    resident watcher keeps the jobs table current batch by batch exactly
-    like the reference's Lambda bookkeeping.
-
-    ``bind_kwargs``: extra keyword args for ``bind_sheet_rules``
-    (``drop_list``, ``today``, ``fix_reference_bugs``) so a watcher can
-    pin the same binding a batch run uses.
-
-    **Sink idempotence (restart-recovery contract):** see
-    :func:`_epoch_sink` — the shared epoch-keyed dynamic-partition-
-    overwrite sink every watcher writes through. ``icd10_codes`` may be
-    a DataFrame or a zero-arg callable re-resolved per micro-batch
-    (:func:`_resolve`).
-
-    Layout note: the epoch-partitioned layout is NOT compatible with an
-    ``output_dir`` written by the pre-r10 flat-append sink (``epoch`` was
-    a data column there; mixing flat part files with ``epoch=N/``
-    subdirectories breaks partition discovery on read). When upgrading a
-    deployed watcher, point it at a fresh ``output_dir`` + ``checkpoint``
-    pair, or one-shot rewrite the old output
-    (``read.parquet(old).write.partitionBy("epoch").parquet(new)``).
+    ``max_files_per_trigger`` bounds the files per micro-batch, so a
+    cold start facing a whole backlog drains it in bounded, separately
+    committed batches (memory and retry cost sized by the bound, not the
+    outage) with identical findings. ``status_cb(findings_df,
+    epoch_id)`` runs after each findings write (the S11 job-status
+    upsert hook); ``bind_kwargs`` go to ``bind_sheet_rules``;
+    ``icd10_codes`` may be a zero-arg callable (:func:`_resolve`). The
+    sink's restart-recovery contract is :func:`_epoch_sink`'s.
     """
-    from nci_seronet_proc_data_validator_spark.plans.advisor import (
-        warn_nonsplittable_csv)
-
-    # The multiLine option below makes each landed file single-task;
-    # flag any oversized file already sitting in the watched dir (files
-    # landing later are the deployment's own sizing concern).
-    warn_nonsplittable_csv(input_dir)
-
-    schema = T.StructType(
-        [T.StructField(c, T.StringType(), True) for c in columns])
-    reader = (spark.readStream
-              .option("header", "true")
-              .option("nullValue", "\u0000")
-              .option("emptyValue", "")
-              # Record-parity with the batch reader (readers.py): a
-              # quoted field embedding a newline is ONE record, not
-              # phantom rows — same silent-corruption fix, same
-              # non-splittable-file trade (streaming parallelism comes
-              # from many landed files anyway).
-              .option("multiLine", "true")
-              .schema(schema))
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger",
-                               int(max_files_per_trigger))
-    raw = reader.csv(input_dir)
-
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
-        df = batch_df.na.fill("")
-        # Streaming batches have no global line order; row identity is the
-        # per-batch monotonic id (documented deviation from the CSV-line
-        # convention, which needs a single-file batch to be meaningful).
-        df = df.withColumn("row_index",
-                           F.monotonically_increasing_id() + 2)
-        findings = _sheet_batch_findings(
-            df, epoch_id, sheet_name, list(columns), cbc_id, bind_kwargs,
-            _resolve(icd10_codes))
-        _epoch_sink(findings, epoch_id, output_dir, status_cb)
-
-    return (raw.writeStream
-            .foreachBatch(process)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start())
+    return validate_stream_multi(
+        spark, input_dir, checkpoint, sheet_name, columns,
+        {"": str(cbc_id)}, output_dir, status_cb=status_cb,
+        bind_kwargs=bind_kwargs,
+        max_files_per_trigger=max_files_per_trigger, sub_pattern=r"()",
+        icd10_codes=icd10_codes)
 
 
 def validate_stream_multi(spark: SparkSession, input_glob: str,
@@ -254,33 +131,34 @@ def validate_stream_multi(spark: SparkSession, input_glob: str,
       ``__cbc_id``, identical to batched mode — and the memoized bind
       makes micro-batch N a cache hit;
     - ``row_index`` is counted PER FILE
-      (``sources.readers.with_per_file_row_index``) — an upgrade over
-      the single-sheet watcher's per-batch monotonic id: findings cite
-      the actual CSV line of the submission's own file, and the index
-      is stable under micro-batch packing (``maxFilesPerTrigger``);
-    - the sink is the same epoch-keyed idempotent parquet as
-      :func:`validate_stream` (dynamic partition overwrite per epoch —
-      see its restart-recovery contract), with ``__submission_id`` as
-      an ordinary output column.
+      (``sources.readers.with_per_file_row_index``): findings cite the
+      actual CSV line of the submission's own file, and the index is
+      stable under micro-batch packing (``maxFilesPerTrigger``);
+    - the sink is the epoch-keyed idempotent parquet of
+      :func:`_epoch_sink` (dynamic partition overwrite per epoch), with
+      ``__submission_id`` as an ordinary output column.
     """
+    import uuid
+
     from nci_seronet_proc_data_validator_spark.functions.checks import (
         PerRowCbc)
+    from nci_seronet_proc_data_validator_spark.operators.typing import (
+        with_typed_shadows)
     from nci_seronet_proc_data_validator_spark.plans.advisor import (
         warn_nonsplittable_csv)
+    from nci_seronet_proc_data_validator_spark.plans.rulebook import (
+        bind_sheet_rules_cached, with_icd10_flags)
+    from nci_seronet_proc_data_validator_spark.plans.rules import (
+        sheet_findings_sql_cached)
     from nci_seronet_proc_data_validator_spark.sources.readers import (
-        with_per_file_row_index)
+        sheet_csv_options, with_per_file_row_index)
 
+    # multiLine (the shared sheet options) makes each landed file
+    # single-task; flag any oversized file already in the watched path
     warn_nonsplittable_csv(input_glob)
     sub_col, cbc_col, file_col = "__submission_id", "__cbc_id", "__sg_file"
 
-    schema = T.StructType(
-        [T.StructField(c, T.StringType(), True) for c in columns])
-    reader = (spark.readStream
-              .option("header", "true")
-              .option("nullValue", "\u0000")
-              .option("emptyValue", "")
-              .option("multiLine", "true")
-              .schema(schema))
+    reader = sheet_csv_options(spark.readStream, list(columns))
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger",
                                int(max_files_per_trigger))
@@ -300,12 +178,29 @@ def validate_stream_multi(spark: SparkSession, input_glob: str,
             F.create_map(*[x for s, c in sorted(cbc_map.items())
                            for x in (F.lit(s), F.lit(c))])[sub],
             F.lit("0")) if cbc_map else F.lit("0"))
-        df = (df.withColumn(sub_col, sub).withColumn(cbc_col, cbc)
-              .drop(file_col))
-        findings = _sheet_batch_findings(
-            df, epoch_id, sheet_name, columns,
+        df = with_typed_shadows(
+            df.withColumn(sub_col, sub).withColumn(cbc_col, cbc)
+            .drop(file_col), list(columns))
+        # Memoized: a long-lived watcher re-binds identical rules every
+        # micro-batch; the cache keys on (sheet, columns, cbc, date) so a
+        # midnight rollover still refreshes expiration cutoffs.
+        bound = bind_sheet_rules_cached(
+            sheet_name, list(columns),
             PerRowCbc(column=cbc_col, values=cbc_values),
-            bind_kwargs, _resolve(icd10_codes), carry_cols=(sub_col,))
+            **(bind_kwargs or {}))
+        if "SARS_CoV_2_PCR_Test_Result" not in df.columns:
+            df = df.withColumn("SARS_CoV_2_PCR_Test_Result", F.lit(""))
+        df = with_icd10_flags(df, bound, _resolve(icd10_codes))
+        # Registered against the MICRO-BATCH session: foreachBatch hands
+        # a df bound to a batch-cloned session, where the view must live
+        # and be queried. uuid, not epoch: two concurrent watchers on the
+        # same sheet would collide on epoch-keyed names mid-analysis.
+        sess = df.sparkSession
+        view = f"__watch_{uuid.uuid4().hex[:8]}_{epoch_id}"
+        df.createOrReplaceTempView(view)
+        findings = sess.sql(" UNION ALL ".join(sheet_findings_sql_cached(
+            view, sheet_name, bound, carry_cols=(sub_col,))))
+        sess.catalog.dropTempView(view)     # resolved eagerly by sess.sql
         _epoch_sink(findings, epoch_id, output_dir, status_cb)
 
     return (raw.writeStream
@@ -349,11 +244,11 @@ def validate_stream_submissions(spark: SparkSession, root_dir: str,
       (``<output>/arrivals``, same dynamic-partition-overwrite
       idempotence as the findings sink);
     - a submission whose cumulative arrivals first cover
-      ``declared_sheets`` IN THIS BATCH is validated through the batch
-      compiler (``orchestrate.validate_groups`` — the same compile as
-      ``SubmissionValidator.validate`` and the batch CLI, so findings
-      are byte-identical to both), and its full findings land in the
-      epoch-keyed findings sink (``<output>/findings``) tagged
+      ``declared_sheets`` IN THIS BATCH is validated through
+      ``orchestrate.validate_dirs`` — the same driver as the batch CLI
+      and the same compile as ``SubmissionValidator.validate``, so
+      findings are byte-identical to both — and its full findings land
+      in the epoch-keyed findings sink (``<output>/findings``) tagged
       ``__submission_id``.
 
     Why findings emit at COMPLETION rather than per sheet at arrival:
@@ -430,13 +325,11 @@ def validate_stream_submissions(spark: SparkSession, root_dir: str,
 
     100 TB posture: per-batch driver work is O(files in batch) ledger
     rows plus compiles for the NEWLY COMPLETE submissions, grouped by
-    schema (order-sensitive header signature, probed driver-side): each
+    schema (``orchestrate.group_by_schema``, probed driver-side): each
     group goes through ONE compiled plan with ONE multi-file scan per
-    sheet (``orchestrate.validate_batched_results`` + pretagged
-    ``read_sheet_csv_tagged``), so a burst of thousands of same-shape
-    submissions completing in one epoch costs O(distinct schemas)
-    driver builds, not O(N). A submission whose headers the probe
-    refuses forms its own group.
+    sheet, so a burst of thousands of same-shape submissions completing
+    in one epoch costs O(distinct schemas) driver builds, not O(N). A
+    submission whose headers the probe refuses forms its own group.
     Arrival state is driver-resident and incremental: the full ledger
     (one metadata row per file ever arrived) is read ONCE per query run,
     then each batch adds only its own rows — a resident watcher's
@@ -534,117 +427,37 @@ def validate_stream_submissions(spark: SparkSession, root_dir: str,
             from nci_seronet_proc_data_validator_spark.errors import (
                 FINDING_COLUMNS, FINDING_SCHEMA, ROW_VALIDATION_FAILURE)
             from nci_seronet_proc_data_validator_spark.orchestrate import (
-                SUB_COL, validate_groups)
-            from nci_seronet_proc_data_validator_spark.sources.readers \
-                import csv_header, read_sheet_csv, read_sheet_csv_tagged
-            from nci_seronet_proc_data_validator_spark.submission import (
-                SKIP_VALIDATION,
-                parse_submission_metadata,
-                parse_submission_metadata_local,
-            )
-            cbc = {str(k): str(v)
-                   for k, v in (_resolve(cbc_map) or {}).items()}
-            icd = _resolve(icd10_codes)
-
-            # headers probed driver-side ONCE per file (the grouping
-            # signature and the explicit-schema reads below share this
-            # cache — re-probing would double the open+parse of every
-            # sheet header per epoch, the cost the probe exists to cut)
-            hdr_cache = {pth: csv_header(pth)
-                         for sub in complete_now
-                         for pth in have[sub].values()}
-
-            def _kwargs_for(sub: str) -> dict:
-                # Sheet values are the probed COLUMN LISTS: the compile
-                # reads rows from the pretagged group scans and the tail
-                # only ever reads names (P10), so a burst pays zero
-                # per-submission DataFrame construction (measured 26 s
-                # of py4j plan building at a 96-submission burst). A
-                # probe-refused header reads its DataFrame for the
-                # names. Metadata is parsed driver-side too — the
-                # DataFrame parse is one small Spark job per submission.
-                sheets = {name: (list(cols) if (cols := hdr_cache[pth])
-                                 is not None else read_sheet_csv(sess, pth))
-                          for name, pth in sorted(have[sub].items())}
-                if "submission.csv" in sheets:
-                    pth = have[sub]["submission.csv"]
-                    meta = parse_submission_metadata_local(pth, cbc)
-                    if meta is None:       # probe-refused: Spark parse
-                        meta = parse_submission_metadata(read_sheet_csv(
-                            sess, pth, columns=hdr_cache[pth]), cbc)
-                else:
-                    meta = {"cbc_id": "0",
-                            "declared_participants": None,
-                            "declared_biospecimens": None}
-                return dict(
-                    sheets=sheets, cbc_id=str(meta["cbc_id"]),
-                    declared_participants=meta.get("declared_participants"),
-                    declared_biospecimens=meta.get("declared_biospecimens"),
-                    icd10_codes=icd,
-                    expected_columns=expected_columns,
-                    **(bind_kwargs or {}))
-
-            failures: dict[str, str] = {}
-
-            def _fail(sub: str, exc: Exception) -> None:
-                # Per-submission error isolation — the reference's
-                # "Moving onto Next Submitted File" loop
-                # (nci-seronet-data-validator.py:70,109-111). Without
-                # it one poisoned submission (unreadable sheet, column
-                # name the rulebook cannot render, ...) fails the
-                # micro-batch, which replays and fails identically
-                # forever — a permanent wedge blocking every LATER
-                # submission. Record the failure (durably, as one
-                # finding row below) and move on.
-                failures[sub] = f"{type(exc).__name__}: {str(exc)[:300]}"
-                warnings.warn(f"validation FAILED for submission "
-                              f"{sub}: {failures[sub]}; moving on")
-
-            # Group completing submissions by order-sensitive header
-            # signature (probe driver-side, no Spark): the pretagged
-            # group scan reads N files as ONE CSV source positionally,
-            # so only identical headers may share it. A probe-refused
-            # header (None) keys on its path, which never merges
-            # distinct schemas.
-            subs: dict = {}
-            groups: dict = {}
-            for sub in complete_now:
-                try:
-                    subs[sub] = _kwargs_for(sub)
-                except Exception as exc:  # noqa: BLE001
-                    _fail(sub, exc)
-                    continue
-                key = tuple(
-                    (name, tuple(cols) if (cols := hdr_cache[pth])
-                     is not None else ("?", pth))
-                    for name, pth in sorted(have[sub].items())
-                    if name not in SKIP_VALIDATION)
-                groups.setdefault(key, []).append(sub)
-
-            def _pretag(members: list) -> dict:
-                # probed header -> explicit schema: the group key
-                # guarantees every member shares it, and without it the
-                # multi-file scan runs a header-inference job reading
-                # EVERY member file (r14)
-                first = have[members[0]]
-                return {n: read_sheet_csv_tagged(
-                            sess, {s: have[s][n] for s in members},
-                            SUB_COL, columns=hdr_cache[first[n]])
-                        for n in first if n not in SKIP_VALIDATION}
+                SUB_COL, validate_dirs)
 
             # sink each group's WHOLE batch frame, not N re-union slices
             # of the same checkpoint (N slices execute as N x its
             # partitions in one job — the dominant burst cost)
             parts: list = []
-            outcomes = validate_groups(
-                sess, subs, list(groups.values()), pretag=_pretag,
-                combined_out=parts)
+            outcomes = validate_dirs(
+                sess, {sub: have[sub] for sub in complete_now},
+                cbc_map=_resolve(cbc_map) or {},
+                icd10_codes=_resolve(icd10_codes),
+                expected_columns=expected_columns,
+                bind_kwargs=bind_kwargs, combined_out=parts)
             results = {}
+            failures: dict[str, str] = {}
             for sub, oc in sorted(outcomes.items()):
-                if oc.error is not None:
-                    _fail(sub, oc.error)
-                else:
+                if oc.error is None:
                     results[sub] = oc.result
+                    continue
+                # Per-submission error isolation — the reference's
+                # "Moving onto Next Submitted File" loop
+                # (nci-seronet-data-validator.py:70,109-111). Without it
+                # one poisoned submission (unreadable sheet, column name
+                # the rulebook cannot render, ...) fails the micro-batch,
+                # which replays and fails identically forever — a
+                # permanent wedge blocking every LATER submission.
+                # Record the failure (durably, as one finding row below)
+                # and move on.
+                failures[sub] = (f"{type(oc.error).__name__}: "
+                                 f"{str(oc.error)[:300]}")
+                warnings.warn(f"validation FAILED for submission "
+                              f"{sub}: {failures[sub]}; moving on")
             if failures:
                 # durable failure record: one row per failed submission
                 # in the SAME findings sink (the reference's jobs-table

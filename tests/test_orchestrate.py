@@ -8,7 +8,7 @@ import datetime
 import pytest
 
 from nci_seronet_proc_data_validator_spark.orchestrate import (
-    validate_concurrent)
+    _default_materialize, validate_groups)
 from nci_seronet_proc_data_validator_spark.sources import read_sheet_csv
 from nci_seronet_proc_data_validator_spark.submission import (
     SubmissionValidator)
@@ -48,6 +48,46 @@ def _finding_set(findings):
         for r in findings.collect())
 
 
+def _run_cli(monkeypatch, argv: list[str]) -> int:
+    import sys
+
+    sys.path.insert(0, "tools")
+    try:
+        import run_submission as rs
+    finally:
+        sys.path.pop(0)
+    monkeypatch.setattr(sys, "argv", ["run_submission.py", *argv])
+    return rs.main()
+
+
+def _cli_twin(spark, d: str, cbc_map: dict) -> list:
+    """In-process serial validate() of one submission dir, with the
+    reference data the CLI loads: the findings its parquet must hold."""
+    import glob
+    import os
+
+    from nci_seronet_proc_data_validator_spark.sources.catalog import (
+        static_expected_columns)
+    from nci_seronet_proc_data_validator_spark.sources.icd10 import (
+        load_icd10_codes)
+    from nci_seronet_proc_data_validator_spark.submission import (
+        parse_submission_metadata)
+    sheets = {os.path.basename(p): read_sheet_csv(spark, p)
+              for p in sorted(glob.glob(os.path.join(d, "*.csv")))}
+    meta = parse_submission_metadata(sheets["submission.csv"], cbc_map)
+    return _finding_set(SubmissionValidator(
+        spark, sheets=sheets, cbc_id=meta["cbc_id"],
+        declared_participants=meta["declared_participants"],
+        declared_biospecimens=meta["declared_biospecimens"],
+        icd10_codes=load_icd10_codes(spark),
+        expected_columns=static_expected_columns()).validate().findings)
+
+
+def _cli_findings(spark, out_dir) -> list:
+    return _finding_set(spark.read.parquet(
+        str(out_dir / "findings.parquet")))
+
+
 def test_concurrent_matches_serial(spark, tmp_path):
     subs = {f"sub{i}": _load(spark, tmp_path, i) for i in range(3)}
 
@@ -58,7 +98,8 @@ def test_concurrent_matches_serial(spark, tmp_path):
     assert all(len(v) > 0 for v in serial.values())
     assert len({tuple(v) for v in serial.values()}) == 3
 
-    out = validate_concurrent(spark, subs, max_parallel=3)
+    out = validate_groups(spark, subs, [[sid] for sid in subs],
+                          materialize=_default_materialize, max_parallel=3)
     assert set(out) == set(subs)
     for sid, oc in out.items():
         assert oc.error is None, (sid, oc.error)
@@ -71,8 +112,9 @@ def test_concurrent_isolates_failures(spark, tmp_path):
     good = _load(spark, tmp_path, 7)
     bad = {"sheets": {"demographic.csv": None}, "cbc_id": "14",
            "today": TODAY}    # None sheet -> raises inside the worker
-    out = validate_concurrent(spark, {"ok": good, "broken": bad},
-                              max_parallel=2)
+    out = validate_groups(spark, {"ok": good, "broken": bad},
+                          [["ok"], ["broken"]],
+                          materialize=_default_materialize, max_parallel=2)
     assert out["broken"].error is not None
     assert out["broken"].result is None
     assert out["ok"].error is None
@@ -83,8 +125,6 @@ def test_group_member_materialize_failure_is_isolated(spark, tmp_path):
     """A materialize hook that raises for one member of a batched group
     fails that member alone: the other member keeps its result and its
     materialized value."""
-    from nci_seronet_proc_data_validator_spark.orchestrate import (
-        _default_materialize, validate_groups)
     subs = {f"sub{i}": _load(spark, tmp_path, i) for i in range(2)}
 
     def materialize(res):
@@ -108,8 +148,6 @@ def test_scheduler_pool_set_during_and_cleared_after(spark, tmp_path):
     thread — drive it on THIS thread, assert the pool is tagged while
     the submission's jobs run (inside the materialize hook) and cleared
     afterwards."""
-    from nci_seronet_proc_data_validator_spark.orchestrate import (
-        _default_materialize, validate_groups)
     sc = spark.sparkContext
     seen = {}
 
@@ -165,8 +203,6 @@ def test_concurrent_job_status_upserts_one_db(spark, tmp_path):
 
     subs = {f"sub{i}": _load(spark, tmp_path, i) for i in range(3)}
     # per-submission materialize: close over the id
-    from nci_seronet_proc_data_validator_spark.orchestrate import (
-        validate_groups)
     from concurrent.futures import ThreadPoolExecutor
     with ThreadPoolExecutor(max_workers=3) as pool:
         futs = {sid: pool.submit(validate_groups, spark, {sid: kw}, [[sid]],
@@ -226,7 +262,7 @@ def test_cli_empty_dir_isolated_in_multi_mode(spark, tmp_path, monkeypatch,
     """r11 (ADVICE): one submission dir with no CSVs must not abort the
     whole multi-submission run — it records its own failure (rc=1) and
     the remaining submissions still validate (per-submission isolation,
-    same model as validate_concurrent's error capture)."""
+    same model as validate_dirs' error capture)."""
     import sys
 
     sys.path.insert(0, "tools")
@@ -375,20 +411,11 @@ def test_batched_mixed_cbc_and_shared_ids(spark, tmp_path):
 
 
 def test_cli_batched_matches_serial(spark, tmp_path, monkeypatch, capsys):
-    """r12: `--batched` CLI mode — 8 submissions in two schema groups
-    (5 + 3), mixed CBC ids inside the big group (batched v2), routed
-    through one compiled plan per group; findings parquet per
-    submission must equal the default (serial) CLI run's byte-for-byte.
-    """
-    import sys
-
+    """The multi-dir CLI: 8 submissions in two schema groups (5 + 3),
+    mixed CBC ids inside the big group, routed through one compiled plan
+    per group; each submission's findings parquet must equal its own
+    serial validate()."""
     from pyspark.sql import functions as F
-
-    sys.path.insert(0, "tools")
-    try:
-        import run_submission as rs
-    finally:
-        sys.path.pop(0)
 
     def _mkdir(name: str, csvs: dict[str, str]) -> str:
         d = tmp_path / name
@@ -409,33 +436,51 @@ def test_cli_batched_matches_serial(spark, tmp_path, monkeypatch, capsys):
                                 f"14_20000{i},1{i}9\n"),
             "submission.csv": "key,LabX\np,1\nb,0\n"}))
 
-    def _run(extra: list[str], out: str) -> int:
-        monkeypatch.setattr(sys, "argv", [
-            "run_submission.py", *dirs, "--out", str(tmp_path / out),
-            "--cbc", "LabX=14", "--cbc", "LabY=41", *extra])
-        return rs.main()
-
-    # the fixture sheets don't carry the full expected-column catalog, so
-    # the quality gate fails (rc=1) — what matters here is that BOTH
-    # modes agree on the rc and on every submission's findings
-    rc_serial = _run([], "serial_out")
-    rc_batched = _run(["--batched"], "batched_out")
-    assert rc_batched == rc_serial
+    cbc = {"LabX": "14", "LabY": "41"}
+    rc = _run_cli(monkeypatch, [*dirs, "--out", str(tmp_path / "out"),
+                                "--cbc", "LabX=14", "--cbc", "LabY=41"])
+    # the fixture sheets don't carry the full expected-column catalog,
+    # so the quality gate fails
+    assert rc == 1
     assert "2 schema group(s), sizes [5, 3]" in capsys.readouterr().out
 
     for d in dirs:
         base = d.rstrip("/").split("/")[-1]
-        a = spark.read.parquet(
-            str(tmp_path / "serial_out" / base / "findings.parquet"))
-        b = spark.read.parquet(
-            str(tmp_path / "batched_out" / base / "findings.parquet"))
-        assert _finding_set(a) == _finding_set(b), base
-        assert a.count() > 0, base          # every submission has findings
+        got = _cli_findings(spark, tmp_path / "out" / base)
+        assert got == _cli_twin(spark, d, cbc), base
+        assert got, base                    # every submission has findings
     # the mixed-CBC group really validated against per-submission labs
     ga1 = spark.read.parquet(
-        str(tmp_path / "batched_out" / "ga1" / "findings.parquet"))
+        str(tmp_path / "out" / "ga1" / "findings.parquet"))
     assert ga1.filter(F.col("Error_Message").contains(
         "Expecting CBC Code (41)")).count() > 0
+
+
+def test_cli_isolates_unreadable_submission(spark, tmp_path, monkeypatch,
+                                            capsys):
+    """A submission whose submission.csv is a DIRECTORY cannot be read
+    (Spark finds no schema to infer): it must fail alone — rc 1 and a
+    FAILED line — while the good submission in the same run still
+    validates to its own serial findings."""
+    good = tmp_path / "good"
+    good.mkdir()
+    for name, content in _submission_csvs(1).items():
+        (good / name).write_text(content)
+    (good / "submission.csv").write_text("key,LabX\np,2\nb,2\n")
+    bad = tmp_path / "bad"
+    bad.mkdir()
+    for name, content in _submission_csvs(2).items():
+        (bad / name).write_text(content)
+    (bad / "submission.csv").mkdir()
+
+    rc = _run_cli(monkeypatch, [str(good), str(bad), "--out",
+                                str(tmp_path / "out"), "--cbc", "LabX=14"])
+    text = capsys.readouterr().out
+    assert rc == 1
+    bad_report = text.split(f"=== {bad} ")[1]
+    assert bad_report.lstrip().split("\n")[1].startswith("FAILED"), text
+    assert (_cli_findings(spark, tmp_path / "out" / "good")
+            == _cli_twin(spark, str(good), {"LabX": "14"}))
 
 
 def test_batched_rejects_column_valued_checks(spark, tmp_path, monkeypatch):
@@ -724,15 +769,8 @@ def test_cli_batched_groups_by_column_order(spark, tmp_path, monkeypatch,
     names from the first file and reads the rest positionally, so
     grouping them together would silently misalign values into the
     wrong columns. With the order-sensitive signature each becomes a
-    singleton group and findings match serial exactly."""
-    import sys
-
-    sys.path.insert(0, "tools")
-    try:
-        import run_submission as rs
-    finally:
-        sys.path.pop(0)
-
+    singleton group and findings match serial exactly, in a multi-dir
+    run and in a single-dir run."""
     specs = {
         "oa": ("Research_Participant_ID,Age,Race\n"
                "14_000001,930,White\n"),          # Age out of range
@@ -746,31 +784,26 @@ def test_cli_batched_groups_by_column_order(spark, tmp_path, monkeypatch,
         (d / "submission.csv").write_text("key,LabX\np,1\nb,0\n")
         dirs.append(str(d))
 
-    def _run(extra: list[str], out: str) -> int:
-        monkeypatch.setattr(sys, "argv", [
-            "run_submission.py", *dirs, "--out", str(tmp_path / out),
-            "--cbc", "LabX=14", *extra])
-        return rs.main()
-
-    rc_serial = _run([], "serial_out")
-    out_serial = capsys.readouterr().out
-    rc_batched = _run(["--batched"], "batched_out")
-    out_batched = capsys.readouterr().out
-    assert rc_batched == rc_serial
-    assert "2 schema group(s), sizes [1, 1]" in out_batched, out_batched
+    _run_cli(monkeypatch, [*dirs, "--out", str(tmp_path / "out"),
+                           "--cbc", "LabX=14"])
+    text = capsys.readouterr().out
+    assert "2 schema group(s), sizes [1, 1]" in text, text
 
     for d in dirs:
         base = d.rstrip("/").split("/")[-1]
-        a = spark.read.parquet(
-            str(tmp_path / "serial_out" / base / "findings.parquet"))
-        b = spark.read.parquet(
-            str(tmp_path / "batched_out" / base / "findings.parquet"))
-        assert _finding_set(a) == _finding_set(b), base
+        got = _cli_findings(spark, tmp_path / "out" / base)
+        assert got == _cli_twin(spark, d, {"LabX": "14"}), base
         # the out-of-range Age was found under the right column — a
         # positional misread would have put '931'/'White' elsewhere
-        assert any(r["Column_Name"] == "Age" and r["Column_Value"]
-                   in ("930", "931") for r in b.collect()), base
-    del out_serial
+        assert any(r[3] == "Age" and r[4] in ("930", "931")
+                   for r in got), base
+
+    # one dir: the same findings, reports flat under --out
+    _run_cli(monkeypatch, [dirs[1], "--out", str(tmp_path / "single"),
+                           "--cbc", "LabX=14"])
+    assert "1 schema group(s), sizes [1]" in capsys.readouterr().out
+    assert (_cli_findings(spark, tmp_path / "single")
+            == _cli_twin(spark, dirs[1], {"LabX": "14"}))
 
 
 def test_validate_stream_multi_dynamic_cbc(spark, tmp_path):
@@ -827,21 +860,14 @@ def test_validate_stream_multi_dynamic_cbc(spark, tmp_path):
                for m in msgs["subB"])
 
 
-def test_cli_procs_shards_match_serial(spark, tmp_path, monkeypatch,
-                                       capsys):
+def test_cli_procs_shards_match_serial(spark, tmp_path):
     """r13: --procs N shards schema groups across child PROCESSES (each
-    its own JVM running --batched over its shard). Two schema groups x
+    its own JVM running the CLI over its shard). Two schema groups x
     two submissions, 2 procs: the parent shards by driver-side header
     probe (no JVM), children write the standard per-submission subdirs,
-    and merged findings are identical to the one-process serial run."""
+    and each submission's findings equal its own serial validate()."""
     import subprocess
     import sys
-
-    sys.path.insert(0, "tools")
-    try:
-        import run_submission as rs
-    finally:
-        sys.path.pop(0)
 
     dirs = []
     for name, header, row in (
@@ -855,28 +881,18 @@ def test_cli_procs_shards_match_serial(spark, tmp_path, monkeypatch,
         (d / "submission.csv").write_text("key,LabX\np,1\nb,0\n")
         dirs.append(str(d))
 
-    # serial reference (in-process; same session)
-    monkeypatch.setattr(sys, "argv", [
-        "run_submission.py", *dirs, "--out", str(tmp_path / "serial_out"),
-        "--cbc", "LabX=14"])
-    rc_serial = rs.main()
-    capsys.readouterr()
-
-    # --procs 2: run the real CLI as a subprocess (children are
-    # subprocesses anyway; the parent must not touch this session's JVM)
+    # run the real CLI as a subprocess (children are subprocesses
+    # anyway; the parent must not touch this session's JVM)
     proc = subprocess.run(
-        [sys.executable, "tools/run_submission.py", *dirs,
-         "--batched", "--procs", "2",
+        [sys.executable, "tools/run_submission.py", *dirs, "--procs", "2",
          "--out", str(tmp_path / "procs_out"), "--cbc", "LabX=14"],
         capture_output=True, text=True, timeout=600)
-    assert f"over 2 process(es), shard sizes [2, 2]" in proc.stdout, \
+    assert "over 2 process(es), shard sizes [2, 2]" in proc.stdout, \
         proc.stdout[-2000:] + proc.stderr[-2000:]
-    assert proc.returncode == rc_serial, proc.stdout[-2000:]
+    # the fixture sheets fail the quality gate (catalog columns missing)
+    assert proc.returncode == 1, proc.stdout[-2000:]
 
     for d in dirs:
         base = d.rstrip("/").split("/")[-1]
-        a = spark.read.parquet(
-            str(tmp_path / "serial_out" / base / "findings.parquet"))
-        b = spark.read.parquet(
-            str(tmp_path / "procs_out" / base / "findings.parquet"))
-        assert _finding_set(a) == _finding_set(b), base
+        assert (_cli_findings(spark, tmp_path / "procs_out" / base)
+                == _cli_twin(spark, d, {"LabX": "14"})), base

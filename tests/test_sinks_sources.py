@@ -716,8 +716,9 @@ def test_streaming_backfill_bounded_microbatches(spark, tmp_path):
     availableNow drains a multi-file backlog in MULTIPLE bounded
     micro-batches (each its own checkpointed commit, memory/retry sized
     by the bound, not the outage) and the union of their findings equals
-    the batch compile over the same rows — identity up to ``row_index``,
-    which is per-batch by documented deviation."""
+    the batch compile over the same rows. ``row_index`` is each file's
+    own CSV line, whatever batch the file landed in: every planted error
+    sits on line 3 of its file."""
     from nci_seronet_proc_data_validator_spark.plans.rulebook import (
         bind_sheet_rules)
     from nci_seronet_proc_data_validator_spark.plans.rules import (
@@ -748,7 +749,11 @@ def test_streaming_backfill_bounded_microbatches(spark, tmp_path):
     got = spark.read.parquet(out)
     assert got.select("epoch").distinct().count() == 3
 
-    # batch twin over the same rows (row_index excluded from the compare)
+    planted = {"Martian", *(f"99{i}" for i in range(6))}
+    hits = [r for r in got.collect() if r["Column_Value"] in planted]
+    assert len(hits) >= 12 and {r["Row_Index"] for r in hits} == {3}
+
+    # batch twin over the same rows (row identity checked above)
     batch = (spark.read.option("header", "true")
              .option("nullValue", "\u0000").option("emptyValue", "")
              .csv(in_dir).na.fill("")

@@ -2,26 +2,24 @@
 the reference's Lambda flow (nci-seronet-data-validator.py:33-117).
 
     python tools/run_submission.py SUBMISSION_DIR [SUBMISSION_DIR ...]
-        [--out OUT_DIR] [--jobs N] [--batched] [--cbc NAME=ID ...]
+        [--out OUT_DIR] [--procs N] [--cbc NAME=ID ...]
         [--keep-reference-bugs]
 
 Each SUBMISSION_DIR holds that submission's sheet CSVs (submission.csv,
-demographic.csv, …). With one dir the flow matches the reference's
-per-submission Lambda body; with several, ``--jobs N`` validates up to N
-submissions CONCURRENTLY in one SparkSession on per-submission FAIR
-scheduler pools (``orchestrate.validate_concurrent`` — the reference
-loops serially, nci-seronet-data-validator.py:69; measured ~2.4-2.7x warm on 4
-submissions, BENCH_NOTES r10/r11). Per-sheet error reports + findings
-parquet land under OUT_DIR (per-submission subdirs in multi mode).
+demographic.csv, …). Every invocation runs ``orchestrate.validate_dirs``,
+the driver the completion watcher uses too: headers probed driver-side,
+submissions grouped by schema signature (per-sheet column lists in
+header order — CBC ids MAY differ), each group compiled through ONE plan
+over one multi-file scan per sheet, up to 4 groups at once on FAIR
+scheduler pools. A single submission is a batch of one, so findings per
+submission are identical whichever directories share the run; a
+submission that fails (unreadable sheet, malformed metadata) fails
+alone. Per-sheet error reports + findings parquet land under OUT_DIR —
+directly for one dir (the reference's per-submission layout),
+per-submission subdirs for several.
 
-``--batched`` groups the submissions by schema signature (sheet-name
-set + per-sheet column lists — CBC ids MAY differ) and compiles each
-group through ONE plan (``orchestrate.validate_groups``). Every mode
-runs the same compile — a single submission is a batch of one — so
-findings per submission are identical to serial/concurrent mode;
-batched is the driver-bound regime's shape (thousands of tiny
-submissions, or a driver remote from the cluster): its build cost is
-O(distinct schemas), not O(N submissions).
+``--procs N`` shards the schema groups across N child processes, each
+its own JVM: the GIL escape for driver-bound many-tiny-submission runs.
 """
 
 from __future__ import annotations
@@ -32,42 +30,6 @@ import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-
-def _load(spark, sub_dir: str, cbc_map: dict, fix_bugs: bool,
-          icd10_codes, expected_columns):
-    """Read one submission dir → (validator kwargs, metadata, sheets).
-    ``icd10_codes`` / ``expected_columns`` are shared reference data,
-    loaded ONCE by the caller (identical across submissions)."""
-    from nci_seronet_proc_data_validator_spark.sources import read_sheet_csv
-    from nci_seronet_proc_data_validator_spark.sources.readers import (
-        csv_header,
-    )
-    from nci_seronet_proc_data_validator_spark.submission import (
-        parse_submission_metadata,
-    )
-    paths = sorted(glob.glob(os.path.join(sub_dir, "*.csv")))
-    if not paths:
-        return None, None, None
-    # Header probed driver-side (csv_header) → explicit schema → ZERO
-    # Spark jobs in the load phase (r12's measured 21 s at 24 subs was
-    # entirely per-file header jobs); probe-refused files (dup headers,
-    # gzip) fall back to the Spark header read per file.
-    sheets = {os.path.basename(p):
-              read_sheet_csv(spark, p, columns=csv_header(p))
-              for p in paths}
-    meta = {"cbc_id": "0", "declared_participants": None,
-            "declared_biospecimens": None}
-    if "submission.csv" in sheets:
-        meta = parse_submission_metadata(sheets["submission.csv"], cbc_map)
-    kwargs = dict(
-        sheets=sheets, cbc_id=str(meta["cbc_id"]),
-        declared_participants=meta.get("declared_participants"),
-        declared_biospecimens=meta.get("declared_biospecimens"),
-        icd10_codes=icd10_codes,
-        expected_columns=expected_columns,
-        fix_reference_bugs=fix_bugs)
-    return kwargs, meta, sheets
 
 
 def _out_names(dirs: list[str]) -> dict[str, str]:
@@ -82,6 +44,11 @@ def _out_names(dirs: list[str]) -> dict[str, str]:
         seen[base] = n + 1
         names[d] = base if n == 0 else f"{base}_{n}"
     return names
+
+
+def _sheet_paths(d: str) -> dict[str, str]:
+    return {os.path.basename(p): p
+            for p in sorted(glob.glob(os.path.join(d, "*.csv")))}
 
 
 def _report(result, sheets, meta, sub_dir: str, out: str | None) -> bool:
@@ -119,92 +86,29 @@ def _report(result, sheets, meta, sub_dir: str, out: str | None) -> bool:
     return ok
 
 
-def _validate_batched_groups(spark, subs: dict) -> dict:
-    """--batched mode: group submissions by schema signature (sheet-name
-    set + per-sheet column lists + today/flags — CBC ids may differ) and
-    compile each group through ONE plan (``orchestrate.validate_groups``
-    — a group of one is simply a batch of one; a failing group is
-    retried member by member, so a malformed submission fails only
-    itself; a submission whose severity counts fail fails alone).
-    Returns ``ConcurrentOutcome`` per submission dir (``seconds`` is its
-    group's wall time — the plan is shared)."""
-    from nci_seronet_proc_data_validator_spark.orchestrate import (
-        SUB_COL,
-        _default_materialize,
-        validate_groups,
-    )
-    from nci_seronet_proc_data_validator_spark.sources.readers import (
-        read_sheet_csv_tagged,
-    )
-    from nci_seronet_proc_data_validator_spark.submission import (
-        SKIP_VALIDATION,
-    )
-
-    def sig(kw) -> tuple:
-        # Column ORDER is part of the signature (tuple(df.columns), not
-        # a sorted set): the pretagged group scan below reads N files as
-        # ONE CSV source, which takes column names from the first file
-        # and reads the rest POSITIONALLY (enforceSchema) — two
-        # submissions with the same column set in a different header
-        # order must land in different groups, or their values would
-        # silently misalign into the wrong columns. Sheet names stay
-        # sorted (dict order is load order, not schema).
-        return (tuple(sorted(
-                    (n, tuple(c for c in df.columns
-                              if c != "row_index"))
-                    for n, df in kw["sheets"].items()
-                    if n not in SKIP_VALIDATION)),
-                kw.get("today"), kw.get("fix_reference_bugs", True))
-
-    groups: dict[tuple, list] = {}
-    for d, kw in subs.items():
-        groups.setdefault(sig(kw), []).append(d)
-    sizes = sorted((len(m) for m in groups.values()), reverse=True)
-    print(f"batched: {len(groups)} schema group(s), sizes {sizes}")
-
-    def pretag(members: list) -> dict:
-        # One multi-file scan per sheet name across the group (the
-        # 100 TB scan shape: N submissions = N files of one datasource);
-        # submission.csv et al stay per-submission (metadata, not
-        # validated).
-        return {n: read_sheet_csv_tagged(
-                    spark, {d: os.path.join(d, n) for d in members},
-                    SUB_COL)
-                for n in subs[members[0]]["sheets"]
-                if n not in SKIP_VALIDATION}
-
-    return validate_groups(spark, subs, list(groups.values()),
-                           pretag=pretag, materialize=_default_materialize)
-
-
 def _run_procs(args) -> int:
     """--procs N: shard schema groups across N child PROCESSES, each its
-    own JVM running ``--batched`` over its shard.
+    own JVM running this CLI over its shard.
 
-    Why processes: a batched run's residual serial cost is driver-side
+    Why processes: the residual serial cost of a run is driver-side
     Python (plan build, py4j round-trips) under ONE GIL; BENCH_NOTES r12
     measured two processes composing with batching (24 tiny subs:
     89.9 -> 63.3 s). Sharding is by SCHEMA GROUP so each child still
-    batches maximally: headers are probed driver-side (``csv_header`` —
-    zero Spark, no JVM in the parent) and submissions grouped by an
-    order-sensitive (sheet, header-columns) signature. This PARENT
-    signature is a sharding heuristic, not the child's grouping
-    authority: the child recomputes its own signature from the real
-    Spark frames (including today/fix-bug flags; probe-refused files
-    key here on their path, which conservatively never merges distinct
-    schemas), so a parent/child disagreement costs only plan sharing,
-    never correctness. Groups are dealt largest-first round-robin onto
+    batches maximally: headers are probed here (``csv_header`` — zero
+    Spark, no JVM in the parent) and grouped by the same
+    ``orchestrate.group_by_schema`` the children use, so parent and
+    children agree on the groups. Groups are dealt largest-first onto
     the shards; children write the same per-submission subdirs under
     --out they would in one process, and findings are identical because
-    group membership, not process placement, determines results.
+    every submission's findings are independent of its batch.
     """
     import subprocess
 
+    from nci_seronet_proc_data_validator_spark.orchestrate import (
+        group_by_schema,
+    )
     from nci_seronet_proc_data_validator_spark.sources.readers import (
         csv_header,
-    )
-    from nci_seronet_proc_data_validator_spark.submission import (
-        SKIP_VALIDATION,
     )
 
     names = [os.path.basename(d.rstrip("/")) or "submission"
@@ -216,20 +120,9 @@ def _run_procs(args) -> int:
               "or run with --procs 1")
         return 2
 
-    def sig(d: str) -> tuple:
-        out = []
-        for p_ in sorted(glob.glob(os.path.join(d, "*.csv"))):
-            name = os.path.basename(p_)
-            if name in SKIP_VALIDATION:
-                continue       # metadata sheets don't shape the plan
-            cols = csv_header(p_)
-            out.append((name,
-                        tuple(cols) if cols is not None else ("?", p_)))
-        return tuple(out)
-
-    groups: dict[tuple, list] = {}
-    for d in args.submission_dirs:
-        groups.setdefault(sig(d), []).append(d)
+    dirs = {d: _sheet_paths(d) for d in args.submission_dirs}
+    groups = group_by_schema(dirs, {p: csv_header(p) for sheets in
+                                    dirs.values() for p in sheets.values()})
     # Deal groups largest-first onto the least-loaded shard, SPLITTING a
     # group when it exceeds the ideal shard size: splitting is safe (the
     # batched plan keys every join/agg on the submission tag, so any
@@ -240,7 +133,7 @@ def _run_procs(args) -> int:
     n_shards = min(args.procs, n)
     ideal = -(-n // n_shards)          # ceil
     shards: list[list] = [[] for _ in range(n_shards)]
-    for members in sorted(groups.values(), key=len, reverse=True):
+    for members in sorted(groups, key=len, reverse=True):
         for i in range(0, len(members), ideal):
             min(shards, key=len).extend(members[i:i + ideal])
     shards = [s for s in shards if s]
@@ -251,13 +144,11 @@ def _run_procs(args) -> int:
     passthrough = []
     if args.out:
         passthrough += ["--out", args.out]
-    if args.jobs != 1:
-        passthrough += ["--jobs", str(args.jobs)]
     for kv in args.cbc:
         passthrough += ["--cbc", kv]
     if args.keep_reference_bugs:
         passthrough += ["--keep-reference-bugs"]
-    procs = [subprocess.Popen(base + shard + ["--batched"] + passthrough)
+    procs = [subprocess.Popen(base + shard + passthrough)
              for shard in shards]
     return max(p_.wait() for p_ in procs)
 
@@ -266,19 +157,12 @@ def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("submission_dirs", nargs="+")
     ap.add_argument("--out", default=None)
-    ap.add_argument("--jobs", type=int, default=1,
-                    help="max submissions validated concurrently "
-                         "(FAIR pool per submission)")
-    ap.add_argument("--batched", action="store_true",
-                    help="compile same-schema submissions through ONE "
-                         "plan (O(distinct schemas) driver build)")
     ap.add_argument("--procs", type=int, default=1,
                     help="shard schema groups across N driver PROCESSES "
-                         "(each its own JVM, each running --batched over "
-                         "its shard) — the GIL escape for driver-bound "
-                         "many-tiny-submission batches (BENCH_NOTES r12: "
-                         "processes compose with batching). Requires "
-                         "--batched; findings identical to one process.")
+                         "(each its own JVM) — the GIL escape for "
+                         "driver-bound many-tiny-submission runs "
+                         "(BENCH_NOTES r12: processes compose with "
+                         "batching); findings identical to one process")
     ap.add_argument("--cbc", action="append", default=[],
                     metavar="NAME=ID", help="CBC name → 2-digit id mapping")
     ap.add_argument("--keep-reference-bugs", action="store_true",
@@ -286,108 +170,70 @@ def main() -> int:
                          "of the documented fixes")
     args = ap.parse_args()
 
-    if args.procs > 1:
-        if not args.batched:
-            print("--procs requires --batched (it shards schema groups)")
-            return 2
-        if len(args.submission_dirs) > 1:
-            return _run_procs(args)
-        # single dir: nothing to shard — fall through to one process
+    if args.procs > 1 and len(args.submission_dirs) > 1:
+        return _run_procs(args)
 
-    from nci_seronet_proc_data_validator_spark.session import get_spark
-    from nci_seronet_proc_data_validator_spark.submission import (
-        SubmissionValidator,
+    single = len(args.submission_dirs) == 1
+    dirs: dict[str, dict[str, str]] = {}
+    load_failed = False
+    for d in args.submission_dirs:
+        sheets = _sheet_paths(d)
+        if not sheets:
+            print(f"no CSV sheets found in {d}")
+            if single:
+                return 2
+            # per-submission isolation: an empty dir records its own
+            # failure and the rest still validate
+            load_failed = True
+            continue
+        print(f"{d}: loaded {len(sheets)} sheets: {', '.join(sheets)}")
+        dirs[d] = sheets
+    if not dirs:
+        return 2
+
+    from nci_seronet_proc_data_validator_spark.orchestrate import (
+        _default_materialize,
+        validate_dirs,
     )
-
-    spark = get_spark("run_submission")
-    cbc_map = dict(kv.split("=", 1) for kv in args.cbc)
-
+    from nci_seronet_proc_data_validator_spark.session import get_spark
     from nci_seronet_proc_data_validator_spark.sources.catalog import (
         static_expected_columns,
     )
     from nci_seronet_proc_data_validator_spark.sources.icd10 import (
         load_icd10_codes,
     )
-    icd10 = load_icd10_codes(spark)
-    expected = static_expected_columns()
 
-    # Load phase: each sheet read costs a small header job, so with
-    # --jobs N the per-submission loads overlap on a thread pool (same
-    # isolation model as the validate phase: results gathered, then
-    # reported in input order).
-    from concurrent.futures import ThreadPoolExecutor
+    spark = get_spark("run_submission")
+    meta: dict = {}
+    groups: list = []
+    out = validate_dirs(
+        spark, dirs, cbc_map=dict(kv.split("=", 1) for kv in args.cbc),
+        icd10_codes=load_icd10_codes(spark),
+        expected_columns=static_expected_columns(),
+        bind_kwargs={"fix_reference_bugs": not args.keep_reference_bugs},
+        materialize=_default_materialize, meta_out=meta, groups_out=groups)
+    sizes = sorted((len(m) for m in groups), reverse=True)
+    print(f"{len(groups)} schema group(s), sizes {sizes}")
 
-    def _load_one(d: str):
-        return _load(spark, d, cbc_map, not args.keep_reference_bugs,
-                     icd10, expected)
-
-    load_width = args.jobs if args.jobs > 1 else (8 if args.batched else 1)
-    if len(args.submission_dirs) > 1 and load_width > 1:
-        # --batched implies parallel loads even at --jobs 1: the load
-        # phase is per-submission header jobs (measured 21 s serial at
-        # 24 submissions) and batched mode has no per-submission
-        # validate phase to hide it in.
-        with ThreadPoolExecutor(max_workers=load_width) as pool:
-            results = dict(zip(args.submission_dirs,
-                               pool.map(_load_one, args.submission_dirs)))
-    else:
-        results = {d: _load_one(d) for d in args.submission_dirs}
-
-    loaded: dict[str, tuple] = {}
-    load_failed: list[str] = []
-    for d in args.submission_dirs:
-        kwargs, meta, sheets = results[d]
-        if kwargs is None:
-            print(f"no CSV sheets found in {d}")
-            if len(args.submission_dirs) == 1:
-                return 2
-            # Per-submission isolation: an empty dir records its own
-            # failure and the batch continues — same model as
-            # orchestrate.validate_concurrent's per-submission error
-            # capture, extended to the load phase.
-            load_failed.append(d)
-            continue
-        print(f"{d}: loaded {len(sheets)} sheets: "
-              f"{', '.join(sorted(sheets))}")
-        if meta.get("cbc_id") not in (None, "0"):
-            print(f"{d}: submission metadata: {meta}")
-        loaded[d] = (kwargs, meta, sheets)
-
-    if not loaded:
-        return 2
+    # Report serially, in input order (driver-side prints; the heavy
+    # lifting overlapped in the groups' materialize hooks). One dir keeps
+    # the reference's flat layout under --out.
     rc = 1 if load_failed else 0
-    if len(args.submission_dirs) == 1:
-        # single-dir invocation keeps the reference's flat layout
-        # (reports under --out directly); a multi-dir batch that shrank
-        # to one survivor still uses per-submission subdirs below
-        ((d, (kwargs, meta, sheets)),) = loaded.items()
-        result = SubmissionValidator(spark, **kwargs).validate()
-        ok = _report(result, sheets, meta, d, args.out)
-        return rc if ok else 1
-
-    # Multi-submission: validate concurrently, then report serially (the
-    # reports are driver-side prints; the heavy lifting overlapped in
-    # the workers' materialize hooks).
-    from nci_seronet_proc_data_validator_spark.orchestrate import (
-        validate_concurrent,
-    )
-    subs = {d: kwargs for d, (kwargs, _m, _s) in loaded.items()}
-    if args.batched:
-        out = _validate_batched_groups(spark, subs)
-    else:
-        out = validate_concurrent(spark, subs,
-                                  max_parallel=max(1, args.jobs))
-    out_names = _out_names(list(loaded))
-    for d, (kwargs, meta, sheets) in loaded.items():
+    out_names = _out_names(list(dirs))
+    for d, sheets in dirs.items():
         oc = out[d]
         print(f"\n=== {d} ({oc.seconds:.1f}s) ===")
         if oc.error is not None:
-            print(f"FAILED: {oc.error}")
+            print(f"FAILED: {type(oc.error).__name__}: {oc.error}")
             rc = 1
             continue
-        sub_out = (os.path.join(args.out, out_names[d])
-                   if args.out else None)
-        if not _report(oc.result, sheets, meta, d, sub_out):
+        if meta[d].get("cbc_id") not in (None, "0"):
+            print(f"{d}: submission metadata: {meta[d]}")
+        sub_out = None
+        if args.out:
+            sub_out = (args.out if single
+                       else os.path.join(args.out, out_names[d]))
+        if not _report(oc.result, sheets, meta[d], d, sub_out):
             rc = 1
     return rc
 

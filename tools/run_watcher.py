@@ -1,7 +1,8 @@
 """Run the streaming watchers — the CLI face of
-``streaming.validate_stream_multi`` (per-sheet mode, the continuous twin
-of ``tools/run_submission.py --batched``) and
-``streaming.validate_stream_submissions`` (complete-submission mode).
+``streaming.validate_stream_multi`` (per-sheet mode) and
+``streaming.validate_stream_submissions`` (complete-submission mode, the
+continuous twin of ``tools/run_submission.py``: both validate through
+``orchestrate.validate_dirs``).
 
 Per-sheet mode (early feedback; per-sheet rulebook only):
 
