@@ -20,6 +20,7 @@ order-insensitive value hash):
 from __future__ import annotations
 
 import datetime
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -39,9 +40,9 @@ from nci_seronet_proc_data_validator_spark.functions.checks import (
     get_missing_values,
 )
 from nci_seronet_proc_data_validator_spark.operators.joins import (
+    biospecimen_cross_sql,
     icd10_flag_join,
-    outer_join_spine,
-    present,
+    presence_spine_sql,
 )
 from nci_seronet_proc_data_validator_spark.operators.typing import with_typed_shadows
 from nci_seronet_proc_data_validator_spark.plans.rules import (
@@ -328,24 +329,43 @@ ORDER BY c_mktsegment
 
 
 # ----------------------------------------------------- J3–J5 presence spine
+def _sql_over_views(spark: SparkSession, frames: dict[str, DataFrame],
+                    render) -> list[DataFrame]:
+    """``spark.sql`` of each statement in ``render(views)``, where
+    ``views`` maps each key of ``frames`` to a temp view of its frame.
+
+    View names carry a per-call uuid, so concurrent builds in one session
+    (e.g. a thread pool constructing QUERIES) never replace each other's
+    views; they are dropped once ``spark.sql`` has resolved them."""
+    run_id = uuid.uuid4().hex[:8]
+    views = {n: f"__q_{run_id}_{i}" for i, n in enumerate(frames)}
+    for n, df in frames.items():
+        df.createOrReplaceTempView(views[n])
+    try:
+        return [spark.sql(sql) for sql in render(views)]
+    finally:
+        for v in views.values():
+            spark.catalog.dropTempView(v)
+
+
 def q_j3_presence_patterns(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """customer ⟗ P-status orders with indicator columns → pattern counts
-    (exercises outer_join_spine + presence decoding)."""
+    """customer ⟗ P-status orders through the presence spine
+    (``presence_spine_sql``) → pattern counts."""
     cust = read_table(spark, sf_dir, "customer") \
-        .select(F.col("c_custkey").alias("custkey")).distinct()
+        .select(F.col("c_custkey").alias("custkey"))
     p_orders = (read_table(spark, sf_dir, "orders")
                 .filter(F.col("o_orderstatus") == "P")
-                .select(F.col("o_custkey").alias("custkey")).distinct())
-    spine = outer_join_spine({"customer": cust, "orders_p": p_orders},
-                             "custkey")
-    pattern = (F.when(present("customer") & ~present("orders_p"),
-                      "customer_without_p_order")
-               .when(~present("customer") & present("orders_p"),
-                     "p_order_without_customer")
-               .otherwise("both"))
-    return (spine.select(pattern.alias("pattern"))
-            .groupBy("pattern").agg(F.count(F.lit(1)).alias("n"))
-            .orderBy("pattern"))
+                .select(F.col("o_custkey").alias("custkey")))
+    return _sql_over_views(
+        spark, {"customer": cust, "orders_p": p_orders},
+        lambda views: [
+            "SELECT CASE WHEN __in_customer AND NOT __in_orders_p"
+            " THEN 'customer_without_p_order'"
+            " WHEN NOT __in_customer AND __in_orders_p"
+            " THEN 'p_order_without_customer' ELSE 'both' END AS pattern,"
+            " count(1) AS n"
+            f" FROM ({presence_spine_sql(views, ['custkey'])})"
+            " GROUP BY 1 ORDER BY 1"])[0]
 
 
 SQL_J3 = """
@@ -610,11 +630,8 @@ FROM base
 
 def q_j4_bio_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J4/J5: biospecimen ⟗ aliquot/equipment/reagent/consumable spine with
-    presence indicators → the 4 per-table patterns (keep-first across
-    tables), exercising outer_join_spine + biospecimen_cross_findings."""
-    from nci_seronet_proc_data_validator_spark.operators.joins import (
-        biospecimen_cross_findings,
-    )
+    presence flags → the 4 per-table patterns (keep-first across
+    tables), exercising ``biospecimen_cross_sql``."""
     part = read_table(spark, sf_dir, "part")
     k = F.col("k")
     ids = part.select(
@@ -626,15 +643,17 @@ def q_j4_bio_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
            .select("Biospecimen_ID",
                    F.when(k % 3 == 0, "PBMC").otherwise("Serum")
                    .alias("Biospecimen_Type")))
-    spine = outer_join_spine(
-        {"biospecimen.csv": bio,
-         "aliquot.csv": ids.filter(k % 2 == 0).select("Biospecimen_ID"),
-         "equipment.csv": ids.filter(k % 7 != 3).select("Biospecimen_ID"),
-         "reagent.csv": ids.select("Biospecimen_ID"),
-         "consumable.csv": ids.filter(k % 11 != 0).select("Biospecimen_ID")},
-        "Biospecimen_ID")
-    return (biospecimen_cross_findings(spine, "14")
-            .orderBy("Column_Value"))
+    sources = {
+        "biospecimen.csv": bio,
+        "aliquot.csv": ids.filter(k % 2 == 0).select("Biospecimen_ID"),
+        "equipment.csv": ids.filter(k % 7 != 3).select("Biospecimen_ID"),
+        "reagent.csv": ids.select("Biospecimen_ID"),
+        "consumable.csv": ids.filter(k % 11 != 0).select("Biospecimen_ID")}
+    [out] = _sql_over_views(
+        spark, sources,
+        lambda views: [biospecimen_cross_sql(
+            views, "14", None, type_sources={"biospecimen.csv"})])
+    return out.orderBy("Column_Value")
 
 
 SQL_J4 = """
@@ -3578,21 +3597,25 @@ def q_rulebook_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     and compiled over a 10-sheet synthetic SeroNet submission derived from
     the testdata tables (``plans/fixture.py``).
 
-    Per sheet: one map-only findings scan (``compile_sheet_findings``) plus
-    one keyed shuffle per duplicate-ID column — the same plan shape the
-    production pipeline uses, so at 100 TB this is N parallel scans and a
-    handful of low-cardinality aggregations. The DuckDB oracle is assembled
-    from the SAME binding (``plans/sql_oracle.py``)."""
+    Per sheet: one map-only findings scan (``sheet_findings_sql``) plus
+    one keyed shuffle per duplicate-ID column, and one GROUP BY per
+    cross-sheet spine — the same plan shape the production pipeline uses,
+    so at 100 TB this is N parallel scans and a handful of
+    low-cardinality aggregations. The DuckDB oracle is assembled from the
+    SAME binding (``plans/sql_oracle.py``)."""
     from nci_seronet_proc_data_validator_spark.errors import (
         dedup_findings,
         union_findings,
     )
     from nci_seronet_proc_data_validator_spark.operators.joins import (
-        icd10_flag_join,
+        participant_cross_sql,
     )
     from nci_seronet_proc_data_validator_spark.plans.fixture import (
         fixture_sheet_df,
         icd10_dict_df,
+    )
+    from nci_seronet_proc_data_validator_spark.plans.rulebook import (
+        with_icd10_flags,
     )
     from nci_seronet_proc_data_validator_spark.plans.rules import (
         dup_id_findings_sql as _dups_sql,
@@ -3603,28 +3626,16 @@ def q_rulebook_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     import os as _os
     spread = int(_os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    from nci_seronet_proc_data_validator_spark.operators.joins import (
-        biospecimen_cross_findings,
-        participant_cross_findings,
-        presence_spine,
-    )
     icd = icd10_dict_df(spark, sf_dir)
-    # The per-sheet findings/dup legs are assembled as SQL TEXT over temp
-    # views and submitted as ONE spark.sql per dedup group: the DataFrame
-    # path costs one JVM analysis per selectExpr/unionByName leg
-    # (measured ~3.5 s of driver build at 30 legs, cProfile r8); one
-    # statement parses and analyzes once. Same plan, same findings.
-    row_legs = []     # per-row findings (Row_Index ≥ 0): map-only legs
-    aux_legs = []     # SQL legs needing dedup (aliquot rows, dup-ID −3)
-    aux_parts = []    # DataFrame legs needing dedup (cross-sheet −10)
-    sheet_dfs = {}
-    # unique view names per invocation: concurrent builds in one session
-    # (e.g. a thread pool constructing QUERIES) must not replace each
-    # other's views between registration and spark.sql analysis
-    import uuid as _uuid
-    run_id = _uuid.uuid4().hex[:8]
-    view_names: list[str] = []
-    for i, (spec, bound) in enumerate(rulebook_bound_sheets()):
+    # The per-sheet findings/dup legs and the cross-sheet legs are
+    # assembled as SQL TEXT over temp views and submitted as ONE
+    # spark.sql per dedup group: the DataFrame path costs one JVM
+    # analysis per selectExpr/unionByName leg (measured ~3.5 s of driver
+    # build at 30 legs, cProfile r8); one statement parses and analyzes
+    # once. Same plan, same findings.
+    sheets = list(rulebook_bound_sheets())
+    frames = {}
+    for i, (spec, bound) in enumerate(sheets):
         # persist=True: each sheet feeds the findings pass, a pass per
         # dup-ID column, and the cross-sheet spines — the cached cast
         # base is scanned k× instead of re-shuffled k×. (Sharing one
@@ -3633,63 +3644,40 @@ def q_rulebook_full(spark: SparkSession, sf_dir: str) -> DataFrame:
         # recompute per consumer; see fixture_sheet_df's base_df hook.)
         df = fixture_sheet_df(spark, sf_dir, spec, spread_partitions=spread,
                               persist=True)
-        sheet_dfs[spec.sheet] = df
-        for col in bound.icd10_columns:
-            df = icd10_flag_join(df, col, icd, col + "__icd10_valid")
-        view = f"__rulebook_sheet_{run_id}_{i}"
-        df.createOrReplaceTempView(view)
-        view_names.append(view)
-        # codegen_chunk=9: the persisted base makes repeated (pruned)
-        # cache scans cheap, and 9-rule-group projections (3 chunks on
-        # the widest sheet) stay under the JIT size ceiling — ~2x on
-        # the widest sheets; fewer jobs than chunk=3 also wins under
-        # CPU contention (see rules.py docstring for the sweep)
-        legs = _findings_sql(view, spec.sheet, bound.column_rules,
-                             codegen_chunk=9)
-        # Sheets whose row_index is a base-table PK cannot produce two
-        # findings with one (sheet, row, column) — keep-first coalesce —
-        # so the global dedup is an identity on them; sheets with
-        # colliding keys (aliquot) keep the keyed dedup.
-        (row_legs if spec.key_unique else aux_legs).extend(legs)
-        for c in bound.dup_id_columns:
-            aux_legs.append(_dups_sql(view, spec.sheet, c))
-    parts = ([spark.sql(" UNION ALL ".join(row_legs))]
-             if row_legs else [])
-    if aux_legs:
-        aux_parts.append(spark.sql(" UNION ALL ".join(aux_legs)))
-    # spark.sql resolves views eagerly at the call above; drop exactly
-    # the views created (sheet_dfs is keyed by sheet name, which could
-    # in principle collide — len(sheet_dfs) would then undercount)
-    for view in view_names:
-        spark.catalog.dropTempView(view)
+        # the spines read the persisted sheet from before the ICD-10 join
+        frames[spec.sheet] = df
+        frames[f"findings{i}"] = with_icd10_flags(df, bound, icd)
 
-    # Cross-sheet presence families (J3-J5, sentinel -10). Sources are
-    # distinct-ID projections (the Merged_Table shape); biospecimen
-    # contributes a deterministic per-ID type (min) so multi-typed
-    # duplicate IDs decode identically on both engines. All sheets are
-    # "submitted" here, so the submitted-id restriction is a no-op.
-    # presence_spine: UNION ALL of raw cached-sheet projections → ONE
-    # groupBy per spine (no per-source distinct, no full-outer chain) —
-    # the join chain otherwise gates the sibling findings mega-stage
-    # behind k−1 serialized exchanges (measured: stage timeline r8).
-    rpid = "Research_Participant_ID"
-    part_spine = presence_spine(
-        {s: sheet_dfs[s].select(rpid)
-         for s in ("prior_clinical_test.csv", "demographic.csv",
-                   "biospecimen.csv", "confirmatory_clinical_test.csv")},
-        rpid)
-    aux_parts.append(participant_cross_findings(part_spine, "14"))
-    bid = "Biospecimen_ID"
-    bio_sources = {"biospecimen.csv":
-                   sheet_dfs["biospecimen.csv"].select(bid,
-                                                       "Biospecimen_Type")}
-    for s in ("aliquot.csv", "equipment.csv", "reagent.csv",
-              "consumable.csv"):
-        bio_sources[s] = sheet_dfs[s].select(bid)
-    bio_spine = presence_spine(bio_sources, bid,
-                               carry={"biospecimen.csv":
-                                      ["Biospecimen_Type"]})
-    aux_parts.append(biospecimen_cross_findings(bio_spine, "14"))
+    def render(views: dict[str, str]) -> list[str]:
+        row_legs = []     # per-row findings (Row_Index ≥ 0): map-only legs
+        aux_legs = []     # legs needing dedup (aliquot rows, −3, −10)
+        for i, (spec, bound) in enumerate(sheets):
+            view = views[f"findings{i}"]
+            # codegen_chunk=9: the persisted base makes repeated (pruned)
+            # cache scans cheap, and 9-rule-group projections (3 chunks
+            # on the widest sheet) stay under the JIT size ceiling — ~2x
+            # on the widest sheets; fewer jobs than chunk=3 also wins
+            # under CPU contention (see rules.py docstring for the sweep)
+            legs = _findings_sql(view, spec.sheet, bound.column_rules,
+                                 codegen_chunk=9)
+            # Sheets whose row_index is a base-table PK cannot produce
+            # two findings with one (sheet, row, column) — keep-first
+            # coalesce — so the global dedup is an identity on them;
+            # sheets with colliding keys (aliquot) keep the keyed dedup.
+            (row_legs if spec.key_unique else aux_legs).extend(legs)
+            aux_legs += [_dups_sql(view, spec.sheet, c)
+                         for c in bound.dup_id_columns]
+        # Cross-sheet presence families (J3-J5, sentinel -10): one
+        # GROUP BY spine each over the raw cached-sheet projections;
+        # biospecimen's type is its per-ID min, so multi-typed duplicate
+        # IDs decode identically on both engines. All sheets are
+        # "submitted" here, so the submitted-id restriction is a no-op.
+        aux_legs.append(participant_cross_sql(views, "14", None))
+        aux_legs.append(biospecimen_cross_sql(
+            views, "14", None, type_sources={"biospecimen.csv"}))
+        return [" UNION ALL ".join(row_legs), " UNION ALL ".join(aux_legs)]
+
+    rows, aux = _sql_over_views(spark, frames, render)
     # Split dedup by disjoint dedup-key spaces: per-row findings
     # (Row_Index ≥ 0) of a key_unique sheet carry at most ONE finding per
     # (sheet, row, column) — keep-first coalesce + PK row_index — so the
@@ -3700,9 +3688,7 @@ def q_rulebook_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (different sheet names / sentinel Row_Index). Equality with the
     # single global dedup is pinned by tests/test_rulebook_split.py and
     # the driver oracle.
-    return union_findings(
-        [union_findings(parts),
-         dedup_findings(union_findings(aux_parts))])
+    return union_findings([rows, dedup_findings(aux)])
 
 
 def _rulebook_oracle() -> str:

@@ -3,29 +3,30 @@ submitted-id restriction (J6), reference-dict lookup (J8).
 
 The reference decodes presence/absence after full-outer joins through NaN
 arithmetic (``query("X != X")`` = "X is NaN" — ``File_Submission_Object.py:
-335-396``). Spark-first design: each source contributes an explicit boolean
-indicator column (``lit(True)`` before the outer join), and the 6
-participant + 4 biospecimen presence patterns decode as one ``when`` chain —
-a single pass over the joined spine, null-safe, and AQE-optimizable.
+335-396``). Spark-first design: the cross-sheet spine is ONE ``GROUP BY``
+over the ``UNION ALL`` of tagged ID projections, each source contributing
+an explicit boolean presence flag ``max(__src = '<sheet>')``, and the 6
+participant + 4 biospecimen presence patterns decode as one CASE chain —
+rendered as SQL text, so a whole findings statement parses and analyzes
+once.
 
 Scale notes:
 - Enrichment joins (J1/J2) broadcast the parent Merged_Table — it is a
   key-column projection, small by construction (the reference pre-projects
   for the same reason, ``File_Submission_Object.py:102``).
-- The outer-join spines shuffle on the ID key once; every pattern decodes
-  from that single shuffled dataset.
+- Each spine shuffles on the ID key once, map-side combined; every pattern
+  decodes from that single aggregated dataset; no full-outer join is left.
 """
 
 from __future__ import annotations
 
-from functools import reduce
-
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from nci_seronet_proc_data_validator_spark.errors import (
-    ROW_CROSS_SHEET,
-    finding_struct,
+from nci_seronet_proc_data_validator_spark.errors import ROW_CROSS_SHEET
+from nci_seronet_proc_data_validator_spark.functions.checks import (
+    PerRowCbc,
+    _sql_quote,
 )
 
 # Merge_Cols per sheet (col_valid_dict, nci-seronet-data-validator.py:21-31).
@@ -120,82 +121,42 @@ def _indicator(name: str) -> str:
     return "__in_" + name.replace(".", "_")
 
 
-def outer_join_spine(sources: dict[str, DataFrame], key: str | list[str]
-                     ) -> DataFrame:
-    """J3/J4: chained full-outer join of Merged_Tables on ``key``, with one
-    boolean presence indicator per source (replaces NaN-decoding, J5)."""
-    keys = [key] if isinstance(key, str) else list(key)
-    parts = []
-    for name, df in sources.items():
-        if df is None:
-            continue
-        parts.append(df.withColumn(_indicator(name), F.lit(True)))
-    if not parts:
-        raise ValueError("no sources for spine")
-    spine = reduce(lambda a, b: a.join(b, on=keys, how="outer"), parts)
-    fills = {_indicator(n): False for n in sources if sources[n] is not None}
-    return spine.na.fill(fills)
+def presence_spine_sql(views: dict[str, str], keys: list[str],
+                       carry: dict[str, list[str]] | None = None) -> str:
+    """J3/J4 spine as SQL text over the source views, ONE shuffle: the
+    tagged key projections are combined with ``UNION ALL`` and then one
+    ``GROUP BY keys`` gives each source a presence flag
+    ``__in_<source> = max(__src = '<source>')``.
 
+    Mirrors the reference's cross-sheet ID reconciliation
+    (``File_Submission_Object.py:335-396``) without its outer-join shape:
+    a chain of k−1 full-outer joins is k−1 serialized exchanges of a
+    growing spine, where this is one map-side-combinable aggregation.
 
-def presence_spine(sources: dict[str, DataFrame], key: str | list[str],
-                   carry: dict[str, list[str]] | None = None) -> DataFrame:
-    """J3/J4 spine as ONE shuffle: UNION ALL of tagged ID projections →
-    a single ``groupBy(key)`` with one ``max(__src = name)`` presence flag
-    per source.
-
-    Same output schema as :func:`outer_join_spine` (key + boolean
-    indicators + carried columns) but a chain of k−1 full-outer joins —
-    k−1 serialized exchanges of a growing spine, which at 100 TB is the
-    long pole of the cross-sheet pass and in a multi-leg plan gates every
-    sibling stage behind the join chain — becomes one map-side-combinable
-    aggregation. Mirrors the reference's cross-sheet ID reconciliation
-    intent (``File_Submission_Object.py:335-396``) without its join shape.
-
-    Semantics notes:
-    - Sources need NOT be pre-distinct: the groupBy collapses duplicate
-      keys within a source (presence stays true). ``outer_join_spine``
-      instead REPLICATES rows per key combination — callers that rely on
-      that multi-row behavior (non-unique Merged_Tables in
-      ``submission.py``) must keep using it.
-    - NULL keys: groupBy unifies NULLs into ONE group across all sources
-      (a NULL-keyed row in two sources yields one spine row with both
-      flags true), while the full-outer join keeps each source's NULL
-      rows as separate never-matching rows. Filter NULLs out first — or
-      use ``outer_join_spine`` — when NULL-keyed rows are meaningful.
-      (The rulebook callers are unaffected: ingest stores blanks as
-      ``''``, and the cross-finding decoders rlike-filter malformed IDs.)
-    - ``carry``: {source_name: [column, ...]} — non-key columns carried
-      through as ``min(CASE WHEN __src = name THEN col END)``; for keys
-      with several rows in that source this is the deterministic min,
-      matching the explicit ``groupBy(key).agg(min(col))`` pre-aggregation
-      the outer-join callers do by hand. NULL for keys absent from the
-      source, exactly like the outer join.
+    - Sources need not be distinct: duplicate keys collapse into one
+      spine row (presence stays true).
+    - NULL keys form one group across all sources; the cross-sheet
+      decoders drop them with their well-formed-ID filter.
+    - ``carry``: {source: [column, ...]} — non-key columns carried as
+      their ``min`` over the rows of the sources that hold them (the
+      other legs project NULL), so a key listed twice with different
+      values settles on one value whatever the partitioning; NULL for
+      keys absent from those sources.
     """
-    keys = [key] if isinstance(key, str) else list(key)
     carry = carry or {}
-    srcs = [(n, df) for n, df in sources.items() if df is not None]
-    if not srcs:
-        raise ValueError("no sources for spine")
-    all_carry = [(n, c) for n, cols in carry.items() for c in cols]
-    legs = []
-    for name, df in srcs:
-        cols = [*(F.col(k) for k in keys), F.lit(name).alias("__src")]
-        for src_of, c in all_carry:
-            cols.append(
-                (F.col(c) if src_of == name
-                 else F.lit(None).cast(sources[src_of].schema[c].dataType))
-                .alias(c))
-        legs.append(df.select(*cols))
-    u = reduce(lambda a, b: a.unionByName(b), legs)
-    aggs = [F.max(F.col("__src") == F.lit(name)).alias(_indicator(name))
-            for name, _ in srcs]
-    aggs += [F.min(F.when(F.col("__src") == F.lit(src_of), F.col(c)))
-             .alias(c) for src_of, c in all_carry]
-    return u.groupBy(*keys).agg(*aggs)
-
-
-def present(name: str) -> Column:
-    return F.col(_indicator(name))
+    carried = list(dict.fromkeys(c for cols in carry.values() for c in cols))
+    legs = " UNION ALL ".join(
+        "SELECT " + ", ".join(
+            [*keys, f"{_sql_quote(name)} AS __src",
+             *(c if c in carry.get(name, ()) else f"NULL AS {c}"
+               for c in carried)])
+        + f" FROM {view}"
+        for name, view in views.items())
+    aggs = [f"max(__src = {_sql_quote(name)}) AS {_indicator(name)}"
+            for name in views]
+    aggs += [f"min({c}) AS {c}" for c in carried]
+    by = ", ".join(keys)
+    return f"SELECT {by}, {', '.join(aggs)} FROM ({legs}) GROUP BY {by}"
 
 
 # --- participant presence patterns (File_Submission_Object.py:379-396) ----
@@ -216,46 +177,6 @@ _PART_PATTERNS = [
 ]
 
 
-def participant_cross_findings(spine: DataFrame, cbc_id: str,
-                               submitted_ids: DataFrame | None = None
-                               ) -> DataFrame:
-    """Decode the 6 participant presence patterns into findings
-    (sheet ``Cross_Participant_ID.csv``, sentinel row −10).
-
-    ``spine`` — outer_join_spine of prior/demographic/biospecimen/
-    confirmatory Merged_Tables on Research_Participant_ID.
-    ``submitted_ids`` — distinct IDs actually present in submitted sheets;
-    when given, restricts findings to them (the evident intent of the
-    reference's discarded ``get_submitted_ids`` merge, bug §2.9.2).
-    """
-    key = "Research_Participant_ID"
-    # Only well-formed IDs of this CBC (File_Submission_Object.py:382).
-    scoped = spine.filter(F.col(key).rlike("^" + cbc_id + "[_]{1}[0-9]{6}$"))
-    # Reference prefilter: missing from at least one source (:380).
-    any_missing = ~(present("prior_clinical_test.csv")
-                    & present("demographic.csv")
-                    & present("biospecimen.csv")
-                    & present("confirmatory_clinical_test.csv"))
-    scoped = scoped.filter(any_missing)
-    if submitted_ids is not None:
-        scoped = scoped.join(F.broadcast(submitted_ids.select(key).distinct()),
-                             on=key, how="left_semi")
-
-    msg = None
-    for (p, d, b), text in _PART_PATTERNS:
-        cond = ((present("prior_clinical_test.csv") == F.lit(p))
-                & (present("demographic.csv") == F.lit(d))
-                & (present("biospecimen.csv") == F.lit(b)))
-        msg = F.when(cond, text) if msg is None else msg.when(cond, text)
-    return (scoped.withColumn("_msg", msg)
-            .filter(F.col("_msg").isNotNull())
-            .select(finding_struct("Error", "Cross_Participant_ID.csv",
-                                   F.lit(ROW_CROSS_SHEET), key, F.col(key),
-                                   F.col("_msg")).alias("_f"))
-            .select("_f.*")
-            .dropDuplicates())
-
-
 # --- biospecimen presence patterns (File_Submission_Object.py:341-355) ----
 _BIO_TABLES = [
     # (spine source sheet, display sheet name in messages)
@@ -265,7 +186,7 @@ _BIO_TABLES = [
     ("consumable.csv", "Consumable.csv"),
 ]
 
-# Message templates shared by the Column decoder AND the DuckDB oracle
+# Message templates shared by the SQL decoder AND the DuckDB oracle
 # builder below — single-sourced so a wording edit cannot break parity.
 _BIO_MSG_IN_T_NOT_BIO = ("ID is found in {display}, however ID is missing "
                          "from Biospecimen.csv")
@@ -278,105 +199,14 @@ _BIO_MSG_PBMC_MISSING = ("ID is found in Biospecimen.csv and has "
                          "from {display}")
 
 
-def biospecimen_cross_findings(spine: DataFrame, cbc_id: str,
-                               submitted_ids: DataFrame | None = None
-                               ) -> DataFrame:
-    """Decode the 4 biospecimen patterns per processing table
-    (``write_cross_bio_errors``). All messages land on sheet
-    ``Cross_Biospecimen_ID.csv``, column ``Biospecimen_ID``.
-
-    Deviation (documented): the reference stamps these findings with the
-    joined frame's positional index + 2 — a meaningless artifact of the
-    pandas join; we use the cross-sheet sentinel −10 consistently.
-    """
-    key = "Biospecimen_ID"
-    scoped = spine.filter(
-        F.col(key).rlike("^" + cbc_id + "[_]{1}[0-9]{6}[_]{1}[0-9]{3}$"))
-    all_present = reduce(lambda a, b: a & b,
-                         [present(s) for s, _ in _BIO_TABLES]
-                         + [present("biospecimen.csv")])
-    scoped = scoped.filter(~all_present)
-    if submitted_ids is not None:
-        scoped = scoped.join(F.broadcast(submitted_ids.select(key).distinct()),
-                             on=key, how="left_semi")
-
-    in_bio = present("biospecimen.csv")
-    is_pbmc = F.col("Biospecimen_Type") == "PBMC"
-    candidates = []
-    for source, display in _BIO_TABLES:
-        in_t = present(source)
-        candidates.append(
-            F.when(in_t & ~in_bio,
-                   F.lit(_BIO_MSG_IN_T_NOT_BIO.format(display=display))))
-        if source == "aliquot.csv":
-            candidates.append(
-                F.when(in_bio & ~in_t,
-                       F.lit(_BIO_MSG_BIO_NOT_T.format(display=display))))
-        else:
-            candidates.append(F.when(
-                in_t & in_bio & ~is_pbmc,
-                F.lit(_BIO_MSG_NOT_PBMC.format(display=display))))
-            candidates.append(F.when(
-                ~in_t & in_bio & is_pbmc,
-                F.lit(_BIO_MSG_PBMC_MISSING.format(display=display))))
-    # Keep-first across tables: the reference's dedup key is (Row_Index,
-    # Column_Name, Column_Value), so one ID keeps only its FIRST matching
-    # table's message (aliquot → equipment → reagent → consumable).
-    msg = F.coalesce(*candidates)
-    return (scoped.withColumn("_msg", msg)
-            .filter(F.col("_msg").isNotNull())
-            .select(finding_struct("Error", "Cross_Biospecimen_ID.csv",
-                                   F.lit(ROW_CROSS_SHEET), key, F.col(key),
-                                   F.col("_msg")).alias("_f"))
-            .select("_f.*")
-            .dropDuplicates())
-
-
-# --- SQL-text twins of the cross-sheet decoders (r11) ---------------------
-# Generated-SQL forms of outer_join_spine + participant/biospecimen decode
-# for the per-submission driver-build hot path: the Column-object
-# composition above costs ~0.35 s of py4j round-trips per submission
-# (cProfile r11) repeated for every submission; one rendered statement
-# parses and analyzes once. The DataFrame functions stay as the
-# oracle-checked reference implementations (j3/j4 queries);
-# tests/test_cross_sheet.py pins text/DataFrame equivalence, including
-# duplicate-key multiplicity and missing-source legs.
-
-
-def _sql_str(v: str) -> str:
-    return "'" + v.replace("'", "''") + "'"
-
-
-def _cross_spine_from(legs: list[tuple[str, str, list[str]]],
-                      keys: list[str]) -> str:
-    """FROM-clause text: chained FULL OUTER JOIN ... USING(keys) of tagged
-    projections — the exact join shape (and key-coalescing and
-    duplicate-key multiplicity) of :func:`outer_join_spine`, projected to
-    the columns the decoders read. ``keys`` may be composite (batched
-    multi-submission mode prepends the submission tag so IDs never match
-    across submissions)."""
-    parts = []
-    using = ", ".join(keys)
-    for i, (name, view, extras) in enumerate(legs):
-        sel = [*keys, f"TRUE AS {_indicator(name)}", *extras]
-        parts.append(f"(SELECT {', '.join(sel)} FROM {view}) s{i}")
-    out = parts[0]
-    for p_ in parts[1:]:
-        out += f" FULL OUTER JOIN {p_} USING ({using})"
-    return out
-
-
-def _ind_sql(name: str, have: set[str]) -> str:
-    """Indicator expression: coalesce(flag, FALSE) for joined sources
-    (outer_join_spine's na.fill), FALSE literal for missing ones
-    (_fill_missing_indicators)."""
-    return (f"coalesce({_indicator(name)}, FALSE)"
-            if name in have else "FALSE")
+def _ind_sql(name: str, have: dict[str, str]) -> str:
+    """Presence flag of a submitted source; FALSE for a missing one."""
+    return _indicator(name) if name in have else "FALSE"
 
 
 def _cbc_scope_sql(key: str, cbc_id, suffix_re: str) -> str:
-    """The well-formed-ID scope filter of the cross-sheet decoders
-    (participant/biospecimen_cross_findings): ``key RLIKE '^CBC<suffix>'``.
+    """The well-formed-ID scope filter of the cross-sheet decoders:
+    ``key RLIKE '^CBC<suffix>'``.
 
     ``cbc_id`` may be a ``PerRowCbc`` (batched multi-CBC mode): the scope
     then renders as a CASE over the per-row CBC column with one
@@ -384,65 +214,81 @@ def _cbc_scope_sql(key: str, cbc_id, suffix_re: str) -> str:
     Spark's compiled-regex cache hot, and a row is scoped by ITS
     submission's lab code exactly as the serial path scopes by the
     literal."""
-    from nci_seronet_proc_data_validator_spark.functions.checks import (
-        PerRowCbc,
-    )
     if isinstance(cbc_id, PerRowCbc):
         branches = " ".join(
-            f"WHEN {_sql_str(v)} THEN {key} RLIKE"
-            f" {_sql_str('^' + v + suffix_re)}"
+            f"WHEN {_sql_quote(v)} THEN {key} RLIKE"
+            f" {_sql_quote('^' + v + suffix_re)}"
             for v in cbc_id.values)
         return f"(CASE {cbc_id.column} {branches} ELSE FALSE END)"
-    return f"{key} RLIKE {_sql_str('^' + cbc_id + suffix_re)}"
+    return f"{key} RLIKE {_sql_quote('^' + cbc_id + suffix_re)}"
 
 
-def participant_cross_sql(views: dict[str, str | None], cbc_id,
-                          submitted_view: str | None,
-                          group_col: str | None = None,
-                          extra_keys: tuple[str, ...] = ()) -> str:
-    """Text twin of :func:`participant_cross_findings` over temp views of
-    the participant Merged_Tables (None = sheet not submitted, indicator
-    pinned FALSE). ``group_col``: batched multi-submission tag — joined
-    into every key and projected first in the output. ``extra_keys``:
-    further columns joined into every key but NOT projected (batched
-    multi-CBC mode rides ``__cbc_id`` through the spine this way — it is
-    functionally dependent on the submission tag, so adding it to the
-    USING keys never changes multiplicity). ``cbc_id`` may be a
-    ``PerRowCbc`` (see :func:`_cbc_scope_sql`)."""
-    key = "Research_Participant_ID"
+def _cross_findings_sql(sheet: str, key: str, have: dict[str, str],
+                        all_present: str, msg: str, cbc_id, suffix_re: str,
+                        submitted_view: str | None, group_col: str | None,
+                        extra_keys: tuple[str, ...],
+                        carry: dict[str, list[str]] | None = None) -> str:
+    """The shared frame of both decoders: the presence spine of the
+    submitted sources ``have`` grouped on ``[group_col, *extra_keys,
+    key]``, scoped to well-formed IDs missing from at least one source
+    (``NOT all_present``), optionally semi-joined to the submitted IDs,
+    decoded by ``msg`` into findings on ``sheet`` at sentinel row −10.
+    The spine holds one row per key, so the findings are distinct."""
     keys = ([group_col, *extra_keys, key] if group_col
             else [*extra_keys, key])
     g_out = f"{group_col}, " if group_col else ""
-    order = ["prior_clinical_test.csv", "demographic.csv",
-             "biospecimen.csv", "confirmatory_clinical_test.csv"]
-    have = {n for n in order if views.get(n) is not None}
-    legs = [(n, views[n], []) for n in order if n in have]
-    ind = {n: _ind_sql(n, have) for n in order}
-    any_missing = ("NOT (" + " AND ".join(ind[n] for n in order) + ")")
-    def _b(v: bool) -> str:
-        return "TRUE" if v else "FALSE"
-    whens = "".join(
-        f" WHEN {ind['prior_clinical_test.csv']} = {_b(p)}"
-        f" AND {ind['demographic.csv']} = {_b(d)}"
-        f" AND {ind['biospecimen.csv']} = {_b(b)}"
-        f" THEN {_sql_str(text)}"
-        for (p, d, b), text in _PART_PATTERNS)
     using = ", ".join(keys)
     semi = (f" LEFT SEMI JOIN (SELECT DISTINCT {using} FROM"
             f" {submitted_view}) sub USING ({using})"
             if submitted_view is not None else "")
     hint = " /*+ BROADCAST(sub) */" if semi else ""
     return (
-        f"SELECT DISTINCT {g_out}'Error' AS Message_Type,"
-        f" 'Cross_Participant_ID.csv' AS CSV_Sheet_Name,"
+        f"SELECT {g_out}'Error' AS Message_Type,"
+        f" {_sql_quote(sheet)} AS CSV_Sheet_Name,"
         f" CAST({ROW_CROSS_SHEET} AS BIGINT) AS Row_Index,"
-        f" {_sql_str(key)} AS Column_Name,"
+        f" {_sql_quote(key)} AS Column_Name,"
         f" CAST({key} AS STRING) AS Column_Value,"
         f" _msg AS Error_Message"
-        f" FROM (SELECT{hint} {g_out}{key}, CASE{whens} END AS _msg"
-        f" FROM (SELECT * FROM {_cross_spine_from(legs, keys)}"
-        f" WHERE {_cbc_scope_sql(key, cbc_id, '[_]{1}[0-9]{6}$')}"
-        f" AND {any_missing}){semi}) WHERE _msg IS NOT NULL")
+        f" FROM (SELECT{hint} {g_out}{key}, {msg} AS _msg"
+        f" FROM (SELECT * FROM ({presence_spine_sql(have, keys, carry)})"
+        f" WHERE {_cbc_scope_sql(key, cbc_id, suffix_re)}"
+        f" AND NOT ({all_present})){semi}) WHERE _msg IS NOT NULL")
+
+
+def participant_cross_sql(views: dict[str, str | None], cbc_id,
+                          submitted_view: str | None,
+                          group_col: str | None = None,
+                          extra_keys: tuple[str, ...] = ()) -> str:
+    """J5: the 6 participant presence patterns as findings on sheet
+    ``Cross_Participant_ID.csv`` (sentinel row −10), over temp views of
+    the participant Merged_Tables (None = sheet not submitted, flag
+    pinned FALSE).
+
+    ``submitted_view`` — IDs actually present in submitted sheets; when
+    given, restricts findings to them (the evident intent of the
+    reference's discarded ``get_submitted_ids`` merge, bug §2.9.2).
+    ``group_col``: batched multi-submission tag — added to the spine's
+    GROUP BY and projected first in the output. ``extra_keys``: further
+    GROUP BY columns NOT projected (batched multi-CBC mode rides
+    ``__cbc_id`` through the spine this way — it is functionally
+    dependent on the submission tag, so it never splits a group).
+    ``cbc_id`` may be a ``PerRowCbc`` (see :func:`_cbc_scope_sql`)."""
+    order = ["prior_clinical_test.csv", "demographic.csv",
+             "biospecimen.csv", "confirmatory_clinical_test.csv"]
+    have = {n: views[n] for n in order if views.get(n) is not None}
+    ind = {n: _ind_sql(n, have) for n in order}
+    whens = "".join(
+        f" WHEN {ind['prior_clinical_test.csv']} = {str(p).upper()}"
+        f" AND {ind['demographic.csv']} = {str(d).upper()}"
+        f" AND {ind['biospecimen.csv']} = {str(b).upper()}"
+        f" THEN {_sql_quote(text)}"
+        for (p, d, b), text in _PART_PATTERNS)
+    # Reference prefilter: missing from at least one source (:380); only
+    # well-formed IDs of this CBC (:382).
+    return _cross_findings_sql(
+        "Cross_Participant_ID.csv", "Research_Participant_ID", have,
+        " AND ".join(ind[n] for n in order), f"CASE{whens} END", cbc_id,
+        "[_]{1}[0-9]{6}$", submitted_view, group_col, extra_keys)
 
 
 def biospecimen_cross_sql(views: dict[str, str | None], cbc_id,
@@ -450,58 +296,45 @@ def biospecimen_cross_sql(views: dict[str, str | None], cbc_id,
                           type_sources: set[str] = frozenset(),
                           group_col: str | None = None,
                           extra_keys: tuple[str, ...] = ()) -> str:
-    """Text twin of :func:`biospecimen_cross_findings`. ``type_sources``
-    — which submitted sources actually carry ``Biospecimen_Type`` (the
-    outer-join spine would carry it from them); empty set renders the
-    ``''`` fill of the DataFrame path. ``group_col`` / ``extra_keys`` /
-    PerRowCbc ``cbc_id``: batched multi-submission / multi-CBC tags, as
-    in :func:`participant_cross_sql`."""
-    key = "Biospecimen_ID"
-    keys = ([group_col, *extra_keys, key] if group_col
-            else [*extra_keys, key])
-    g_out = f"{group_col}, " if group_col else ""
+    """J5: the 4 biospecimen patterns per processing table
+    (``write_cross_bio_errors``), all on sheet ``Cross_Biospecimen_ID.csv``,
+    column ``Biospecimen_ID``. ``type_sources`` — which submitted sources
+    carry ``Biospecimen_Type``; an ID's type is its min over their rows
+    (a duplicate ID with mixed types decodes as the DuckDB oracle does),
+    ``''`` when none carries it. ``submitted_view`` / ``group_col`` /
+    ``extra_keys`` / PerRowCbc ``cbc_id``: as in
+    :func:`participant_cross_sql`.
+
+    Deviation (documented): the reference stamps these findings with the
+    joined frame's positional index + 2 — a meaningless artifact of the
+    pandas join; we use the cross-sheet sentinel −10 consistently.
+    """
     order = ["biospecimen.csv"] + [s for s, _ in _BIO_TABLES]
-    have = {n for n in order if views.get(n) is not None}
-    legs = [(n, views[n],
-             ["Biospecimen_Type"] if n in type_sources else [])
-            for n in order if n in have]
+    have = {n: views[n] for n in order if views.get(n) is not None}
+    carry = {n: ["Biospecimen_Type"] for n in type_sources if n in have}
     ind = {n: _ind_sql(n, have) for n in order}
-    all_present = " AND ".join(ind[n] for n in order)
     bio = ind["biospecimen.csv"]
-    btype = ("Biospecimen_Type" if (type_sources & have) else "''")
+    btype = "Biospecimen_Type" if carry else "''"
     is_pbmc = f"({btype} = 'PBMC')"
-    cands = []
+    whens = ""
     for source, display in _BIO_TABLES:
-        in_t = ind[source]
-        cands.append(f"CASE WHEN {in_t} AND NOT {bio} THEN "
-                     f"{_sql_str(_BIO_MSG_IN_T_NOT_BIO.format(display=display))} END")
-        if source == "aliquot.csv":
-            cands.append(f"CASE WHEN {bio} AND NOT {in_t} THEN "
-                         f"{_sql_str(_BIO_MSG_BIO_NOT_T.format(display=display))} END")
-        else:
-            cands.append(
-                f"CASE WHEN {in_t} AND {bio} AND NOT {is_pbmc} THEN "
-                f"{_sql_str(_BIO_MSG_NOT_PBMC.format(display=display))} END")
-            cands.append(
-                f"CASE WHEN NOT {in_t} AND {bio} AND {is_pbmc} THEN "
-                f"{_sql_str(_BIO_MSG_PBMC_MISSING.format(display=display))} END")
-    using = ", ".join(keys)
-    semi = (f" LEFT SEMI JOIN (SELECT DISTINCT {using} FROM"
-            f" {submitted_view}) sub USING ({using})"
-            if submitted_view is not None else "")
-    hint = " /*+ BROADCAST(sub) */" if semi else ""
-    return (
-        f"SELECT DISTINCT {g_out}'Error' AS Message_Type,"
-        f" 'Cross_Biospecimen_ID.csv' AS CSV_Sheet_Name,"
-        f" CAST({ROW_CROSS_SHEET} AS BIGINT) AS Row_Index,"
-        f" {_sql_str(key)} AS Column_Name,"
-        f" CAST({key} AS STRING) AS Column_Value,"
-        f" _msg AS Error_Message"
-        f" FROM (SELECT{hint} {g_out}{key},"
-        f" coalesce({', '.join(cands)}) AS _msg"
-        f" FROM (SELECT * FROM {_cross_spine_from(legs, keys)}"
-        f" WHERE {_cbc_scope_sql(key, cbc_id, '[_]{1}[0-9]{6}[_]{1}[0-9]{3}$')}"
-        f" AND NOT ({all_present})){semi}) WHERE _msg IS NOT NULL")
+        t = ind[source]
+        pairs = [(f"{t} AND NOT {bio}", _BIO_MSG_IN_T_NOT_BIO)]
+        pairs += ([(f"{bio} AND NOT {t}", _BIO_MSG_BIO_NOT_T)]
+                  if source == "aliquot.csv" else
+                  [(f"{t} AND {bio} AND NOT {is_pbmc}", _BIO_MSG_NOT_PBMC),
+                   (f"NOT {t} AND {bio} AND {is_pbmc}", _BIO_MSG_PBMC_MISSING)])
+        whens += "".join(
+            f" WHEN {cond} THEN {_sql_quote(msg.format(display=display))}"
+            for cond, msg in pairs)
+    # Keep-first across tables: the reference's dedup key is (Row_Index,
+    # Column_Name, Column_Value), so one ID keeps only its FIRST matching
+    # table's message (aliquot → equipment → reagent → consumable).
+    return _cross_findings_sql(
+        "Cross_Biospecimen_ID.csv", "Biospecimen_ID", have,
+        " AND ".join(ind[n] for n in order), f"CASE{whens} END", cbc_id,
+        "[_]{1}[0-9]{6}[_]{1}[0-9]{3}$", submitted_view, group_col,
+        extra_keys, carry)
 
 
 def icd10_flag_join(df: DataFrame, column: str, icd10_codes: DataFrame,
@@ -525,10 +358,10 @@ def icd10_flag_join(df: DataFrame, column: str, icd10_codes: DataFrame,
 
 
 # --- DuckDB oracle mirrors for the cross-sheet findings -------------------
-# Generated from the SAME _PART_PATTERNS/_BIO_TABLES the Column decoders
+# Generated from the SAME _PART_PATTERNS/_BIO_TABLES the SQL decoders
 # use, so messages and keep-first priority cannot drift. Presence flags
-# are membership tests per distinct key — equivalent to the outer-join
-# spine's indicators (they are per-key constants).
+# are membership tests per distinct key — equivalent to the spine's
+# max(__src = ...) flags (they are per-key constants).
 
 def participant_cross_oracle_sql(prior: str, demo: str, bio: str,
                                  conf: str, cbc_id: str) -> str:
@@ -563,10 +396,9 @@ WHERE regexp_matches(k, '^{cbc_id}[_]{{1}}[0-9]{{6}}$')
 def biospecimen_cross_oracle_sql(bio: str, ali: str, eq: str, re_: str,
                                  co: str, cbc_id: str) -> str:
     """Contract: the oracle resolves a duplicate ID's type with
-    min(Biospecimen_Type); the Spark spine must therefore be built from a
-    per-ID min-aggregated biospecimen source (as q_rulebook_full does) —
-    a raw multi-typed spine would decode nondeterministically under the
-    key-based findings dedup."""
+    min(Biospecimen_Type), and so does every Spark path: the one
+    :func:`presence_spine_sql` carries the type as its per-ID min, so a
+    multi-typed ID decodes to one finding whatever the partitioning."""
     key = "Biospecimen_ID"
     ctes = {"aliquot.csv": ali, "equipment.csv": eq,
             "reagent.csv": re_, "consumable.csv": co}

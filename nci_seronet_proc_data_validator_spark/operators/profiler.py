@@ -232,7 +232,8 @@ def _qs(v: str) -> str:
 #: GLOBAL profile still favors exact (SCALING_r09 sf10 A/B: exact 31.3 s
 #: vs approx 56.7 s, n=3 alternating — HLL register maintenance costs
 #: more than the narrow Expand), while by 32 mod-class groups exact
-#: degrades superlinearly (tools/probe_distinct_width.py at 600k rows:
+#: degrades superlinearly (width sweep at 600k rows, one global
+#: aggregate of W count-distincts, recorded in BENCH_NOTES round 8:
 #: exact/approx 2.0x at W=8, 8.6x at W=32, 15x at W=64 — the Expand
 #: evaluates (W+1) output slots per branch, O(W^2) per input row).
 APPROX_DISTINCT_WIDTH_BUDGET = 32

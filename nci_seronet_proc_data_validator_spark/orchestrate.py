@@ -99,8 +99,8 @@ def validate_batched(spark: SparkSession,
     schemas) (measured 2.6 s for 8 submissions vs 9.8 s of serialized
     per-submission builds), executor work scales with rows, and the
     submission count rides along as an ordinary grouping column. The
-    spine joins, dup-ID groupings, enrichment joins, and the dedup key
-    all include the tag, so submissions can never observe each other
+    spine groupings, dup-ID groupings, enrichment joins, and the dedup
+    key all include the tag, so submissions can never observe each other
     (pinned by tests/test_orchestrate.py::test_batched_matches_serial).
 
     Constraints (ValueError otherwise):
@@ -285,10 +285,10 @@ def validate_batched(spark: SparkSession,
         clean_out.update(clean)
 
     # -- per-submission-keyed Merged_Tables (tags carried: the submission
-    # id keys every join; the CBC tag rides along for the cross-sheet
-    # scope CASEs — functionally dependent on the id, so joining on both
-    # never changes multiplicity). DB fallbacks first, submitted sheets
-    # override them.
+    # id keys every join and spine group; the CBC tag rides along for the
+    # cross-sheet scope CASEs — functionally dependent on the id, so
+    # keying on both never changes multiplicity). DB fallbacks first,
+    # submitted sheets override them.
     def fallback(name: str):
         frames = [kw["db_merged_tables"][name] for kw in subs.values()]
         if len(frames) > 1 and all(f is frames[0] for f in frames):
@@ -387,7 +387,7 @@ def validate_batched(spark: SparkSession,
                 dup_id_findings_sql(dview, name, c, group_cols=(SUB_COL,))
                 for c in bound.dup_id_columns)
 
-    # -- cross-sheet, spine keys include the tag
+    # -- cross-sheet, the spine GROUP BY includes the tag
     def submitted_view(family: tuple, key: str, tag_: str) -> str | None:
         """Union of IDs present in SUBMITTED sheets (get_submitted_ids
         intent, File_Submission_Object.py:356-367 — reference bug

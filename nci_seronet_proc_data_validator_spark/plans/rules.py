@@ -205,8 +205,12 @@ def sheet_findings_sql(view: str, sheet_name: str,
 
 
 #: Placeholder substituted with the real temp-view name on cache hits.
-#: NULs cannot appear in a rendered rule expression (_sql_quote escapes
-#: control characters), so plain str.replace is collision-free.
+#: No NUL can appear in a rendered statement: its text is rulebook
+#: literals, rule-bound column names (a column with no rule binds no
+#: check), the sheet's file name (file names cannot hold a NUL), dates
+#: and the CBC codes of the caller's CBC map — never a submitted cell
+#: value — so plain str.replace is collision-free. (_sql_quote only
+#: doubles quotes; it escapes nothing else.)
 _VIEW_SLOT = "\x00VIEW\x00"
 
 

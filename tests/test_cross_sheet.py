@@ -188,98 +188,130 @@ def _rows(df):
     return sorted(tuple(str(v) for v in r) for r in df.collect())
 
 
-def test_cross_sql_twins_match_dataframe_path(spark):
-    """r11: the generated-SQL cross-sheet decoders (driver-build hot
-    path) return exactly the DataFrame functions' rows — including
-    duplicate-key multiplicity, a missing source leg, blank keys, and
-    the PBMC type decode."""
+def test_duplicate_typed_biospecimen_decodes_by_min_type(spark):
+    """A Biospecimen_ID listed twice with different types decodes with
+    its min type (PBMC < Serum), as the DuckDB oracle does: one
+    ``Cross_Biospecimen_ID.csv`` finding, the same at every shuffle
+    partition count (a spine that copies the row per type leaves the
+    keyed dedup to keep whichever message arrives first)."""
+    sheets = {
+        "biospecimen.csv": _df(spark, ["Research_Participant_ID",
+                                       "Biospecimen_ID", "Biospecimen_Type"], [
+            ("14_000001", "14_000001_001", "PBMC"),
+            ("14_000001", "14_000001_001", "Serum"),
+        ]),
+        "aliquot.csv": _df(spark, ["Aliquot_ID", "Biospecimen_ID"], [
+            ("14_000001_001_01", "14_000001_001"),
+        ]),
+        "equipment.csv": _df(spark, ["Equipment_ID", "Biospecimen_ID"], [
+            ("equipA", "14_000001_001"),
+        ]),
+    }
+    want = [("ID is found in Biospecimen.csv and has Biospecimen_Type of "
+             "PBMC, however ID is missing from Reagent.csv")]
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        for n in (1, 2, 4, 8):
+            spark.conf.set("spark.sql.shuffle.partitions", str(n))
+            res = SubmissionValidator(spark, sheets, cbc_id="14",
+                                      today=datetime.date(2026, 1, 1))
+            got = [r["Error_Message"] for r in res.validate().findings
+                   .filter("CSV_Sheet_Name = 'Cross_Biospecimen_ID.csv'"
+                           " AND Column_Value = '14_000001_001'").collect()]
+            assert got == want, f"shuffle.partitions={n}: {got}"
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def test_cross_sql_matches_duckdb_oracle(spark):
+    """The SQL cross-sheet decoders return exactly the rows of their
+    DuckDB oracle mirrors run on the same rows — including duplicate
+    keys, a missing source leg (an empty table for the oracle), blank
+    and malformed keys, the PBMC type decode and a duplicate ID with
+    mixed types. The submitted-id restriction is a filter on the
+    oracle's output."""
+    import duckdb
+
     from nci_seronet_proc_data_validator_spark.operators.joins import (
-        biospecimen_cross_findings,
+        biospecimen_cross_oracle_sql,
         biospecimen_cross_sql,
-        outer_join_spine,
-        participant_cross_findings,
+        participant_cross_oracle_sql,
         participant_cross_sql,
     )
-    from pyspark.sql import functions as F
 
-    def df_ids(ids, extra=None):
-        rows = [(i,) if extra is None else (i, extra.get(i, ""))
-                for i in ids]
-        schema = ("Research_Participant_ID string" if extra is None
-                  else "Biospecimen_ID string, Biospecimen_Type string")
-        if extra is None:
-            schema = "Research_Participant_ID string"
-        return spark.createDataFrame(rows, schema)
+    con = duckdb.connect()
+
+    def both(tables):
+        """{sheet: (columns, rows) or (columns, None) when missing} →
+        Spark views (None for missing) + DuckDB tables (empty when
+        missing)."""
+        views, duck = {}, {}
+        for n, (cols, rows) in tables.items():
+            t = "t_" + n.replace(".", "_")
+            con.execute(f"CREATE OR REPLACE TABLE {t} ("
+                        + ", ".join(f"{c} VARCHAR" for c in cols) + ")")
+            if rows:
+                con.executemany(f"INSERT INTO {t} VALUES ("
+                                + ", ".join("?" * len(cols)) + ")", rows)
+                spark.createDataFrame(
+                    rows, ", ".join(f"{c} string" for c in cols)
+                ).createOrReplaceTempView(t)
+            views[n], duck[n] = (t if rows else None), t
+        return views, duck
+
+    def oracle(sql):
+        return sorted(tuple(str(v) for v in r)
+                      for r in con.execute(sql).fetchall())
 
     # participant: 3 of 4 sources submitted (confirmatory missing),
     # dup key in prior, one malformed id, one blank
-    prior = df_ids(["14_000001", "14_000001", "14_000002", "bad", ""])
-    demo = df_ids(["14_000002", "14_000003"])
-    bio = spark.createDataFrame(
-        [("14_000003", "x", "PBMC"), ("14_000004", "y", "Serum")],
-        "Research_Participant_ID string, Biospecimen_ID string, "
-        "Biospecimen_Type string")
-    sources = {"prior_clinical_test.csv": prior, "demographic.csv": demo,
-               "biospecimen.csv": bio,
-               "confirmatory_clinical_test.csv": None}
-    spine = outer_join_spine(
-        {k: v for k, v in sources.items() if v is not None},
-        "Research_Participant_ID")
-    spine = spine.withColumn("__in_confirmatory_clinical_test_csv",
-                             F.lit(False))
-    submitted = df_ids(["14_000001", "14_000002", "14_000003",
-                        "14_000004"])
-    want = participant_cross_findings(spine, "14", submitted)
-
-    views = {}
-    for n, src in sources.items():
-        if src is None:
-            views[n] = None
-        else:
-            v = "t_" + n.replace(".", "_")
-            src.createOrReplaceTempView(v)
-            views[n] = v
-    submitted.createOrReplaceTempView("t_submitted_p")
+    rpid = ["Research_Participant_ID"]
+    views, duck = both({
+        "prior_clinical_test.csv": (rpid, [
+            ("14_000001",), ("14_000001",), ("14_000002",), ("bad",),
+            ("",)]),
+        "demographic.csv": (rpid, [("14_000002",), ("14_000003",)]),
+        "biospecimen.csv": (rpid + ["Biospecimen_ID", "Biospecimen_Type"], [
+            ("14_000003", "x", "PBMC"), ("14_000004", "y", "Serum")]),
+        "confirmatory_clinical_test.csv": (rpid, None),
+    })
+    submitted = ["14_000001", "14_000002", "14_000003", "14_000004"]
+    spark.createDataFrame([(i,) for i in submitted], "Research_Participant_ID"
+                          " string").createOrReplaceTempView("t_submitted_p")
+    want = oracle(participant_cross_oracle_sql(
+        duck["prior_clinical_test.csv"], duck["demographic.csv"],
+        duck["biospecimen.csv"], duck["confirmatory_clinical_test.csv"],
+        "14"))
     got = spark.sql(participant_cross_sql(views, "14", "t_submitted_p"))
-    assert _rows(got) == _rows(want) and got.count() > 0
-
+    assert _rows(got) == [r for r in want if r[4] in submitted]
+    assert got.count() > 0
     # without the submitted restriction
-    want2 = participant_cross_findings(spine, "14", None)
     got2 = spark.sql(participant_cross_sql(views, "14", None))
-    assert _rows(got2) == _rows(want2)
+    assert _rows(got2) == want
 
     # biospecimen: bio + aliquot + equipment submitted (reagent,
-    # consumable missing); PBMC and non-PBMC; dup key in aliquot
-    bio2 = spark.createDataFrame(
-        [("14_000001_001", "PBMC"), ("14_000001_002", "Serum"),
-         ("14_000001_003", "PBMC")],
-        "Biospecimen_ID string, Biospecimen_Type string")
-    aliq = spark.createDataFrame(
-        [("14_000001_001",), ("14_000001_001",), ("14_000001_004",)],
-        "Biospecimen_ID string")
-    equip = spark.createDataFrame(
-        [("14_000001_002",), ("14_000001_001",)], "Biospecimen_ID string")
-    bsources = {"biospecimen.csv": bio2, "aliquot.csv": aliq,
-                "equipment.csv": equip, "reagent.csv": None,
-                "consumable.csv": None}
-    bspine = outer_join_spine(
-        {k: v for k, v in bsources.items() if v is not None},
-        "Biospecimen_ID")
-    for n in ("reagent.csv", "consumable.csv"):
-        bspine = bspine.withColumn("__in_" + n.replace(".", "_"),
-                                   F.lit(False))
-    bwant = biospecimen_cross_findings(bspine, "14", None)
-    bviews = {}
-    for n, src in bsources.items():
-        if src is None:
-            bviews[n] = None
-        else:
-            v = "tb_" + n.replace(".", "_")
-            src.createOrReplaceTempView(v)
-            bviews[n] = v
+    # consumable missing); PBMC and non-PBMC; dup key in aliquot; one
+    # ID listed twice in bio with mixed types
+    bid = ["Biospecimen_ID"]
+    bviews, bduck = both({
+        "biospecimen.csv": (bid + ["Biospecimen_Type"], [
+            ("14_000001_001", "PBMC"), ("14_000001_002", "Serum"),
+            ("14_000001_003", "PBMC"), ("14_000001_005", "Serum"),
+            ("14_000001_005", "PBMC"), ("", "PBMC"), ("bad", "Serum")]),
+        "aliquot.csv": (bid, [("14_000001_001",), ("14_000001_001",),
+                              ("14_000001_004",), ("14_000001_005",)]),
+        "equipment.csv": (bid, [("14_000001_002",), ("14_000001_001",),
+                                ("14_000001_005",)]),
+        "reagent.csv": (bid, None),
+        "consumable.csv": (bid, None),
+    })
+    bwant = oracle(biospecimen_cross_oracle_sql(
+        *(bduck[n] for n in ("biospecimen.csv", "aliquot.csv",
+                             "equipment.csv", "reagent.csv",
+                             "consumable.csv")), "14"))
     bgot = spark.sql(biospecimen_cross_sql(
         bviews, "14", None, type_sources={"biospecimen.csv"}))
-    assert _rows(bgot) == _rows(bwant) and bgot.count() > 0
+    assert _rows(bgot) == bwant and bgot.count() > 0
 
 
 def test_cross_sql_renders_are_wellformed():

@@ -7,9 +7,10 @@ Three claims the restructured ``q_rulebook_full`` rests on:
    global ``dedup_findings`` over the whole union — checked at sf0.01,
    where the aliquot sheet's colliding row_index actually produces
    duplicate keys (11,785 duplicate (l_orderkey, l_linenumber) pairs);
-2. ``presence_spine`` (UNION ALL → one groupBy) returns exactly
-   ``outer_join_spine``'s rows for unique-per-key sources, including a
-   carried column;
+2. ``presence_spine_sql`` (UNION ALL → one GROUP BY) collapses a
+   source's duplicate keys into one spine row and carries a column as
+   its per-key min (its outer-join equivalence is oracle-checked by the
+   ``j3_presence_patterns`` and ``j4_bio_spine`` queries);
 3. the one-statement SQL assembly produced by ``sheet_findings_sql`` /
    ``dup_id_findings_sql`` returns exactly what the DataFrame compile
    path (``compile_sheet_findings`` / ``dup_id_findings``) returns.
@@ -21,8 +22,7 @@ from pyspark.sql import functions as F
 
 from nci_seronet_proc_data_validator_spark.errors import dedup_findings
 from nci_seronet_proc_data_validator_spark.operators.joins import (
-    outer_join_spine,
-    presence_spine,
+    presence_spine_sql,
 )
 
 SF_001 = "/root/testdata/sf0.001"
@@ -50,31 +50,15 @@ def test_aliquot_key_collisions_exist(spark):
     assert dupes > 0
 
 
-def test_presence_spine_matches_outer_join_spine(spark):
-    base = spark.range(0, 100).select(F.col("id").alias("k"))
-    a = base.filter("k % 2 = 0").select("k")
-    b = base.filter("k % 3 = 0").select(
-        "k", F.when(F.col("k") % 2 == 0, "even").otherwise("odd")
-        .alias("tag"))
-    c = base.filter("k % 5 = 1").select("k")
-    legacy = outer_join_spine(
-        {"a.csv": a, "b.csv": b.select("k"), "c.csv": c}, "k")
-    # outer_join_spine drops non-key columns unless carried by hand; join
-    # the tag back the way callers do, then compare with the agg form
-    legacy = legacy.join(b, on="k", how="left")
-    fast = presence_spine({"a.csv": a, "b.csv": b, "c.csv": c}, "k",
-                          carry={"b.csv": ["tag"]})
-    assert sorted(fast.columns) == sorted(legacy.columns)
-    assert _rows(fast.select(*sorted(fast.columns))) == \
-        _rows(legacy.select(*sorted(fast.columns)))
-
-
 def test_presence_spine_collapses_duplicate_keys_with_min_carry(spark):
     dup = spark.createDataFrame(
         [(1, "PBMC"), (1, "Serum"), (2, "Serum")], ["k", "t"])
     other = spark.createDataFrame([(2,), (3,)], ["k"])
-    out = presence_spine({"bio": dup, "ali": other}, "k",
-                         carry={"bio": ["t"]})
+    dup.createOrReplaceTempView("__t_spine_bio")
+    other.createOrReplaceTempView("__t_spine_ali")
+    out = spark.sql(presence_spine_sql(
+        {"bio": "__t_spine_bio", "ali": "__t_spine_ali"}, ["k"],
+        carry={"bio": ["t"]}))
     got = {r["k"]: (r["__in_bio"], r["__in_ali"], r["t"])
            for r in out.collect()}
     assert got == {1: (True, False, "PBMC"),   # min of PBMC/Serum
