@@ -156,35 +156,3 @@ SELECT doc_id,
          AS n_bloom_hits
 FROM per_h GROUP BY doc_id
 """
-
-
-def bloom_words_literal(bloom: DataFrame, m_bits: int = DEFAULT_M_BITS
-                        ) -> list[int]:
-    """Materialize the bitset as a dense word list (driver-side model
-    state, like k-means centroids — m/32 longs, ~64 KB at the default
-    size). The one collect in the Bloom family, justified because the
-    filter IS the model being broadcast."""
-    words = [0] * (m_bits // 32)
-    for r in bloom.collect():
-        words[r["word_idx"]] = r["bits"]
-    return words
-
-
-def bloom_probe_stream(probes: DataFrame, words: list[int],
-                       h_col: str = "h", m_bits: int = DEFAULT_M_BITS,
-                       j: int = DEFAULT_J) -> DataFrame:
-    """Streaming-safe probe: the bitset rides the plan as ONE array
-    literal, so the hit test is a pure map-side ``forall`` over the j
-    positions — no join, no aggregation, no state. Appends ``bloom_hit``
-    to ``probes`` row-for-row; works identically on static frames and on
-    ``readStream`` sources (score-the-crawl-as-it-lands, same deployment
-    mode as ``hashed_linear_score``)."""
-    if len(words) != m_bits // 32:
-        raise ValueError(f"words must have {m_bits // 32} entries, "
-                         f"got {len(words)}")
-    w_lit = "array(" + ", ".join(f"{w}L" for w in words) + ")"
-    positions = ", ".join(_position_exprs(h_col, m_bits, j))
-    hit = (f"forall(array({positions}), p -> "
-           f"(element_at({w_lit}, CAST(p div 32 AS INT) + 1) "
-           f"& CAST(pow(2, p % 32) AS LONG)) != 0)")
-    return probes.withColumn("bloom_hit", F.expr(hit))

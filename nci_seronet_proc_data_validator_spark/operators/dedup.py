@@ -818,57 +818,3 @@ FROM n JOIN s sa ON sa.sid = id_a JOIN s sb ON sb.sid = id_b
 WHERE n_shared >= {min_shared}
 ORDER BY id_a, id_b
 """
-
-
-def substr_dup_cross(new_docs: DataFrame, corpus: DataFrame,
-                     id_col: str = "doc_id", text_col: str = "text",
-                     k: int = 8, w: int = 4, min_shared: int = 2,
-                     max_df: int = 64) -> DataFrame:
-    """Incremental substring-level dedup: which NEW documents share long
-    verbatim passages with the EXISTING corpus (the decontamination /
-    "did this crawl copy our eval set" check), without a corpus
-    self-join.
-
-    Shape at 100 TB — the ``cross_corpus_pairs`` posture applied to
-    winnowing: the corpus posting list ``(fp, corpus_id)`` is built once
-    per corpus version (persist it ``bucketBy(fp)``); each batch builds
-    its own postings map-only and probes only its fingerprints. The
-    df-cap is computed on the CORPUS side (boilerplate lives there) and
-    pairs never form within a side. Returns
-    ``(new_id, corpus_id, n_shared, overlap_bp)`` with overlap measured
-    against the smaller fingerprint set, as in ``substr_dup_pairs``.
-    """
-    # Sizes ride on the posting rows (one long each) and the corpus side
-    # is folded to ONE keyed aggregate per fingerprint (df-cap applied in
-    # the same pass), so each side's winnowing scan runs exactly once —
-    # the naive form re-ran the corpus gram-hash chain three times (df
-    # count, anti-join probe, size join) and the new side twice.
-    new_fps = winnow_fingerprints(new_docs, id_col, text_col, k, w)
-    corpus_fps = winnow_fingerprints(corpus, id_col, text_col, k, w)
-    np_ = new_fps.select(F.col(id_col).alias("new_id"),
-                         F.size("fps").cast("long").alias("n_new"),
-                         F.explode("fps").alias("fp"))
-    cp = corpus_fps.select(F.col(id_col).alias("corpus_id"),
-                           F.size("fps").cast("long").alias("n_corpus"),
-                           F.explode("fps").alias("fp"))
-    # One shuffle of the corpus postings: bucket rows carry the (id, n)
-    # pairs, the df-cap drops boilerplate fingerprints in the same
-    # aggregate (bucket payload bounded by max_df). This is also the
-    # persistable "corpus posting index" shape (bucketBy(fp)).
-    cbuckets = (cp.groupBy("fp")
-                .agg(F.collect_list(
-                    F.struct(F.col("corpus_id"),
-                             F.col("n_corpus"))).alias("cids"))
-                .filter(F.size("cids") <= max_df))
-    shared = (np_.join(cbuckets, "fp")
-              .select("new_id", "n_new",
-                      F.explode("cids").alias("c"))
-              .select("new_id", "n_new", "c.corpus_id", "c.n_corpus")
-              .groupBy("new_id", "corpus_id")
-              .agg(F.count(F.lit(1)).alias("n_shared"),
-                   F.min("n_new").alias("n_new"),
-                   F.min("n_corpus").alias("n_corpus"))
-              .filter(F.col("n_shared") >= min_shared))
-    return shared.select("new_id", "corpus_id", "n_shared",
-                         F.expr("n_shared * 10000 div least(n_new, n_corpus)")
-                         .alias("overlap_bp"))

@@ -122,17 +122,6 @@ def hashed_ngram_importance(df: DataFrame, target: Column, n: int = 2,
                      / F.col("sum_corpus_freq")).alias("importance")))
 
 
-def importance_topk(df: DataFrame, target: Column, k: int, n: int = 2,
-                    buckets: int = 4096, text_col: str = "text",
-                    id_col: str = "doc_id") -> DataFrame:
-    """The k most target-like documents — TakeOrdered (orderBy + limit),
-    never a global window; ties break on id for determinism."""
-    scored = hashed_ngram_importance(df, target, n=n, buckets=buckets,
-                                     text_col=text_col, id_col=id_col)
-    return (scored.orderBy(F.col("importance").desc(), F.col(id_col))
-            .limit(k))
-
-
 def importance_oracle_sql(target_pred: str, n: int = 2,
                           buckets: int = 4096,
                           table: str = "documents") -> str:

@@ -14,7 +14,7 @@ at ours, layout is the first lever).
 
 Spark-first shape: the key is ONE generated arithmetic expression
 (shift/mask interleave — identical text is valid Spark SQL and DuckDB
-SQL, so the oracle shares it verbatim), the write is
+SQL, so the oracle shares it verbatim), a clustered write is
 ``repartitionByRange(zkey)`` + ``sortWithinPartitions(zkey)`` — a single
 range shuffle, no UDFs, no driver loops. Quantization is exact integer
 arithmetic (floor division), so the key is oracle-checkable bit for bit;
@@ -71,34 +71,3 @@ def with_zorder_key(df: DataFrame, cols: list[tuple[str, int, int]],
     """Append the Morton key as a column (one generated expression, no
     per-bit Column objects)."""
     return df.withColumn(out, F.expr(zorder_key_sql(cols, bits)))
-
-
-def write_zordered(df: DataFrame, path: str,
-                   cols: list[tuple[str, int, int]], bits: int = 12,
-                   n_files: int = 8) -> None:
-    """Cluster-and-write: range-partition on the Morton key (one shuffle;
-    the range sampler balances file sizes even under skewed keys), sort
-    within each file, drop the key, write parquet. Every interleaved
-    column ends up min-max-clustered per file, so parquet stats prune
-    scans filtered on any of them."""
-    if "__zkey" in df.columns:
-        raise ValueError("input already has a '__zkey' column — rename it "
-                         "before write_zordered (it would be dropped)")
-    zdf = with_zorder_key(df, cols, bits, out="__zkey")
-    (zdf.repartitionByRange(n_files, F.col("__zkey"))
-     .sortWithinPartitions("__zkey")
-     .drop("__zkey")
-     .write.mode("overwrite").parquet(path))
-
-
-def file_clustering_stats(spark, path: str, cols: list[str]) -> DataFrame:
-    """Skipping-quality audit of a written table: per-file min/max span of
-    each column (read back with ``input_file_name``). The figure of merit
-    is mean(file span) / global span — the fraction of files a random
-    point predicate must read; an unclustered layout scores ~1.0."""
-    df = (spark.read.parquet(path)
-          .withColumn("__f", F.input_file_name()))
-    aggs = []
-    for c in cols:
-        aggs += [F.min(c).alias(f"{c}_min"), F.max(c).alias(f"{c}_max")]
-    return df.groupBy("__f").agg(*aggs)

@@ -127,30 +127,3 @@ SELECT t.doc_id,
          AS n_lines_dropped
 FROM t LEFT JOIN r USING (doc_id)
 """
-
-
-def dedup_lines_within_doc(df: DataFrame, text_col: str = "text",
-                           id_col: str = "doc_id",
-                           sep: str = "\n") -> DataFrame:
-    """Intra-document line dedup (keep FIRST occurrence, order preserved)
-    — the self-repetition trim that complements the corpus-level
-    ``remove_common_lines``: navboxes or generation loops repeating a
-    line INSIDE one document never reach corpus frequency, so the
-    blocklist can't catch them.
-
-    Map-only by design — pure array algebra per row (split → indexed
-    filter on first-occurrence position → join), NO explode and NO
-    shuffle, so it rides the scan at any corpus size. The O(lines²)
-    array_position probe is per document, bounded by line count.
-
-    Returns (id_col, text, n_lines, n_unique_lines).
-    """
-    esc = re.escape(sep)
-    lines = f"split({text_col}, '{esc}')"
-    uniq = (f"filter({lines}, (x, i) -> "
-            f"array_position({lines}, x) = i + 1)")
-    return (df.select(
-        F.col(id_col),
-        F.expr(f"array_join({uniq}, '{sep}')").alias("text"),
-        F.expr(f"size({lines})").cast("long").alias("n_lines"),
-        F.expr(f"size({uniq})").cast("long").alias("n_unique_lines")))

@@ -12,10 +12,9 @@ Design for 100 TB of media:
   — for multi-MB payloads set it low (e.g. 32) to bound worker memory.
 
 Codecs: heavyweight libraries (PIL/librosa/av) are NOT in this
-environment. Three trivial containers are decoded for real by
-dependency-free parsers below (VERDICT r2 #7): binary PPM (P6) and
-uncompressed 24-bit BMP for images (header + pixel mean), RIFF/WAVE PCM
-for audio (chunk walk + vectorized sample RMS, ``_decode_wav``); every
+environment. Trivial image containers are decoded for real by
+dependency-free parsers below (VERDICT r2 #7): binary PPM (P6),
+uncompressed 24-bit BMP and PNG (header + pixel mean); every
 other format falls back to the deterministic structural "decode" (real
 plumbing, fake pixels), with ``_decode_real`` raising
 ``NotImplementedError`` where PIL would plug in.
@@ -257,153 +256,3 @@ def decode_image_features(df: DataFrame,
 
     return df.select(id_col, payload_col).mapInPandas(
         extract, schema=IMAGE_FEATURE_SCHEMA)
-
-
-RESIZE_SCHEMA = (
-    "media_id long, payload binary, out_w int, out_h int, resized boolean"
-)
-
-
-def resize_images(df: DataFrame, max_dim: int = 256,
-                  payload_col: str = "payload",
-                  id_col: str = "media_id") -> DataFrame:
-    """Image resize plumbing: aspect-preserving target dims from metadata,
-    payload transformed batch-by-batch in ``mapInPandas``.
-
-    Target geometry is pure column algebra (prunable, no bytes touched);
-    only rows that actually need shrinking enter the Python stage — the
-    filter happens BEFORE the Arrow exchange, so at scale the expensive
-    path sees just the oversized images. The pixel transform itself is the
-    ``_decode_real`` plug point; the stub passes bytes through unchanged.
-    """
-    w, h = F.col("meta_width"), F.col("meta_height")
-    scale = F.lit(max_dim) / F.greatest(w, h)
-    need = (F.greatest(w, h) > max_dim) & (F.col("modality") == "image")
-    tagged = df.select(
-        F.col(id_col), F.col(payload_col),
-        F.when(need, (w * scale).cast("int")).otherwise(w).alias("out_w"),
-        F.when(need, (h * scale).cast("int")).otherwise(h).alias("out_h"),
-        need.alias("resized"))
-
-    def shrink(batches: Iterator) -> Iterator:
-        for pdf in batches:
-            # Real codec would decode+resample payload rows where
-            # pdf.resized; structural stub keeps bytes as-is.
-            yield pdf
-    return tagged.mapInPandas(shrink, schema=RESIZE_SCHEMA)
-
-
-def _decode_wav(payload: bytes) -> dict:
-    """RIFF/WAVE PCM decode, dependency-free: chunk walk (fmt → data,
-    skipping LIST/fact/etc.), 16-bit signed or 8-bit unsigned samples via
-    ``numpy.frombuffer`` (zero-copy, vectorized — no per-byte Python).
-    Returns real sample_rate / n_samples (per channel) / duration / RMS
-    normalized to [0, 1]."""
-    import struct
-
-    import numpy as np
-    if payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
-        raise ValueError("not a RIFF/WAVE container")
-    pos, fmt, data = 12, None, None
-    while pos + 8 <= len(payload):
-        cid, size = struct.unpack_from("<4sI", payload, pos)
-        body = payload[pos + 8:pos + 8 + size]
-        if cid == b"fmt ":
-            fmt = struct.unpack_from("<HHIIHH", body, 0)
-        elif cid == b"data":
-            data = body
-        pos += 8 + size + (size & 1)  # chunks are word-aligned
-    if fmt is None or data is None:
-        raise ValueError("missing fmt/data chunk")
-    audio_format, n_channels, rate, _brate, _balign, bits = fmt
-    if audio_format != 1 or bits not in (8, 16) or n_channels < 1:
-        raise NotImplementedError(
-            f"non-PCM or unsupported WAV: format={audio_format} bits={bits}")
-    if bits == 16:
-        x = np.frombuffer(data[:len(data) // 2 * 2], dtype="<i2")
-        norm = x.astype("float64") / 32768.0
-    else:
-        x = np.frombuffer(data, dtype="u1")
-        norm = (x.astype("float64") - 128.0) / 128.0
-    n_samples = len(x) // n_channels
-    rms = float(np.sqrt(np.mean(norm * norm))) if len(x) else 0.0
-    return {"sample_rate": rate, "n_channels": n_channels,
-            "n_samples": n_samples,
-            "duration_ms": 0 if rate == 0 else n_samples * 1000 // rate,
-            "rms": rms}
-
-
-AUDIO_FEATURE_SCHEMA = (
-    "media_id long, n_bytes long, est_samples long, rms double, "
-    "sample_rate int, decoded boolean"
-)
-
-
-def audio_features(df: DataFrame, sample_rate: int = 16000,
-                   payload_col: str = "payload",
-                   id_col: str = "media_id") -> DataFrame:
-    """Audio feature extraction over mapInPandas plumbing.
-
-    RIFF/WAVE PCM payloads decode for REAL (``_decode_wav``: true sample
-    count, sample rate, waveform RMS); any other container degrades to the
-    structural stub (metadata-estimated samples, byte-level pseudo-RMS,
-    ``decoded=false``) — same fall-to-stub contract as the image path. A
-    librosa deployment widens the real branch, not the plumbing."""
-    def _extract_one(p, dur_ms):
-        if p is not None:
-            try:
-                wav = _decode_wav(bytes(p))
-                return (len(p), wav["n_samples"], wav["rms"],
-                        wav["sample_rate"], True)
-            except Exception:
-                pass  # not WAV / corrupt → structural stub
-        n = 0 if p is None else len(p)
-        est = int(dur_ms or 0) * sample_rate // 1000
-        rms = (0.0 if not p
-               else (sum(b * b for b in p[:256])
-                     / min(n, 256)) ** 0.5 / 255.0)
-        return (n, est, rms, sample_rate, False)
-
-    def extract(batches: Iterator) -> Iterator:
-        import pandas as pd
-        for pdf in batches:
-            feats = [
-                _extract_one(p, d)
-                for p, d in zip(pdf[payload_col], pdf["meta_duration_ms"])]
-            yield pd.DataFrame({
-                "media_id": pdf[id_col],
-                "n_bytes": pd.Series([f[0] for f in feats], dtype="int64"),
-                "est_samples": pd.Series([f[1] for f in feats],
-                                         dtype="int64"),
-                "rms": pd.Series([f[2] for f in feats], dtype="float64"),
-                "sample_rate": pd.Series([f[3] for f in feats],
-                                         dtype="int32"),
-                "decoded": pd.Series([f[4] for f in feats], dtype="bool"),
-            })
-    return (df.filter(F.col("modality") == "audio")
-            .select(id_col, payload_col, "meta_duration_ms")
-            .mapInPandas(extract, schema=AUDIO_FEATURE_SCHEMA))
-
-
-def frame_sample_plan(df: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Video frame-sampling plumbing: computes the frame timestamps each
-    video would yield (decode itself is the stubbed plug point). Pure
-    column algebra — the expensive part (decode) stays in mapInPandas."""
-    n_frames = (F.coalesce(F.col("meta_duration_ms"), F.lit(0))
-                / F.lit(every_ms)).cast("int")
-    return (df.filter(F.col("modality") == "video")
-            .select("media_id",
-                    F.explode(
-                        F.sequence(F.lit(0),
-                                   F.greatest(n_frames - 1, F.lit(0))))
-                    .alias("frame_idx"))
-            .withColumn("frame_ts_ms", F.col("frame_idx") * every_ms))
-
-
-def media_stats(df: DataFrame) -> DataFrame:
-    """Metadata-only aggregation — payload-free by construction (column
-    pruning: the scan never reads the bytes column)."""
-    return (df.groupBy("modality")
-            .agg(F.count(F.lit(1)).alias("n"),
-                 F.avg("meta_width").alias("avg_width"),
-                 F.avg("meta_duration_ms").alias("avg_duration_ms")))

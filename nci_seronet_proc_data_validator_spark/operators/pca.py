@@ -13,12 +13,8 @@ Spark-first shape for 100 TB (the k-means model-sync pattern,
 - **Eigendecomposition is driver math.** The covariance is d×d (64×64
   here) — ``numpy.linalg.eigh`` on the driver, exactly where MLlib's own
   PCA does it. No data-scale work leaves the executors.
-- **Transform is map-only.** The k×d component matrix rides the plan as
-  literal arithmetic (one projection expression per output dimension);
-  scoring scales with the scan, zero shuffles, and runs unchanged on
-  streaming sources.
 
-Float contract: fit/transform are IEEE double throughout; this is a
+Float contract: the fit is IEEE double throughout; this is a
 test-verified operator (numpy parity at test scale), not a DuckDB-oracle
 query — cross-engine eigensolvers don't bit-match and shouldn't.
 """
@@ -114,25 +110,6 @@ def pca_fit_wide(emb: DataFrame, dim: int, k: int,
     gram = np.sum([np.asarray(r["g"]).reshape(dim, dim) for r in parts],
                   axis=0)
     return _components_from_moments(n, s, gram, k)
-
-
-def pca_transform(df: DataFrame, mean: list[float],
-                  components: list[list[float]],
-                  vec_col: str = "embedding",
-                  out_col: str = "pca") -> DataFrame:
-    """Project ``vec_col`` onto the fitted components, appending
-    ``out_col`` (array<double>, length k). Pure literal arithmetic —
-    map-only, streaming-safe."""
-    dim = len(mean)
-    outputs = []
-    for comp in components:
-        terms = " + ".join(
-            f"({comp[j]!r}) * (CAST({vec_col}[{j}] AS DOUBLE)"
-            f" - ({mean[j]!r}))"
-            for j in range(dim))
-        outputs.append(f"({terms})")
-    return df.withColumn(out_col,
-                         F.expr(f"array({', '.join(outputs)})"))
 
 
 # --------------------------- integer-exact power iteration (oracle-able)

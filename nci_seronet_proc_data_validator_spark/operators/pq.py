@@ -312,27 +312,6 @@ def ivfpq_topk(emb: DataFrame, centroids: DataFrame,
             .orderBy(query_id, "rank"))
 
 
-def write_pq_index(codes: DataFrame, table: str,
-                   buckets: int = 16) -> None:
-    """Persist the IVF-PQ code index — the production shape the
-    ``ivfpq_topk`` docstring names: the (id, cluster_id, pq_code) frame
-    written ``bucketBy(buckets, cluster_id)`` as a catalog table, so
-    every later probe join reads codes already hash-partitioned on
-    cluster_id and plans NO exchange on the (large) index side — only
-    the per-query probe list moves. Encode is map-only, so building +
-    writing the index is one scan; serving amortizes it forever."""
-    (codes.write.mode("overwrite").format("parquet")
-     .bucketBy(buckets, "cluster_id").sortBy("cluster_id")
-     .saveAsTable(table))
-
-
-def read_pq_index(spark, table: str) -> DataFrame:
-    """Open a persisted code index (bucket metadata rides the catalog
-    table, not a bare parquet path). Feed as ``codes=`` to
-    ``ivfpq_topk``."""
-    return spark.table(table)
-
-
 # ------------------------------------------------------------- oracles
 def pq_ctes(dim: int, m: int = 4, ksub: int = 8, iters: int = 2,
             n_queries: int = 5, table: str = "embeddings") -> list[str]:

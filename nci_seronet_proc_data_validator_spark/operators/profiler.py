@@ -385,29 +385,6 @@ def _metric_tpl_plan(dtypes: list[tuple[str, str]],
     return plan
 
 
-def observe_profile(df: DataFrame, observation,
-                    columns: list[str] | None = None,
-                    rsd: float = 0.05) -> DataFrame:
-    """The profiler's zero-cost monitoring face: attach the column
-    metrics as Spark *observed metrics* (``df.observe``) so they ride
-    whatever job materializes ``df`` — no extra scan at all, on batch
-    (read them from a ``pyspark.sql.Observation``) and on streaming
-    frames (``StreamingQueryProgress.observedMetrics``) alike. This is
-    how a 100 TB ingest watches data quality per micro-batch without
-    paying a second pass.
-
-    Metric set = :func:`profile_table_approx`'s (``CollectMetrics``
-    forbids DISTINCT aggregates, so the HLL++ ``distinct_approx`` stands
-    in — the same at-scale substitution). Output metric keys are
-    ``{col}__{metric}``. Returns the frame to keep composing."""
-    plan = [(c, "distinct_approx" if m == "distinct" else m,
-             f"approx_count_distinct({c}, {rsd})" if m == "distinct" else s)
-            for (c, m, s, _) in _metric_plan(df.dtypes, columns)]
-    exprs = [F.expr(s).cast("long").alias(f"{c}__{m}")
-             for (c, m, s) in plan]
-    return df.observe(observation, *exprs)
-
-
 def profile_oracle_sql(table: str, dtypes: list[tuple[str, str]],
                        columns: list[str] | None = None) -> str:
     """DuckDB twin of :func:`profile_table`: one scan into a 1-row

@@ -80,6 +80,122 @@ CBC_COL = "__cbc_id"
 
 log = logging.getLogger(__name__)
 
+# Dependency columns that rules read through the enrichment joins, and
+# the value a sheet gets when they are absent: the parent sheet was not
+# submitted and no DB fallback exists (e.g. the SARS column without
+# prior_clinical_test; the reference always has the MySQL fallback), or
+# the caller joins no parents at all (the per-sheet watcher). '' disables
+# dependency-scoped rules; NULL makes assay resolution (C9) flag every
+# value as unresolved — "not found in database or submitted file" is then
+# literally true. SQL text: one selectExpr, not a py4j round-trip per
+# Column.
+_DEPENDENCY_DEFAULTS = {
+    "SARS_CoV_2_PCR_Test_Result": "''",
+    "Biospecimen_Type": "''",
+    "Assay_Name": "CAST(NULL AS STRING)",
+    "Assay_Antigen_Source": "CAST(NULL AS STRING)",
+}
+
+
+def view_registry(spark: SparkSession):
+    """``(reg, drop)`` for one statement's temp views. ``reg(df)``
+    registers ``df`` under a per-invocation uuid name (concurrent
+    compiles never collide) and returns the name ``spark.sql`` queries it
+    by; ``drop()`` drops every registered view — call it right after
+    ``spark.sql``, which resolves views eagerly."""
+    import uuid
+
+    run_id = uuid.uuid4().hex[:8]
+    views: list[tuple[bool, str]] = []
+
+    def reg(df) -> str:
+        v = f"__batched_{run_id}_{len(views)}"
+        # A temp view registers in the DATAFRAME's session, but the SQL
+        # runs on `spark` — fine until a caller-provided side input (a
+        # db_merged_tables fallback) was created on a DIFFERENT session:
+        # foreachBatch hands the compile the streaming CLONE session
+        # while the fallback frame lives on the original, and the view
+        # would land in a catalog spark.sql never consults. Global temp
+        # views are the public cross-session mechanism; use one exactly
+        # when the sessions differ.
+        sess = df.sparkSession
+        if sess is spark or sess._jsparkSession.equals(
+                spark._jsparkSession):
+            df.createOrReplaceTempView(v)
+            views.append((False, v))
+            return v
+        df.createOrReplaceGlobalTempView(v)
+        views.append((True, v))
+        return f"global_temp.{v}"
+
+    def drop() -> None:
+        for is_global, v in views:
+            if is_global:
+                spark.catalog.dropGlobalTempView(v)
+            else:
+                spark.catalog.dropTempView(v)
+
+    return reg, drop
+
+
+def sheet_findings_legs(df: "DataFrame", name: str, columns: "list[str]",
+                        cbc, reg, icd10_codes=None, *,
+                        drop_list: "list[str] | None" = None,
+                        today=None, fix_reference_bugs: bool = True):
+    """ONE sheet's per-column findings as SQL legs: the per-sheet body of
+    :func:`validate_batched` and of the per-sheet watcher
+    (``streaming.watcher.validate_stream_multi``), so both shadow, bind,
+    default and render a sheet the same way.
+
+    ``df`` is the CLEAN sheet (``sources.readers.cleanup_sheet``) with
+    ``row_index`` and the ``__submission_id`` / ``__cbc_id`` tags, plus
+    any parent columns the caller's enrichment joins added (named by
+    ``drop_list``: exempt from rules). ``columns`` are the sheet's own
+    data columns, ``cbc`` the ``PerRowCbc`` over ``__cbc_id``, and
+    ``reg`` the registrar of :func:`view_registry`. Returns the bound
+    rules (the caller's dup-ID leg reads ``dup_id_columns``) and the
+    rendered legs, each a SELECT of ``__submission_id`` + the six finding
+    columns over the registered view.
+    """
+    from nci_seronet_proc_data_validator_spark.operators.typing import (
+        with_typed_shadows,
+    )
+    from nci_seronet_proc_data_validator_spark.plans.rulebook import (
+        bind_sheet_rules_cached,
+        with_icd10_flags,
+    )
+    from nci_seronet_proc_data_validator_spark.plans.rules import (
+        sheet_findings_sql_cached,
+    )
+
+    df = with_typed_shadows(df, skip=("row_index", SUB_COL, CBC_COL))
+    # Memoized: every batch (and micro-batch) sharing this sheet schema
+    # skips both the rule binding and the 459-check SQL render below;
+    # the key includes the date, so a midnight rollover still refreshes
+    # expiration cutoffs.
+    bound = bind_sheet_rules_cached(
+        name, list(columns), cbc, drop_list=drop_list, today=today,
+        fix_reference_bugs=fix_reference_bugs)
+    if not all(isinstance(ce.violation, str)
+               and isinstance(ce.message, str)
+               for cr in bound.column_rules for ce in cr.checks):
+        raise ValueError(
+            f"the findings compile renders SQL text; sheet {name} bound "
+            f"a Column-valued check (custom caller rule) that has no "
+            f"text form")
+    have = set(df.columns)
+    missing = [f"{v} AS {c}" for c, v in _DEPENDENCY_DEFAULTS.items()
+               if c not in have]
+    if missing:
+        df = df.selectExpr("*", *missing)
+    view = reg(with_icd10_flags(df, bound, icd10_codes))
+    # codegen_chunk=9: the fused full-width findings projection exceeds
+    # HotSpot's JIT size ceiling and runs interpreted (the rulebook's
+    # measured lesson, plans/rules.py) — at batched volume that is the
+    # dominant cost, not a nicety.
+    return bound, sheet_findings_sql_cached(
+        view, name, bound, codegen_chunk=9, carry_cols=(SUB_COL,))
+
 
 def validate_batched(spark: SparkSession,
                      subs: "dict[str, dict]",
@@ -159,8 +275,6 @@ def validate_batched(spark: SparkSession,
     Returns a DataFrame with ``__submission_id`` + the six finding
     columns, deduplicated per submission with the standard key.
     """
-    import uuid as _uuid
-
     from pyspark.sql import functions as F
 
     from nci_seronet_proc_data_validator_spark.errors import (
@@ -178,16 +292,8 @@ def validate_batched(spark: SparkSession,
         merge_tables,
         participant_cross_sql,
     )
-    from nci_seronet_proc_data_validator_spark.operators.typing import (
-        with_typed_shadows,
-    )
-    from nci_seronet_proc_data_validator_spark.plans.rulebook import (
-        bind_sheet_rules_cached,
-        with_icd10_flags,
-    )
     from nci_seronet_proc_data_validator_spark.plans.rules import (
         dup_id_findings_sql,
-        sheet_findings_sql_cached,
     )
     from nci_seronet_proc_data_validator_spark.sources.readers import (
         cleanup_sheet,
@@ -312,83 +418,27 @@ def validate_batched(spark: SparkSession,
         if mc:
             merged[name] = df.select(SUB_COL, CBC_COL, *mc)
 
-    run_id = _uuid.uuid4().hex[:8]
     sql_legs: list[str] = []
-    views: list[tuple[bool, str]] = []
-
-    def reg(df, tag_: str) -> str:
-        v = f"__batched_{run_id}_{tag_}"
-        # A temp view registers in the DATAFRAME's session, but the SQL
-        # below runs on `spark` — fine until a caller-provided side
-        # input (a db_merged_tables fallback) was created on a DIFFERENT
-        # session: foreachBatch hands the compile the streaming CLONE
-        # session while the fallback frame lives on the original, and
-        # the view would land in a catalog spark.sql never consults.
-        # Global temp views are the public cross-session mechanism; use
-        # one exactly when the sessions differ.
-        sess = df.sparkSession
-        if sess is spark or sess._jsparkSession.equals(
-                spark._jsparkSession):
-            df.createOrReplaceTempView(v)
-            views.append((False, v))
-            return v
-        df.createOrReplaceGlobalTempView(v)
-        views.append((True, v))
-        return f"global_temp.{v}"
-
-    # Dependency columns referenced by rules arrive via the enrichment
-    # joins and are absent when the parent sheet was not submitted and
-    # no DB fallback exists (e.g. the SARS column without
-    # prior_clinical_test; the reference always has the MySQL
-    # fallback). Sentinels: '' disables dependency-scoped rules; NULL
-    # makes assay resolution (C9) flag everything as unresolved — "not
-    # found in database or submitted file" is then literally true.
-    defaults = {
-        "SARS_CoV_2_PCR_Test_Result": F.lit(""),
-        "Biospecimen_Type": F.lit(""),
-        "Assay_Name": F.lit(None).cast("string"),
-        "Assay_Antigen_Source": F.lit(None).cast("string"),
-    }
-    for i, (name, df) in enumerate(clean.items()):
+    reg, drop_views = view_registry(spark)
+    for name, df in clean.items():
         original_cols = [c for c in df.columns
                          if c not in ("row_index", SUB_COL, CBC_COL)]
         enriched, drop_list = merge_tables(name, df, merged,
                                            extra_keys=(SUB_COL,))
-        enriched = with_typed_shadows(
-            enriched, skip=("row_index", SUB_COL, CBC_COL))
-        # Memoized: every batch sharing this sheet schema skips both the
-        # rule binding and the 459-check SQL render below.
-        bound = bind_sheet_rules_cached(
-            name, original_cols, cbc, drop_list=drop_list,
-            today=today, fix_reference_bugs=fix_bugs)
-        if not all(isinstance(ce.violation, str)
-                   and isinstance(ce.message, str)
-                   for cr in bound.column_rules for ce in cr.checks):
-            raise ValueError(
-                f"batched mode compiles findings as SQL text; sheet "
-                f"{name} bound a Column-valued check (custom caller "
-                f"rule) that has no text form")
-        missing = {c: v for c, v in defaults.items()
-                   if c not in enriched.columns}
-        if missing:
-            enriched = enriched.withColumns(missing)
-        view = reg(with_icd10_flags(enriched, bound, icd10), f"s{i}")
-        # codegen_chunk=9: the fused full-width findings projection
-        # exceeds HotSpot's JIT size ceiling and runs interpreted (the
-        # rulebook's measured lesson, plans/rules.py) — at batched
-        # volume that is the dominant cost, not a nicety.
-        sql_legs.extend(sheet_findings_sql_cached(
-            view, name, bound, codegen_chunk=9, carry_cols=(SUB_COL,)))
+        bound, legs = sheet_findings_legs(
+            enriched, name, original_cols, cbc, reg, icd10,
+            drop_list=drop_list, today=today, fix_reference_bugs=fix_bugs)
+        sql_legs.extend(legs)
         if bound.dup_id_columns:
             # over the CLEAN sheet, not the enriched one: enrichment
             # joins must not influence dup multiplicity
-            dview = reg(df, f"d{i}")
+            dview = reg(df)
             sql_legs.extend(
                 dup_id_findings_sql(dview, name, c, group_cols=(SUB_COL,))
                 for c in bound.dup_id_columns)
 
     # -- cross-sheet, the spine GROUP BY includes the tag
-    def submitted_view(family: tuple, key: str, tag_: str) -> str | None:
+    def submitted_view(family: tuple, key: str) -> str | None:
         """Union of IDs present in SUBMITTED sheets (get_submitted_ids
         intent, File_Submission_Object.py:356-367 — reference bug
         §2.9.2: its merge result was discarded; we apply the
@@ -403,37 +453,33 @@ def validate_batched(spark: SparkSession,
         u = parts[0]
         for p_ in parts[1:]:
             u = u.unionByName(p_)
-        return reg(u.distinct(), tag_)
+        return reg(u.distinct())
 
     part_family = ("prior_clinical_test.csv", "demographic.csv",
                    "biospecimen.csv", "confirmatory_clinical_test.csv")
     part_srcs = {n: merged.get(n) for n in part_family}
     if sum(v is not None for v in part_srcs.values()) >= 2:
-        pviews = {n: (reg(src, f"p{j}") if src is not None else None)
-                  for j, (n, src) in enumerate(part_srcs.items())}
-        sv = submitted_view(part_family, "Research_Participant_ID", "psub")
+        pviews = {n: (reg(src) if src is not None else None)
+                  for n, src in part_srcs.items()}
+        sv = submitted_view(part_family, "Research_Participant_ID")
         sql_legs.append(participant_cross_sql(
             pviews, cbc, sv, group_col=SUB_COL, extra_keys=(CBC_COL,)))
     bio_family = ("biospecimen.csv", "aliquot.csv", "equipment.csv",
                   "reagent.csv", "consumable.csv")
     bio_srcs = {n: merged.get(n) for n in bio_family}
     if sum(v is not None for v in bio_srcs.values()) >= 2:
-        bviews = {n: (reg(src, f"b{j}") if src is not None else None)
-                  for j, (n, src) in enumerate(bio_srcs.items())}
+        bviews = {n: (reg(src) if src is not None else None)
+                  for n, src in bio_srcs.items()}
         type_sources = {n for n, src in bio_srcs.items()
                         if src is not None
                         and "Biospecimen_Type" in src.columns}
-        sv = submitted_view(bio_family, "Biospecimen_ID", "bsub")
+        sv = submitted_view(bio_family, "Biospecimen_ID")
         sql_legs.append(biospecimen_cross_sql(
             bviews, cbc, sv, type_sources=type_sources,
             group_col=SUB_COL, extra_keys=(CBC_COL,)))
 
     findings = spark.sql(" UNION ALL ".join(sql_legs)) if sql_legs else None
-    for is_global, v in views:     # resolved eagerly by spark.sql above
-        if is_global:
-            spark.catalog.dropGlobalTempView(v)
-        else:
-            spark.catalog.dropTempView(v)
+    drop_views()
     if findings is None:
         out = empty_findings(spark).withColumn(SUB_COL, F.lit(""))
         return out.select(SUB_COL, *FINDING_COLUMNS)

@@ -162,12 +162,6 @@ def write_xlsx_sheets(path: str,
     return path
 
 
-def write_xlsx(path: str, columns: list[str], rows: list[list[object]],
-               sheet_name: str = "Sheet1") -> str:
-    """Single-sheet convenience over ``write_xlsx_sheets``."""
-    return write_xlsx_sheets(path, {sheet_name: (columns, rows)})
-
-
 def _cell_value(cell: ET.Element, shared: list[str]) -> str:
     t = cell.get("t", "n")
     if t == "inlineStr":

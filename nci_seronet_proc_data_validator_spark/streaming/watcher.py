@@ -15,9 +15,13 @@ semantics live, which the reference never had.
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+log = logging.getLogger(__name__)
 
 
 def _resolve(value_or_fn):
@@ -126,10 +130,17 @@ def validate_stream_multi(spark: SparkSession, input_glob: str,
       submission from MySQL at load time,
       File_Submission_Object.py:82-87 — pair with
       ``sources.jdbc.read_cbc_map`` for the JDBC-backed form);
-    - the rulebook binds ONCE per (schema, distinct-CBC-set, date) with
-      ``PerRowCbc`` — the C5 prefix checks render as CASEs over
-      ``__cbc_id``, identical to batched mode — and the memoized bind
-      makes micro-batch N a cache hit;
+    - each micro-batch is cleaned (``cleanup_sheet``: all-blank rows
+      dropped unless ``bind_kwargs`` sets ``fix_reference_bugs=False``)
+      and rendered by ``orchestrate.sheet_findings_legs`` — the same
+      per-sheet body as the batch compile: typed shadows, the memoized
+      bind with ``PerRowCbc`` (the C5 prefix checks render as CASEs
+      over ``__cbc_id``; micro-batch N is a cache hit), the dependency
+      defaults, the ICD-10 flags and the findings SQL;
+    - the findings are PER-COLUMN only: no dup-ID legs, no cross-sheet
+      legs, no enrichment joins and no findings dedup — a micro-batch
+      holds an arbitrary slice of one sheet, so those checks belong to
+      the completeness-gated :func:`validate_stream_submissions`;
     - ``row_index`` is counted PER FILE
       (``sources.readers.with_per_file_row_index``): findings cite the
       actual CSV line of the submission's own file, and the index is
@@ -138,25 +149,23 @@ def validate_stream_multi(spark: SparkSession, input_glob: str,
       :func:`_epoch_sink` (dynamic partition overwrite per epoch), with
       ``__submission_id`` as an ordinary output column.
     """
-    import uuid
-
+    from nci_seronet_proc_data_validator_spark.errors import sql_string_map
     from nci_seronet_proc_data_validator_spark.functions.checks import (
         PerRowCbc)
-    from nci_seronet_proc_data_validator_spark.operators.typing import (
-        with_typed_shadows)
+    from nci_seronet_proc_data_validator_spark.orchestrate import (
+        CBC_COL, SUB_COL, sheet_findings_legs, view_registry)
     from nci_seronet_proc_data_validator_spark.plans.advisor import (
         warn_nonsplittable_csv)
-    from nci_seronet_proc_data_validator_spark.plans.rulebook import (
-        bind_sheet_rules_cached, with_icd10_flags)
-    from nci_seronet_proc_data_validator_spark.plans.rules import (
-        sheet_findings_sql_cached)
     from nci_seronet_proc_data_validator_spark.sources.readers import (
-        sheet_csv_options, with_per_file_row_index)
+        cleanup_columns, cleanup_sheet, sheet_csv_options,
+        with_per_file_row_index)
 
     # multiLine (the shared sheet options) makes each landed file
     # single-task; flag any oversized file already in the watched path
     warn_nonsplittable_csv(input_glob)
-    sub_col, cbc_col, file_col = "__submission_id", "__cbc_id", "__sg_file"
+    file_col = "__sg_file"
+    bind = bind_kwargs or {}
+    data_cols = cleanup_columns(columns)
 
     reader = sheet_csv_options(spark.readStream, list(columns))
     if max_files_per_trigger is not None:
@@ -171,36 +180,27 @@ def validate_stream_multi(spark: SparkSession, input_glob: str,
         cbc_map = {str(s): str(c)
                    for s, c in _resolve(cbc_by_sub).items()}
         cbc_values = tuple(sorted(set(cbc_map.values()) | {"0"}))
+        # Everything below runs on the MICRO-BATCH session: foreachBatch
+        # hands a df bound to a batch-cloned session, where the views
+        # must live and be queried.
+        sess = batch_df.sparkSession
         df = with_per_file_row_index(batch_df.na.fill(""),
                                      file_col=file_col)
         sub = F.regexp_extract(F.col(file_col), sub_pattern, 1)
         cbc = (F.coalesce(
-            F.create_map(*[x for s, c in sorted(cbc_map.items())
-                           for x in (F.lit(s), F.lit(c))])[sub],
+            F.expr(sql_string_map(sess, sorted(cbc_map.items())))[sub],
             F.lit("0")) if cbc_map else F.lit("0"))
-        df = with_typed_shadows(
-            df.withColumn(sub_col, sub).withColumn(cbc_col, cbc)
-            .drop(file_col), list(columns))
-        # Memoized: a long-lived watcher re-binds identical rules every
-        # micro-batch; the cache keys on (sheet, columns, cbc, date) so a
-        # midnight rollover still refreshes expiration cutoffs.
-        bound = bind_sheet_rules_cached(
-            sheet_name, list(columns),
-            PerRowCbc(column=cbc_col, values=cbc_values),
-            **(bind_kwargs or {}))
-        if "SARS_CoV_2_PCR_Test_Result" not in df.columns:
-            df = df.withColumn("SARS_CoV_2_PCR_Test_Result", F.lit(""))
-        df = with_icd10_flags(df, bound, _resolve(icd10_codes))
-        # Registered against the MICRO-BATCH session: foreachBatch hands
-        # a df bound to a batch-cloned session, where the view must live
-        # and be queried. uuid, not epoch: two concurrent watchers on the
-        # same sheet would collide on epoch-keyed names mid-analysis.
-        sess = df.sparkSession
-        view = f"__watch_{uuid.uuid4().hex[:8]}_{epoch_id}"
-        df.createOrReplaceTempView(view)
-        findings = sess.sql(" UNION ALL ".join(sheet_findings_sql_cached(
-            view, sheet_name, bound, carry_cols=(sub_col,))))
-        sess.catalog.dropTempView(view)     # resolved eagerly by sess.sql
+        df = cleanup_sheet(
+            df.withColumns({SUB_COL: sub, CBC_COL: cbc}).drop(file_col),
+            bind.get("fix_reference_bugs", True),
+            carry_cols=(SUB_COL, CBC_COL))
+        reg, drop_views = view_registry(sess)
+        _, legs = sheet_findings_legs(
+            df, sheet_name, data_cols,
+            PerRowCbc(column=CBC_COL, values=cbc_values), reg,
+            _resolve(icd10_codes), **bind)
+        findings = sess.sql(" UNION ALL ".join(legs))
+        drop_views()
         _epoch_sink(findings, epoch_id, output_dir, status_cb)
 
     return (raw.writeStream
@@ -422,8 +422,6 @@ def validate_stream_submissions(spark: SparkSession, root_dir: str,
 
         findings = None
         if complete_now:
-            import warnings
-
             from nci_seronet_proc_data_validator_spark.errors import (
                 FINDING_COLUMNS, FINDING_SCHEMA, ROW_VALIDATION_FAILURE)
             from nci_seronet_proc_data_validator_spark.orchestrate import (
@@ -456,8 +454,8 @@ def validate_stream_submissions(spark: SparkSession, root_dir: str,
                 # and move on.
                 failures[sub] = (f"{type(oc.error).__name__}: "
                                  f"{str(oc.error)[:300]}")
-                warnings.warn(f"validation FAILED for submission "
-                              f"{sub}: {failures[sub]}; moving on")
+                log.warning("validation FAILED for submission %s: %s; "
+                            "moving on", sub, failures[sub])
             if failures:
                 # durable failure record: one row per failed submission
                 # in the SAME findings sink (the reference's jobs-table

@@ -80,37 +80,3 @@ def test_bloom_probe_is_broadcast_no_hash_shuffle(spark):
     assert "BroadcastHashJoin" in plan
     assert "hashpartitioning(pos" not in plan
     assert "hashpartitioning(h" not in plan
-
-
-def test_bloom_probe_stream_matches_join_form(spark, tmp_path):
-    """The literal-bitset probe agrees with the join-form probe on every
-    row AND runs unchanged on a readStream source (no join, no state)."""
-    from nci_seronet_proc_data_validator_spark.operators.bloom import (
-        bloom_build, bloom_probe, bloom_probe_stream, bloom_words_literal)
-    # small bitset (128 words): identical code paths, but the words
-    # literal compiles in ms instead of the default 8192-word array
-    # (which this test paid twice — batch + stream; the contamination
-    # driver query still exercises the full-size bitset)
-    M = 1 << 12
-    members = spark.range(200).select((F.col("id") * 48611).alias("h"))
-    bloom = bloom_build(members, "h", m_bits=M)
-    words = bloom_words_literal(bloom, m_bits=M)
-    probes = spark.range(600).select(
-        F.col("id").alias("probe_id"), (F.col("id") * 911).alias("h"))
-    join_form = {r["probe_id"]: r["bloom_hit"]
-                 for r in bloom_probe(probes, bloom, "h", m_bits=M).collect()}
-    lit_form = {r["probe_id"]: r["bloom_hit"]
-                for r in bloom_probe_stream(probes, words, "h",
-                                            m_bits=M).collect()}
-    assert join_form == lit_form
-    # streaming: identical operator on a readStream source
-    src = str(tmp_path / "probe_src")
-    probes.write.parquet(src)
-    stream = spark.readStream.schema("probe_id long, h long").parquet(src)
-    q = (bloom_probe_stream(stream, words, "h", m_bits=M)
-         .writeStream.outputMode("append").format("memory")
-         .queryName("bloom_stream_out").trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    streamed = {r["probe_id"]: r["bloom_hit"] for r in
-                spark.sql("SELECT * FROM bloom_stream_out").collect()}
-    assert streamed == join_form

@@ -148,34 +148,6 @@ def test_substr_dup_pairs_df_cap_drops_boilerplate(spark):
                             max_df=64).count() == 45
 
 
-def test_substr_dup_cross_probes_corpus(spark):
-    """Incremental substring dedup: a new doc quoting a corpus passage is
-    caught; pairs never form within one side; corpus-side boilerplate is
-    df-capped out."""
-    from nci_seronet_proc_data_validator_spark.operators.dedup import (
-        substr_dup_cross)
-    passage = ("results were normalized against the pooled control serum "
-               "and reported as arbitrary units per milliliter")
-    corpus = spark.createDataFrame(
-        [(1, "archive doc alpha. " + passage),
-         (2, "archive doc beta, nothing shared with any new arrival"),
-         (3, "archive doc gamma. " + passage)],   # passage twice in corpus
-        "doc_id long, text string")
-    new = spark.createDataFrame(
-        [(100, "fresh crawl quoting: " + passage),
-         (101, "fresh crawl with entirely original phrasing throughout")],
-        "doc_id long, text string")
-    out = {(r["new_id"], r["corpus_id"]): r for r in
-           substr_dup_cross(new, corpus, k=8, w=4, min_shared=2).collect()}
-    assert set(out) == {(100, 1), (100, 3)}
-    assert all(r["overlap_bp"] > 0 for r in out.values())
-    # within-side sharing (corpus 1 vs 3) must NOT appear — probe only
-    assert (1, 3) not in out and (3, 1) not in out
-    # df-cap: passage fingerprints occur in 2 corpus docs; cap below that
-    assert substr_dup_cross(new, corpus, k=8, w=4, min_shared=1,
-                            max_df=1).count() == 0
-
-
 def test_substr_dup_pairs_winnowing_guarantee_property(spark):
     """Property (Schleimer et al. 2003 correctness bound): whenever two
     documents share a verbatim substring of length >= k + w - 1, the

@@ -7,9 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from nci_seronet_proc_data_validator_spark.operators.layout import (
-    file_clustering_stats,
     with_zorder_key,
-    write_zordered,
     zorder_key_sql,
 )
 
@@ -47,10 +45,15 @@ def test_zorder_key_is_one_expression(spark):
 
 @pytest.fixture(scope="module")
 def span_ratios(spark, tmp_path_factory):
-    """Write the same grid z-ordered and single-column-sorted; return
-    mean(file span)/global span per column for both layouts."""
+    """Write the same grid z-ordered and single-column-sorted (range
+    partition + sort on the key, 16 files each); return mean(file
+    span)/global span per column for both layouts."""
     def ratios(path):
-        stats = file_clustering_stats(spark, path, ["c1", "c2"]).collect()
+        stats = (spark.read.parquet(path)
+                 .groupBy(F.input_file_name())
+                 .agg(*[F.expr(f"{f}({c}) AS {c}_{f}")
+                        for c in ("c1", "c2") for f in ("min", "max")])
+                 .collect())
         out = {}
         for c in ("c1", "c2"):
             spans = [r[f"{c}_max"] - r[f"{c}_min"] for r in stats]
@@ -61,7 +64,9 @@ def span_ratios(spark, tmp_path_factory):
     zpath = str(base / "z")
     spath = str(base / "s")
     grid = _grid(spark)
-    write_zordered(grid, zpath, COLS, n_files=16)
+    (with_zorder_key(grid, COLS).repartitionByRange(16, "zkey")
+     .sortWithinPartitions("zkey").drop("zkey")
+     .write.mode("overwrite").parquet(zpath))
     (grid.repartitionByRange(16, "c1").sortWithinPartitions("c1")
      .write.mode("overwrite").parquet(spath))
     return ratios(zpath), ratios(spath)
@@ -102,9 +107,3 @@ def test_key_width_guard():
     # must be rejected, not silently corrupted
     with pytest.raises(ValueError, match="BIGINT"):
         zorder_key_sql([(c, 0, 100) for c in ("a", "b", "c")], bits=22)
-
-
-def test_zkey_collision_guard(spark, tmp_path):
-    df = _grid(spark, 16).withColumn("__zkey", F.lit(1))
-    with pytest.raises(ValueError, match="__zkey"):
-        write_zordered(df, str(tmp_path / "x"), COLS)

@@ -64,26 +64,6 @@ def test_arg_validation(docs):
         remove_common_lines(docs, max_doc_freq=0)
 
 
-def test_dedup_lines_within_doc_keeps_first_in_order(spark):
-    """Repeated lines inside ONE doc collapse to their first occurrence;
-    distinct docs are untouched; the operator is map-only (no Exchange)."""
-    from nci_seronet_proc_data_validator_spark.operators.linedup import (
-        dedup_lines_within_doc)
-    docs = spark.createDataFrame(
-        [(1, "alpha\nbeta\nalpha\ngamma\nbeta"),
-         (2, "one line only"),
-         (3, "x\nx\nx")],
-        "doc_id long, text string")
-    got = {r["doc_id"]: r for r in dedup_lines_within_doc(docs).collect()}
-    assert got[1]["text"] == "alpha\nbeta\ngamma"
-    assert (got[1]["n_lines"], got[1]["n_unique_lines"]) == (5, 3)
-    assert got[2]["text"] == "one line only"
-    assert got[3]["text"] == "x" and got[3]["n_unique_lines"] == 1
-    plan = (dedup_lines_within_doc(docs)
-            ._jdf.queryExecution().executedPlan().toString())
-    assert "Exchange" not in plan
-
-
 def test_duplicated_doc_id_counts_per_row(spark):
     """The declared one-row-per-document contract (r14): a corpus with
     several rows sharing a doc_id counts each ROW toward doc_freq —

@@ -1,13 +1,10 @@
-"""Distributed PCA: one-pass covariance agg + driver eigh + literal-matrix
-projection, verified against numpy at test scale."""
+"""Distributed PCA: one-pass covariance agg + driver eigh, verified
+against numpy at test scale."""
 
 import numpy as np
 from pyspark.sql import functions as F
 
-from nci_seronet_proc_data_validator_spark.operators.pca import (
-    pca_fit,
-    pca_transform,
-)
+from nci_seronet_proc_data_validator_spark.operators.pca import pca_fit
 
 DIM, N, K = 12, 300, 4
 
@@ -41,42 +38,6 @@ def test_pca_matches_numpy(spark):
         if want[r][m] < 0:
             want[r] = -want[r]
     assert np.allclose(comps, want, atol=1e-6)
-
-
-def test_pca_transform_projects_and_orders_variance(spark):
-    X = _data()
-    df = _df(spark, X)
-    mean, comps = pca_fit(df, DIM, K)
-    out = pca_transform(df, mean, comps).orderBy("vec_id").collect()
-    Y = np.array([r["pca"] for r in out])
-    want = (X - np.array(mean)) @ np.array(comps).T
-    assert np.allclose(Y, want, atol=1e-8)
-    # explained variance is in descending order, dominated by comp 0
-    var = Y.var(axis=0)
-    assert all(var[i] >= var[i + 1] - 1e-9 for i in range(K - 1))
-    assert var[0] > var[-1] * 3
-
-
-def test_pca_transform_is_map_only_and_streams(spark, tmp_path):
-    X = _data()
-    df = _df(spark, X)
-    mean, comps = pca_fit(df, DIM, K)
-    plan = (pca_transform(df, mean, comps)
-            ._jdf.queryExecution().executedPlan().toString())
-    assert "Exchange" not in plan
-    src = str(tmp_path / "emb_src")
-    df.write.parquet(src)
-    stream = spark.readStream.schema(
-        "vec_id long, embedding array<double>").parquet(src)
-    q = (pca_transform(stream, mean, comps)
-         .selectExpr("vec_id", "round(pca[0], 6) AS p0")
-         .writeStream.outputMode("append").format("memory")
-         .queryName("pca_out").trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    got = {r["vec_id"]: r["p0"]
-           for r in spark.sql("SELECT * FROM pca_out").collect()}
-    want = (X - np.array(mean)) @ np.array(comps).T
-    assert got[0] == round(float(want[0][0]), 6)
 
 
 def test_pca_validates_inputs(spark):

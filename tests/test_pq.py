@@ -220,50 +220,3 @@ def test_pq_oracle_sql_matches_spark(spark, pqX, pq_df, pq_books,
                          coarse_iters=2, n_queries=3, k=5,
                          nprobe=2)).fetchall()
     assert spark_ivf == [(a, b, int(c), d) for a, b, c, d in duck_ivf]
-
-
-def test_persisted_index_round_trip_skips_codes_exchange(
-        spark, tmp_path, pqX, pq_df, pq_books, pq_centroids):
-    """The production serving shape (review r4/r5 backlog #6): encode
-    once, write_pq_index bucketBy(cluster_id), read back, probe. Results
-    identical to the inline index, and the probe join plans NO exchange
-    on the codes side (only the per-query probe list moves)."""
-    from nci_seronet_proc_data_validator_spark.operators.pq import (
-        ivfpq_topk, read_pq_index, write_pq_index)
-    from nci_seronet_proc_data_validator_spark.operators.similarity import (
-        ivf_assign)
-    X, df, books, centroids = pqX, pq_df, pq_books, pq_centroids
-    inline_codes = pq_encode(ivf_assign(df, centroids), books) \
-        .select("vec_id", "cluster_id", "pq_code")
-    qs = spark.createDataFrame(
-        [(0, [float(v) for v in X[0]]), (150, [float(v) for v in X[150]])],
-        "query_id long, qe array<double>")
-    table = "pq_index_test"
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        write_pq_index(inline_codes, table, buckets=6)
-        persisted = read_pq_index(spark, table)
-        want = [tuple(r) for r in
-                ivfpq_topk(df, centroids, books, qs, k=5, nprobe=2,
-                           codes=inline_codes).collect()]
-        got_df = ivfpq_topk(df, centroids, books, qs, k=5, nprobe=2,
-                            codes=persisted)
-        assert [tuple(r) for r in got_df.collect()] == want
-
-        # plan shape: force SMJ; the persisted index reads all its
-        # buckets pre-partitioned on cluster_id (no exchange above the
-        # bucketed scan), and the whole serving plan carries strictly
-        # fewer exchanges than rebuilding the index inline
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        p_inline = ivfpq_topk(df, centroids, books, qs, k=5, nprobe=2,
-                              codes=inline_codes) \
-            ._jdf.queryExecution().executedPlan().toString()
-        p_persist = ivfpq_topk(df, centroids, books, qs, k=5, nprobe=2,
-                               codes=persisted) \
-            ._jdf.queryExecution().executedPlan().toString()
-        assert "Bucketed: true" in p_persist
-        assert "SelectedBucketsCount: 6 out of 6" in p_persist
-        assert p_persist.count("Exchange") < p_inline.count("Exchange")
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.sql(f"DROP TABLE IF EXISTS {table}")

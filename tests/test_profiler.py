@@ -179,44 +179,6 @@ def test_approx_profile_plan_has_no_expand(spark, sf_dir):
     assert "Expand" not in approx_plan   # gone in the HLL++ arm
 
 
-def test_observe_profile_batch_and_stream(spark, sf_dir, tmp_path):
-    """observe_profile rides the materializing job (no extra scan):
-    batch metrics via Observation match profile_table_approx; the SAME
-    call on a readStream frame surfaces them per micro-batch in
-    StreamingQueryProgress.observedMetrics."""
-    from pyspark.sql import Observation
-    from nci_seronet_proc_data_validator_spark.operators.profiler import (
-        observe_profile)
-
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet") \
-        .select("o_orderkey", "o_orderstatus")
-    want = {f"{c}__{m}": v
-            for (c, m), v in _as_map(profile_table_approx(orders)).items()}
-
-    obs = Observation("profile")
-    observe_profile(orders, obs).write.format("noop") \
-        .mode("overwrite").save()
-    assert obs.get == want
-
-    orders.write.parquet(str(tmp_path / "src"), mode="overwrite")
-    stream = (spark.readStream
-              .schema("o_orderkey long, o_orderstatus string")
-              .parquet(str(tmp_path / "src")))
-    q = (observe_profile(stream, "profile_s")
-         .writeStream.format("noop")
-         .option("checkpointLocation", str(tmp_path / "ck"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(60)
-    got = {}
-    for p in q.recentProgress:
-        om = p["observedMetrics"].get("profile_s") if p["observedMetrics"] \
-            else None
-        if om and om["o_orderkey__nonnull"]:
-            got = om
-    # single micro-batch saw the whole table -> same metrics as batch
-    assert {k: got[k] for k in want} == want
-
-
 def test_fused_quality_pass_matches_composition(typed_df):
     """fused_quality_pass (one aggregation pass) is row-identical to the
     profile_table + verify_constraints + profile_drift composition, and

@@ -144,7 +144,7 @@ def test_read_any_suffix_and_mixed(spark, tmp_path):
 
 def test_multimodal_decode_plumbing(spark):
     from nci_seronet_proc_data_validator_spark.operators.multimodal import (
-        MEDIA_SCHEMA, decode_image_features, frame_sample_plan, media_stats)
+        MEDIA_SCHEMA, decode_image_features)
     rows = [
         (1, "image", "image/png", bytes([10, 20, 30, 40]), 64, 64, None),
         (2, "image", "image/png", None, None, None, None),
@@ -155,10 +155,6 @@ def test_multimodal_decode_plumbing(spark):
     assert feats[1]["n_bytes"] == 4
     assert 0.0 < feats[1]["brightness"] < 1.0
     assert feats[2]["n_bytes"] == 0        # null payload handled
-    frames = frame_sample_plan(df).collect()
-    assert [r["frame_ts_ms"] for r in frames] == [0, 1000, 2000]
-    stats = {r["modality"]: r["n"] for r in media_stats(df).collect()}
-    assert stats == {"image": 2, "video": 1}
 
 
 def _ppm_bytes(w, h, pixels):
@@ -241,13 +237,52 @@ def test_streaming_validation(spark, tmp_path):
     with open(os.path.join(in_dir, "demographic.csv"), "w") as f:
         f.write("Research_Participant_ID,Age,Race\n"
                 "14_000001,30,White\n"
+                ",,\n"
                 "14_000002,999,Martian\n")
     q = validate_stream(spark, in_dir, cp, "demographic.csv",
                         ["Research_Participant_ID", "Age", "Race"], "14", out)
     q.awaitTermination(120)
-    got = spark.read.parquet(out)
-    msgs = {(r["Column_Name"], r["Column_Value"]) for r in got.collect()}
+    got = spark.read.parquet(out).collect()
+    msgs = {(r["Column_Name"], r["Column_Value"]) for r in got}
     assert ("Age", "999") in msgs and ("Race", "Martian") in msgs
+    # the all-blank line 3 is dropped by sheet cleanup, as in validate()
+    assert 3 not in {r["Row_Index"] for r in got}
+
+
+def test_streaming_sheet_matches_validate_per_column(spark, tmp_path):
+    """The per-sheet watcher renders a sheet through the batch compile's
+    per-sheet body: equipment.csv with its catalog columns (rules that
+    read the enrichment-only Biospecimen_Type column) drains, and its
+    findings equal validate()'s on the same file — one sheet with unique
+    IDs, so validate() has only per-column findings to give."""
+    from nci_seronet_proc_data_validator_spark.errors import FINDING_COLUMNS
+    from nci_seronet_proc_data_validator_spark.sources import read_sheet_csv
+    from nci_seronet_proc_data_validator_spark.sources.catalog import (
+        static_expected_columns)
+    from nci_seronet_proc_data_validator_spark.streaming import (
+        validate_stream)
+    from nci_seronet_proc_data_validator_spark.submission import (
+        SubmissionValidator)
+
+    cols = static_expected_columns()["equipment.csv"]
+    in_dir, cp, out = (str(tmp_path / d) for d in ("in", "cp", "out"))
+    os.makedirs(in_dir)
+    path = os.path.join(in_dir, "equipment.csv")
+    with open(path, "w") as f:
+        f.write(",".join(cols) + "\n"
+                "EQ1,14_000001_001,Centrifuge,2030-01-01\n"
+                "EQ2,99_000002_001,,not a date\n"
+                ",,,\n"
+                "EQ3,14_bad,Freezer,1850-06-01\n")
+    q = validate_stream(spark, in_dir, cp, "equipment.csv", cols, "14", out)
+    q.awaitTermination(120)
+    assert q.exception() is None
+    got = sorted(tuple(r) for r in
+                 spark.read.parquet(out).select(*FINDING_COLUMNS).collect())
+    want = sorted(tuple(r) for r in SubmissionValidator(
+        spark, {"equipment.csv": read_sheet_csv(spark, path)},
+        cbc_id="14").validate().findings.select(*FINDING_COLUMNS).collect())
+    assert got == want and len(got) > 0
 
 
 def test_streaming_hourly_rollup(spark, tmp_path):
@@ -273,41 +308,20 @@ def test_streaming_hourly_rollup(spark, tmp_path):
     assert out.columns == ["hour", "event_type", "n", "total_value"]
 
 
-def test_local_artifact_writer(spark, tmp_path):
-    import pandas as pd
-    import pytest as _pytest
-    from nci_seronet_proc_data_validator_spark.sinks.local_artifacts import (
-        write_local_artifact)
-    df = _findings(spark)
-    p_csv = str(tmp_path / "f.csv.gz")
-    write_local_artifact(df, p_csv, "csv", compression="gzip")
-    assert len(pd.read_csv(p_csv)) == 3
-    p_pkl = str(tmp_path / "f.pkl")
-    write_local_artifact(df, p_pkl, "pickle")
-    assert len(pd.read_pickle(p_pkl)) == 3
-    with _pytest.raises(ValueError):
-        write_local_artifact(df, str(tmp_path / "x"), "csv", max_rows=1)
-    p_xlsx = str(tmp_path / "f.xlsx")
-    write_local_artifact(df, p_xlsx, "xlsx")
-    from nci_seronet_proc_data_validator_spark.sinks.xlsx_minimal import (
-        read_xlsx_rows)
-    cols, rows = read_xlsx_rows(p_xlsx)
-    assert cols == df.columns and len(rows) == 3
-
-
 def test_read_xlsx_roundtrip_and_corrupt(spark, tmp_path):
     """A real workbook (written by the dependency-free writer) loads with
     S4 semantics; corrupt bytes degrade to None and a mixed group still
     loads its readable members."""
     from nci_seronet_proc_data_validator_spark.sinks.xlsx_minimal import (
-        write_xlsx,
+        write_xlsx_sheets,
     )
     from nci_seronet_proc_data_validator_spark.sources.readers import (
         read_any,
         read_xlsx,
     )
     wb = tmp_path / "sheet.xlsx"
-    write_xlsx(str(wb), ["x", "y"], [["1", "foo"], ["2", ""]])
+    write_xlsx_sheets(str(wb), {"Sheet1": (["x", "y"],
+                                           [["1", "foo"], ["2", ""]])})
     out = read_xlsx(spark, [str(wb)])
     assert out is not None and out.columns == ["x", "y"]
     got = {tuple(r) for r in out.collect()}
@@ -365,9 +379,10 @@ def test_xlsx_read_positions_rows_by_r_attribute(tmp_path):
     Row_Index provenance stays aligned."""
     import zipfile
     from nci_seronet_proc_data_validator_spark.sinks.xlsx_minimal import (
-        read_xlsx_rows, write_xlsx)
+        read_xlsx_rows, write_xlsx_sheets)
     p = str(tmp_path / "wb.xlsx")
-    write_xlsx(p, ["a", "b"], [["r2a", "r2b"], ["", ""], ["r4a", "r4b"]])
+    write_xlsx_sheets(p, {"Sheet1": (["a", "b"], [["r2a", "r2b"], ["", ""],
+                                                  ["r4a", "r4b"]])})
     # simulate Excel: drop the empty row element (row r=3) entirely
     with zipfile.ZipFile(p) as z:
         parts = {n: z.read(n) for n in z.namelist()}
@@ -435,76 +450,6 @@ def test_streaming_interval_join(spark, tmp_path):
     out = spark.sql("SELECT anchor_id, event_id FROM ij_out "
                     "WHERE anchor_id <> event_id").collect()
     assert {(r["anchor_id"], r["event_id"]) for r in out} == {(1, 2)}
-
-
-def test_multimodal_resize_and_audio(spark):
-    from nci_seronet_proc_data_validator_spark.operators.multimodal import (
-        MEDIA_SCHEMA, audio_features, resize_images)
-    rows = [
-        (1, "image", "image/png", bytes(10), 512, 256, None),   # needs resize
-        (2, "image", "image/png", bytes(10), 100, 50, None),    # small enough
-        (3, "audio", "audio/wav", bytes(range(64)), None, None, 2000),
-        (4, "video", "video/mp4", bytes(10), 320, 240, 1000),   # not image
-    ]
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    rs = {r["media_id"]: r for r in resize_images(df, max_dim=256).collect()}
-    assert (rs[1]["out_w"], rs[1]["out_h"], rs[1]["resized"]) == (256, 128, True)
-    assert (rs[2]["out_w"], rs[2]["resized"]) == (100, False)
-    assert rs[4]["resized"] is False                 # video untouched
-    assert rs[1]["payload"] is not None              # bytes flow through
-
-    au = audio_features(df).collect()
-    assert len(au) == 1 and au[0]["media_id"] == 3
-    assert au[0]["est_samples"] == 32000             # 2s @ 16kHz
-    assert au[0]["n_bytes"] == 64 and 0.0 < au[0]["rms"] < 1.0
-    assert au[0]["decoded"] is False                 # not a RIFF container
-
-
-def _wav_bytes(samples, rate=8000, bits=16, channels=1):
-    """Minimal RIFF/WAVE PCM writer (no stdlib `wave` file dance)."""
-    import struct
-    if bits == 16:
-        data = b"".join(struct.pack("<h", s) for s in samples)
-    else:
-        data = bytes(samples)
-    balign = channels * bits // 8
-    fmt = struct.pack("<HHIIHH", 1, channels, rate, rate * balign,
-                      balign, bits)
-    body = (b"fmt " + struct.pack("<I", len(fmt)) + fmt
-            + b"data" + struct.pack("<I", len(data)) + data)
-    return b"RIFF" + struct.pack("<I", 4 + len(body)) + b"WAVE" + body
-
-
-def test_audio_features_real_wav_decode(spark):
-    """RIFF/PCM payloads must decode for real: exact sample count, true
-    sample rate, hand-computed waveform RMS (VERDICT r2 #7, audio leg)."""
-    from nci_seronet_proc_data_validator_spark.operators.multimodal import (
-        MEDIA_SCHEMA, _decode_wav, audio_features)
-    # alternating full-scale-half square wave: rms = 16384/32768 = 0.5
-    sq = [16384, -16384] * 50
-    wav16 = _wav_bytes(sq, rate=8000)
-    # 8-bit: constant 192 -> (192-128)/128 = 0.5 everywhere, rms 0.5
-    wav8 = _wav_bytes([192] * 40, rate=4000, bits=8)
-    rows = [
-        (1, "audio", "audio/wav", wav16, None, None, None),
-        (2, "audio", "audio/wav", wav8, None, None, 7000),
-        (3, "audio", "audio/mp3", bytes(range(32)), None, None, 1000),
-    ]
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    au = {r["media_id"]: r for r in audio_features(df).collect()}
-    assert au[1]["decoded"] is True
-    assert au[1]["est_samples"] == 100 and au[1]["sample_rate"] == 8000
-    assert abs(au[1]["rms"] - 0.5) < 1e-12
-    assert au[2]["decoded"] is True
-    assert au[2]["est_samples"] == 40 and au[2]["sample_rate"] == 4000
-    assert abs(au[2]["rms"] - 0.5) < 1e-12
-    # non-RIFF payload degrades to the structural stub (metadata estimate)
-    assert au[3]["decoded"] is False and au[3]["est_samples"] == 16000
-    # direct decoder checks: duration + stereo channel split
-    meta = _decode_wav(wav16)
-    assert meta["duration_ms"] == 100 * 1000 // 8000
-    stereo = _wav_bytes([100, -100] * 6, rate=1000, channels=2)
-    assert _decode_wav(stereo)["n_samples"] == 6
 
 
 def test_streaming_static_enrichment(spark, tmp_path):
@@ -685,7 +630,7 @@ def test_xlsx_roundtrip_property():
     from hypothesis import given, settings, strategies as st
 
     from nci_seronet_proc_data_validator_spark.sinks.xlsx_minimal import (
-        read_xlsx_rows, write_xlsx)
+        read_xlsx_rows, write_xlsx_sheets)
 
     # control chars (incl. \r, XML-normalized in raw text) round-trip via
     # Excel's _xHHHH_ escapes; surrogates are not representable in UTF-8
@@ -703,7 +648,7 @@ def test_xlsx_roundtrip_property():
         cols = [f"c{i}" for i in range(len(rows[0]))]
         with tempfile.TemporaryDirectory() as d:
             p = os.path.join(d, "t.xlsx")
-            write_xlsx(p, cols, rows)
+            write_xlsx_sheets(p, {"Sheet1": (cols, rows)})
             got_cols, got_rows = read_xlsx_rows(p)
         assert got_cols == cols
         assert got_rows == [[str(v) for v in r] for r in rows]
