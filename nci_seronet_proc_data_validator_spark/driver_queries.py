@@ -39,16 +39,63 @@ from nci_seronet_proc_data_validator_spark.functions.checks import (
     compare_viability,
     get_missing_values,
 )
+from nci_seronet_proc_data_validator_spark.operators.classifier import (
+    classifier_oracle_sql,
+    demo_weights,
+)
+from nci_seronet_proc_data_validator_spark.operators.contamination import (
+    contamination_with_bloom_oracle_sql,
+)
+from nci_seronet_proc_data_validator_spark.operators.dedup import (
+    cross_corpus_oracle_sql,
+    embedding_near_dup_oracle_sql,
+    minhash_lsh_pairs_oracle_sql,
+    substr_dup_oracle_sql,
+)
+from nci_seronet_proc_data_validator_spark.operators.graph import (
+    keep_best_oracle_sql,
+    keep_canonical_oracle_sql,
+)
+from nci_seronet_proc_data_validator_spark.operators.importance import (
+    importance_oracle_sql,
+)
 from nci_seronet_proc_data_validator_spark.operators.joins import (
     biospecimen_cross_sql,
     icd10_flag_join,
     presence_spine_sql,
 )
+from nci_seronet_proc_data_validator_spark.operators.pii import pii_oracle_sql
+from nci_seronet_proc_data_validator_spark.operators.sampling import (
+    mixture_sample_oracle_sql,
+    stratified_sample_oracle_sql,
+    temperature_sample_oracle_sql,
+)
+from nci_seronet_proc_data_validator_spark.operators.search import (
+    bm25_oracle_sql,
+)
+from nci_seronet_proc_data_validator_spark.operators.text_quality import (
+    ccnet_buckets_oracle_sql,
+    quality_oracle_sql,
+)
+from nci_seronet_proc_data_validator_spark.operators.training import (
+    pack_sequences_oracle_sql,
+)
 from nci_seronet_proc_data_validator_spark.operators.typing import with_typed_shadows
+from nci_seronet_proc_data_validator_spark.parity import (
+    SQL_JDBC_ROUNDTRIP,
+    SQL_STREAMING_PARITY,
+    q_jdbc_roundtrip,
+    q_streaming_parity,
+    q_submission_misc,
+    sql_submission_misc,
+)
 from nci_seronet_proc_data_validator_spark.plans.rules import (
     ColumnRules,
     compile_sheet_findings,
     dup_id_findings,
+)
+from nci_seronet_proc_data_validator_spark.plans.sql_oracle import (
+    rulebook_oracle_sql,
 )
 from nci_seronet_proc_data_validator_spark.sources.readers import read_table
 
@@ -383,66 +430,6 @@ GROUP BY 1 ORDER BY 1
 """
 
 
-# ------------------------------------------------------------- J6 / P8 anti
-def q_j6_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = read_table(spark, sf_dir, "customer")
-    p_orders = (read_table(spark, sf_dir, "orders")
-                .filter(F.col("o_orderstatus") == "P"))
-    return (cust.join(p_orders, cust.c_custkey == p_orders.o_custkey,
-                      "left_anti")
-            .select("c_custkey").orderBy("c_custkey"))
-
-
-SQL_J6 = """
-SELECT c_custkey FROM customer
-WHERE NOT EXISTS (SELECT 1 FROM orders
-                  WHERE o_custkey = c_custkey AND o_orderstatus = 'P')
-ORDER BY c_custkey
-"""
-
-
-# ----------------------------------------------------------------- A3/A4/A5
-def q_a4_count_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = read_table(spark, sf_dir, "customer")
-    orders = read_table(spark, sf_dir, "orders")
-    n_cust = cust.agg(F.count(F.lit(1)).alias("declared"))
-    n_active = orders.agg(
-        F.countDistinct("o_custkey").alias("distinct_with_orders"))
-    return (n_cust.crossJoin(n_active)
-            .withColumn("matches",
-                        F.col("declared") == F.col("distinct_with_orders")))
-
-
-SQL_A4 = """
-SELECT (SELECT count(*) FROM customer) AS declared,
-       (SELECT count(DISTINCT o_custkey) FROM orders) AS distinct_with_orders,
-       (SELECT count(*) FROM customer)
-         = (SELECT count(DISTINCT o_custkey) FROM orders) AS matches
-"""
-
-
-# ------------------------------------------------------------------ O1–O3
-def q_o3_union_slices(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = read_table(spark, sf_dir, "customer")
-    a = (cust.filter(F.col("c_mktsegment") == "BUILDING")
-         .select("c_custkey", "c_mktsegment")
-         .withColumn("slice", F.lit("A")))
-    b = (cust.filter(F.col("c_acctbal") > 9500)
-         .select("c_custkey", "c_mktsegment")
-         .withColumn("slice", F.lit("B")))
-    return a.unionByName(b).orderBy("slice", "c_custkey")
-
-
-SQL_O3 = """
-SELECT c_custkey, c_mktsegment, 'A' AS slice FROM customer
-WHERE c_mktsegment = 'BUILDING'
-UNION ALL
-SELECT c_custkey, c_mktsegment, 'B' AS slice FROM customer
-WHERE c_acctbal > 9500
-ORDER BY slice, c_custkey
-"""
-
-
 # ----------------------- §2.6 remaining checks (C4, C9–C12) + A6 + J4 -----
 def q_c4_string_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C4 ``check_if_string`` over a genuinely mixed-type column: every 3rd
@@ -703,22 +690,6 @@ ORDER BY Column_Value
 
 
 # ============================ LLM-pipeline operators ======================
-def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact dedup via content hash: canonical doc per md5 group."""
-    docs = read_table(spark, sf_dir, "documents")
-    return (docs.groupBy(F.md5(F.col("text")).alias("content_hash"))
-            .agg(F.min("doc_id").alias("keep_doc_id"),
-                 F.count(F.lit(1)).alias("n_copies"))
-            .orderBy("content_hash"))
-
-
-SQL_DEDUP_EXACT = """
-SELECT md5(text) AS content_hash, min(doc_id) AS keep_doc_id,
-       count(*) AS n_copies
-FROM documents GROUP BY 1 ORDER BY 1
-"""
-
-
 def q_dedup_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup by normalization: lowercase, strip non-alphanumerics,
     collapse whitespace — catches formatting-only duplicates."""
@@ -743,10 +714,9 @@ FROM documents GROUP BY 1 ORDER BY 1
 def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token counting + quality features + 64-bit content fingerprint of
     the normalized text + the whitespace-vs-BPE token-budget estimate
-    (``operators/text_quality.bpe_token_counts``) + the per-document
-    stopword-profile language prediction (the lang-id operator — its
-    confusion-matrix form is ``q_lang_id``, this keeps the per-doc
-    primitive driver-checked in the same map-only profile scan), all
+    (``operators/text_quality.BPE_PATTERN``) + the per-document
+    stopword-profile language prediction (the lang-id operator, kept
+    driver-checked in the same map-only profile scan), all
     JVM-side regex — one scan covers stats, fingerprint, token-count and
     lang-id, plus the winnowing (MOSS) substring-level fingerprint
     (``text_quality.winnow_signature``)."""
@@ -825,62 +795,6 @@ ORDER BY doc_id
 SQL_TEXT_STATS = _sql_text_stats()
 
 
-def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stopword-profile language ID vs the labeled ``lang`` column →
-    confusion counts."""
-    docs = read_table(spark, sf_dir, "documents")
-    def n(pat):
-        return F.size(F.regexp_extract_all(F.col("text"), F.lit(pat), 0))
-    n_en = n(r"\b(the|and|of|to|in)\b")
-    n_de = n(r"\b(der|die|das|und|ist)\b")
-    n_es = n(r"\b(el|la|los|las|es)\b")
-    n_fr = n(r"\b(le|les|et|est|une)\b")
-    pred = (F.when((n_en >= n_de) & (n_en >= n_es) & (n_en >= n_fr), "en")
-            .when((n_de >= n_es) & (n_de >= n_fr), "de")
-            .when(n_es >= n_fr, "es")
-            .otherwise("fr"))
-    return (docs.select(F.col("lang"), pred.alias("predicted"))
-            .groupBy("lang", "predicted").agg(F.count(F.lit(1)).alias("n"))
-            .orderBy("lang", "predicted"))
-
-
-SQL_LANG_ID = r"""
-WITH scored AS (
-  SELECT lang,
-         len(regexp_extract_all(text, '\b(the|and|of|to|in)\b')) AS n_en,
-         len(regexp_extract_all(text, '\b(der|die|das|und|ist)\b')) AS n_de,
-         len(regexp_extract_all(text, '\b(el|la|los|las|es)\b')) AS n_es,
-         len(regexp_extract_all(text, '\b(le|les|et|est|une)\b')) AS n_fr
-  FROM documents)
-SELECT lang,
-       CASE WHEN n_en >= n_de AND n_en >= n_es AND n_en >= n_fr THEN 'en'
-            WHEN n_de >= n_es AND n_de >= n_fr THEN 'de'
-            WHEN n_es >= n_fr THEN 'es'
-            ELSE 'fr' END AS predicted,
-       count(*) AS n
-FROM scored GROUP BY 1, 2 ORDER BY 1, 2
-"""
-
-
-def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Document fingerprinting: 64-bit content fingerprint of the
-    normalized text (hex prefix of md5)."""
-    docs = read_table(spark, sf_dir, "documents")
-    norm = F.regexp_replace(F.lower(F.col("text")), "[ \\t\\n\\f\\r]+", " ")
-    return docs.select(
-        "doc_id",
-        F.substring(F.md5(norm), 1, 16).alias("fingerprint"),
-    ).orderBy("doc_id")
-
-
-SQL_FINGERPRINT = r"""
-SELECT doc_id,
-       substr(md5(regexp_replace(lower(text), '[ \t\n\f\r]+', ' ', 'g')), 1, 16)
-         AS fingerprint
-FROM documents ORDER BY doc_id
-"""
-
-
 def q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style per-document quality features + composite gate
     (map-only array algebra; see operators/text_quality.py)."""
@@ -888,24 +802,6 @@ def q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         quality_features)
     docs = read_table(spark, sf_dir, "documents")
     return quality_features(docs).orderBy("doc_id")
-
-
-def q_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Within-document bigram repetition detection (explode + two keyed
-    aggregations; see operators/text_quality.py)."""
-    from nci_seronet_proc_data_validator_spark.operators.text_quality import (
-        repetition_features)
-    docs = read_table(spark, sf_dir, "documents")
-    return repetition_features(docs).orderBy("doc_id")
-
-
-def q_familiarity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus-bigram familiarity score — the integer-exact LM-perplexity
-    stand-in (see operators/text_quality.familiarity_features)."""
-    from nci_seronet_proc_data_validator_spark.operators.text_quality import (
-        familiarity_features)
-    docs = read_table(spark, sf_dir, "documents")
-    return familiarity_features(docs).orderBy("doc_id")
 
 
 def q_quality_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -921,6 +817,18 @@ def q_quality_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (quality_features(docs)
             .join(ccnet_buckets(docs), "doc_id")
             .orderBy("doc_id"))
+
+
+def _sql_quality_profile() -> str:
+    return f"""
+SELECT q.*, c.lang, c.n_bigrams, c.n_distinct_bigrams, c.top_count,
+       c.is_repetitive, c.top_bigram, c.bigram_chars, c.dup_bigram_chars,
+       c.top_char_frac, c.dup_char_frac, c.is_top_heavy, c.is_dup_heavy,
+       c.sum_corpus_freq, c.familiarity, c.ppl_bucket
+FROM ({quality_oracle_sql().strip()}) q
+JOIN ({ccnet_buckets_oracle_sql().strip()}) c ON q.doc_id = c.doc_id
+ORDER BY q.doc_id
+"""
 
 
 def q_substr_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -988,6 +896,25 @@ def q_doc_scoring(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "sum_corpus_freq", "importance", "clf_score",
                     "clf_pred")
             .orderBy("doc_id"))
+
+
+# doc_scoring's corpus with the planted NULL-text row
+_DOCS_PLANTED = ("(SELECT * FROM documents UNION ALL "
+                 "SELECT CAST(-1 AS BIGINT), CAST(NULL AS VARCHAR), 'xx', "
+                 "'planted', CAST(0 AS BIGINT))")
+
+
+def _sql_doc_scoring() -> str:
+    return f"""
+SELECT c.doc_id, i.n_ngrams, i.sum_target_freq, i.sum_corpus_freq,
+       i.importance, c.clf_score, c.clf_pred
+FROM ({classifier_oracle_sql(demo_weights(4096), bias=0,
+                             table=_DOCS_PLANTED).strip()}) c
+LEFT JOIN ({importance_oracle_sql("lang = 'en'", n=2, buckets=4096,
+                                  table=_DOCS_PLANTED).strip()}) i
+  ON c.doc_id = i.doc_id
+ORDER BY c.doc_id
+"""
 
 
 def q_boilerplate_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1124,31 +1051,12 @@ FROM ({enc.strip()})
 """
 
 
-# ------------------------------------------------ MinHash / SimHash dedup
-def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from nci_seronet_proc_data_validator_spark.operators.dedup import (
-        minhash_signature, shingle_hashes, shingles, spread_small_input,
-        tokens)
-    docs = spread_small_input(read_table(spark, sf_dir, "documents"))
-    sig = minhash_signature(shingle_hashes(shingles(tokens("text"))))
-    return docs.select(
-        "doc_id", *[sig[i].alias(f"sig_{i}") for i in range(4)]
-    ).orderBy("doc_id")
-
-
+# ------------------------------------------------------------ MinHash dedup
 def q_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nci_seronet_proc_data_validator_spark.operators.dedup import (
         minhash_lsh_pairs)
     docs = read_table(spark, sf_dir, "documents")
     return minhash_lsh_pairs(docs).orderBy("id_a", "id_b")
-
-
-def q_bpe_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Whitespace + BPE-ish token counting (operators/text_quality.py)."""
-    from nci_seronet_proc_data_validator_spark.operators.text_quality import (
-        bpe_token_counts)
-    docs = read_table(spark, sf_dir, "documents")
-    return bpe_token_counts(docs).orderBy("doc_id")
 
 
 def q_length_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1163,15 +1071,6 @@ def q_length_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.round(pct[1], 6).alias("p50"),
                  F.round(pct[2], 6).alias("p90"))
             .orderBy("lang"))
-
-
-SQL_LENGTH_PCT = """
-SELECT lang,
-       round(quantile_cont(n_chars, 0.1), 6) AS p10,
-       round(quantile_cont(n_chars, 0.5), 6) AS p50,
-       round(quantile_cont(n_chars, 0.9), 6) AS p90
-FROM documents GROUP BY lang ORDER BY lang
-"""
 
 
 BM25_TERMS = ["spark", "window", "join"]
@@ -1225,33 +1124,6 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("doc_id"))
 
 
-def q_simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from nci_seronet_proc_data_validator_spark.operators.dedup import (
-        simhash64, spread_small_input, tokens_sql)
-    docs = spread_small_input(read_table(spark, sf_dir, "documents"))
-    return docs.select("doc_id",
-                       simhash64(tokens_sql("text")).alias("simhash")
-                       ).orderBy("doc_id")
-
-
-def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup candidates: 4 x 16-bit chunk buckets (pigeonhole),
-    bucket self-join, hamming verify — one shuffle on (chunk_id, chunk)."""
-    from nci_seronet_proc_data_validator_spark.operators.dedup import (
-        simhash_pairs)
-    docs = read_table(spark, sf_dir, "documents")
-    return simhash_pairs(docs, max_hamming=8).orderBy("id_a", "id_b")
-
-
-def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact prefix-filtered n-gram Jaccard join vs the oracle's brute
-    force — losslessness at the threshold is the contract."""
-    from nci_seronet_proc_data_validator_spark.operators.dedup import (
-        ngram_jaccard_pairs)
-    docs = read_table(spark, sf_dir, "documents")
-    return ngram_jaccard_pairs(docs, min_jaccard=0.05).orderBy("id_a", "id_b")
-
-
 def q_skew_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-phase salted count on a low-cardinality (hot) key — result must
     equal the plain groupBy the oracle runs."""
@@ -1259,12 +1131,6 @@ def q_skew_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         salted_count)
     li = read_table(spark, sf_dir, "lineitem")
     return salted_count(li, "l_returnflag").orderBy("l_returnflag")
-
-
-SQL_SKEW_AGG = """
-SELECT l_returnflag, count(*) AS count
-FROM lineitem GROUP BY 1 ORDER BY 1
-"""
 
 
 def q_skew_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1281,14 +1147,6 @@ def q_skew_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.sum(F.col("o_totalprice").cast("decimal(18,4)"))
                  .cast("double").alias("total_price"))
             .orderBy("c_mktsegment"))
-
-
-SQL_SKEW_JOIN = """
-SELECT c_mktsegment, count(*) AS n_orders,
-       CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total_price
-FROM orders JOIN customer ON o_custkey = c_custkey
-GROUP BY 1 ORDER BY 1
-"""
 
 
 def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1385,13 +1243,6 @@ def q_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.sum(F.col("value").cast("decimal(18,4)"))
                  .cast("double").alias("total_value"))
             .orderBy("hour", "event_type"))
-
-
-SQL_EVENTS_HOURLY = """
-SELECT date_trunc('hour', ts) AS hour, event_type, count(*) AS n,
-       CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS total_value
-FROM events GROUP BY 1, 2 ORDER BY 1, 2
-"""
 
 
 def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1558,43 +1409,6 @@ ORDER BY l.event_id
 """
 
 
-# --------------------------------------------------------------- registry
-QUERIES = {
-    "c1_in_list": (q_c1_in_list, SQL_C1),
-    "c2_date_range": (q_c2_date_range, SQL_C2),
-    "c3_number_range": (q_c3_number_range, SQL_C3),
-    "c3_int_check": (q_c3_int_check, SQL_C3_INT),
-    "c5_id_format": (q_c5_id_format, SQL_C5),
-    "c6_dup_ids": (q_c6_dup_ids, SQL_C6),
-    "c7_substr": (q_c7_substr, SQL_C7),
-    "c8_dict_lookup": (q_c8_dict_lookup, SQL_C8),
-    "c4_string_check": (q_c4_string_check, SQL_C4),
-    "c9_assay_resolution": (q_c9_assay_resolution, SQL_C9),
-    "c10_live_le_total": (q_c10_live_le_total, SQL_C10),
-    "c11_viability": (q_c11_viability, SQL_C11),
-    "c12_missing_sars": (q_c12_missing_sars, SQL_C12),
-    "a2_crosstab": (q_a2_crosstab, SQL_A2),
-    "a6_dedup_findings": (q_a6_dedup_findings, SQL_A6),
-    "j4_bio_spine": (q_j4_bio_spine, SQL_J4),
-    "a4_count_reconcile": (q_a4_count_reconcile, SQL_A4),
-    "j1_enrich_revenue": (q_j1_enrich_revenue, SQL_J1),
-    "j3_presence_patterns": (q_j3_presence_patterns, SQL_J3),
-    "j6_anti_join": (q_j6_anti_join, SQL_J6),
-    "o3_union_slices": (q_o3_union_slices, SQL_O3),
-    "dedup_exact": (q_dedup_exact, SQL_DEDUP_EXACT),
-    "dedup_normalized": (q_dedup_normalized, SQL_DEDUP_NORM),
-    "text_stats": (q_text_stats, SQL_TEXT_STATS),
-    "lang_id": (q_lang_id, SQL_LANG_ID),
-    "doc_fingerprint": (q_doc_fingerprint, SQL_FINGERPRINT),
-    "embedding_topk": (q_embedding_topk, SQL_EMB_TOPK),
-    "events_hourly": (q_events_hourly, SQL_EVENTS_HOURLY),
-    "sessionize": (q_sessionize, SQL_SESSIONIZE),
-    "topk_per_group": (q_topk_per_group, SQL_TOPK_GROUP),
-    "asof_join": (q_asof_join, SQL_ASOF),
-    "rollup_revenue": (q_rollup_revenue, SQL_ROLLUP),
-}
-
-
 def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN: centroids/queries = the first 16/5 vectors (deterministic
     stand-ins for a k-means build)."""
@@ -1608,74 +1422,6 @@ def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                   .select(F.col("vec_id").alias("query_id"),
                           F.col("embedding").alias("qe")))
     return ivf_topk(emb, centroids, queries_df).orderBy("query_id", "rank")
-
-
-def _register_dedup_queries() -> None:
-    from nci_seronet_proc_data_validator_spark.operators.dedup import (
-        embedding_near_dup_oracle_sql,
-        minhash_lsh_pairs_oracle_sql,
-        minhash_oracle_sql,
-        ngram_jaccard_oracle_sql,
-        simhash_oracle_sql,
-        simhash_pairs_oracle_sql,
-    )
-    QUERIES.update({
-        "ngram_jaccard_pairs": (q_ngram_jaccard, ngram_jaccard_oracle_sql()),
-        "minhash_signatures": (q_minhash_signatures, minhash_oracle_sql()),
-        "minhash_lsh_pairs": (q_minhash_lsh_pairs,
-                              minhash_lsh_pairs_oracle_sql()),
-        "simhash_signatures": (q_simhash_signatures, simhash_oracle_sql()),
-        "simhash_pairs": (q_simhash_pairs, simhash_pairs_oracle_sql()),
-        "skew_salted_agg": (q_skew_salted_agg, SQL_SKEW_AGG),
-        "skew_salted_join": (q_skew_salted_join, SQL_SKEW_JOIN),
-        "embedding_near_dup": (q_embedding_near_dup,
-                               embedding_near_dup_oracle_sql(min_cosine=0.35)),
-    })
-    from nci_seronet_proc_data_validator_spark.operators.similarity import (
-        ivf_topk_oracle_sql)
-    QUERIES["ivf_topk"] = (q_ivf_topk, ivf_topk_oracle_sql())
-    from nci_seronet_proc_data_validator_spark.operators.text_quality import (
-        quality_oracle_sql, repetition_oracle_sql)
-    QUERIES.update({
-        "quality_score": (q_quality_score, quality_oracle_sql()),
-        "repetition_bigrams": (q_repetition, repetition_oracle_sql()),
-    })
-    from nci_seronet_proc_data_validator_spark.operators.text_quality import (
-        familiarity_oracle_sql)
-    QUERIES.update({
-        "familiarity": (q_familiarity, familiarity_oracle_sql()),
-    })
-    from nci_seronet_proc_data_validator_spark.operators.graph import (
-        connected_components_oracle_sql)
-    QUERIES["dedup_clusters"] = (
-        q_dedup_clusters,
-        connected_components_oracle_sql(minhash_lsh_pairs_oracle_sql()))
-    from nci_seronet_proc_data_validator_spark.operators.sampling import (
-        mixture_sample_oracle_sql, stratified_sample_oracle_sql,
-        temperature_sample_oracle_sql)
-    from nci_seronet_proc_data_validator_spark.operators.search import (
-        bm25_oracle_sql)
-    strat_sql = stratified_sample_oracle_sql(
-        "lang", SAMPLE_RATES, SAMPLE_DEFAULT,
-        select="'stratified' AS part, doc_id, lang")
-    mix_sql = mixture_sample_oracle_sql(
-        "lang", MIXTURE_SHARES, select="'mixture' AS part, doc_id, lang")
-    temp_sql = temperature_sample_oracle_sql(
-        "lang", select="'temperature' AS part, doc_id, lang")
-    QUERIES.update({
-        "bm25_topk": (q_bm25_topk, bm25_oracle_sql(BM25_TERMS)),
-        "stratified_sample": (
-            q_stratified_sample,
-            f"SELECT * FROM ({strat_sql.strip()})\nUNION ALL\n"
-            f"SELECT * FROM ({mix_sql.strip()})\nUNION ALL\n"
-            f"SELECT * FROM ({temp_sql.strip()})"),
-    })
-    from nci_seronet_proc_data_validator_spark.operators.text_quality import (
-        bpe_token_oracle_sql)
-    QUERIES.update({
-        "bpe_token_count": (q_bpe_tokens, bpe_token_oracle_sql()),
-        "length_percentiles": (q_length_percentiles, SQL_LENGTH_PCT),
-    })
 
 
 # ------------------------------------------ round-2 pipeline operators
@@ -1861,6 +1607,19 @@ def q_dedup_keep_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     return canon.unionByName(best).orderBy("arm", "doc_id")
 
 
+def _sql_dedup_keep_canonical() -> str:
+    canon = keep_canonical_oracle_sql(minhash_lsh_pairs_oracle_sql())
+    best = keep_best_oracle_sql(
+        minhash_lsh_pairs_oracle_sql(),
+        "CASE WHEN d.doc_id % 13 = 0 THEN NULL ELSE d.n_chars END")
+    return f"""
+SELECT 'canonical' AS arm, doc_id, lang FROM ({canon.strip()})
+UNION ALL
+SELECT 'best' AS arm, doc_id, lang FROM ({best.strip()})
+ORDER BY arm, doc_id
+"""
+
+
 def q_vocab_topn(spark: SparkSession, sf_dir: str, n: int = 200) -> DataFrame:
     """Corpus vocabulary: top-N tokens by occurrence count (ties → token
     asc) with document frequency — the tokenizer-training precursor. One
@@ -1875,37 +1634,6 @@ def q_vocab_topn(spark: SparkSession, sf_dir: str, n: int = 200) -> DataFrame:
                  F.countDistinct("doc_id").alias("n_docs"))
             .orderBy(F.col("n_occ").desc(), "token")
             .limit(n))
-
-
-SQL_VOCAB_TOPN = """
-SELECT token, count(*) AS n_occ, count(DISTINCT doc_id) AS n_docs
-FROM (
-  SELECT doc_id,
-         unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS token
-  FROM documents)
-GROUP BY token
-ORDER BY n_occ DESC, token
-LIMIT 200
-"""
-
-
-def q_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Context-window chunking (500 chars, 100 overlap) — map-only
-    explode; chunks identified by length + portable hash."""
-    from nci_seronet_proc_data_validator_spark.operators.training import (
-        chunk_documents)
-    docs = read_table(spark, sf_dir, "documents")
-    return (chunk_documents(docs, chunk_chars=500, overlap=100)
-            .select("doc_id", "chunk_idx", "chunk_len", "chunk_hash")
-            .orderBy("doc_id", "chunk_idx"))
-
-
-def q_train_val_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic hash split + shuffle key (pure map)."""
-    from nci_seronet_proc_data_validator_spark.operators.training import (
-        train_val_split)
-    docs = read_table(spark, sf_dir, "documents")
-    return train_val_split(docs, val_pct=10).orderBy("doc_id")
 
 
 def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2076,25 +1804,6 @@ WHERE r_name = 'ASIA'
 GROUP BY n_name
 ORDER BY revenue DESC, n_name
 """
-
-
-def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fixed-point PageRank over the customer↔supplier purchase graph
-    (edges: distinct (custkey, suppkey) pairs from orders⋈lineitem, id
-    spaces disjoint via 2k / 2k+1). Exact integer ranks — see
-    operators/graph.pagerank."""
-    from nci_seronet_proc_data_validator_spark.operators.graph import (
-        pagerank)
-    orders = read_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey")
-    li = read_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey")
-    edges = (li.join(orders, li.l_orderkey == orders.o_orderkey)
-             .select((F.col("o_custkey") * 2).alias("src"),
-                     (F.col("l_suppkey") * 2 + 1).alias("dst"))
-             .distinct())
-    return (pagerank(edges, iters=3)
-            .orderBy(F.col("rank").desc(), "node_id"))
 
 
 _PR_EDGES_SQL = """
@@ -2294,91 +2003,6 @@ def q_ivf_topk_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("query_id", "rank"))
 
 
-def _register_round2_queries() -> None:
-    from nci_seronet_proc_data_validator_spark.operators.contamination import (
-        contamination_with_bloom_oracle_sql)
-    from nci_seronet_proc_data_validator_spark.operators.pii import (
-        pii_oracle_sql)
-    QUERIES.update({
-        "pii_scan": (q_pii_scan, pii_oracle_sql(_PII_DOC_SQL)),
-        "contamination": (q_contamination,
-                          contamination_with_bloom_oracle_sql(_BENCH_PRED,
-                                                              n=5)),
-        "interval_join": (q_interval_join, SQL_INTERVAL_JOIN),
-    })
-    from nci_seronet_proc_data_validator_spark.operators.kmeans import (
-        kmeans_centroid_vectors_cte, kmeans_ctes, kmeans_oracle_sql)
-    from nci_seronet_proc_data_validator_spark.operators.similarity import (
-        ivf_topk_oracle_sql)
-    QUERIES["kmeans_centroids"] = (q_kmeans, kmeans_oracle_sql(k=8, iters=2))
-    from nci_seronet_proc_data_validator_spark.operators.dedup import (
-        minhash_lsh_pairs_oracle_sql)
-    from nci_seronet_proc_data_validator_spark.operators.graph import (
-        keep_best_oracle_sql, keep_canonical_oracle_sql,
-        pagerank_oracle_sql)
-    QUERIES["pagerank"] = (
-        q_pagerank, pagerank_oracle_sql(_PR_EDGES_SQL, iters=3))
-    _canon_sql = keep_canonical_oracle_sql(minhash_lsh_pairs_oracle_sql())
-    _best_sql = keep_best_oracle_sql(
-        minhash_lsh_pairs_oracle_sql(),
-        "CASE WHEN d.doc_id % 13 = 0 THEN NULL ELSE d.n_chars END")
-    QUERIES["dedup_keep_canonical"] = (
-        q_dedup_keep_canonical, f"""
-SELECT 'canonical' AS arm, doc_id, lang FROM ({_canon_sql.strip()})
-UNION ALL
-SELECT 'best' AS arm, doc_id, lang FROM ({_best_sql.strip()})
-ORDER BY arm, doc_id
-""")
-    QUERIES["vocab_topn"] = (q_vocab_topn, SQL_VOCAB_TOPN)
-    QUERIES["events_sliding"] = (q_events_sliding, SQL_EVENTS_SLIDING)
-    from nci_seronet_proc_data_validator_spark.operators.training import (
-        chunk_documents_oracle_sql,
-        pack_sequences_oracle_sql,
-        train_val_split_oracle_sql,
-    )
-    QUERIES.update({
-        "chunk_documents": (q_chunk_documents,
-                            chunk_documents_oracle_sql(500, 100)),
-        "train_val_split": (q_train_val_split,
-                            train_val_split_oracle_sql(val_pct=10)),
-        "pack_sequences": (q_pack_sequences,
-                           pack_sequences_oracle_sql(budget=2048)),
-        "corpus_funnel": (q_corpus_funnel,
-                          corpus_funnel_oracle_sql(
-                              minhash_lsh_pairs_oracle_sql())),
-        "user_retention": (q_user_retention, SQL_USER_RETENTION),
-        "tpch_q1": (q_tpch_q1, SQL_TPCH_Q1),
-        "tpch_q3": (q_tpch_q3, SQL_TPCH_Q3),
-        "tpch_q5": (q_tpch_q5, SQL_TPCH_Q5),
-        "tpch_q18": (q_tpch_q18, SQL_TPCH_Q18),
-    })
-    QUERIES["ivf_topk_trained"] = (
-        q_ivf_topk_trained,
-        ivf_topk_oracle_sql(
-            n_queries=5, k=5, nprobe=2,
-            prefix_ctes=kmeans_ctes(k=8, iters=2),
-            cent_cte=kmeans_centroid_vectors_cte(k=8, iters=2)))
-
-
-_register_dedup_queries()
-_register_round2_queries()
-
-
-# --------------------------------------------------------------------------
-# Consolidated registry (round 3). The driver oracle-checks the FIRST 50
-# registered queries; round 2 registered 67 and left 17 formally untested
-# (VERDICT r2 finding #1). Sibling checks merge into tagged unions and
-# operators that run embedded inside a composed query lose their standalone
-# entry, so every registered query — including the TPC-H shapes, pagerank,
-# and the training-prep pipeline — lands inside the checked window. The
-# standalone q_* functions all remain importable (bench.py keys and tests
-# keep their per-operator granularity).
-#
-# Embedded-elsewhere drops: minhash_signatures ⊂ minhash_lsh_pairs,
-# simhash_signatures ⊂ simhash_pairs, dedup_exact ⊂ dedup_normalized,
-# doc_fingerprint ⊂ text_stats, ivf_topk + kmeans_centroids ⊂
-# ivf_topk_trained (k-means CTE prefix + the same IVF probe),
-# dedup_clusters ⊂ dedup_keep_canonical (same composed CC oracle).
 def _union_all_sql(*sqls: str) -> str:
     return "\nUNION ALL\n".join(
         f"SELECT * FROM ({s.strip()})" for s in sqls)
@@ -3343,13 +2967,13 @@ def q_data_profile(spark: SparkSession, sf_dir: str,
       columns).
 
     Generalizes the reference's hand-coded per-column rulebook
-    (`/root/reference/Validation_Rules.py`) into the profile → suggest →
-    verify tier a 100 TB ingest runs before any hand-written rule.
+    (the reference's ``Validation_Rules.py``) into the profile → verify
+    tier a 100 TB ingest runs before any hand-written rule.
 
     - 'anomaly': mean±kσ anomaly flags of the newest quarter of the key
-      space against the other three as metric history (the batched form
-      of detect_anomalies; flag expression shared verbatim with the
-      oracle) over the three monitored columns.
+      space against the other three as metric history (flag expression
+      shared verbatim with the oracle) over the three monitored
+      columns.
 
     Scale shape: profile + verify + drift are ONE fused aggregation pass
     over orders (``fused_quality_pass`` — conditional-count algebra, so
@@ -3431,163 +3055,6 @@ SELECT * FROM (
     ON o.col_name = n.col_name AND o.metric = n.metric
 ) ORDER BY arm, col_name, metric
 """
-
-
-# doc_scoring's corpus with the planted NULL-text row (see q_doc_scoring)
-_DOCS_PLANTED = ("(SELECT * FROM documents UNION ALL "
-                 "SELECT CAST(-1 AS BIGINT), CAST(NULL AS VARCHAR), 'xx', "
-                 "'planted', CAST(0 AS BIGINT))")
-
-
-def _consolidate_registry() -> None:
-    from nci_seronet_proc_data_validator_spark.operators.importance import (
-        importance_oracle_sql)
-    from nci_seronet_proc_data_validator_spark.operators.classifier import (
-        classifier_oracle_sql, demo_weights)
-    from nci_seronet_proc_data_validator_spark.operators.text_quality import (
-        ccnet_buckets_oracle_sql, quality_oracle_sql)
-    from nci_seronet_proc_data_validator_spark.operators.dedup import (
-        cross_corpus_oracle_sql, substr_dup_oracle_sql)
-    merged = {
-        "c1_c4_checks": (q_c1_c4_checks,
-                         _union_all_sql(SQL_C1, SQL_C2, SQL_C3, SQL_C3_INT,
-                                        SQL_C4, SQL_A6)),
-        "cross_dedup": (q_cross_dedup,
-                        cross_corpus_oracle_sql(_CROSS_NEW_PRED,
-                                                _CROSS_CORPUS_PRED)),
-        "multimodal_decode": (q_multimodal_decode, _sql_multimodal_decode()),
-        # round-4: c5_c6 + c7_c8 fused (same findings shape) to free the
-        # slot the PQ ANN tier takes
-        "c5_c8_checks": (q_c5_c8_checks,
-                         _union_all_sql(SQL_C5, SQL_C6, SQL_C7, SQL_C8)),
-        "pq_ann": (q_pq_ann, _sql_pq_ann()),
-        "c9_c12_checks": (q_c9_c12_checks,
-                          _union_all_sql(SQL_C9, SQL_C10, SQL_C11, SQL_C12)),
-        "events_windows": (q_events_windows, _sql_events_windows()),
-        "skew_salted": (q_skew_salted, SQL_SKEW_SALTED),
-        "chunk_and_split": (q_chunk_and_split, _sql_chunk_and_split()),
-        # round-3 curation operators, slotted in by fusing the two
-        # bigram-pass siblings and folding bpe_token_count into text_stats;
-        # round-4: quality_score folded in too (one per-doc profile row),
-        # freeing the slot substr_dup_pairs takes
-        "quality_profile": (q_quality_profile, f"""
-SELECT q.*, c.lang, c.n_bigrams, c.n_distinct_bigrams, c.top_count,
-       c.is_repetitive, c.top_bigram, c.bigram_chars, c.dup_bigram_chars,
-       c.top_char_frac, c.dup_char_frac, c.is_top_heavy, c.is_dup_heavy,
-       c.sum_corpus_freq, c.familiarity, c.ppl_bucket
-FROM ({quality_oracle_sql().strip()}) q
-JOIN ({ccnet_buckets_oracle_sql().strip()}) c ON q.doc_id = c.doc_id
-ORDER BY q.doc_id
-"""),
-        "substr_dup_pairs": (q_substr_dup_pairs,
-                             substr_dup_oracle_sql(k=20, w=8, min_shared=4,
-                                                   max_df=64)),
-        # round-4: classifier inference joins the DSIR scoring pass;
-        # round-6: LEFT join from the classifier side over the corpus
-        # with a planted NULL-text row (doc_id -1, scores exactly bias)
-        "doc_scoring": (q_doc_scoring, f"""
-SELECT c.doc_id, i.n_ngrams, i.sum_target_freq, i.sum_corpus_freq,
-       i.importance, c.clf_score, c.clf_pred
-FROM ({classifier_oracle_sql(demo_weights(4096), bias=0,
-                             table=_DOCS_PLANTED).strip()}) c
-LEFT JOIN ({importance_oracle_sql("lang = 'en'", n=2, buckets=4096,
-                                  table=_DOCS_PLANTED).strip()}) i
-  ON c.doc_id = i.doc_id
-ORDER BY c.doc_id
-"""),
-        "boilerplate_removal": (q_boilerplate_removal,
-                                _sql_boilerplate_removal()),
-        "vocab_pipeline": (q_vocab_pipeline, _sql_vocab_pipeline()),
-        # both ANN paths (brute baseline + trained IVF) as one tagged
-        # union, freeing the slot SemDeDup takes
-        "embedding_ann": (q_embedding_ann, _sql_embedding_ann()),
-        # both parameterizations (pinned k=8 + production auto k≈√N) as
-        # one tagged union; the auto arm's dynamic-k oracle computes the
-        # same k via a scalar-subquery LIMIT
-        "semdedup": (q_semdedup, _sql_semdedup()),
-        # learned tokenizer; slot freed by folding the per-doc lang-id
-        # prediction into the text_stats profile scan
-        "bpe_train": (q_bpe_train, _sql_bpe_train()),
-        # round-4: mergeable sketches (HLL + Count-Min + exact twins);
-        # absorbs length_percentiles as its exact-percentile arm
-        "sketch_profile": (q_sketch_profile, _sql_sketch_profile()),
-    }
-    absorbed = [
-        # merged into the tagged unions above (c1_c2/c3_c4/a6 merged into
-        # c1_c4_checks in-session to slot in cross_dedup and
-        # multimodal_decode)
-        "c1_c2_checks", "c3_c4_checks", "a6_dedup_findings",
-        "c1_in_list", "c2_date_range", "c3_number_range", "c3_int_check",
-        "c4_string_check", "c5_id_format", "c6_dup_ids", "c7_substr",
-        "c8_dict_lookup", "c9_assay_resolution", "c10_live_le_total",
-        "c11_viability", "c12_missing_sars",
-        "events_hourly", "events_sliding",
-        "skew_salted_agg", "skew_salted_join",
-        "chunk_documents", "train_val_split",
-        # already exercised inside a composed registered query
-        "minhash_signatures", "simhash_signatures", "dedup_exact",
-        "doc_fingerprint", "ivf_topk", "kmeans_centroids", "dedup_clusters",
-        # fused: one bigram pass serves both signal families; round-4
-        # fused again with the Gopher gates into quality_profile
-        "repetition_bigrams", "familiarity",
-        "quality_score", "repetition_familiarity",
-        # round-4: fused with classifier inference into doc_scoring
-        "dsir_importance",
-        # folded into the text_stats map-only profile scan
-        "bpe_token_count",
-        # embedded in vocab_pipeline (same top-N ranking feeds the ids)
-        "vocab_topn",
-        # merged into the embedding_ann tagged union
-        "embedding_topk", "ivf_topk_trained",
-        # per-doc prediction now a text_stats column (confusion-matrix
-        # form remains available as q_lang_id)
-        "lang_id",
-        # round-4: fused into c5_c8_checks (slot freed for pq_ann)
-        "c5_c6_checks", "c7_c8_checks",
-        # round-4: the sketch_profile pct arm (slot freed for the sketches)
-        "length_percentiles",
-        # round-4 continuations: the two temporal joins fuse into
-        # temporal_joins; pagerank grows into the graph_metrics union;
-        # user_retention rides events_windows as its 'retention' arm —
-        # the three freed slots take fuzzy_join, merge_upsert and the
-        # graph_metrics rename
-        "asof_join", "interval_join", "pagerank", "user_retention",
-        # round-6: the two candidate-pair siblings fuse into
-        # neardup_pairs — the freed slot takes data_profile (the
-        # schema-driven profiler tier, round-4/5 backlog #1)
-        "simhash_pairs", "ngram_jaccard_pairs",
-        # round-7: the three small validation queries fuse into
-        # submission_misc (which adds the S9 sink write→readback arm) —
-        # the two freed slots take streaming_parity and jdbc_roundtrip,
-        # promoting the §2.8 streaming and S5/S6/S11 JDBC surfaces from
-        # test-verified to oracle-checked (r5 verdict: correct_pct 72)
-        "j6_anti_join", "a4_count_reconcile", "o3_union_slices",
-    ]
-    from nci_seronet_proc_data_validator_spark.parity import (
-        SQL_JDBC_ROUNDTRIP,
-        SQL_STREAMING_PARITY,
-        q_jdbc_roundtrip,
-        q_streaming_parity,
-        q_submission_misc,
-        sql_submission_misc,
-    )
-    merged.update({
-        "temporal_joins": (q_temporal_joins, SQL_TEMPORAL_JOINS),
-        "fuzzy_join": (q_fuzzy_join, _sql_fuzzy_join()),
-        "merge_upsert": (q_merge_upsert, _sql_merge_upsert()),
-        "graph_metrics": (q_graph_metrics, _sql_graph_metrics()),
-        "neardup_pairs": (q_neardup_pairs, _sql_neardup_pairs()),
-        "data_profile": (q_data_profile, _sql_data_profile()),
-        "submission_misc": (q_submission_misc, sql_submission_misc()),
-        "streaming_parity": (q_streaming_parity, SQL_STREAMING_PARITY),
-        "jdbc_roundtrip": (q_jdbc_roundtrip, SQL_JDBC_ROUNDTRIP),
-    })
-    for name in absorbed:
-        QUERIES.pop(name, None)
-    QUERIES.update(merged)
-
-
-_consolidate_registry()
 
 
 # --------------------------------------------------------------- §2.7 rulebook
@@ -3691,14 +3158,87 @@ def q_rulebook_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     return union_findings([rows, dedup_findings(aux)])
 
 
-def _rulebook_oracle() -> str:
-    """Assembled at import time — binding builds only SQL templates (no
-    Column objects), so no SparkContext is needed (dual-backend checks,
-    ``functions/checks.py``)."""
-    from nci_seronet_proc_data_validator_spark.plans.sql_oracle import (
-        rulebook_oracle_sql,
-    )
-    return rulebook_oracle_sql()
-
-
-QUERIES["rulebook_full"] = (q_rulebook_full, _rulebook_oracle())
+# --------------------------------------------------------------- registry
+# The driver-contract registry: name -> (Spark query, DuckDB oracle SQL).
+# Only the FIRST 50 entries are oracle-checked, so this is exactly 50.
+# Sibling checks run as tagged unions (``c1_c4_checks`` ...) and operators
+# embedded in a composed query have no entry of their own, e.g.
+# minhash signatures ⊂ minhash_lsh_pairs, the connected-components pass ⊂
+# dedup_keep_canonical, k-means + the IVF probe ⊂ embedding_ann. The
+# rulebook oracle is assembled at import time: binding builds only SQL
+# templates, so no SparkContext is needed (``functions/checks.py``).
+QUERIES = {
+    "a2_crosstab": (q_a2_crosstab, SQL_A2),
+    "j4_bio_spine": (q_j4_bio_spine, SQL_J4),
+    "j1_enrich_revenue": (q_j1_enrich_revenue, SQL_J1),
+    "j3_presence_patterns": (q_j3_presence_patterns, SQL_J3),
+    "dedup_normalized": (q_dedup_normalized, SQL_DEDUP_NORM),
+    "text_stats": (q_text_stats, SQL_TEXT_STATS),
+    "sessionize": (q_sessionize, SQL_SESSIONIZE),
+    "topk_per_group": (q_topk_per_group, SQL_TOPK_GROUP),
+    "rollup_revenue": (q_rollup_revenue, SQL_ROLLUP),
+    "minhash_lsh_pairs": (q_minhash_lsh_pairs,
+                          minhash_lsh_pairs_oracle_sql()),
+    "embedding_near_dup": (q_embedding_near_dup,
+                           embedding_near_dup_oracle_sql(min_cosine=0.35)),
+    "bm25_topk": (q_bm25_topk, bm25_oracle_sql(BM25_TERMS)),
+    "stratified_sample": (q_stratified_sample, _union_all_sql(
+        stratified_sample_oracle_sql(
+            "lang", SAMPLE_RATES, SAMPLE_DEFAULT,
+            select="'stratified' AS part, doc_id, lang"),
+        mixture_sample_oracle_sql(
+            "lang", MIXTURE_SHARES, select="'mixture' AS part, doc_id, lang"),
+        temperature_sample_oracle_sql(
+            "lang", select="'temperature' AS part, doc_id, lang"))),
+    "pii_scan": (q_pii_scan, pii_oracle_sql(_PII_DOC_SQL)),
+    "contamination": (q_contamination,
+                      contamination_with_bloom_oracle_sql(_BENCH_PRED, n=5)),
+    "dedup_keep_canonical": (q_dedup_keep_canonical,
+                             _sql_dedup_keep_canonical()),
+    "pack_sequences": (q_pack_sequences,
+                       pack_sequences_oracle_sql(budget=2048)),
+    "corpus_funnel": (q_corpus_funnel,
+                      corpus_funnel_oracle_sql(
+                          minhash_lsh_pairs_oracle_sql())),
+    "tpch_q1": (q_tpch_q1, SQL_TPCH_Q1),
+    "tpch_q3": (q_tpch_q3, SQL_TPCH_Q3),
+    "tpch_q5": (q_tpch_q5, SQL_TPCH_Q5),
+    "tpch_q18": (q_tpch_q18, SQL_TPCH_Q18),
+    "c1_c4_checks": (q_c1_c4_checks,
+                     _union_all_sql(SQL_C1, SQL_C2, SQL_C3, SQL_C3_INT,
+                                    SQL_C4, SQL_A6)),
+    "cross_dedup": (q_cross_dedup,
+                    cross_corpus_oracle_sql(_CROSS_NEW_PRED,
+                                            _CROSS_CORPUS_PRED)),
+    "multimodal_decode": (q_multimodal_decode, _sql_multimodal_decode()),
+    "c5_c8_checks": (q_c5_c8_checks,
+                     _union_all_sql(SQL_C5, SQL_C6, SQL_C7, SQL_C8)),
+    "pq_ann": (q_pq_ann, _sql_pq_ann()),
+    "c9_c12_checks": (q_c9_c12_checks,
+                      _union_all_sql(SQL_C9, SQL_C10, SQL_C11, SQL_C12)),
+    "events_windows": (q_events_windows, _sql_events_windows()),
+    "skew_salted": (q_skew_salted, SQL_SKEW_SALTED),
+    "chunk_and_split": (q_chunk_and_split, _sql_chunk_and_split()),
+    "quality_profile": (q_quality_profile, _sql_quality_profile()),
+    "substr_dup_pairs": (q_substr_dup_pairs,
+                         substr_dup_oracle_sql(k=20, w=8, min_shared=4,
+                                               max_df=64)),
+    "doc_scoring": (q_doc_scoring, _sql_doc_scoring()),
+    "boilerplate_removal": (q_boilerplate_removal,
+                            _sql_boilerplate_removal()),
+    "vocab_pipeline": (q_vocab_pipeline, _sql_vocab_pipeline()),
+    "embedding_ann": (q_embedding_ann, _sql_embedding_ann()),
+    "semdedup": (q_semdedup, _sql_semdedup()),
+    "bpe_train": (q_bpe_train, _sql_bpe_train()),
+    "sketch_profile": (q_sketch_profile, _sql_sketch_profile()),
+    "temporal_joins": (q_temporal_joins, SQL_TEMPORAL_JOINS),
+    "fuzzy_join": (q_fuzzy_join, _sql_fuzzy_join()),
+    "merge_upsert": (q_merge_upsert, _sql_merge_upsert()),
+    "graph_metrics": (q_graph_metrics, _sql_graph_metrics()),
+    "neardup_pairs": (q_neardup_pairs, _sql_neardup_pairs()),
+    "data_profile": (q_data_profile, _sql_data_profile()),
+    "submission_misc": (q_submission_misc, sql_submission_misc()),
+    "streaming_parity": (q_streaming_parity, SQL_STREAMING_PARITY),
+    "jdbc_roundtrip": (q_jdbc_roundtrip, SQL_JDBC_ROUNDTRIP),
+    "rulebook_full": (q_rulebook_full, rulebook_oracle_sql()),
+}

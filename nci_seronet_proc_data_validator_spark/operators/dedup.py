@@ -285,35 +285,6 @@ ORDER BY new_id, corpus_id
 """
 
 
-def minhash_oracle_sql(n: int = 3, k: int = DEFAULT_K,
-                       bands: int = DEFAULT_BANDS,
-                       sig_prefix: int = 4) -> str:
-    """DuckDB SQL computing the first ``sig_prefix`` signature slots per
-    document — the oracle for the minhash math."""
-    coeffs = _lcg_coeffs(k)[:sig_prefix]
-    sig_exprs = ",\n       ".join(
-        f"coalesce(list_min(list_transform(sh, h -> ({a} * h + {b}) % {MINHASH_PRIME})), "
-        f"{MINHASH_PRIME}) AS sig_{i}"
-        for i, (a, b) in enumerate(coeffs))
-    return f"""
-WITH toks AS (
-  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS t
-  FROM documents),
-sh AS (
-  SELECT doc_id,
-         list_distinct(CASE WHEN len(t) >= {n}
-           THEN list_transform(generate_series(1, len(t) - {n - 1}),
-                               i -> CAST(concat('0x', substr(md5(
-                                      concat_ws(' ', t[i], t[i+1], t[i+2])), 1, 8))
-                                    AS BIGINT))
-           ELSE [] END) AS sh
-  FROM toks)
-SELECT doc_id,
-       {sig_exprs}
-FROM sh ORDER BY doc_id
-"""
-
-
 def minhash_lsh_pairs_oracle_sql(n: int = 3, k: int = DEFAULT_K,
                                  bands: int = DEFAULT_BANDS,
                                  min_jaccard: float = 0.0) -> str:
@@ -449,39 +420,6 @@ def simhash_pairs(docs: DataFrame, id_col: str = "doc_id",
             # plan), so far pairs never reach the distinct's exchange.
             .distinct()
             .filter(F.col("hamming") <= max_hamming))
-
-
-def simhash_oracle_sql() -> str:
-    """DuckDB SQL computing the same 64-bit SimHash per document (via
-    UNNEST + per-bit sums — different shape, identical result)."""
-    bit_sums = ",\n    ".join(
-        f"sum(CASE WHEN (h{1 if i < 32 else 2} >> {i % 32}) & 1 = 1 "
-        f"THEN 1 ELSE -1 END) AS c{i}"
-        for i in range(64))
-    low_terms = " + ".join(
-        f"(CASE WHEN coalesce(c{i}, 0) > 0 THEN CAST({1 << i} AS BIGINT) "
-        f"ELSE 0 END)" for i in range(63))
-    return f"""
-WITH toks AS (
-  SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS tok
-  FROM documents),
-hashed AS (
-  SELECT doc_id,
-         CAST(concat('0x', substr(md5(tok), 1, 8)) AS BIGINT) AS h1,
-         CAST(concat('0x', substr(md5(tok), 9, 8)) AS BIGINT) AS h2
-  FROM toks),
-counters AS (
-  SELECT doc_id,
-    {bit_sums}
-  FROM hashed GROUP BY doc_id)
-SELECT d.doc_id,
-       CAST({low_terms} AS BIGINT)
-       | (CASE WHEN coalesce(c63, 0) > 0
-               THEN CAST(-9223372036854775808 AS BIGINT)
-               ELSE 0 END) AS simhash
-FROM documents d LEFT JOIN counters USING (doc_id)
-ORDER BY d.doc_id
-"""
 
 
 def ngram_jaccard_pairs(docs: DataFrame, id_col: str = "doc_id",

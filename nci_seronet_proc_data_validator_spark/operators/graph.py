@@ -238,28 +238,6 @@ ORDER BY c.{id_col}
 """
 
 
-def connected_components_oracle_sql(pairs_sql: str,
-                                    id_alias: str = "doc_id") -> str:
-    """Recursive-CTE oracle: min reachable node id per node over the
-    symmetrized edge set produced by ``pairs_sql`` (any query emitting
-    ``id_a``/``id_b``)."""
-    return f"""
-WITH RECURSIVE
-pairs AS ({pairs_sql}),
-edges AS (
-  SELECT id_a AS src, id_b AS dst FROM pairs
-  UNION
-  SELECT id_b AS src, id_a AS dst FROM pairs),
-reach AS (
-  SELECT src AS id, src AS root FROM edges
-  UNION
-  SELECT e.dst AS id, r.root AS root
-  FROM reach r JOIN edges e ON e.src = r.id)
-SELECT id AS {id_alias}, min(root) AS cluster_id
-FROM reach GROUP BY id ORDER BY 1
-"""
-
-
 def keep_best_in_cluster(corpus: DataFrame, components: DataFrame,
                          score_col: str, id_col: str = "doc_id"
                          ) -> DataFrame:

@@ -1,118 +1,24 @@
-"""Distributed PCA for embedding columns — the dimensionality-reduction /
-whitening step ANN pipelines run before quantization (IVF-PQ style), and
-the one linear-algebra operator the engine was missing.
+"""Integer-exact principal direction of an embedding column — the
+whitening step ANN pipelines run before quantization (IVF-PQ style).
 
 Spark-first shape for 100 TB (the k-means model-sync pattern,
 ``operators/kmeans.py``, applied to second moments):
 
-- **Fit is ONE aggregation pass.** Mean and the upper-triangle second
-  moments are ``1 + d + d(d+1)/2`` scalar ``sum`` aggregates in a single
-  ``agg`` — map-side partial aggregation, no explode (a naive
-  explode-the-outer-product plan inflates the corpus d² ×), result is
-  O(d²) scalars to the driver regardless of corpus size.
-- **Eigendecomposition is driver math.** The covariance is d×d (64×64
-  here) — ``numpy.linalg.eigh`` on the driver, exactly where MLlib's own
-  PCA does it. No data-scale work leaves the executors.
+- **Fit is ONE aggregation pass.** Each partition quantizes its vectors
+  and computes integer gram partials with one Arrow-batched numpy
+  matmul; only O(partitions·d²) scalars reach the driver regardless of
+  corpus size.
+- **Power iteration is driver math.** The covariance is d×d (64×64
+  here); no data-scale work leaves the executors.
 
-Float contract: the fit is IEEE double throughout; this is a
-test-verified operator (numpy parity at test scale), not a DuckDB-oracle
-query — cross-engine eigensolvers don't bit-match and shouldn't.
+Integer partials are order-free, so the fit and every iterate are
+bit-identical to the DuckDB twin (``power_iter_oracle_sql``).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-
-def pca_fit(emb: DataFrame, dim: int, k: int,
-            vec_col: str = "embedding") -> tuple[list[float],
-                                                 list[list[float]]]:
-    """Fit PCA: returns ``(mean, components)`` with ``components`` the
-    top-``k`` eigenvectors (rows, descending eigenvalue), sign-normalized
-    so each row's largest-magnitude entry is positive (deterministic
-    across eigensolver sign flips)."""
-    import numpy as np
-    if not 1 <= k <= dim:
-        raise ValueError(f"need 1 <= k <= dim: {k=} {dim=}")
-
-    def x(i: int) -> str:
-        return f"CAST({vec_col}[{i}] AS DOUBLE)"
-
-    aggs = [F.count(F.lit(1)).alias("n")]
-    aggs += [F.expr(f"sum({x(i)})").alias(f"s{i}") for i in range(dim)]
-    aggs += [F.expr(f"sum({x(i)} * {x(j)})").alias(f"p{i}_{j}")
-             for i in range(dim) for j in range(i, dim)]
-    row = emb.agg(*aggs).collect()[0]
-    n = row["n"]
-    s = [row[f"s{i}"] for i in range(dim)]
-    gram = np.empty((dim, dim))
-    for i in range(dim):
-        for j in range(i, dim):
-            gram[i, j] = gram[j, i] = row[f"p{i}_{j}"]
-    return _components_from_moments(n, np.asarray(s), gram, k)
-
-
-def _components_from_moments(n, s, gram, k):
-    """Shared eigendecomposition tail: raw moments → (mean, components)
-    with deterministic sign normalization."""
-    import numpy as np
-    if n < 2:
-        raise ValueError(f"need >= 2 vectors to fit PCA, got {n}")
-    mean = s / n
-    cov = gram / n - np.outer(mean, mean)
-    vals, vecs = np.linalg.eigh(cov)          # ascending
-    comps = vecs[:, ::-1][:, :k].T            # k rows, descending value
-    for r in range(k):                        # deterministic sign
-        m = np.argmax(np.abs(comps[r]))
-        if comps[r][m] < 0:
-            comps[r] = -comps[r]
-    return mean.tolist(), comps.tolist()
-
-
-def pca_fit_wide(emb: DataFrame, dim: int, k: int,
-                 vec_col: str = "embedding") -> tuple[list[float],
-                                                      list[list[float]]]:
-    """The LARGE-dim fit path: :func:`pca_fit` compiles
-    ``1 + d + d(d+1)/2`` aggregate expressions — ideal to d ≈ 128,
-    quadratic plan size beyond. Here each partition computes its partial
-    Gram matrix with one Arrow-batched numpy matmul (``mapInPandas``,
-    the engine's sanctioned Python-row-path exception: BLAS beats
-    codegen on dense d² arithmetic) and only O(partitions) partial rows
-    of d² doubles reach the driver. Same outputs as :func:`pca_fit`
-    modulo float summation order."""
-    import numpy as np
-    if not 1 <= k <= dim:
-        raise ValueError(f"need 1 <= k <= dim: {k=} {dim=}")
-
-    def gram_partial(batches):
-        import numpy as _np
-        import pandas as _pd
-        n = 0
-        s = _np.zeros(dim)
-        g = _np.zeros((dim, dim))
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = _np.asarray([list(v) for v in pdf[vec_col]], dtype=float)
-            n += len(X)
-            s += X.sum(axis=0)
-            g += X.T @ X
-        yield _pd.DataFrame({"n": [n], "s": [s.tolist()],
-                             "g": [g.flatten().tolist()]})
-
-    parts = (emb.select(vec_col)
-             .mapInPandas(gram_partial,
-                          "n long, s array<double>, g array<double>")
-             .collect())
-    n = sum(r["n"] for r in parts)
-    s = np.sum([r["s"] for r in parts], axis=0)
-    gram = np.sum([np.asarray(r["g"]).reshape(dim, dim) for r in parts],
-                  axis=0)
-    return _components_from_moments(n, s, gram, k)
-
-
-# --------------------------- integer-exact power iteration (oracle-able)
 #: Input quantization for the power-iteration gram (coarser than the
 #: k-means 1e6 so n·Σqv_i·qv_j and s_i·s_j stay inside int64 — the
 #: binding products are n·g ≤ n²·qmax² and s_i·s_j ≤ (n·qmax)², both
@@ -140,12 +46,12 @@ def int_gram_fit(emb: DataFrame, dim: int, vec_col: str = "embedding"
     """Integer second-moment fit: quantize components to POW_QUANT
     micro-units (half-up ``floor(v·Q + 0.5)`` — the engine-portable tie
     rule, ``similarity.quantize_embeddings``), then per-partition int64
-    gram partials via one Arrow-batched numpy matmul (the
-    :func:`pca_fit_wide` shape — BLAS beats a d²-expression codegen agg,
-    and avoids its quadratic plan-build cost). Integer partials are
-    ORDER-FREE, so the merged ``(n, s, G)`` is bit-identical no matter
-    how partitions interleave — the float fit can't promise that. Only
-    O(partitions·d²) scalars reach the driver."""
+    gram partials via one Arrow-batched numpy matmul (BLAS beats a
+    d²-expression codegen agg, and avoids its quadratic plan-build
+    cost). Integer partials are ORDER-FREE, so the merged ``(n, s, G)``
+    is bit-identical no matter how partitions interleave — a float fit
+    can't promise that. Only O(partitions·d²) scalars reach the
+    driver."""
     import numpy as np
 
     def gram_partial(batches):

@@ -1,5 +1,5 @@
-"""Deequ-style table profiler: one-pass column metrics, constraint
-suggestion, and constraint verification — the "unit tests for data"
+"""Deequ-style table profiler: one-pass column metrics and constraint
+verification — the "unit tests for data"
 tier (Schelter et al., *Automating Large-Scale Data Quality
 Verification*, VLDB 2018) that a 100 TB ingest pipeline runs before
 anything else touches a new snapshot.
@@ -8,8 +8,8 @@ This generalizes the reference's hand-written per-sheet checks
 (`/root/reference/Validation_Rules.py` hard-codes every column's rule;
 `File_Submission_Object.py:151-168` evaluates them per-row in pandas)
 into a schema-driven profiler: metrics are derived from the DataFrame
-schema, constraints are suggested from the measured profile, and
-verification compiles every constraint into ONE aggregation pass.
+schema, and verification compiles every constraint into ONE aggregation
+pass.
 
 Why these shapes at scale:
 
@@ -18,11 +18,12 @@ Why these shapes at scale:
   shuffle carries #partitions rows regardless of input size. The only
   scale caveat is ``count(DISTINCT ...)`` over k columns, which Spark
   plans as an Expand (k+1 rows per input row) before the partial agg;
-  at 100 TB use :func:`profile_table_approx` (``approx_count_distinct``
-  — one pass, mergeable HLL++ state, no Expand; plan pinned by
-  ``test_approx_profile_plan_has_no_expand``) or the HLL register
-  sketch (``operators/sketches.py``). The exact form stays the default
-  because it is oracle-checkable bit-for-bit.
+  at 100 TB use ``fused_quality_pass(approx_distinct=True)``
+  (``approx_count_distinct`` — one pass, mergeable HLL++ state, no
+  Expand; plan pinned by
+  ``test_fused_quality_pass_approx_distinct_no_expand``) or the HLL
+  register sketch (``operators/sketches.py``). The exact form stays the
+  default because it is oracle-checkable bit-for-bit.
 - **verify_constraints** is conditional-count algebra: every
   constraint becomes a ``sum(CASE WHEN violated THEN 1 END)`` column in
   the same single-pass aggregate — adding a constraint adds zero scans
@@ -45,7 +46,6 @@ variants (timestamp epoch, regex match) are explicit named pairs.
 
 from __future__ import annotations
 
-import datetime
 import re
 from dataclasses import dataclass
 
@@ -195,28 +195,6 @@ def _agg_unpivot(df: DataFrame, plan) -> DataFrame:
     return aggd.selectExpr(f"inline(array({rows}))")
 
 
-def profile_table_approx(df: DataFrame,
-                         columns: list[str] | None = None,
-                         rsd: float = 0.05) -> DataFrame:
-    """The 100 TB arm of :func:`profile_table`: identical plan except the
-    exact ``count(DISTINCT ...)`` metric — whose Expand (k+1 rows per
-    input row across k columns) is the one scale caveat — is replaced by
-    ``approx_count_distinct`` (HLL++, mergeable sketch state, no Expand,
-    one straight partial-agg pass). Same output shape
-    ``(col_name, metric, value)`` with metric ``distinct_approx``; all
-    other metrics stay bit-exact, so the two forms are interchangeable
-    downstream (``suggest_constraints`` treats either distinct metric as
-    the uniqueness signal only when it equals ``nonnull``, which the
-    exact form guarantees — use the exact profile for suggestion, this
-    one for monitoring)."""
-    plan = [(c, m.replace("distinct", "distinct_approx") if m == "distinct"
-             else m,
-             f"approx_count_distinct({c}, {rsd})" if m == "distinct" else s,
-             d)
-            for (c, m, s, d) in _metric_plan(df.dtypes, columns)]
-    return _agg_unpivot(df, plan)
-
-
 def _qs(v: str) -> str:
     """SQL string literal for generated-SQL assembly — the engine's one
     quoting primitive (``functions/checks._sql_quote``), re-exported
@@ -247,9 +225,7 @@ def decide_approx_distinct(n_distinct_groups: int,
 
     - **grouped** aggregation (per-key profiles) → approx, always: the
       Expand multiplies the SHUFFLE by (width+1) rows per input row, and
-      only mergeable sketch state rolls up across batches
-      (:func:`profile_partials` embodies the same decision with real HLL
-      sketches).
+      only mergeable sketch state rolls up across batches.
     - **global** aggregation → exact while the distinct-group width is
       within :data:`APPROX_DISTINCT_WIDTH_BUDGET`: the Expand is
       map-local (no shuffle amplification), exact is oracle-checkable,
@@ -499,128 +475,6 @@ WHERE f.{fact_key} IS NOT NULL
 """
 
 
-# --------------------------------------------- incremental (mergeable)
-# metric name -> how two partial states combine (all profile metrics are
-# algebraic; distinct is the exception and rides as an HLL sketch)
-def _merge_fn(metric: str):
-    if metric.startswith(("min",)):
-        return F.min
-    if metric.startswith(("max",)):
-        return F.max
-    return F.sum          # nonnull / nulls / sum* are additive
-
-
-def profile_partials(df: DataFrame, batch_col,
-                     columns: list[str] | None = None) -> DataFrame:
-    """Mergeable per-batch profile state — the incremental form a 100 TB
-    ingest actually runs: profile each arriving batch/partition ONCE,
-    store the tiny state row, and roll states up (``merge_profiles``)
-    without ever rescanning history. Every metric here is algebraic
-    (count/min/max/sum merge exactly); ``distinct`` — the one
-    non-algebraic metric — rides as a DataSketches HLL sketch column
-    (``{col}__hll``, binary; unions keep the single-sketch error
-    guarantee), the same mechanism Deequ's metric repository uses for
-    incremental uniqueness.
-
-    Returns one row per ``batch_col`` value: ``{col}__{metric}`` longs
-    plus ``{col}__hll`` binaries.
-    """
-    cols = columns or [c for c, _ in df.dtypes
-                       if not (isinstance(batch_col, str) and c == batch_col)]
-    plan = [(c, m, s) for (c, m, s, _) in _metric_plan(df.dtypes, cols)
-            if m != "distinct"]
-    aggs = [F.expr(s).cast("long").alias(f"{c}__{m}") for c, m, s in plan]
-    # hll_sketch_agg accepts int/long/string/binary only — the string
-    # cast is injective for every profiled type, so distinct is preserved
-    aggs += [F.hll_sketch_agg(F.col(c).cast("string")).alias(f"{c}__hll")
-             for c in cols]
-    return df.groupBy(batch_col).agg(*aggs)
-
-
-def merge_profiles(partials: DataFrame,
-                   batch_col: str | None = None) -> DataFrame:
-    """Roll per-batch profile states up to one table-level profile in the
-    same long form as :func:`profile_table` (``col_name, metric, value``)
-    — metric ``distinct_hll`` is the merged-sketch estimate. The input is
-    O(batches) rows, so this is model-scale regardless of the snapshots'
-    size; states can be merged associatively across days/regions/reruns.
-    """
-    metric_cols = [c for c in partials.columns if "__" in c
-                   and c != batch_col]
-    aggs = []
-    for mc in metric_cols:
-        col, metric = mc.rsplit("__", 1)
-        if metric == "hll":
-            aggs.append(F.hll_sketch_estimate(
-                F.hll_union_agg(F.col(mc))).cast("long")
-                .alias(f"{col}__distinct_hll"))
-        else:
-            aggs.append(_merge_fn(metric)(F.col(mc)).cast("long")
-                        .alias(mc))
-    merged = partials.agg(*aggs)
-    rows = ", ".join(
-        f"named_struct('col_name', {_qs(c.rsplit('__', 1)[0])}, "
-        f"'metric', {_qs(c.rsplit('__', 1)[1])}, 'value', {c})"
-        for c in merged.columns)
-    return merged.selectExpr(f"inline(array({rows}))")
-
-
-def detect_anomalies(history: DataFrame, current: DataFrame,
-                     k: int = 3, min_history: int = 3) -> DataFrame:
-    """Deequ-style anomaly detection on metric history: flag every
-    (col_name, metric) of ``current`` (one profile, long form) whose
-    value falls outside mean ± k·stddev of the same metric across
-    ``history`` (many prior profiles, long form — e.g. accumulated
-    :func:`profile_table` / :func:`merge_profiles` outputs). Metrics
-    with fewer than ``min_history`` observations or zero variance use an
-    exact-equality band instead (any change flags).
-
-    Shape: both inputs are O(columns × metrics × snapshots) rows —
-    model-scale regardless of the profiled tables' size; one tiny keyed
-    agg + one broadcastable join. This is the tier that catches "row
-    count dropped 40% today" before a bad snapshot poisons a 100 TB
-    pipeline — the temporal complement of :func:`profile_drift`'s
-    two-snapshot comparison.
-
-    Returns current's rows + ``(n_obs, mean_x100, band_lo, band_hi,
-    is_anomaly)`` — the band in exact centi-units (integer arithmetic;
-    variance via the Σx/Σx² identity over BIGINT sums).
-    """
-    h = (history.groupBy("col_name", "metric")
-         .agg(F.count(F.lit(1)).alias("n_obs"),
-              F.sum("value").alias("sx"),
-              F.sum(F.col("value") * F.col("value")).alias("sxx"),
-              F.min("value").alias("hmin"),
-              F.max("value").alias("hmax")))
-    # mean and stddev in centi-units: mean_x100 = 100*sx/n; var_x10000 =
-    # (10000*(n*sxx - sx^2)) / n^2 — all integer until the final sqrt
-    n, sx, sxx = F.col("n_obs"), F.col("sx"), F.col("sxx")
-    mean_x100 = F.expr("100 * sx div n_obs")
-    var_x10000 = ((F.lit(10000) * (n * sxx - sx * sx))
-                  / (n * n)).cast("double")
-    sd_x100 = F.ceil(F.sqrt(F.greatest(var_x10000, F.lit(0.0))))
-    joined = (current.join(F.broadcast(h), ["col_name", "metric"], "left")
-              .withColumn("mean_x100", mean_x100)
-              .withColumn("sd_x100", sd_x100))
-    degenerate = (F.col("n_obs").isNull()
-                  | (F.col("n_obs") < min_history)
-                  | (F.col("sd_x100") == 0))
-    lo = F.when(degenerate, F.col("hmin") * 100) \
-        .otherwise(F.col("mean_x100") - k * F.col("sd_x100"))
-    hi = F.when(degenerate, F.col("hmax") * 100) \
-        .otherwise(F.col("mean_x100") + k * F.col("sd_x100"))
-    v100 = F.col("value") * 100
-    return (joined
-            .withColumn("band_lo", lo)
-            .withColumn("band_hi", hi)
-            .withColumn("is_anomaly",
-                        F.when(F.col("n_obs").isNull(), F.lit(True))
-                        .otherwise((v100 < F.col("band_lo"))
-                                   | (v100 > F.col("band_hi"))))
-            .select("col_name", "metric", "value", "n_obs", "mean_x100",
-                    "band_lo", "band_hi", "is_anomaly"))
-
-
 # The anomaly FLAG as one SQL expression over columns (h0, h1, h2, c) —
 # shared VERBATIM by the Spark plan and the DuckDB oracle, so the
 # double-precision arithmetic is bit-identical on both engines:
@@ -650,9 +504,9 @@ def anomaly_slices_pass(df: DataFrame, history_preds: list[str],
     profile metrics of three in-table history slices (``history_preds``,
     CASE-masked aggregate twins) and of the ``current_pred`` slice are
     computed together, then every (col, metric) gets the mean ± k·σ flag
-    of :data:`_ANOM_FLAG_SQL` — the batched form of
-    :func:`detect_anomalies` (which consumes STORED profile history) used
-    when history snapshots live as partitions/date-slices of one table.
+    of :data:`_ANOM_FLAG_SQL` — Deequ-style anomaly detection on metric
+    history, for history snapshots that live as partitions/date-slices
+    of one table.
 
     Output: ``(arm='anomaly', col_name, metric='{m}/anom',
     value=0|1 BIGINT)``.
@@ -706,58 +560,6 @@ JOIN (SELECT col_name, metric, value AS h1 FROM ah1) ah1
 JOIN (SELECT col_name, metric, value AS h2 FROM ah2) ah2
   USING (col_name, metric)
 """
-
-
-# ------------------------------------------------- suggestion and drift
-def suggest_constraints(profile_rows) -> list[Constraint]:
-    """Deequ-style constraint suggestion from a measured profile.
-
-    Input is the collected (model-scale) output of :func:`profile_table`
-    — O(columns × metrics) rows. Suggests ``not_null`` when a column had
-    zero nulls, ``unique`` when every non-null value was distinct (and
-    the column is complete), and ``between`` from the observed envelope
-    of every ordered type class: integer min/max directly, floating via
-    the centi-unit metrics (bounds widened one centi-unit — floor
-    quantization means max may round down), dates via epoch days,
-    timestamps via epoch seconds, strings as a length band.
-    """
-    by_col: dict[str, dict[str, int]] = {}
-    for r in profile_rows:
-        by_col.setdefault(r["col_name"], {})[r["metric"]] = r["value"]
-    out: list[Constraint] = []
-    for c, m in by_col.items():
-        if m.get("nulls") == 0:
-            out.append(not_null(c))
-            if m.get("distinct") == m.get("nonnull"):
-                out.append(unique(c))
-        if "min" in m and "max" in m:
-            out.append(between(c, str(m["min"]), str(m["max"])))
-        elif "min_c100" in m and "max_c100" in m:
-            # floor quantization: the true max may exceed max_c100/100 by
-            # up to one centi-unit — widen the upper bound accordingly
-            out.append(between(c, str(m["min_c100"] / 100.0),
-                               str((m["max_c100"] + 1) / 100.0)))
-        elif "min_days" in m and "max_days" in m:
-            epoch = datetime.date(1970, 1, 1)
-            lo = epoch + datetime.timedelta(days=m["min_days"])
-            hi = epoch + datetime.timedelta(days=m["max_days"])
-            out.append(between(c, f"DATE '{lo.isoformat()}'",
-                               f"DATE '{hi.isoformat()}'"))
-        elif "min_epoch" in m and "max_epoch" in m:
-            # truncated-seconds metrics: widen hi by 1 s for sub-second
-            # precision. CAST keeps the comparison valid for NTZ columns
-            # in Spark (no-op in DuckDB); session tz is pinned UTC.
-            def _ts(sec: int) -> str:
-                t = datetime.datetime.fromtimestamp(
-                    sec, datetime.timezone.utc)
-                return f"TIMESTAMP '{t.strftime('%Y-%m-%d %H:%M:%S')}'"
-            out.append(between(f"CAST({c} AS TIMESTAMP)",
-                               _ts(m["min_epoch"]),
-                               _ts(m["max_epoch"] + 1)))
-        elif "min_len" in m and "max_len" in m:
-            out.append(between(f"length({c})",
-                               str(m["min_len"]), str(m["max_len"])))
-    return out
 
 
 def profile_drift(old: DataFrame, new: DataFrame) -> DataFrame:

@@ -104,32 +104,6 @@ FROM f WHERE n_words > 0 ORDER BY doc_id
 BPE_PATTERN = r"'(?:s|t|re|ve|m|ll|d)| ?[a-zA-Z]+| ?[0-9]+| ?[^a-zA-Z0-9\s]+|\s+"
 
 
-def bpe_token_counts(df: DataFrame, text_col: str = "text",
-                     id_col: str = "doc_id") -> DataFrame:
-    """Whitespace vs BPE-ish token counts per document, map-only — the
-    quick token-budget estimator a data pipeline runs before a real
-    tokenizer pass."""
-    ws = _words(text_col)
-    return df.select(
-        F.col(id_col),
-        F.size(ws).cast("long").alias("n_ws_tokens"),
-        F.size(F.regexp_extract_all(F.col(text_col), F.lit(BPE_PATTERN),
-                                    0)).cast("long").alias("n_bpe_tokens"),
-    )
-
-
-def bpe_token_oracle_sql(table: str = "documents") -> str:
-    pat = BPE_PATTERN.replace("'", "''")
-    return f"""
-SELECT doc_id,
-       CAST(len(list_filter(string_split_regex(text, ' +'), x -> x <> ''))
-            AS BIGINT) AS n_ws_tokens,
-       CAST(len(regexp_extract_all(text, '{pat}')) AS BIGINT)
-         AS n_bpe_tokens
-FROM {table} ORDER BY doc_id
-"""
-
-
 def repetition_features(df: DataFrame, text_col: str = "text",
                         id_col: str = "doc_id") -> DataFrame:
     """Within-document bigram repetition: total/distinct bigram counts,
@@ -190,28 +164,6 @@ def familiarity_features(df: DataFrame, text_col: str = "text",
             .select(id_col, "n_bigrams", "sum_corpus_freq",
                     (F.col("sum_corpus_freq").cast("double")
                      / F.col("n_bigrams")).alias("familiarity")))
-
-
-def familiarity_oracle_sql(table: str = "documents") -> str:
-    return f"""
-WITH w AS (
-  SELECT doc_id,
-         list_filter(string_split_regex(text, ' +'), x -> x <> '') AS ws
-  FROM {table}),
-b AS (
-  SELECT doc_id, ws[i] || ' ' || ws[i + 1] AS bg
-  FROM w, unnest(generate_series(1, len(ws) - 1)) AS t(i)
-  WHERE len(ws) >= 2),
-db AS (SELECT doc_id, bg, count(*) AS n FROM b GROUP BY 1, 2),
-c AS (SELECT bg, sum(n) AS cn FROM db GROUP BY bg)
-SELECT doc_id,
-       CAST(SUM(n) AS BIGINT) AS n_bigrams,
-       CAST(SUM(n * cn) AS BIGINT) AS sum_corpus_freq,
-       CAST(CAST(SUM(n * cn) AS BIGINT) AS DOUBLE)
-         / CAST(SUM(n) AS BIGINT) AS familiarity
-FROM db JOIN c USING (bg)
-GROUP BY doc_id ORDER BY doc_id
-"""
 
 
 def bigram_profile(df: DataFrame, text_col: str = "text",
@@ -322,27 +274,6 @@ FROM g ORDER BY doc_id
 """
 
 
-def repetition_oracle_sql(table: str = "documents") -> str:
-    return f"""
-WITH w AS (
-  SELECT doc_id,
-         list_filter(string_split_regex(text, ' +'), x -> x <> '') AS ws
-  FROM {table}),
-b AS (
-  SELECT doc_id,
-         unnest(list_transform(generate_series(1, len(ws) - 1),
-                               i -> ws[i] || ' ' || ws[i + 1])) AS bg
-  FROM w WHERE len(ws) >= 2),
-c AS (SELECT doc_id, bg, count(*) AS n FROM b GROUP BY 1, 2)
-SELECT doc_id,
-       CAST(sum(n) AS BIGINT) AS n_bigrams,
-       count(*) AS n_distinct_bigrams,
-       CAST(max(n) AS BIGINT) AS top_count,
-       (max(n) >= 2 AND max(n) * 5 > sum(n)) AS is_repetitive
-FROM c GROUP BY doc_id ORDER BY doc_id
-"""
-
-
 def ccnet_buckets(df: DataFrame, text_col: str = "text",
                   id_col: str = "doc_id",
                   lang_col: str = "lang") -> DataFrame:
@@ -357,9 +288,7 @@ def ccnet_buckets(df: DataFrame, text_col: str = "text",
     identically with no float-threshold comparisons.
 
     Scale note: the per-language window puts one language's docs through
-    one task — fine for calibration-sized corpora; at 100 TB use
-    :func:`ccnet_buckets_at_scale` (approx_percentile cutoffs per
-    language, broadcast back, map-side bucketing).
+    one task — fine for calibration-sized corpora.
     """
     from pyspark.sql import Window as W
     prof = bigram_profile(df, text_col=text_col, id_col=id_col)
@@ -480,34 +409,3 @@ def winnow_sig_oracle_expr(grams_col: str, w: int = 4) -> str:
     return (f"substr(md5(coalesce(list_aggregate(list_transform(list_sort("
             f"list_distinct({mins})), x -> CAST(x AS VARCHAR)), "
             f"'string_agg', '-'), '')), 1, 16)")
-
-
-def ccnet_buckets_at_scale(df: DataFrame, text_col: str = "text",
-                           id_col: str = "doc_id",
-                           lang_col: str = "lang") -> DataFrame:
-    """The 100 TB form of :func:`ccnet_buckets`: instead of an ntile
-    window that routes each language through ONE task, compute the two
-    tercile cutoffs per language with ``approx_percentile`` (a tiny
-    keyed agg — #langs rows), broadcast them back, and bucket each doc
-    map-side by comparison. Plan: one agg shuffle over #langs groups +
-    one broadcast join — no per-language serialization point.
-
-    Bucket boundaries are approximate where familiarity values tie or
-    the sketch rounds, so this is the documented drop-in for the exact
-    windowed form, not its oracle twin; ``tests/test_text_quality.py``
-    pins the agreement rate on skewed data.
-    """
-    prof = bigram_profile(df, text_col=text_col, id_col=id_col)
-    langs = df.select(F.col(id_col), F.col(lang_col))
-    scored = prof.join(langs, id_col)
-    cuts = (scored.groupBy(lang_col)
-            .agg(F.expr("approx_percentile(familiarity, array(0.6667, "
-                        "0.3333), 10000)").alias("qs"))
-            .select(lang_col, F.col("qs")[0].alias("head_cut"),
-                    F.col("qs")[1].alias("mid_cut")))
-    bucket = (F.when(F.col("familiarity") >= F.col("head_cut"), "head")
-              .when(F.col("familiarity") >= F.col("mid_cut"), "middle")
-              .otherwise("tail"))
-    return (scored.join(F.broadcast(cuts), lang_col)
-            .select(id_col, lang_col, "familiarity",
-                    bucket.alias("ppl_bucket")))

@@ -31,8 +31,7 @@ backfills from "today", exotic orderings) is enumerated and pinned by
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 NUM_SUFFIX = "__num"
 TS_SUFFIX = "__ts"
@@ -67,12 +66,6 @@ def ts_col(c: str) -> str:
     return c + TS_SUFFIX
 
 
-def numeric_shadow(c: Column) -> Column:
-    """DOUBLE shadow: float(x) succeeded and value has no '_' (ID exemption,
-    nci-seronet-data-validator.py:197-198)."""
-    return F.when(~c.contains("_"), c.try_cast("double"))
-
-
 # Every format in _TS_FORMATS starts "digits then -, / or :", "digits then
 # space then month name", or a month name. Gating the parse attempts behind
 # this one cheap regex makes non-date columns ~30× cheaper to shadow
@@ -94,8 +87,9 @@ _DATELIKE = (f"^([0-9]{{1,4}}[-/:]|[0-9]{{1,2}} {_MONTHS}"
 
 
 def _num_shadow_sql(c: str) -> str:
-    """``numeric_shadow`` as Spark-SQL text (identical semantics: CASE with
-    a false/null condition yields NULL, same as the guarded ``F.when``)."""
+    """DOUBLE shadow as Spark-SQL text: ``try_cast`` succeeded and the
+    value has no '_' (ID exemption, nci-seronet-data-validator.py:197-198);
+    otherwise NULL."""
     q = f"`{c}`"
     return (f"CASE WHEN NOT contains({q}, '_')"
             f" THEN try_cast({q} AS DOUBLE) END AS `{num_col(c)}`")
@@ -182,4 +176,3 @@ def with_typed_shadows(df: DataFrame, columns: list[str] | None = None,
         exprs.append(_num_shadow_sql(c))
         exprs.append(_ts_shadow_sql(c))
     return df.selectExpr("*", *exprs) if exprs else df
-

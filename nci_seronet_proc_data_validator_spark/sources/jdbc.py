@@ -131,7 +131,9 @@ def read_cbc_map(spark: SparkSession, url: str,
     df = (spark.read.format("jdbc").option("url", url)
           .option("query", "SELECT CBC_Name, CBC_ID FROM CBC")
           .options(**(properties or {})).load())
-    return {str(r["CBC_Name"]): str(r["CBC_ID"]) for r in df.collect()}
+    # by position: databases that upper-case unquoted identifiers
+    # (Derby, Oracle) return CBC_NAME, not CBC_Name
+    return {str(name): str(cid) for name, cid in df.collect()}
 
 
 # Reference's bookkeeping anti-filter, verbatim incl. the lowercase 't' in

@@ -555,11 +555,3 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         _SCHEMA_MEMO[key] = df.schema
         return df
     return spark.read.schema(schema).parquet(path)
-
-
-def read_tables(spark: SparkSession, sf_dir: str,
-                names: list[str] | None = None) -> dict[str, DataFrame]:
-    names = names or ["region", "nation", "customer", "supplier", "part",
-                      "orders", "lineitem", "events", "documents",
-                      "embeddings"]
-    return {n: read_table(spark, sf_dir, n) for n in names}

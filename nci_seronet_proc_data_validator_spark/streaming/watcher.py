@@ -557,7 +557,7 @@ def dedup_stream(docs: DataFrame, ts_col: str = "ts",
     evicts entries once the watermark passes — bounded state (horizon x
     distinct-hash arrival rate), the property a 100 TB ingest stream needs;
     an unbounded ``dropDuplicates`` would grow state forever. The batch
-    twin is the exact-dedup groupBy (``q_dedup_exact``).
+    twin is a ``groupBy`` on the same content hash.
     """
     return (docs
             .withWatermark(ts_col, watermark)

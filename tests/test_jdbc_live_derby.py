@@ -1,6 +1,7 @@
 """LIVE JDBC round-trips against embedded Apache Derby (bundled with
 Spark's jars) — the S5/S6 scans and the gated JDBC writer execute against
-a real SQL database in-process, not just as pinned SQL text.
+a real SQL database in-process, not just as pinned SQL text, and so
+does the CBC name -> id lookup.
 
 Derby stands in for MySQL: both resolve unquoted identifiers
 case-insensitively, so the reference's hand-written SELECTs
@@ -68,6 +69,25 @@ def test_merged_table_scan_live(spark, tmp_path, derby_props):
 
     assert read_merged_table(spark, url, "not_a_sheet.csv",
                              derby_props) is None
+
+
+def test_cbc_map_live(spark, tmp_path, derby_props):
+    """The reference's CBC lookup (File_Submission_Object.py:82-87) read
+    as one name -> 2-digit id map, the form the watchers take."""
+    from nci_seronet_proc_data_validator_spark.sources.jdbc import (
+        read_cbc_map)
+    url, conn = _derby(spark, tmp_path, "cbc")
+    _exec(
+        conn,
+        "CREATE TABLE CBC (CBC_ID INT, CBC_Name VARCHAR(32))",
+        "INSERT INTO CBC VALUES (14, 'Feinstein_CBC01'), "
+        "(27, 'Arizona_CBC02')",
+    )
+    conn.close()
+
+    assert read_cbc_map(spark, url, derby_props) == {
+        "Feinstein_CBC01": "14", "Arizona_CBC02": "27"}
+    assert read_cbc_map(spark, "", derby_props) == {}
 
 
 def test_pending_submissions_join_live(spark, tmp_path, derby_props):

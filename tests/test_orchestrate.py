@@ -698,6 +698,40 @@ def test_validate_stream_multi_mixed_cbc(spark, tmp_path):
     assert all("Expecting CBC Code" not in m for m in msgs["subA"])
 
 
+def test_cli_run_watcher_stream_failure_exits_4(spark, tmp_path,
+                                                monkeypatch, capsys):
+    """A micro-batch that raises fails the stream: the per-sheet CLI
+    prints one line naming the failure and exits 4 (not a traceback
+    under the timeout code 1)."""
+    import sys
+
+    from nci_seronet_proc_data_validator_spark.streaming import watcher
+
+    sys.path.insert(0, "tools")
+    try:
+        import run_watcher as rw
+    finally:
+        sys.path.pop(0)
+
+    def broken_sink(*_a, **_k):
+        raise RuntimeError("findings sink unavailable")
+
+    monkeypatch.setattr(watcher, "_epoch_sink", broken_sink)
+    d = tmp_path / "landing" / "labA"
+    d.mkdir(parents=True)
+    (d / "demographic.csv").write_text(
+        "Research_Participant_ID,Age,Race\n14_000001,30,White\n")
+    monkeypatch.setattr(sys, "argv", [
+        "run_watcher.py", str(tmp_path / "landing"),
+        "--sheet", "demographic.csv", "--out", str(tmp_path / "wout"),
+        "--checkpoint", str(tmp_path / "wcp"), "--cbc", "labA=14"])
+    assert rw.main() == 4
+    lines = [ln for ln in capsys.readouterr().out.splitlines()
+             if ln.startswith("STREAM FAILED")]
+    assert len(lines) == 1, lines
+    assert "RuntimeError: findings sink unavailable" in lines[0]
+
+
 def test_cli_run_watcher(spark, tmp_path, monkeypatch, capsys):
     """r12: the watcher CLI end-to-end — two labs' sheets landing under
     per-submission dirs, one availableNow drain; rc=0, per-submission

@@ -1,7 +1,7 @@
 """Profiler tier (operators/profiler.py): every type class — including
 the DATE and TIMESTAMP_NTZ columns whose BIGINT casts used to raise
-AnalysisException — plus the profile → suggest_constraints → verify
-round-trip, fk violations, drift, and the approx-distinct at-scale arm.
+AnalysisException — plus constraint verification, fk violations, drift,
+and the fused quality pass with its approx-distinct at-scale arm.
 
 Generalizes the reference's hand-coded per-column rulebook
 (`/root/reference/Validation_Rules.py`) into the schema-driven tier run
@@ -24,8 +24,6 @@ from nci_seronet_proc_data_validator_spark.operators.profiler import (
     not_null,
     profile_drift,
     profile_table,
-    profile_table_approx,
-    suggest_constraints,
     unique,
     verify_constraints,
 )
@@ -106,34 +104,6 @@ def test_verify_constraints_single_pass(typed_df):
     assert m[("s", "matches")] == 1        # 'bbb'
 
 
-def test_profile_suggest_verify_roundtrip(typed_df):
-    import duckdb
-
-    prof = profile_table(typed_df).collect()
-    cons = suggest_constraints(prof)
-    names = {(k.col_name, k.name) for k in cons}
-    # i was complete and all-distinct -> not_null + unique + between
-    assert ("i", "not_null") in names and ("i", "unique") in names
-    assert ("i", "between") in names
-    # every ordered type class gets an envelope constraint
-    assert ("d", "between") in names                       # floating c100
-    assert ("dt", "between") in names                      # DATE literals
-    assert ("CAST(ts AS TIMESTAMP)", "between") in names   # TIMESTAMP
-    assert ("length(s)", "between") in names               # string length
-    # every suggested constraint must verify clean on the data it was
-    # suggested from (the Deequ contract)...
-    violations = _as_map(verify_constraints(typed_df, cons))
-    assert all(v == 0 for v in violations.values()), violations
-    # ...on BOTH engines (the suggested SQL is engine-portable)
-    from nci_seronet_proc_data_validator_spark.operators.profiler import (
-        verify_oracle_sql)
-    con = duckdb.connect()
-    con.register("t", typed_df.drop("arr").toPandas())
-    duck_cons = [k for k in cons if k.col_name != "arr"]
-    for r in con.execute(verify_oracle_sql("t", duck_cons)).fetchall():
-        assert r[2] == 0, r
-
-
 def test_fk_violations_planted(spark, sf_dir):
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
@@ -153,30 +123,6 @@ def test_profile_drift_statuses(typed_df):
     assert drift[("dt", "min_days")] == "added"
     assert drift[("i", "nonnull")] == "changed"     # 4 -> 2
     assert drift[("i", "max")] == "unchanged"       # 4 both sides
-
-
-def test_profile_table_approx_bounds(spark, sf_dir):
-    """The no-Expand at-scale arm: every non-distinct metric bit-equal to
-    the exact form; distinct_approx within HLL++ error of exact."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    exact = _as_map(profile_table(orders))
-    approx = _as_map(profile_table_approx(orders, rsd=0.05))
-    for (c, m), v in approx.items():
-        if m == "distinct_approx":
-            ex = exact[(c, "distinct")]
-            assert abs(v - ex) <= max(3, 0.2 * ex), (c, v, ex)
-        else:
-            assert v == exact[(c, m)], (c, m)
-
-
-def test_approx_profile_plan_has_no_expand(spark, sf_dir):
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    exact_plan = profile_table(orders)._jdf.queryExecution() \
-        .executedPlan().toString()
-    approx_plan = profile_table_approx(orders)._jdf.queryExecution() \
-        .executedPlan().toString()
-    assert "Expand" in exact_plan        # the exact-distinct scale caveat
-    assert "Expand" not in approx_plan   # gone in the HLL++ arm
 
 
 def test_fused_quality_pass_matches_composition(typed_df):
@@ -256,70 +202,6 @@ def test_fused_quality_pass_approx_distinct_no_expand(spark, sf_dir):
             assert abs(v - ex) <= max(3, 0.2 * ex), (arm, c, m)
         else:
             assert v == exact[(arm, c, m)], (arm, c, m)
-
-
-def test_incremental_profile_merges_to_full(spark, sf_dir):
-    """profile_partials per batch + merge_profiles == the one-shot
-    profile: algebraic metrics bit-equal; the merged HLL distinct
-    estimate sits within HLL error of true distinct (union of sketches
-    carries the same error guarantee as a single-pass sketch, though not
-    bit-identical — sparse→dense state transitions depend on order)."""
-    from nci_seronet_proc_data_validator_spark.operators.profiler import (
-        merge_profiles, profile_partials)
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet") \
-        .withColumn("batch", F.col("o_orderkey") % 3)
-    partials = profile_partials(orders, "batch",
-                                columns=["o_orderkey", "o_totalprice",
-                                         "o_orderstatus"])
-    assert partials.count() == 3
-    merged = {(r["col_name"], r["metric"]): r["value"]
-              for r in merge_profiles(partials, "batch").collect()}
-    full = _as_map(profile_table(
-        orders, ["o_orderkey", "o_totalprice", "o_orderstatus"]))
-    for (c, m), v in full.items():
-        if m == "distinct":
-            est = merged[(c, "distinct_hll")]
-            assert abs(est - v) <= max(3, 0.05 * v), (c, est, v)
-        else:
-            assert merged[(c, m)] == v, (c, m)
-
-
-def test_detect_anomalies_bands_and_degenerates(spark):
-    """mean±k·σ band over metric history: a stable metric flags on a 40%
-    swing, normal jitter passes, zero-variance history flags ANY change,
-    an unseen metric flags, and a short history uses min/max equality."""
-    from nci_seronet_proc_data_validator_spark.operators.profiler import (
-        detect_anomalies)
-
-    def prof(rows):
-        return spark.createDataFrame(
-            rows, "col_name string, metric string, value long")
-
-    history = prof(
-        # jittery but stable row count across 4 snapshots
-        [("t", "nonnull", v) for v in (100, 104, 96, 100)]
-        # zero-variance metric
-        + [("t", "max", 7) for _ in range(4)]
-        # short history (2 obs < min_history)
-        + [("t", "min", v) for v in (1, 1)])
-    current = prof([
-        ("t", "nonnull", 101),    # inside band
-        ("t", "max", 8),          # zero-variance history: any change flags
-        ("t", "min", 1),          # short history, equal to min/max band
-        ("t", "sum", 500),        # never seen -> anomaly
-    ])
-    got = {(r["col_name"], r["metric"]): r["is_anomaly"]
-           for r in detect_anomalies(history, current, k=3).collect()}
-    assert got[("t", "nonnull")] is False
-    assert got[("t", "max")] is True
-    assert got[("t", "min")] is False
-    assert got[("t", "sum")] is True
-
-    # the 40% drop cases flags
-    bad = prof([("t", "nonnull", 60)])
-    flag = detect_anomalies(history, bad, k=3).collect()[0]
-    assert flag["is_anomaly"] is True
-    assert flag["band_lo"] <= 10000 <= flag["band_hi"]   # 100 in centi
 
 
 def test_decide_approx_distinct_regimes():

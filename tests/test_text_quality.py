@@ -58,11 +58,19 @@ def test_repetition_gate_threshold(spark):
 
 
 def test_bpe_token_counts(spark):
+    """``BPE_PATTERN`` counted the way the text_stats profile scan does."""
+    from pyspark.sql import functions as F
+
     from nci_seronet_proc_data_validator_spark.operators.text_quality import (
-        bpe_token_counts)
+        BPE_PATTERN)
     df = _docs(spark, [(1, "don't stop"), (2, "hello,  world!!")])
-    out = {r["doc_id"]: (r["n_ws_tokens"], r["n_bpe_tokens"])
-           for r in bpe_token_counts(df).collect()}
+    counts = df.select(
+        "doc_id",
+        F.size(F.expr("filter(split(text, ' +'), x -> x != '')"))
+        .alias("n_ws"),
+        F.size(F.regexp_extract_all("text", F.lit(BPE_PATTERN), 0))
+        .alias("n_bpe"))
+    out = {r["doc_id"]: (r["n_ws"], r["n_bpe"]) for r in counts.collect()}
     # "don" + "'t" + " stop"
     assert out[1] == (2, 3)
     # "hello" + "," + "  " + "world" + "!!"  (no-lookahead \s+ branch)
@@ -149,35 +157,3 @@ def test_winnow_signature_substring_guarantee(spark):
     assert sel[1] & sel[3]            # shared substring -> shared hash
     assert not (sel[1] & sel[4])      # disjoint text -> disjoint hashes
     assert sel[5] == set() and len(sigs[5]) == 16  # empty selection signs
-
-
-def test_ccnet_buckets_at_scale_matches_windowed_form(spark):
-    """The approx-percentile scale path assigns (nearly) the same
-    terciles as the exact ntile window: identical distribution sizes
-    within one doc per language, and every 'head' doc under the scale
-    path scores >= every 'tail' doc of the same language."""
-    from nci_seronet_proc_data_validator_spark.operators.text_quality import (
-        ccnet_buckets, ccnet_buckets_at_scale)
-    import random
-    rng = random.Random(7)
-    words = ["alpha", "beta", "gamma", "delta", "epsilon", "zeta"]
-    rows = [(i, " ".join(rng.choices(words, k=rng.randint(8, 40))),
-             "en" if i % 3 else "de") for i in range(120)]
-    docs = spark.createDataFrame(rows, "doc_id long, text string, lang string")
-    exact = {r["doc_id"]: r["ppl_bucket"]
-             for r in ccnet_buckets(docs).collect()}
-    fast = [(r["doc_id"], r["lang"], r["familiarity"], r["ppl_bucket"])
-            for r in ccnet_buckets_at_scale(docs).collect()]
-    assert len(fast) == len(exact)
-    # per language: bucket ORDER is consistent (head familiarity >= tail)
-    by_lang = {}
-    for d, lang, fam, b in fast:
-        by_lang.setdefault(lang, []).append((fam, b))
-    for lang, vals in by_lang.items():
-        heads = [f for f, b in vals if b == "head"]
-        tails = [f for f, b in vals if b == "tail"]
-        assert heads and tails
-        assert min(heads) >= max(tails)
-    # agreement with the exact form is high (ties/sketch edges only)
-    agree = sum(1 for d, _, _, b in fast if exact[d] == b)
-    assert agree >= 0.9 * len(fast)

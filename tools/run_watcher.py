@@ -42,16 +42,43 @@ Exit codes: 0 drained clean; 1 timeout (backlog remains); 2 usage;
 durable record is in the findings sink under
 ``CSV_Sheet_Name='__submission__'`` (per-submission isolation: a
 poisoned submission never blocks the ones behind it, the reference's
-"Moving onto Next Submitted File" semantics).
+"Moving onto Next Submitted File" semantics); 4 the stream itself
+failed (a micro-batch raised) — one line names the failure, and the
+checkpoint still holds the last committed offset, so a re-run retries
+the failed batch.
 """
 
 from __future__ import annotations
 
 import argparse
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+
+def _await_drain(q, timeout: int) -> int | None:
+    """Wait for the availableNow drain: None once it finished, else the
+    exit code — 1 on timeout (the query is stopped), 4 when the stream
+    failed."""
+    from pyspark.errors import StreamingQueryException
+    try:
+        q.awaitTermination(timeout)
+    except StreamingQueryException as e:
+        # name the Python error a micro-batch raised; otherwise the
+        # engine's own first line
+        msg = str(e)
+        cause = re.search(r"^\w+(?:Error|Exception): .*$", msg, re.M)
+        print("STREAM FAILED: "
+              + (cause.group(0) if cause else msg.splitlines()[0]))
+        return 4
+    if q.isActive:
+        q.stop()
+        print(f"TIMEOUT after {timeout}s — backlog not fully "
+              f"drained; re-run to continue from the checkpoint")
+        return 1
+    return None
 
 
 def main() -> int:
@@ -118,12 +145,9 @@ def main() -> int:
         cbc_by_sub, args.out, max_files_per_trigger=args.max_files,
         status_cb=lambda _f, epoch_id: run_epochs.append(int(epoch_id)),
         icd10_codes=load_icd10_codes(spark))
-    q.awaitTermination(args.timeout)
-    if q.isActive:
-        q.stop()
-        print(f"TIMEOUT after {args.timeout}s — backlog not fully "
-              f"drained; re-run to continue from the checkpoint")
-        return 1
+    rc = _await_drain(q, args.timeout)
+    if rc is not None:
+        return rc
     from pyspark.errors import AnalysisException
     from pyspark.sql import functions as F
     try:
@@ -222,12 +246,9 @@ def _run_complete(args) -> int:
         expected_columns=catalog,
         max_files_per_trigger=args.max_files, complete_cb=on_complete,
         failed_cb=on_failed)
-    q.awaitTermination(args.timeout)
-    if q.isActive:
-        q.stop()
-        print(f"TIMEOUT after {args.timeout}s — backlog not fully "
-              f"drained; re-run to continue from the checkpoint")
-        return 1
+    rc = _await_drain(q, args.timeout)
+    if rc is not None:
+        return rc
     if not completed and not failed:
         print("drained: no submission completed this run (arrivals "
               "recorded; re-run once the remaining sheets land)")
