@@ -99,8 +99,6 @@ def bloom_contaminated(corpus: DataFrame, bench: DataFrame, n: int = 5,
     the exact-join ``contamination.benchmark_overlap`` hits (fp rate
     ~(1 - e^{-j*n/m})^j); at scale this replaces the broadcast of the
     raw n-gram set with a fixed 64 KB bitset."""
-    from nci_seronet_proc_data_validator_spark.operators.contamination \
-        import benchmark_overlap  # noqa: F401  (shape parity reference)
     from nci_seronet_proc_data_validator_spark.operators.dedup import (
         shingle_hashes, shingles, spread_small_input, tokens)
 

@@ -27,7 +27,6 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 MEDIA_SCHEMA = T.StructType([

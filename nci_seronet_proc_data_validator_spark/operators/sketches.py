@@ -33,7 +33,7 @@ corpus read counter 0 (LEFT join + coalesce) on both engines.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 #: HLL geometry: p=8 → m=256 buckets, 24-bit rank suffix, R = 24+1.

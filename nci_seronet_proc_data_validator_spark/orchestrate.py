@@ -101,8 +101,14 @@ def view_registry(spark: SparkSession):
     """``(reg, drop)`` for one statement's temp views. ``reg(df)``
     registers ``df`` under a per-invocation uuid name (concurrent
     compiles never collide) and returns the name ``spark.sql`` queries it
-    by; ``drop()`` drops every registered view — call it right after
-    ``spark.sql``, which resolves views eagerly."""
+    by; ``drop()`` drops every registered view.
+
+    ``spark.sql`` resolves views eagerly, so the statement no longer
+    needs them once built — but ``dropTempView`` also UNCACHES every
+    cached plan equal to the view's plan. A persisted frame registered
+    as is (or a view whose plan reproduces it) loses its cache on
+    ``drop()``, and every later action re-derives it from source. Call
+    ``drop()`` after the last action that should read such a cache."""
     import uuid
 
     run_id = uuid.uuid4().hex[:8]
@@ -200,7 +206,7 @@ def sheet_findings_legs(df: "DataFrame", name: str, columns: "list[str]",
 def validate_batched(spark: SparkSession,
                      subs: "dict[str, dict]",
                      pretagged: "dict[str, DataFrame] | None" = None,
-                     pinned_out: "list | None" = None,
+                     release_out: "list | None" = None,
                      clean_out: "dict | None" = None
                      ) -> "DataFrame":
     """THE rulebook compile: N same-shape submissions (N >= 1) through
@@ -264,17 +270,37 @@ def validate_batched(spark: SparkSession,
 
     ``clean_out``: optional dict the function fills with its per-sheet
     CLEANED tagged union frames — the exact frames the findings compiled
-    from (:func:`validate_batched_results`' one-job A4).
+    from (:func:`validate_batched_results`' one-action A4).
 
-    ``pinned_out``: optional list the function APPENDS its per-sheet
-    persisted union frames to. Those persists are data-scale and
-    multi-consumer within the one compiled statement; once a caller has
-    materialized the findings, ``unpersist()`` each for deterministic
-    release (a resident watcher must).
+    The cleaned unions are persisted for the statement's many
+    consumers. They stay cached only while its temp views live, since
+    dropping a view uncaches equal plans (:func:`view_registry`).
+    ``release_out``: optional list the function APPENDS its one release
+    callable to, before anything is persisted; the callable drops the
+    views and unpersists the unions. A caller that passes it runs every
+    action that should read the caches first, then calls the release in
+    a ``finally`` — also when this function raises. Without it the
+    release runs before the function returns, and the returned plan
+    re-reads its sources on every action.
 
     Returns a DataFrame with ``__submission_id`` + the six finding
     columns, deduplicated per submission with the standard key.
     """
+    releases = [] if release_out is None else release_out
+    try:
+        return _compile_batch(spark, subs, pretagged, releases, clean_out)
+    finally:
+        if release_out is None:
+            for release in releases:
+                release()
+
+
+def _compile_batch(spark: SparkSession, subs: "dict[str, dict]",
+                   pretagged: "dict[str, DataFrame] | None",
+                   release_out: list, clean_out: "dict | None"
+                   ) -> "DataFrame":
+    """The body of :func:`validate_batched`; appends its release to
+    ``release_out`` before the first persist."""
     from pyspark.sql import functions as F
 
     from nci_seronet_proc_data_validator_spark.errors import (
@@ -348,6 +374,14 @@ def validate_batched(spark: SparkSession,
         return u
 
     clean: dict[str, "DataFrame"] = {}
+    reg, drop_views = view_registry(spark)
+
+    def release() -> None:
+        drop_views()
+        for df in clean.values():
+            df.unpersist()
+
+    release_out.append(release)
     if pretagged is not None:
         wanted = next(iter(sheet_sets))
         missing_pre = wanted - set(pretagged)
@@ -379,14 +413,15 @@ def validate_batched(spark: SparkSession,
                          for name, legs in by_sheet.items()}
     for name, u in tagged_sheets.items():
         # Persist: the union is a MULTI-consumer base (findings chunks,
-        # dup-ID leg, Merged_Table projections, submitted-id views) —
-        # unpersisted, every consumer re-parses N submissions' multiLine
-        # CSVs from text. One parse fills the cache; consumers scan
-        # columnar blocks.
+        # dup-ID leg, Merged_Table projections, submitted-id views,
+        # the caller's A4) — unpersisted, every consumer re-parses N
+        # submissions' multiLine CSVs from text and recomputes the
+        # per-file row index (2 shuffles + a broadcast each). One parse
+        # fills the cache and consumers scan columnar blocks, as long
+        # as the views live: `release` drops them only after the
+        # caller's last action.
         clean[name] = cleanup_sheet(
             u, fix_bugs, carry_cols=(SUB_COL, CBC_COL)).persist()
-        if pinned_out is not None:
-            pinned_out.append(clean[name])
     if clean_out is not None:
         clean_out.update(clean)
 
@@ -419,7 +454,6 @@ def validate_batched(spark: SparkSession,
             merged[name] = df.select(SUB_COL, CBC_COL, *mc)
 
     sql_legs: list[str] = []
-    reg, drop_views = view_registry(spark)
     for name, df in clean.items():
         original_cols = [c for c in df.columns
                          if c not in ("row_index", SUB_COL, CBC_COL)]
@@ -479,7 +513,6 @@ def validate_batched(spark: SparkSession,
             group_col=SUB_COL, extra_keys=(CBC_COL,)))
 
     findings = spark.sql(" UNION ALL ".join(sql_legs)) if sql_legs else None
-    drop_views()
     if findings is None:
         out = empty_findings(spark).withColumn(SUB_COL, F.lit(""))
         return out.select(SUB_COL, *FINDING_COLUMNS)
@@ -487,6 +520,54 @@ def validate_batched(spark: SparkSession,
     return findings.dropDuplicates(
         [SUB_COL, "CSV_Sheet_Name", "Row_Index", "Column_Name",
          "Column_Value"])
+
+
+def _a4_counts(tagged: "DataFrame", clean: "dict[str, DataFrame]",
+               subs: "dict[str, dict]") -> "dict[str, dict[str, int]]":
+    """A4's passing-ID counts for the WHOLE batch in ONE action: every
+    (sub, family, sheet, id) of the clean sheets, anti-joined against
+    the same-sheet ID findings of the checkpointed batch on those four
+    keys, then DISTINCT (sub, family, id) counted per (sub, family).
+
+    Returns {family ID column: {submission id: count}}. A family is
+    present when a sheet carries its column and some submission declares
+    its count — also when no ID passes (the caller reads a missing
+    submission as 0)."""
+    from pyspark.sql import functions as F
+
+    from nci_seronet_proc_data_validator_spark.submission import (
+        A4_FAMILIES,
+    )
+
+    declared_of = {
+        "Research_Participant_ID": "declared_participants",
+        "Biospecimen_ID": "declared_biospecimens"}
+    families = [c for c, _label, _fname in A4_FAMILIES
+                if any(c in df.columns for df in clean.values())
+                and any(kw.get(declared_of[c]) is not None
+                        for kw in subs.values())]
+    if not families:
+        return {}
+    ids = None
+    for c in families:
+        for name, df in sorted(clean.items()):
+            if c in df.columns:
+                leg = df.select(SUB_COL, F.lit(c).alias("__family"),
+                                F.lit(name).alias("__sheet"),
+                                F.col(c).alias("__id"))
+                ids = leg if ids is None else ids.unionByName(leg)
+    errs = (tagged.filter(F.col("Column_Name").isin(families)
+                          & (F.col("Row_Index") >= 0))
+            .select(SUB_COL, F.col("Column_Name").alias("__family"),
+                    F.col("CSV_Sheet_Name").alias("__sheet"),
+                    F.col("Column_Value").alias("__id")))
+    counts: "dict[str, dict[str, int]]" = {c: {} for c in families}
+    for r in (ids.join(errs, [SUB_COL, "__family", "__sheet", "__id"],
+                       "left_anti")
+              .select(SUB_COL, "__family", "__id").distinct()
+              .groupBy(SUB_COL, "__family").count().collect()):
+        counts[r["__family"]][r[SUB_COL]] = r["count"]
+    return counts
 
 
 def validate_batched_results(
@@ -506,8 +587,9 @@ def validate_batched_results(
     counts come from each submission's own ``submission.csv``, and the
     reconciling comparison is driver logic in the reference too,
     File_Submission_Object.py:397-415) — but the COUNTS they compare
-    against are computed batch-wide: one grouped anti-join job per ID
-    family over the tagged clean frames, keyed by the submission tag.
+    against are computed batch-wide: one grouped anti-join action over
+    both ID families and the tagged clean frames, keyed by the
+    submission tag (:func:`_a4_counts`).
     Per-submission work is thereafter pure driver logic: dict lookups,
     P10 header set algebra, and lazy plan construction — no actions.
 
@@ -554,48 +636,19 @@ def validate_batched_results(
     # summary, 78 s total. The eager checkpoint truncates lineage to a
     # leaf scan (executor-resident blocks freed by the ContextCleaner) —
     # findings are error-bounded, not data-scale. The per-sheet union
-    # persists (data-scale) have exactly one consumer tree, the
-    # checkpoint materialization and the A4 job below — free them
-    # deterministically right after.
-    pinned: list = []
+    # persists (data-scale) have exactly two consumers, the checkpoint
+    # and the A4 action; the one release (views, then caches) runs right
+    # after them, and on every exit path.
+    releases: list = []
     clean_tagged: dict = {}
-    tagged = validate_batched(
-        spark, subs, pretagged=pretagged, pinned_out=pinned,
-        clean_out=clean_tagged).localCheckpoint(eager=True)
-
-    # -- batched A4: ONE grouped anti-join job per ID family for the
-    # WHOLE batch: anti-join ids against same-sheet ID findings on
-    # (sub, sheet, value), then count DISTINCT (sub, id) per sub.
-    a4_counts: "dict[str, dict[str, int]]" = {}
-    declared_of = {
-        "Research_Participant_ID": "declared_participants",
-        "Biospecimen_ID": "declared_biospecimens"}
-    for col_name, _label, _fname in A4_FAMILIES:
-        family = [(n, df) for n, df in sorted(clean_tagged.items())
-                  if col_name in df.columns]
-        if not family or not any(
-                kw.get(declared_of[col_name]) is not None
-                for kw in subs.values()):
-            continue
-        errs = (tagged.filter((F.col("Column_Name") == col_name)
-                              & (F.col("Row_Index") >= 0))
-                .select(SUB_COL,
-                        F.col("CSV_Sheet_Name").alias("__sheet"),
-                        F.col("Column_Value").alias(col_name)))
-        ids = None
-        for name, df in family:
-            leg = df.select(SUB_COL, F.lit(name).alias("__sheet"),
-                            col_name)
-            ids = leg if ids is None else ids.unionByName(leg)
-        passing = ids.join(errs, [SUB_COL, "__sheet", col_name],
-                           "left_anti")
-        a4_counts[col_name] = {
-            r[SUB_COL]: r["n"]
-            for r in (passing.select(SUB_COL, col_name).distinct()
-                      .groupBy(SUB_COL).agg(F.count("*").alias("n"))
-                      .collect())}
-    for df in pinned:
-        df.unpersist()
+    try:
+        tagged = validate_batched(
+            spark, subs, pretagged=pretagged, release_out=releases,
+            clean_out=clean_tagged).localCheckpoint(eager=True)
+        a4_counts = _a4_counts(tagged, clean_tagged, subs)
+    finally:
+        for release in releases:
+            release()
 
     # A4 comparisons (reference bug §2.9.6: the emitted Column_Value
     # reads an attribute that was never set; we emit the declared count,

@@ -62,11 +62,14 @@ def with_row_index(df: DataFrame, offset: int = 2,
     which is stable for file sources and local relations (the only inputs
     used here); do not insert a nondeterministic transform upstream.
 
-    Cost note: the counts subtree re-runs per ACTION on a non-persisted
-    input (the collect()-based predecessor paid its scan once at build
-    time instead). Multi-action consumers should persist the indexed
-    frame — which the rulebook/submission paths already do per sheet;
-    one-action pipelines see one extra narrow scan, the price of keeping
+    Cost note: the counts subtree re-runs per CONSUMER on a
+    non-persisted input (the collect()-based predecessor paid its scan
+    once at build time instead). Multi-consumer plans should persist the
+    indexed frame and keep the cache alive while they run — the batched
+    compile (``orchestrate.validate_batched``) persists each cleaned
+    sheet and releases it only after its checkpoint and A4 actions,
+    since dropping a temp view over a persisted plan uncaches it.
+    One-action pipelines see one extra narrow scan, the price of keeping
     the offsets distributed instead of an O(#splits) SQL literal.
     """
     mid_col, pid_col, base_col = "__sg_mid", "__sg_pid", "__sg_base"

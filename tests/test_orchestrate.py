@@ -614,15 +614,23 @@ def test_sql_string_map_round_trips_and_refuses_legacy_literals(spark):
         spark.conf.unset("spark.sql.parser.escapedStringLiterals")
 
 
-def test_batched_results_free_data_scale_caches(spark, tmp_path):
+def test_batched_results_free_data_scale_caches(spark, tmp_path,
+                                                monkeypatch):
     """r13 review: validate_batched's per-sheet union persists are
     data-scale (N submissions' parsed CSVs); once validate_batched_results
     has materialized its eager checkpoint they have no consumer, and a
     resident watcher compiling bursts for the query's lifetime must not
     pin them until GC. The call must leave the cache manager EMPTY —
-    the checkpointed findings live as RDD blocks outside it."""
+    the checkpointed findings live as RDD blocks outside it — and no
+    statement view behind, also when the compile raises after its
+    persists (here: the checkpoint)."""
     from nci_seronet_proc_data_validator_spark.orchestrate import (
         validate_batched_results)
+
+    def batched_views() -> list:
+        return [t.name for db in (None, "global_temp")
+                for t in spark.catalog.listTables(db)
+                if t.name.startswith("__batched_")]
 
     spark.catalog.clearCache()
     subs = {f"sub{i}": _load(spark, tmp_path, i) for i in range(3)}
@@ -631,6 +639,17 @@ def test_batched_results_free_data_scale_caches(spark, tmp_path):
         assert r.findings.count() > 0, sid
         r.release()
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()  # noqa: SLF001
+    assert batched_views() == []
+
+    def failing_checkpoint(self, *a, **k):
+        raise RuntimeError("checkpoint failed")
+
+    monkeypatch.setattr(type(spark.range(1)), "localCheckpoint",
+                        failing_checkpoint)
+    with pytest.raises(RuntimeError, match="checkpoint failed"):
+        validate_batched_results(spark, subs)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()  # noqa: SLF001
+    assert batched_views() == []
 
 
 def test_validate_stream_multi_mixed_cbc(spark, tmp_path):

@@ -556,6 +556,98 @@ def test_batched_build_py4j_budget(spark, tmp_path):
                            f"cost crept back in")
 
 
+def test_batched_compile_reads_its_sheet_caches(spark, tmp_path,
+                                                monkeypatch):
+    """The batched compile persists each cleaned sheet union for its many
+    consumers (findings chunks, dup-ID legs, Merged_Table projections,
+    submitted-id views, A4). Dropping a temp view uncaches every equal
+    cached plan, so the compile must keep its views until its last
+    action: when the findings checkpoint runs, every persist of the call
+    is still cached and the optimized findings plan reads no CSV
+    relation outside an InMemoryRelation. A4 then runs as ONE action.
+    Checked for 3 pretagged submissions and for N=1 through
+    SubmissionValidator.validate()."""
+    import datetime
+
+    from nci_seronet_proc_data_validator_spark.orchestrate import (
+        SUB_COL, validate_batched_results)
+    from nci_seronet_proc_data_validator_spark.sources import read_sheet_csv
+    from nci_seronet_proc_data_validator_spark.sources.readers import (
+        read_sheet_csv_tagged)
+    from nci_seronet_proc_data_validator_spark.submission import (
+        SubmissionValidator)
+
+    names = ("demographic.csv", "biospecimen.csv")
+    subs = {}
+    for i in range(3):
+        d = tmp_path / f"s{i}"
+        d.mkdir()
+        (d / names[0]).write_text(
+            "Research_Participant_ID,Age,Race\n"
+            f"14_00000{i},30,White\n14_10000{i},9{i}9,Race_{i}\n")
+        (d / names[1]).write_text(
+            "Research_Participant_ID,Biospecimen_ID,Biospecimen_Type\n"
+            f"14_00000{i},14_00000{i}_001,PBMC\n"
+            f"14_90000{i},14_90000{i}_001,Serum\n")
+        subs[f"s{i}"] = {
+            "sheets": {n: read_sheet_csv(spark, str(d / n)) for n in names},
+            "cbc_id": "14", "today": datetime.date(2026, 1, 1),
+            "declared_participants": 2, "declared_biospecimens": 3}
+    pretagged = {n: read_sheet_csv_tagged(
+        spark, {sid: str(tmp_path / sid / n) for sid in subs}, SUB_COL)
+        for n in names}
+
+    cls = type(spark.range(1))
+    persist, checkpoint, collect = (
+        cls.persist, cls.localCheckpoint, cls.collect)
+    persisted: list = []
+    seen: list = []
+    collects_after = [0]
+
+    def persist_hook(self, *a, **k):
+        persisted.append(self)
+        return persist(self, *a, **k)
+
+    def checkpoint_hook(self, *a, **k):
+        leaves = self._jdf.queryExecution().optimizedPlan().collectLeaves()  # noqa: SLF001
+        csv = [leaf.toString()[:200]
+               for leaf in (leaves.apply(i) for i in range(leaves.length()))
+               if leaf.getClass().getSimpleName() != "InMemoryRelation"
+               and "csv" in leaf.toString()]
+        lost = [str(df.storageLevel) for df in persisted
+                if not (df.storageLevel.useMemory
+                        or df.storageLevel.useDisk)]
+        seen.append((len(persisted), csv, lost))
+        collects_after[0] = 0
+        return checkpoint(self, *a, **k)
+
+    def collect_hook(self):
+        collects_after[0] += 1
+        return collect(self)
+
+    monkeypatch.setattr(cls, "persist", persist_hook)
+    monkeypatch.setattr(cls, "localCheckpoint", checkpoint_hook)
+    monkeypatch.setattr(cls, "collect", collect_hook)
+    for label, run in (
+            ("3 pretagged", lambda: validate_batched_results(
+                spark, subs, pretagged=pretagged)),
+            ("N=1 validate()", lambda: {"s0": SubmissionValidator(
+                spark, **subs["s0"]).validate()})):
+        persisted.clear()
+        seen.clear()
+        results = run()
+        assert len(seen) == 1, label
+        n_persisted, csv, lost = seen[0]
+        assert n_persisted >= len(names), label
+        assert not lost, (label, "sheet caches dropped before the "
+                          "checkpoint", lost)
+        assert not csv, (label, "findings plan re-reads CSVs", csv)
+        assert collects_after[0] == 1, (label, "A4 actions",
+                                         collects_after[0])
+        for r in results.values():
+            r.release()
+
+
 def test_fixture_spread_sizes_directory_tables(tmp_path):
     """The size-derived fixture spread must see the DATA size of a
     Spark-written directory table, not the directory inode (~4 KB),
