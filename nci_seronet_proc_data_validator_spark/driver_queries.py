@@ -20,7 +20,6 @@ order-insensitive value hash):
 from __future__ import annotations
 
 import datetime
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -81,6 +80,7 @@ from nci_seronet_proc_data_validator_spark.operators.training import (
     pack_sequences_oracle_sql,
 )
 from nci_seronet_proc_data_validator_spark.operators.typing import with_typed_shadows
+from nci_seronet_proc_data_validator_spark.orchestrate import view_registry
 from nci_seronet_proc_data_validator_spark.parity import (
     SQL_JDBC_ROUNDTRIP,
     SQL_STREAMING_PARITY,
@@ -92,7 +92,8 @@ from nci_seronet_proc_data_validator_spark.parity import (
 from nci_seronet_proc_data_validator_spark.plans.rules import (
     ColumnRules,
     compile_sheet_findings,
-    dup_id_findings,
+    dup_id_findings_sql,
+    sheet_findings_sql,
 )
 from nci_seronet_proc_data_validator_spark.plans.sql_oracle import (
     rulebook_oracle_sql,
@@ -211,7 +212,10 @@ WHERE NOT regexp_matches(pid, '^14[_]{1}[0-9]{6}$')
 def q_c6_dup_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = read_table(spark, sf_dir, "orders")
     sheet = orders.select(F.col("o_custkey").cast("string").alias("o_custkey"))
-    return dup_id_findings(sheet, "orders.csv", "o_custkey")
+    return _sql_over_views(
+        spark, {"orders": sheet},
+        lambda views: [dup_id_findings_sql(views["orders"], "orders.csv",
+                                           "o_custkey")])[0]
 
 
 SQL_C6 = """
@@ -306,15 +310,19 @@ def q_a2_crosstab(spark: SparkSession, sf_dir: str) -> DataFrame:
         cust.select(F.col("c_custkey").cast("long").alias("row_index"),
                     F.col("c_mktsegment").cast("string").alias("seg"),
                     F.col("c_acctbal").cast("string").alias("c_acctbal")))
-    checks = [
-        CheckExpr(F.col("c_acctbal__num") > 9000, "balance too high", "Error"),
-        CheckExpr(F.col("c_acctbal__num") < 500, "balance low", "Warning"),
-    ]
-    # Route through the real compiler path (sheet label is the per-row
-    # segment column) so the oracle proves the engine, not a re-implementation.
-    findings = compile_sheet_findings(
-        sheet, F.col("seg"), [ColumnRules("c_acctbal", checks)])
-    wide = findings_summary(findings)
+    rules = [ColumnRules("c_acctbal", [
+        CheckExpr("c_acctbal__num > 9000", "balance too high", "Error"),
+        CheckExpr("c_acctbal__num < 500", "balance low", "Warning"),
+    ])]
+    # Route through the real findings render so the oracle proves the
+    # engine, not a re-implementation; the sheet label is the per-row
+    # segment, carried through the explode.
+    [findings] = _sql_over_views(
+        spark, {"customer": sheet},
+        lambda views: sheet_findings_sql(views["customer"], "customer.csv",
+                                         rules, carry_cols=("seg",)))
+    wide = findings_summary(findings.withColumn("CSV_Sheet_Name",
+                                                F.col("seg")))
     # Round-trip through unpivot (relational melt) and re-pivot via
     # conditional aggregation: the output schema/values are unchanged
     # (the oracle below is untouched) but the unpivot operator now sits
@@ -381,18 +389,16 @@ def _sql_over_views(spark: SparkSession, frames: dict[str, DataFrame],
     """``spark.sql`` of each statement in ``render(views)``, where
     ``views`` maps each key of ``frames`` to a temp view of its frame.
 
-    View names carry a per-call uuid, so concurrent builds in one session
-    (e.g. a thread pool constructing QUERIES) never replace each other's
-    views; they are dropped once ``spark.sql`` has resolved them."""
-    run_id = uuid.uuid4().hex[:8]
-    views = {n: f"__q_{run_id}_{i}" for i, n in enumerate(frames)}
-    for n, df in frames.items():
-        df.createOrReplaceTempView(views[n])
+    The views come from :func:`orchestrate.view_registry`, so concurrent
+    builds in one session (e.g. a thread pool constructing QUERIES) never
+    replace each other's views; they are dropped once ``spark.sql`` has
+    resolved them."""
+    reg, drop = view_registry(spark)
     try:
+        views = {n: reg(df) for n, df in frames.items()}
         return [spark.sql(sql) for sql in render(views)]
     finally:
-        for v in views.values():
-            spark.catalog.dropTempView(v)
+        drop()
 
 
 def q_j3_presence_patterns(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3091,8 +3097,7 @@ def q_rulebook_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nci_seronet_proc_data_validator_spark.plans.sql_oracle import (
         rulebook_bound_sheets,
     )
-    import os as _os
-    spread = int(_os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    spread = spark.sparkContext.defaultParallelism
     icd = icd10_dict_df(spark, sf_dir)
     # The per-sheet findings/dup legs and the cross-sheet legs are
     # assembled as SQL TEXT over temp views and submitted as ONE
@@ -3105,10 +3110,10 @@ def q_rulebook_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     for i, (spec, bound) in enumerate(sheets):
         # persist=True: each sheet feeds the findings pass, a pass per
         # dup-ID column, and the cross-sheet spines — the cached cast
-        # base is scanned k× instead of re-shuffled k×. (Sharing one
-        # persisted base per distinct base table was measured SLOWER at
-        # sf0.1 — the deduped shuffles are tiny while the typed shadows
-        # recompute per consumer; see fixture_sheet_df's base_df hook.)
+        # base is scanned k× instead of re-shuffled k×. (One persisted
+        # base per sheet, not per distinct base table: sharing measured
+        # SLOWER at sf0.1 — the deduped shuffles are tiny while the typed
+        # shadows recompute per consumer.)
         df = fixture_sheet_df(spark, sf_dir, spec, spread_partitions=spread,
                               persist=True)
         # the spines read the persisted sheet from before the ICD-10 join

@@ -9,10 +9,11 @@ Error_Message)`` (``File_Submission_Object.py:21``) and a column-level table
 (``File_Submission_Object.py:19-20``).
 
 Spark-first design: findings are never appended row-by-row. Each rule
-compiles to a Column predicate; all rules of a sheet are evaluated in ONE
+renders to a SQL predicate; all rules of a sheet are evaluated in ONE
 projection that builds an ``array<struct>`` of candidate findings and
 explodes the non-null ones — a single whole-stage-codegen pass over the
-sheet. Cross-rule combination is ``unionByName`` of already-bulk DataFrames.
+sheet (``plans/rules.py``). Cross-rule combination is ``unionByName`` of
+already-bulk DataFrames.
 
 Deviation from reference recorded per SURVEY.md §2.9(5): dedup of findings
 includes ``CSV_Sheet_Name`` in the key (the reference's ``sort_and_drop``
@@ -23,8 +24,7 @@ from __future__ import annotations
 
 from typing import Iterable
 
-from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 MESSAGE_TYPE = "Message_Type"
@@ -121,45 +121,6 @@ def sql_string_map(spark: SparkSession, pairs) -> str:
     def q(s: str) -> str:
         return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
     return "map(" + ", ".join(f"{q(k)}, {q(v)}" for k, v in pairs) + ")"
-
-
-def finding_struct(severity: Column | str, sheet: Column | str,
-                   row_index: Column, column_name: Column | str,
-                   column_value: Column, message: Column) -> Column:
-    """A struct Column in canonical finding shape (for array+explode)."""
-    sev = F.lit(severity) if isinstance(severity, str) else severity
-    sh = F.lit(sheet) if isinstance(sheet, str) else sheet
-    cn = F.lit(column_name) if isinstance(column_name, str) else column_name
-    return F.struct(
-        sev.cast("string").alias(MESSAGE_TYPE),
-        sh.cast("string").alias(SHEET_NAME),
-        row_index.cast("long").alias(ROW_INDEX),
-        cn.cast("string").alias(COLUMN_NAME),
-        column_value.cast("string").alias(COLUMN_VALUE),
-        message.cast("string").alias(ERROR_MESSAGE),
-    )
-
-
-def explode_findings(df: DataFrame, candidates: list[Column]) -> DataFrame:
-    """Evaluate many rule candidates in ONE pass over ``df``.
-
-    ``candidates`` are Columns of finding-struct-or-null (use
-    ``F.when(violation, finding_struct(...))``). Builds an array, explodes,
-    drops null elements. One scan, no unions, fully codegen'd — the shape
-    that scales to 100 TB (vs. the reference's per-rule filter+append,
-    ``File_Submission_Object.py:151``).
-
-    Null stripping happens AFTER the explode (``WHERE _f IS NOT NULL``)
-    rather than via ``array_compact``: array_compact desugars to a
-    higher-order ``filter(..., lambda)`` which is CodegenFallback and
-    demotes the whole candidate expression tree to interpreted evaluation.
-    """
-    if not candidates:
-        return empty_findings(df.sparkSession)
-    arr = F.array(*candidates)
-    return (df.select(F.explode(arr).alias("_f"))
-              .where(F.col("_f").isNotNull())
-              .select(*[F.col(f"_f.{c}").alias(c) for c in FINDING_COLUMNS]))
 
 
 def union_findings(parts: Iterable[DataFrame]) -> DataFrame | None:

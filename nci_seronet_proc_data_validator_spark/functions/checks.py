@@ -15,12 +15,10 @@ fixture CTEs). The only dialect split is the regex function name, carried
 by the ``__rlike__`` placeholder (→ ``regexp_like`` on Spark,
 ``regexp_matches`` on DuckDB). One template, two renders — the engine and
 its oracle cannot drift, and binding a rulebook builds no JVM objects at
-all (a ~400-check bind is pure string work; Column trees materialize
-lazily, via ``F.expr``, only when a query compiles).
-
-``CheckExpr.violation`` may also be a pyspark Column for caller-supplied
-custom rules; such checks have no SQL mirror (``sql`` is None) and the
-sheet compiler falls back to Column composition.
+all (a ~400-check bind is pure string work; this module imports nothing
+from pyspark). SQL text is the only check representation: ``CheckExpr``
+refuses anything else at construction, so every render path (the Spark
+findings statement, the DuckDB oracle, dependency scoping) can assume it.
 
 Message strings reproduce the reference **verbatim**, including its typos
 ("interger", "databse", "requred", double spaces) — they are observable
@@ -41,9 +39,6 @@ from __future__ import annotations
 
 import datetime as _dt
 from dataclasses import dataclass
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 from nci_seronet_proc_data_validator_spark.operators.typing import (
     num_col,
@@ -68,38 +63,36 @@ def render_duckdb_sql(template: str) -> str:
 class CheckExpr:
     """One error class: rows where ``violation`` holds get ``message``.
 
-    ``violation``: a shared-dialect SQL template (normal case — renders to
-    both Spark and DuckDB), or a pyspark Column (custom caller rules, no
-    oracle mirror).
+    ``violation``: a shared-dialect SQL template (renders to both Spark
+    and DuckDB).
 
     ``message_sql``: optional shared-dialect SQL template for a PER-ROW
     message (batched multi-CBC mode renders the C5 "wrong CBC code"
     message as a CASE over the submission's ``__cbc_id`` column). When
     set, it takes precedence over ``message`` in every render path;
-    ``message`` remains a plain-string description so texty-path
-    detection (one selectExpr per sheet) is unaffected.
+    ``message`` remains a plain-string description.
+
+    A non-``str`` ``violation``, ``message`` or ``message_sql`` (e.g. a
+    pyspark Column) raises ``TypeError``: it has no text form to render.
     """
-    violation: str | Column
-    message: Column | str
+    violation: str
+    message: str
     severity: str = ERROR
     message_sql: str | None = None
 
-    def violation_col(self) -> Column:
-        if isinstance(self.violation, Column):
-            return self.violation
-        return F.expr(render_spark_sql(self.violation))
+    def __post_init__(self) -> None:
+        for name in ("violation", "message", "message_sql"):
+            v = getattr(self, name)
+            if not (isinstance(v, str)
+                    or (v is None and name == "message_sql")):
+                raise TypeError(
+                    f"CheckExpr.{name} must be SQL text (str), got "
+                    f"{type(v).__name__}")
 
     @property
-    def sql(self) -> str | None:
-        """The DuckDB render of the predicate (None for Column rules)."""
-        if isinstance(self.violation, Column):
-            return None
+    def sql(self) -> str:
+        """The DuckDB render of the predicate."""
         return render_duckdb_sql(self.violation)
-
-    def msg_col(self) -> Column:
-        if self.message_sql is not None:
-            return F.expr(render_spark_sql(self.message_sql))
-        return F.lit(self.message) if isinstance(self.message, str) else self.message
 
 
 # ------------------------------------------------------------ SQL fragments
@@ -151,9 +144,6 @@ class Dependency:
         if not vals:
             return "(FALSE)"  # empty scope — 'IN ()' would not parse
         return f"({self.column} IN ({_sql_str_list(vals)}))"
-
-    def predicate(self) -> Column:
-        return F.expr(render_spark_sql(self.predicate_sql()))
 
     def error_str(self) -> str:
         # Trailing spaces match the reference exactly.

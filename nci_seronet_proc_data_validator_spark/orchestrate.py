@@ -182,13 +182,6 @@ def sheet_findings_legs(df: "DataFrame", name: str, columns: "list[str]",
     bound = bind_sheet_rules_cached(
         name, list(columns), cbc, drop_list=drop_list, today=today,
         fix_reference_bugs=fix_reference_bugs)
-    if not all(isinstance(ce.violation, str)
-               and isinstance(ce.message, str)
-               for cr in bound.column_rules for ce in cr.checks):
-        raise ValueError(
-            f"the findings compile renders SQL text; sheet {name} bound "
-            f"a Column-valued check (custom caller rule) that has no "
-            f"text form")
     have = set(df.columns)
     missing = [f"{v} AS {c}" for c, v in _DEPENDENCY_DEFAULTS.items()
                if c not in have]
@@ -240,8 +233,6 @@ def validate_batched(spark: SparkSession,
       dependency columns it would never get on its own;
     - same-named sheets (and same-named fallback tables) share an
       identical column set (one schema → one compiled rule set);
-    - every bound check must render as SQL text (always true for the
-      built-in rulebook; a Column-valued custom rule has no text form);
     - ``icd10_codes`` may be passed in any submission's kwargs; the
       first non-None wins (it is a shared dictionary by nature).
 

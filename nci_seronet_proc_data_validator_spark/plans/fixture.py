@@ -596,8 +596,7 @@ def _table_data_size(sf_dir: str, base: str) -> int | None:
 
 def fixture_sheet_df(spark: SparkSession, sf_dir: str, spec: SheetFixture,
                      spread_partitions: int | None = None,
-                     persist: bool = False,
-                     base_df: DataFrame | None = None) -> DataFrame:
+                     persist: bool = False) -> DataFrame:
     """Materialize one fixture sheet in Spark (with typed shadows).
 
     ``spread_partitions``: local testdata is ONE parquet file with ~3 row
@@ -616,20 +615,7 @@ def fixture_sheet_df(spark: SparkSession, sf_dir: str, spec: SheetFixture,
     computes only the shadows Catalyst doesn't prune for it. Callers own
     the unpersist (or rely on LRU eviction — the cast base is a slim
     string projection of the source).
-
-    ``base_df``: a pre-repartitioned (and typically persisted) base table
-    shared across every sheet derived from it — the 10 fixture sheets use
-    only 5 distinct bases, so sharing turns 10 spread shuffles into 5
-    cached scans (``spread_partitions``/``persist`` are the caller's
-    responsibility in that mode and ignored here).
     """
-    if base_df is not None:
-        return with_typed_shadows(
-            base_df.selectExpr(
-                f"CAST({spec.key} AS LONG) AS row_index",
-                *[f"CAST({e} AS STRING) AS {c}"
-                  for c, e in spec.columns.items()]),
-            [c for c in spec.columns if c not in spec.drop_list])
     base = read_table(spark, sf_dir, spec.base)
     if spread_partitions:
         # Size-derived spread (r13, guide §2.5): a blanket

@@ -3,18 +3,18 @@ Spark engine compiles.
 
 ``bind_sheet_rules`` produces, per column, an ordered list of ``CheckExpr``
 — each holding ONE shared-dialect SQL template that renders to Spark
-(``violation_col``) and to DuckDB (``sql``) — see ``functions/checks.py``.
-Binding builds no Column objects, so this assembly runs without a
-SparkContext (the driver calls ``oracle_sql()`` sessionless). This module
-turns that binding into one SQL statement:
+(``render_spark_sql``) and to DuckDB (``sql``) — see
+``functions/checks.py``. Binding builds no Column objects, so this
+assembly runs without a SparkContext (the driver calls ``oracle_sql()``
+sessionless). This module turns that binding into one SQL statement:
 
 - per sheet, a CTE with the fixture's shared-dialect value expressions
   (``plans/fixture.py``);
 - per bound column, one SELECT whose severity/message are first-match CASE
   chains over the checks **in dispatch order** — the SQL equivalent of the
-  engine's keep-first ``coalesce`` (``plans/rules.py:56-65``);
+  engine's keep-first ``coalesce`` (``plans/rules.py:_findings_array_sql``);
 - per duplicate-ID column, a GROUP BY/HAVING SELECT with sentinel
-  Row_Index −3 (mirroring ``plans/rules.py:dup_id_findings``).
+  Row_Index −3 (mirroring ``plans/rules.py:dup_id_findings_sql``).
 
 Post-compile finding keys (CSV_Sheet_Name, Row_Index, Column_Name,
 Column_Value) are unique by construction (one candidate survives per
@@ -59,12 +59,6 @@ def _column_select(cte: str, sheet: str, column: str, checks) -> str:
     msg = []
     conds = []
     for ce in checks:
-        if ce.sql is None:
-            raise ValueError(
-                f"check on {sheet}.{column} has no SQL mirror")
-        if not isinstance(ce.message, str):
-            raise ValueError(
-                f"check on {sheet}.{column} has a non-literal message")
         conds.append(ce.sql)
         sev.append(f"WHEN {ce.sql} THEN '{ce.severity}'")
         # message_sql (per-row message template, batched multi-CBC C5)

@@ -15,7 +15,7 @@ from nci_seronet_proc_data_validator_spark.operators.typing import with_typed_sh
 from nci_seronet_proc_data_validator_spark.plans.rulebook import bind_sheet_rules
 from nci_seronet_proc_data_validator_spark.plans.rules import (
     compile_sheet_findings,
-    dup_id_findings,
+    dup_id_findings_sql,
 )
 
 
@@ -84,14 +84,34 @@ def test_keep_first_dedup_per_cell(spark):
 def test_dup_ids(spark):
     rows = [("14_000001", "30", "White"), ("14_000001", "31", "White"),
             ("14_000002", "32", "White")]
-    df = with_typed_shadows(_sheet(spark, rows, COLS))
-    dups = dup_id_findings(df, "demographic.csv", "Research_Participant_ID")
-    got = dups.collect()
+    with_typed_shadows(_sheet(spark, rows, COLS)) \
+        .createOrReplaceTempView("__t_dup_ids")
+    got = spark.sql(dup_id_findings_sql(
+        "__t_dup_ids", "demographic.csv", "Research_Participant_ID")).collect()
     assert len(got) == 1
     assert got[0]["Row_Index"] == -3
     assert got[0]["Column_Value"] == "14_000001"
     assert got[0]["Error_Message"] == \
         "Id is repeated 2 times, Multiple repeats are not allowed"
+
+
+def test_check_expr_refuses_column_valued_checks(spark):
+    """A check is SQL text only: a pyspark Column (or any non-str) in
+    ``violation``, ``message`` or ``message_sql`` has no text form for
+    the findings render or the DuckDB oracle, so construction refuses
+    it."""
+    from pyspark.sql import functions as F
+
+    from nci_seronet_proc_data_validator_spark.functions.checks import (
+        CheckExpr,
+    )
+    with pytest.raises(TypeError, match="violation"):
+        CheckExpr(F.col("Age") == "13", "x")
+    with pytest.raises(TypeError, match="message"):
+        CheckExpr("Age = '13'", F.lit("x"))
+    with pytest.raises(TypeError, match="message_sql"):
+        CheckExpr("Age = '13'", "x", message_sql=F.lit("x"))
+    assert CheckExpr("Age = '13'", "x").sql == "Age = '13'"
 
 
 def test_sars_conditional_missing_and_dependency(spark):

@@ -1,7 +1,8 @@
 """Cross-engine parity for the dual-backend check builders.
 
-Every ``CheckExpr`` carries the Spark Column predicate AND a DuckDB SQL
-mirror emitted by the same builder (``functions/checks.py``). The
+Every ``CheckExpr`` carries ONE shared-dialect SQL template that renders
+to Spark (``render_spark_sql``) and to DuckDB (``sql``)
+(``functions/checks.py``). The
 rulebook_full fixture exercises them end-to-end; this test attacks each
 builder directly with a hostile value set — blanks, N/A, coercible
 numerics ('1e3', '-0', 'NaN', 'Infinity'), ISO dates/times, underscore
@@ -40,8 +41,9 @@ VALUES = [
 
 
 def _both(spark, check_list, extra_cols=None):
-    """Evaluate checks via Spark Columns and via DuckDB SQL over the same
-    little table; return ([spark_hits], [duck_hits]) as (row, msg, sev)."""
+    """Evaluate checks via their Spark SQL render and via DuckDB SQL over
+    the same little table; return ([spark_hits], [duck_hits]) as
+    (row, check number)."""
     extra_cols = extra_cols or {}
     rows = [{"row_index": i, "v": v, **{k: f(v) for k, f in
              extra_cols.items()}} for i, v in enumerate(VALUES)]
@@ -53,7 +55,7 @@ def _both(spark, check_list, extra_cols=None):
 
     spark_hits = []
     for k, ce in enumerate(check_list):
-        got = (sdf.filter(ce.violation_col())
+        got = (sdf.filter(F.expr(C.render_spark_sql(ce.violation)))
                .select("row_index").toPandas()["row_index"].tolist())
         spark_hits += [(r, k) for r in got]
 
@@ -65,7 +67,6 @@ def _both(spark, check_list, extra_cols=None):
     shadows = ", ".join(duckdb_shadow_exprs(["v", *extra_cols]))
     duck_hits = []
     for k, ce in enumerate(check_list):
-        assert ce.sql is not None
         got = con.execute(
             f"SELECT row_index FROM (SELECT *, {shadows} FROM t) "
             f"WHERE {ce.sql}"

@@ -483,37 +483,6 @@ def test_cli_isolates_unreadable_submission(spark, tmp_path, monkeypatch,
             == _cli_twin(spark, str(good), {"LabX": "14"}))
 
 
-def test_batched_rejects_column_valued_checks(spark, tmp_path, monkeypatch):
-    """r12 (ADVICE): a Column-valued CheckExpr (custom caller rule) has
-    no SQL text form; the compile must refuse it with a clear ValueError
-    instead of crashing inside render_spark_sql."""
-    from pyspark.sql import functions as F
-
-    from nci_seronet_proc_data_validator_spark import orchestrate as orch
-    from nci_seronet_proc_data_validator_spark.functions.checks import (
-        CheckExpr)
-    from nci_seronet_proc_data_validator_spark.plans import rulebook as rb
-    from nci_seronet_proc_data_validator_spark.plans.rules import ColumnRules
-
-    real_bind = rb.bind_sheet_rules_cached
-
-    def bind_with_column_rule(sheet, columns, cbc_id, **kw):
-        bound = real_bind(sheet, columns, cbc_id, **kw)
-        import copy
-        bound = copy.copy(bound)
-        bound.column_rules = [*bound.column_rules, ColumnRules(
-            "Age", [CheckExpr(F.col("Age") == "13", "unlucky age")])]
-        return bound
-
-    monkeypatch.setattr(
-        "nci_seronet_proc_data_validator_spark.plans.rulebook."
-        "bind_sheet_rules_cached", bind_with_column_rule)
-
-    subs = {"s0": _load(spark, tmp_path, 0)}
-    with pytest.raises(ValueError, match="SQL text"):
-        orch.validate_batched(spark, subs)
-
-
 def test_batched_db_merged_tables_matches_serial(spark, tmp_path):
     """Per-submission DB fallback parents (db_merged_tables, the S5 JDBC
     reads) ride the batched compile: each submission's fallback is

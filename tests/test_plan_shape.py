@@ -248,29 +248,40 @@ def test_no_driver_query_has_global_window(spark, sf_dir):
     assert not bad, f"global windows found: {bad}"
 
 
-def test_rulebook_sheet_findings_map_only(spark, sf_dir):
-    """The flagship's per-sheet findings pass must stay one map-only scan:
-    scan → value projection → shadows → check explode, no Exchange (the
-    only shuffles in rulebook_full are the dup-ID aggs and the cross-sheet
-    spines). Guarded without the local-testdata spread repartition, i.e.
-    the shape a real pre-split cluster input gets."""
+def _biospecimen_findings_sql(spark, sf_dir, view):
+    """The widest rulebook sheet's findings as the one ``spark.sql``
+    statement both production paths issue (``q_rulebook_full`` and the
+    batched compile): ``sheet_findings_sql`` over a temp view, chunked
+    by 9 rule groups."""
     from nci_seronet_proc_data_validator_spark.plans.fixture import (
         fixture_sheet_df,
     )
     from nci_seronet_proc_data_validator_spark.plans.rules import (
-        compile_sheet_findings,
+        sheet_findings_sql,
     )
     from nci_seronet_proc_data_validator_spark.plans.sql_oracle import (
         rulebook_bound_sheets,
     )
-    for spec, bound in rulebook_bound_sheets():
-        if spec.sheet != "biospecimen.csv":     # the widest sheet
-            continue
-        df = fixture_sheet_df(spark, sf_dir, spec)
-        plan = _plan(compile_sheet_findings(df, spec.sheet,
-                                            bound.column_rules))
-        assert "Exchange" not in plan, plan[:2000]
-        assert plan.count("Scan parquet") == 1
+    spec, bound = next((s, b) for s, b in rulebook_bound_sheets()
+                       if s.sheet == "biospecimen.csv")
+    fixture_sheet_df(spark, sf_dir, spec).createOrReplaceTempView(view)
+    legs = sheet_findings_sql(view, spec.sheet, bound.column_rules,
+                              codegen_chunk=9)
+    assert len(legs) > 1
+    return spark.sql(" UNION ALL ".join(legs)), len(legs)
+
+
+def test_rulebook_sheet_findings_map_only(spark, sf_dir):
+    """The flagship's per-sheet findings pass must stay map-only scans:
+    scan → value projection → shadows → check explode, no Exchange (the
+    only shuffles in rulebook_full are the dup-ID aggs and the cross-sheet
+    spines). Guarded without the local-testdata spread repartition, i.e.
+    the shape a real pre-split cluster input gets: one parquet scan per
+    codegen chunk."""
+    f, n_legs = _biospecimen_findings_sql(spark, sf_dir, "__t_plan_bio_map")
+    plan = _plan(f)
+    assert "Exchange" not in plan, plan[:2000]
+    assert plan.count("Scan parquet") == n_legs
 
 
 def test_rulebook_findings_codegen(spark, sf_dir):
@@ -288,27 +299,17 @@ def test_rulebook_findings_codegen(spark, sf_dir):
     import contextlib
     import io
 
-    from nci_seronet_proc_data_validator_spark.plans.fixture import (
-        fixture_sheet_df,
-    )
-    from nci_seronet_proc_data_validator_spark.plans.rules import (
-        compile_sheet_findings,
-    )
-    from nci_seronet_proc_data_validator_spark.plans.sql_oracle import (
-        rulebook_bound_sheets,
-    )
-    spec, bound = next((s, b) for s, b in rulebook_bound_sheets()
-                       if s.sheet == "biospecimen.csv")
-    df = fixture_sheet_df(spark, sf_dir, spec)
-    f = compile_sheet_findings(df, spec.sheet, bound.column_rules)
+    f, n_legs = _biospecimen_findings_sql(spark, sf_dir, "__t_plan_bio_cg")
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         f.explain("formatted")
     plan = buf.getvalue()
     ops = [ln.strip() for ln in plan.splitlines()]
-    gen = [ln for ln in ops if "Generate" in ln and ("+-" in ln or ln.startswith("*"))]
-    assert gen and all(ln.lstrip("+- ").startswith("* ") or ln.startswith("* ")
-                       for ln in gen), gen
+    # operator-tree lines (not the numbered details), one per leg
+    gen = [ln.lstrip(":+- ") for ln in ops
+           if "Generate" in ln and ("+-" in ln or ln.startswith("*"))]
+    assert len(gen) == n_legs, gen
+    assert all(ln.startswith("* ") for ln in gen), gen
     assert "array_compact" not in plan
 
 

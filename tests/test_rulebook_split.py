@@ -11,9 +11,11 @@ Three claims the restructured ``q_rulebook_full`` rests on:
    source's duplicate keys into one spine row and carries a column as
    its per-key min (its outer-join equivalence is oracle-checked by the
    ``j3_presence_patterns`` and ``j4_bio_spine`` queries);
-3. the one-statement SQL assembly produced by ``sheet_findings_sql`` /
-   ``dup_id_findings_sql`` returns exactly what the DataFrame compile
-   path (``compile_sheet_findings`` / ``dup_id_findings``) returns.
+3. the chunked one-statement SQL assembly produced by
+   ``sheet_findings_sql`` returns exactly what the unchunked
+   ``compile_sheet_findings`` projection returns, and
+   ``dup_id_findings_sql`` flags exactly the IDs a plain DataFrame
+   ``groupBy`` counts more than once.
 """
 
 import pytest
@@ -76,7 +78,6 @@ def test_sheet_findings_sql_matches_dataframe_compile(spark):
     )
     from nci_seronet_proc_data_validator_spark.plans.rules import (
         compile_sheet_findings,
-        dup_id_findings,
         dup_id_findings_sql,
         sheet_findings_sql,
     )
@@ -97,9 +98,14 @@ def test_sheet_findings_sql_matches_dataframe_compile(spark):
     via_df = compile_sheet_findings(df, spec.sheet, bound.column_rules)
     assert _rows(via_sql) == _rows(via_df)
     col = bound.dup_id_columns[0]
-    assert _rows(spark.sql(dup_id_findings_sql("__t_rb_split",
-                                               spec.sheet, col))) == \
-        _rows(dup_id_findings(df, spec.sheet, col))
+    dups = {r[col]: r["count"]
+            for r in df.groupBy(col).count().filter("count > 1").collect()}
+    assert dups, "the fixture should repeat some IDs"
+    got = spark.sql(dup_id_findings_sql("__t_rb_split", spec.sheet, col))
+    assert _rows(got) == sorted(
+        ("Error", spec.sheet, "-3", col, str(v),
+         f"Id is repeated {n} times, Multiple repeats are not allowed")
+        for v, n in dups.items())
 
 
 def test_bind_cache_identity_and_render_parity():
