@@ -36,6 +36,7 @@ Three layers, each the only one of its kind:
 from __future__ import annotations
 
 import logging
+import threading
 import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
@@ -713,10 +714,14 @@ def validate_groups(spark: SparkSession,
     Each group runs on its own worker thread (the calling thread when
     there is only one group), at most ``max_parallel`` at once: the
     per-group work is driver-build-heavy and the GIL serializes builds
-    past ~4 threads (BENCH_NOTES r11). Its jobs carry a per-group FAIR
-    pool (``submission-<first member>``) and job description, THREAD-
-    LOCAL properties (pinned thread mode) restored when the worker ends,
-    so nothing later on the same thread inherits them.
+    past ~4 threads (BENCH_NOTES r11). Its jobs carry a job description
+    and a FAIR pool named after the worker thread, so concurrent groups
+    land in distinct pools while the pool tree stays bounded at
+    ``max_parallel`` + 1 (Spark creates an undeclared pool on first use
+    and never removes it; a pool per submission would grow a resident
+    watcher's tree forever). Both are THREAD-LOCAL properties (pinned
+    thread mode) restored when the worker ends, so nothing later on the
+    same thread inherits them.
 
     Isolation (the reference's "Moving onto Next Submitted File" loop,
     nci-seronet-data-validator.py:70,109-111): when a group's compile
@@ -754,7 +759,7 @@ def validate_groups(spark: SparkSession,
         prev = [(k, sc.getLocalProperty(k))
                 for k in ("spark.scheduler.pool", "spark.job.description")]
         sc.setLocalProperty("spark.scheduler.pool",
-                            f"submission-{members[0]}")
+                            threading.current_thread().name)
         sc.setJobDescription(
             f"validate submission {members[0]}" if len(members) == 1
             else f"validate {len(members)} submissions ({members[0]}, ...)")

@@ -31,10 +31,10 @@ import warnings
 
 from pyspark.sql import DataFrame
 
-__all__ = ["ScaleHazardWarning", "advise_plan", "warn_deep_lineage",
+__all__ = ["ScaleHazardWarning", "advise_plan",
            "warn_fixed_k", "check_declared_bound",
            "warn_nonsplittable_csv", "PAIR_BUDGET",
-           "LINEAGE_NODE_BUDGET", "NONSPLITTABLE_CSV_BUDGET"]
+           "NONSPLITTABLE_CSV_BUDGET"]
 
 
 class ScaleHazardWarning(UserWarning):
@@ -126,15 +126,15 @@ def warn_nonsplittable_csv(paths: "str | list[str]",
                            ) -> list[str]:
     """Invocation rule: oversized single-file multiLine CSV reads.
 
-    ``multiLine=true`` (the record-correct default of
-    ``sources.readers.read_sheet_csv``) makes each CSV file
+    Every sheet reader parses with ``multiLine=true``
+    (``sources.readers.sheet_csv_options``), which makes each CSV file
     non-splittable — one task parses the whole file. Fine for
     submission sheets (parallelism comes from MANY files); a single
     machine-generated multi-GB export silently serializes onto one
     core. This rule stats the resolved input files and warns for each
-    one over ``budget_bytes``; the caller's escape hatch is
-    ``read_sheet_csv(..., multiline=False)`` when the file is KNOWN
-    free of quoted embedded newlines.
+    one over ``budget_bytes``; the remedy is upstream: pre-split the
+    file into several sheets, or convert it to a splittable format
+    before it reaches the validator.
 
     Local-filesystem stat only (globs and directories resolved one
     level); non-local URIs are skipped — on an object store the driver
@@ -166,64 +166,12 @@ def warn_nonsplittable_csv(paths: "str | list[str]",
         if size > budget_bytes:
             msg = (f"non-splittable-csv: {f} is {size / 1024**2:.0f} MiB "
                    f"and multiLine CSV parses each file on ONE task "
-                   f"(budget {budget_bytes / 1024**2:.0f} MiB). If the "
-                   f"file cannot contain quoted embedded newlines, read "
-                   f"it with multiline=False to restore splittability; "
-                   f"otherwise pre-split it at generation time.")
+                   f"(budget {budget_bytes / 1024**2:.0f} MiB). Pre-split "
+                   f"it into several files, or convert it upstream to a "
+                   f"splittable format.")
             warnings.warn(msg, ScaleHazardWarning, stacklevel=3)
             msgs.append(msg)
     return msgs
-
-
-#: Analyzed-plan size (rendered lines ~ tree nodes) above which a CACHED
-#: DataFrame that will serve several derived actions pays a material
-#: driver tax per action. ~200 lines is roughly a 10-leg union of
-#: rule-compiled sheets; the motivating case (24 batched submissions)
-#: rendered thousands of lines and cost ~3.2 s of analysis per derived
-#: summary (BENCH_NOTES r12).
-LINEAGE_NODE_BUDGET = 200
-
-
-def warn_deep_lineage(df: DataFrame, op: str = "reuse",
-                      budget_nodes: int = LINEAGE_NODE_BUDGET
-                      ) -> str | None:
-    """Invocation rule: a persisted DataFrame with a deep lineage about
-    to serve many derived actions.
-
-    ``persist()``/``cache()`` memoize EXECUTION, not analysis: every
-    DataFrame derived from a cached one still carries the full logical
-    plan, and Catalyst re-analyzes that whole tree for each new action
-    — O(plan size) of driver time per action even on a 100% cache hit.
-    Measured r12: the batched findings union over 24 submissions cost
-    ~3.2 s of pure analysis per per-submission summary (78 s total,
-    8x the executor time). The fix is ``localCheckpoint(eager=True)``
-    (or a real checkpoint/table round-trip at cluster scale): lineage
-    truncates to a leaf scan and derived actions analyze O(1) plans.
-
-    Warns only for CACHED inputs over ``budget_nodes`` — an uncached
-    deep plan re-EXECUTES per action, which is a different (and
-    louder) problem, and shallow cached plans are the normal case.
-
-    Returns the message (also emitted as ``ScaleHazardWarning``) or
-    None when clean — same contract as the other invocation rules.
-    """
-    if not df.is_cached:
-        return None
-    try:
-        n = df._jdf.queryExecution().analyzed().toString().count("\n")  # noqa: SLF001
-    except Exception:       # streaming / exotic plans: nothing to judge
-        return None
-    if n <= budget_nodes:
-        return None
-    msg = (f"deep-lineage-reuse: {op}: this cached DataFrame's analyzed "
-           f"plan is ~{n} nodes (budget {budget_nodes}) — persist caches "
-           f"execution, NOT analysis, so every derived action re-analyzes "
-           f"the full tree (~3.2 s per action at 24 batched submissions, "
-           f"BENCH_NOTES r12). If several actions will derive from it, "
-           f"truncate the lineage first: localCheckpoint(eager=True), or "
-           f"write+readback at cluster scale.")
-    warnings.warn(msg, ScaleHazardWarning, stacklevel=3)
-    return msg
 
 
 # -- plan rules ------------------------------------------------------------
@@ -334,13 +282,6 @@ def advise_plan(df: DataFrame, warn: bool = True) -> list[str]:
     hazards.extend(_nested_loop_hazards(df))
     for line in plan.splitlines():
         if not _WINDOW_RE.search(line):
-            continue
-        # Documented allowance: sources.readers.with_row_index computes
-        # per-file-split offsets as a cumsum window over the PARTITION
-        # COUNTS relation — one row per input split, bounded by cluster
-        # parallelism, not by data. Its synthetic __sg_pid order column
-        # is unique to that idiom.
-        if "__sg_pid" in line:
             continue
         groups = _bracket_groups(line)
         if len(groups) == 2 and re.search(r"\b(ASC|DESC)\b", groups[-1]):

@@ -6,93 +6,37 @@ Reference behaviors re-expressed:
   globbing on any Hadoop-compatible filesystem (``s3a://bucket/prefix*``);
   listing, pagination and partition pruning are built into the file source.
 - S2/S3 (``s3.py:116-179``) object→DataFrame and multi-file concat → one
-  multi-path ``spark.read``; Spark unions file splits natively, keeping the
-  read parallel instead of the reference's sequential loop+concat.
+  multi-path ``spark.read``; Spark reads the files as one scan, keeping
+  the read parallel instead of the reference's sequential loop+concat.
 - S4 (``File_Submission_Object.py:35``) ``na_filter=False``: blank CSV cells
   are the empty string ``''``, NEVER null — the rulebook's sentinels (`''` =
   missing, `'N/A'` = not applicable) must survive ingestion.
 - Row identity (``File_Submission_Object.py:159``): findings cite CSV line
-  number = dataframe index + 2 (1-based + header). Spark has no index, so we
-  materialize ``row_index`` at ingest.
+  number = dataframe index + 2 (1-based + header). Spark has no index, so
+  every sheet reader materializes ``row_index`` at ingest, one way:
+  :func:`with_per_file_row_index` over a multiLine scan.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 ROW_INDEX_COL = "row_index"
+# The normalized source path :func:`with_per_file_row_index` attaches.
+FILE_COL = "__sg_file"
 
+# The reference's CSV line of the first data record: pandas index 0 + 2
+# (1-based, plus the header line).
+_FIRST_DATA_LINE = 2
 
 # ``monotonically_increasing_id`` = (partition_id << 33) + per-partition
 # row counter (0-based, +1 per row in partition order) — a documented,
-# stable bit layout we decode to rebuild zipWithIndex semantics JVM-side.
+# stable bit layout decoded JVM-side into (partition, ordinal).
 _MID_PARTITION_SHIFT = 33
 _MID_ORDINAL_MASK = (1 << _MID_PARTITION_SHIFT) - 1
-
-
-def with_row_index(df: DataFrame, offset: int = 2,
-                   col_name: str = ROW_INDEX_COL) -> DataFrame:
-    """Attach a stable 0-gap row index matching source order — JVM-only.
-
-    The DataFrame twin of ``RDD.zipWithIndex`` without its Python
-    round-trip (``df.rdd`` deserializes every row into Python objects and
-    ``createDataFrame`` re-serializes them — a per-row cost on the ingest
-    path of every sheet). Two passes, all in the JVM:
-
-    1. count rows per partition (partition id decoded from
-       ``monotonically_increasing_id``'s high bits) — a #partitions-row
-       relation kept as a DataFrame (never collected, never rendered into
-       SQL text: at 100 TB there are 10^5-10^6 input splits, and a
-       VALUES literal of that size is a driver-build + Catalyst-parse
-       bottleneck on every sheet's ingest path);
-    2. running offset = window cumsum over that tiny relation (a
-       single-partition sort of #partitions rows), broadcast-joined back;
-       the low-bit per-partition ordinal completes the index.
-
-    No wide shuffle anywhere: the stream side stays in place, only the
-    tiny offsets relation is broadcast. Matches the reference's "CSV line
-    = index + 2" convention (``File_Submission_Object.py:159``) for
-    single-file sheets; across multiple input files the index follows
-    Spark's partition order, exactly as ``zipWithIndex`` did.
-
-    Determinism caveat: both passes re-evaluate the id over the same scan,
-    which is stable for file sources and local relations (the only inputs
-    used here); do not insert a nondeterministic transform upstream.
-
-    Cost note: the counts subtree re-runs per CONSUMER on a
-    non-persisted input (the collect()-based predecessor paid its scan
-    once at build time instead). Multi-consumer plans should persist the
-    indexed frame and keep the cache alive while they run — the batched
-    compile (``orchestrate.validate_batched``) persists each cleaned
-    sheet and releases it only after its checkpoint and A4 actions,
-    since dropping a temp view over a persisted plan uncaches it.
-    One-action pipelines see one extra narrow scan, the price of keeping
-    the offsets distributed instead of an O(#splits) SQL literal.
-    """
-    mid_col, pid_col, base_col = "__sg_mid", "__sg_pid", "__sg_base"
-    cnt_col = "__sg_cnt"
-    tmp = df.withColumn(mid_col, F.monotonically_increasing_id())
-    pid = F.shiftright(F.col(mid_col), _MID_PARTITION_SHIFT)
-    counts = tmp.groupBy(pid.alias(pid_col)).agg(
-        F.count(F.lit(1)).alias(cnt_col))
-    # Running offset as a window cumsum over the counts relation: the
-    # window is single-partition by construction, but over #partitions
-    # rows — driver- and executor-trivial, and the whole offsets subtree
-    # stays a DataFrame (no collect, no O(#splits) SQL text to parse).
-    cum = Window.orderBy(pid_col).rowsBetween(Window.unboundedPreceding, -1)
-    offsets_df = counts.select(
-        F.col(pid_col),
-        F.coalesce(F.sum(cnt_col).over(cum), F.lit(0))
-        .cast("long").alias(base_col))
-    ordinal = F.col(mid_col).bitwiseAND(F.lit(_MID_ORDINAL_MASK))
-    return (tmp.withColumn(pid_col, pid)
-            .join(F.broadcast(offsets_df), pid_col)
-            .withColumn(col_name,
-                        F.col(base_col) + ordinal + F.lit(int(offset)))
-            .select(*df.columns, col_name))
 
 
 def csv_header(path: str) -> "list[str] | None":
@@ -130,8 +74,7 @@ def csv_header(path: str) -> "list[str] | None":
     return cols
 
 
-def sheet_csv_options(reader, columns: "list[str] | None" = None,
-                      multiline: bool = True):
+def sheet_csv_options(reader, columns: "list[str] | None" = None):
     """The submission-sheet CSV options on ``spark.read`` or
     ``spark.readStream`` — one definition, so the batch and streaming
     readers parse records identically:
@@ -139,7 +82,10 @@ def sheet_csv_options(reader, columns: "list[str] | None" = None,
     - ``header`` true, ``inferSchema`` false: every column a string;
     - ``nullValue`` NUL and ``emptyValue`` '': nothing parses as null,
       a blank cell stays the empty string;
-    - ``multiLine`` per :func:`read_sheet_csv`;
+    - ``multiLine`` true: a quoted field may embed a newline and is still
+      ONE record (without it Spark splits the record into phantom rows).
+      A multiLine file is not splittable, so each file is read whole by
+      one task — which :func:`with_per_file_row_index` relies on;
     - ``columns``, when given, as an explicit all-string schema (a
       stream source requires one).
     """
@@ -149,79 +95,30 @@ def sheet_csv_options(reader, columns: "list[str] | None" = None,
               .option("inferSchema", "false")
               .option("nullValue", "\u0000")
               .option("emptyValue", "")
-              .option("multiLine", "true" if multiline else "false"))
+              .option("multiLine", "true"))
     if columns is not None:
         reader = reader.schema(T.StructType(
             [T.StructField(c, T.StringType(), True) for c in columns]))
     return reader
 
 
-def read_sheet_csv(spark: SparkSession, path: str | list[str],
-                   offset: int = 2, multiline: bool = True,
-                   columns: "list[str] | None" = None) -> DataFrame:
-    """Read a submission sheet CSV the way the reference does.
+def with_per_file_row_index(df: DataFrame) -> DataFrame:
+    """Per-FILE ``row_index`` for a scan of :func:`sheet_csv_options`
+    files, plus the normalized source path as ``FILE_COL``.
 
-    - all columns as strings (typing is a *validation concern*, §1.2);
-    - blanks preserved as ``''`` (``na_filter=False`` semantics);
-    - ``row_index`` = CSV RECORD number + 1 (header = 1, first data
-      record = 2) — the reference's ``pandas index + 2``
-      (File_Submission_Object.py:159). Record == physical line except
-      when a quoted field embeds a newline, where pandas still counts
-      records — hence ``multiLine`` below: without it Spark splits the
-      quoted record into phantom rows (silent data corruption, not just
-      an off-by-one). Cost: a multiLine file is not SPLITTABLE, so one
-      sheet file parses on one task — the right trade for submission
-      sheets, whose parallelism comes from many files, not from splits
-      within one. ``multiline=False`` is the engine-level escape hatch
-      for a single huge machine-generated CSV KNOWN free of embedded
-      newlines: the file splits across tasks again and ``row_index``
-      keeps its sentinel semantics, but a quoted embedded newline would
-      once more parse as phantom rows — caller asserts that can't
-      happen. :func:`..plans.advisor.warn_nonsplittable_csv` flags
-      oversized multiLine inputs.
+    ``row_index`` = CSV RECORD number + 1 (header = 1, first data record
+    = 2) — the reference's ``pandas index + 2``
+    (File_Submission_Object.py:159), counted in each file. Record ==
+    physical line except when a quoted field embeds a newline, where
+    pandas still counts records, as multiLine parsing does.
 
-    ``columns``: when given (``csv_header``'s probe), used as an
-    explicit all-string schema so NO Spark job runs at read time; the
-    header line is still skipped (``header`` stays true) and rows bind
-    to the schema positionally, exactly as the schema-inferred read
-    does under ``enforceSchema``. Pass only names that match the file's
-    actual header — :func:`csv_header` guarantees that, returning None
-    for the cases it can't.
-    """
-    if multiline:
-        from nci_seronet_proc_data_validator_spark.plans.advisor import (
-            warn_nonsplittable_csv)
-        warn_nonsplittable_csv(path)
-    df = sheet_csv_options(spark.read, columns, multiline).csv(path)
-    # Defensive: any residual nulls (e.g. short rows) become ''.
-    df = df.na.fill("")
-    return with_row_index(df, offset=offset)
-
-
-def with_per_file_row_index(df: DataFrame, offset: int = 2,
-                            file_col: str = "__sg_file") -> DataFrame:
-    """Per-FILE ``row_index`` for a multi-file scan, plus the normalized
-    source path as ``file_col``.
-
-    Spark PACKS several non-splittable files into one FilePartition, so
-    the monotonic id's per-partition ordinal runs ACROSS files; and a
-    SPLITTABLE file (``multiline=False`` CSV) can conversely be split
-    ACROSS partitions, one split per FilePartition. Both are handled by
-    grouping on ``(partition, file, split)`` — the split identified by
-    the hidden ``_metadata.file_block_start`` byte offset — so the
-    per-file record number is ``ordinal - min(ordinal) per (partition,
-    file, split)`` plus the total record count of the file's EARLIER
-    splits (a cumulative sum over the tiny aggregate, one row per
-    split, ordered by block offset; record order across splits follows
-    byte-offset order by the CSV line-boundary contract). Recovered
-    with the same tiny-aggregate + broadcast-join idiom as
-    :func:`with_row_index` — the grouped relation has one row per
-    split, never data-scale; no wide shuffle, no cross-partition term.
-    For non-splittable scans every file has one split at offset 0 and
-    the cumulative term vanishes. Plans without file metadata (e.g. a
-    source wrapped past metadata propagation) fall back to a constant
-    split id — correct whenever no file is actually split, i.e. the
-    non-splittable case that lacking metadata implies here.
+    A multiLine (or gzip) file is never split, so each file's records
+    are contiguous in ONE partition; but Spark PACKS several small files
+    into one FilePartition, so the monotonic id's per-partition ordinal
+    runs ACROSS files. ``ordinal - min(ordinal) per (partition, file)``
+    is therefore exactly the per-file record number. The grouped
+    relation has one row per file, never data-scale; it is
+    broadcast-joined back, so the data rows are never shuffled.
 
     ``input_file_name()`` is projected ONCE below the self-join —
     Spark's PreReadCheck rejects the expression over any plan with more
@@ -233,53 +130,61 @@ def with_per_file_row_index(df: DataFrame, offset: int = 2,
     file-source DataFrame, including the per-micro-batch frames
     ``foreachBatch`` hands a streaming watcher.
     """
-    from pyspark.sql import Window
-
     data_cols = list(df.columns)
     file_norm = F.url_decode(F.regexp_replace(
         F.regexp_replace(F.input_file_name(), "^file:/+", "/"),
         r"\+", "%2B"))
-    # Probe for file metadata. inputFiles() first: a plan with no file
-    # leaves (e.g. the LogicalRDD frames foreachBatch hands a streaming
-    # watcher) can never resolve _metadata, and probing it with select()
-    # would log a spurious analyzer ERROR even though caught here.
-    blk = F.lit(0).cast("long")
-    try:
-        if df.inputFiles():
-            df.select("_metadata.file_block_start")   # eager analysis
-            blk = F.col("_metadata.file_block_start")
-    except Exception:
-        pass
     mid_col, pid_col, base_col = "__sg_mid", "__sg_pid", "__sg_base"
-    blk_col, cnt_col, prior_col = "__sg_blk", "__sg_cnt", "__sg_prior"
     tmp = (df.withColumn(mid_col, F.monotonically_increasing_id())
-           .withColumn(file_col, file_norm)
-           .withColumn(blk_col, blk))
+           .withColumn(FILE_COL, file_norm))
     pid = F.shiftright(F.col(mid_col), _MID_PARTITION_SHIFT)
     ordinal = F.col(mid_col).bitwiseAND(F.lit(_MID_ORDINAL_MASK))
-    bases = (tmp.groupBy(pid.alias(pid_col), F.col(file_col),
-                         F.col(blk_col))
-             .agg(F.min(ordinal).alias(base_col),
-                  F.count(F.lit(1)).alias(cnt_col)))
-    # records of the same file in earlier splits; window over the
-    # split-count relation only (metadata-scale, one row per split)
-    w = (Window.partitionBy(file_col).orderBy(blk_col)
-         .rowsBetween(Window.unboundedPreceding, -1))
-    bases = bases.withColumn(
-        prior_col, F.coalesce(F.sum(cnt_col).over(w), F.lit(0)))
+    bases = (tmp.groupBy(pid.alias(pid_col), F.col(FILE_COL))
+             .agg(F.min(ordinal).alias(base_col)))
     return (tmp.withColumn(pid_col, pid)
-            .join(F.broadcast(bases), [pid_col, file_col, blk_col])
+            .join(F.broadcast(bases), [pid_col, FILE_COL])
             .withColumn(ROW_INDEX_COL,
-                        (ordinal - F.col(base_col) + F.col(prior_col)
-                         + F.lit(int(offset))).cast("long"))
-            .select(*data_cols, ROW_INDEX_COL, file_col))
+                        ordinal - F.col(base_col) + F.lit(_FIRST_DATA_LINE))
+            .select(*data_cols, ROW_INDEX_COL, FILE_COL))
+
+
+def _read_indexed(spark: SparkSession, paths: "str | list[str]",
+                  columns: "list[str] | None") -> DataFrame:
+    """The one sheet CSV read under :func:`read_sheet_csv` and
+    :func:`read_sheet_csv_tagged`: the shared options, residual nulls
+    (e.g. short rows) as '', then :func:`with_per_file_row_index`."""
+    from nci_seronet_proc_data_validator_spark.plans.advisor import (
+        warn_nonsplittable_csv)
+    warn_nonsplittable_csv(paths)
+    df = sheet_csv_options(spark.read, columns).csv(paths).na.fill("")
+    return with_per_file_row_index(df)
+
+
+def read_sheet_csv(spark: SparkSession, path: str,
+                   columns: "list[str] | None" = None) -> DataFrame:
+    """Read one submission sheet CSV the way the reference does.
+
+    - all columns as strings (typing is a *validation concern*, §1.2);
+    - blanks preserved as ``''`` (``na_filter=False`` semantics);
+    - ``row_index`` per :func:`with_per_file_row_index` (CSV line of the
+      record). The file parses on one task (multiLine):
+      :func:`..plans.advisor.warn_nonsplittable_csv` flags an oversized
+      one.
+
+    ``columns``: when given (``csv_header``'s probe), used as an
+    explicit all-string schema so NO Spark job runs at read time; the
+    header line is still skipped (``header`` stays true) and rows bind
+    to the schema positionally, exactly as the schema-inferred read
+    does under ``enforceSchema``. Pass only names that match the file's
+    actual header — :func:`csv_header` guarantees that, returning None
+    for the cases it can't.
+    """
+    return _read_indexed(spark, path, columns).drop(FILE_COL)
 
 
 def read_sheet_csv_tagged(spark: SparkSession,
                           paths_by_tag: "dict[str, str]",
                           tag_col: str,
-                          offset: int = 2,
-                          multiline: bool = True,
                           columns: "list[str] | None" = None) -> DataFrame:
     """One multi-file scan of the SAME sheet across N submissions.
 
@@ -287,20 +192,10 @@ def read_sheet_csv_tagged(spark: SparkSession,
     calls union N single-file scan nodes (N analysis legs, N py4j
     tag+union round-trips, N scan setups); at 100 TB "many submissions"
     is just "many files", which a Spark file source natively reads as
-    ONE scan with the files as splits. Rows come back tagged
-    ``tag_col`` (the submission id owning the file) with ``row_index``
-    counted PER FILE — identical to what per-file ``read_sheet_csv``
-    would have produced for each submission.
-
-    Per-file indexing under file packing: multiLine makes each file
-    non-splittable, but Spark still PACKS several small files into one
-    FilePartition, so the monotonic id's per-partition ordinal runs
-    ACROSS files. A file is never split across partitions though, so
-    ``ordinal - min(ordinal) per (partition, file)`` is exactly the
-    per-file record number — recovered with the same tiny
-    aggregate + broadcast-join idiom as :func:`with_row_index` (the
-    grouped relation has one row per FILE, never data-scale; no wide
-    shuffle).
+    ONE scan. Rows come back tagged ``tag_col`` (the submission id
+    owning the file) with ``row_index`` counted PER FILE by
+    :func:`with_per_file_row_index` — the same index per-file
+    :func:`read_sheet_csv` gives each submission.
 
     File→tag resolution compares ``os.path.abspath`` of each given
     path with the decoded local path :func:`with_per_file_row_index`
@@ -321,28 +216,18 @@ def read_sheet_csv_tagged(spark: SparkSession,
     norm = {os.path.abspath(p): t for t, p in paths_by_tag.items()}
     if len(norm) != len(paths_by_tag):
         raise ValueError("paths must be distinct per tag")
-    if multiline:
-        from nci_seronet_proc_data_validator_spark.plans.advisor import (
-            warn_nonsplittable_csv)
-        warn_nonsplittable_csv(list(norm))
-    df = sheet_csv_options(spark.read, columns, multiline).csv(sorted(norm))
-    df = df.na.fill("")
-    data_cols = list(df.columns)
-    file_col = "__sg_file"
-    indexed = with_per_file_row_index(df, offset=offset,
-                                      file_col=file_col)
+    indexed = _read_indexed(spark, sorted(norm), columns)
     # The tag lookup is total by construction (the scan reads exactly
     # norm's keys); a NULL lookup would mean URI normalization broke —
     # fail loud (raise_error), never silently drop rows into no
     # submission. Rendered as ONE SQL map literal.
     from nci_seronet_proc_data_validator_spark.errors import sql_string_map
     tag = F.coalesce(
-        F.expr(sql_string_map(spark, sorted(norm.items())))[F.col(file_col)],
+        F.expr(sql_string_map(spark, sorted(norm.items())))[F.col(FILE_COL)],
         F.raise_error(F.concat(
             F.lit("read_sheet_csv_tagged: unmatched input file "),
-            F.col(file_col))))
-    return (indexed.withColumn(tag_col, tag)
-            .select(*data_cols, ROW_INDEX_COL, tag_col))
+            F.col(FILE_COL))))
+    return indexed.withColumn(tag_col, tag).drop(FILE_COL)
 
 
 def cleanup_columns(cols, drop: tuple = ()) -> list[str]:

@@ -157,13 +157,12 @@ def validate_stream_multi(spark: SparkSession, input_glob: str,
     from nci_seronet_proc_data_validator_spark.plans.advisor import (
         warn_nonsplittable_csv)
     from nci_seronet_proc_data_validator_spark.sources.readers import (
-        cleanup_columns, cleanup_sheet, sheet_csv_options,
+        FILE_COL, cleanup_columns, cleanup_sheet, sheet_csv_options,
         with_per_file_row_index)
 
     # multiLine (the shared sheet options) makes each landed file
     # single-task; flag any oversized file already in the watched path
     warn_nonsplittable_csv(input_glob)
-    file_col = "__sg_file"
     bind = bind_kwargs or {}
     data_cols = cleanup_columns(columns)
 
@@ -184,14 +183,13 @@ def validate_stream_multi(spark: SparkSession, input_glob: str,
         # hands a df bound to a batch-cloned session, where the views
         # must live and be queried.
         sess = batch_df.sparkSession
-        df = with_per_file_row_index(batch_df.na.fill(""),
-                                     file_col=file_col)
-        sub = F.regexp_extract(F.col(file_col), sub_pattern, 1)
+        df = with_per_file_row_index(batch_df.na.fill(""))
+        sub = F.regexp_extract(F.col(FILE_COL), sub_pattern, 1)
         cbc = (F.coalesce(
             F.expr(sql_string_map(sess, sorted(cbc_map.items())))[sub],
             F.lit("0")) if cbc_map else F.lit("0"))
         df = cleanup_sheet(
-            df.withColumns({SUB_COL: sub, CBC_COL: cbc}).drop(file_col),
+            df.withColumns({SUB_COL: sub, CBC_COL: cbc}).drop(FILE_COL),
             bind.get("fix_reference_bugs", True),
             carry_cols=(SUB_COL, CBC_COL))
         reg, drop_views = view_registry(sess)

@@ -198,7 +198,8 @@ def test_warn_nonsplittable_csv(tmp_path):
     small.write_text("h\n")
     with pytest.warns(ScaleHazardWarning, match="non-splittable-csv"):
         msgs = warn_nonsplittable_csv(str(big), budget_bytes=1024)
-    assert len(msgs) == 1 and "multiline=False" in msgs[0]
+    assert len(msgs) == 1 and "Pre-split" in msgs[0]
+    assert "multiline=False" not in msgs[0]
     with warnings.catch_warnings():
         warnings.simplefilter("error")
         assert warn_nonsplittable_csv(str(small), budget_bytes=1024) == []
@@ -245,11 +246,8 @@ def test_validate_stream_flags_oversized_staged_csv(tmp_path, monkeypatch):
 
 def test_validate_plan_sweeps_clean_with_row_index_allowance(spark,
                                                              tmp_path):
-    """r11: the full submission validate() plan is advisor-clean. The
-    one prior hit was with_row_index's per-split offset window (cumsum
-    over one row PER PARTITION — bounded by parallelism, not data),
-    now a documented allowance keyed on its synthetic __sg_pid column.
-    validate() returns findings over a local checkpoint, so the compile
+    """r11: the full submission validate() plan is advisor-clean with
+    no allowance: the per-file row index adds no window. validate() returns findings over a local checkpoint, so the compile
     plan behind it (validate_batched) is swept as well."""
     import datetime
 
@@ -276,46 +274,6 @@ def test_validate_plan_sweeps_clean_with_row_index_allowance(spark,
     compiled = validate_batched(spark, {"s": kw})
     compiled.count()
     assert advise_plan(compiled, warn=False) == []
-
-
-def test_warn_deep_lineage(spark):
-    """r12: persist caches execution, NOT analysis — a cached DataFrame
-    with a deep logical plan taxes every derived action with a full
-    re-analysis (~3.2 s/action at 24 batched submissions, BENCH_NOTES
-    r12). The rule warns on cached+deep, stays silent on uncached or
-    shallow, and a localCheckpoint of the same data passes."""
-    from nci_seronet_proc_data_validator_spark.plans.advisor import (
-        ScaleHazardWarning, warn_deep_lineage)
-
-    base = spark.range(10).selectExpr("id", "id * 2 AS v")
-    deep = base
-    for _ in range(120):         # 120-leg union: deep analyzed tree
-        deep = deep.unionByName(base)
-
-    assert warn_deep_lineage(deep, "uncached") is None   # uncached: silent
-    deep = deep.persist()
-    try:
-        with pytest.warns(ScaleHazardWarning, match="deep-lineage-reuse"):
-            msg = warn_deep_lineage(deep, "batched-findings")
-        assert msg is not None and "localCheckpoint" in msg
-    finally:
-        deep.unpersist()
-
-    shallow = base.persist()
-    try:
-        assert warn_deep_lineage(shallow, "shallow") is None
-    finally:
-        shallow.unpersist()
-
-    cut = None
-    deep2 = base
-    for _ in range(120):
-        deep2 = deep2.unionByName(base)
-    cut = deep2.localCheckpoint(eager=True).persist()
-    try:
-        assert warn_deep_lineage(cut, "checkpointed") is None
-    finally:
-        cut.unpersist()
 
 
 def test_batched_results_findings_are_lineage_shallow(spark, tmp_path):

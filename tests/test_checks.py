@@ -10,7 +10,6 @@ import datetime
 import pytest
 from pyspark.sql import Row
 
-from nci_seronet_proc_data_validator_spark.errors import FINDING_COLUMNS
 from nci_seronet_proc_data_validator_spark.operators.typing import with_typed_shadows
 from nci_seronet_proc_data_validator_spark.plans.rulebook import bind_sheet_rules
 from nci_seronet_proc_data_validator_spark.plans.rules import (
@@ -20,11 +19,10 @@ from nci_seronet_proc_data_validator_spark.plans.rules import (
 
 
 def _sheet(spark, rows, columns):
-    df = spark.createDataFrame([Row(**dict(zip(columns, r))) for r in rows])
-    df = df.selectExpr(*columns, "cast(null as long) as row_index")
     # row_index = CSV line number (data starts at line 2).
-    from nci_seronet_proc_data_validator_spark.sources.readers import with_row_index
-    return with_row_index(df.drop("row_index"))
+    return spark.createDataFrame(
+        [Row(**dict(zip(columns, r)), row_index=i + 2)
+         for i, r in enumerate(rows)])
 
 
 def _findings(spark, sheet_name, rows, columns, cbc_id="14"):

@@ -7,13 +7,14 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from nci_seronet_proc_data_validator_spark.sources.readers import with_row_index
 from nci_seronet_proc_data_validator_spark.submission import SubmissionValidator
 
 
 def _df(spark, columns, rows):
-    return with_row_index(
-        spark.createDataFrame([Row(**dict(zip(columns, r))) for r in rows]))
+    # row_index = CSV line number (data starts at line 2).
+    return spark.createDataFrame(
+        [Row(**dict(zip(columns, r)), row_index=i + 2)
+         for i, r in enumerate(rows)])
 
 
 def _submission(spark):

@@ -4,6 +4,7 @@ identical to the serial loop (the reference's processing model,
 nci-seronet-data-validator.py:69), with per-submission error isolation."""
 
 import datetime
+import threading
 
 import pytest
 
@@ -158,7 +159,7 @@ def test_scheduler_pool_set_during_and_cleared_after(spark, tmp_path):
     oc = validate_groups(spark, {"s0": _load(spark, tmp_path, 0)},
                          [["s0"]], materialize=materialize)["s0"]
     assert oc.error is None
-    assert seen["during"] == "submission-s0"
+    assert seen["during"] == threading.current_thread().name
     assert sc.getLocalProperty("spark.scheduler.pool") in (None, "")
     # the clear also runs on the error path
     oc2 = validate_groups(
@@ -167,6 +168,36 @@ def test_scheduler_pool_set_during_and_cleared_after(spark, tmp_path):
         [["bad"]], materialize=materialize)["bad"]
     assert oc2.error is not None
     assert sc.getLocalProperty("spark.scheduler.pool") in (None, "")
+
+
+def test_scheduler_pools_bounded_by_worker_slots(spark, monkeypatch):
+    """Spark creates an undeclared FAIR pool on first use and never
+    removes it, so the pool must be named after the worker slot, not
+    the submission: 10 groups on 4 workers plus one group on the calling
+    thread use at most 5 pools. No Spark job runs — the group compile
+    is stubbed to record the pool its thread carries."""
+    from nci_seronet_proc_data_validator_spark import orchestrate
+
+    sc = spark.sparkContext
+    pools = []
+
+    def stub(spark, subs, **kwargs):
+        pools.append(sc.getLocalProperty("spark.scheduler.pool"))
+        return {s: None for s in subs}
+
+    monkeypatch.setattr(orchestrate, "validate_batched_results", stub)
+    subs = {f"s{i}": {} for i in range(10)}
+    out = validate_groups(spark, subs, [[s] for s in subs], max_parallel=4)
+    assert sorted(out) == sorted(subs)
+    assert all(oc.error is None for oc in out.values())
+    sc.setLocalProperty("spark.scheduler.pool", "outer")
+    try:
+        validate_groups(spark, {"one": {}}, [["one"]])
+        assert sc.getLocalProperty("spark.scheduler.pool") == "outer"
+    finally:
+        sc.setLocalProperty("spark.scheduler.pool", None)
+    assert len(pools) == 11
+    assert len(set(pools)) <= 5, sorted(set(pools))
 
 
 def test_concurrent_job_status_upserts_one_db(spark, tmp_path):

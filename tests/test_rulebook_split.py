@@ -18,8 +18,6 @@ Three claims the restructured ``q_rulebook_full`` rests on:
    ``groupBy`` counts more than once.
 """
 
-import pytest
-
 from pyspark.sql import functions as F
 
 from nci_seronet_proc_data_validator_spark.errors import dedup_findings

@@ -1038,24 +1038,6 @@ def test_streaming_multiline_record_parity(spark, tmp_path):
                    == "Research_Participant_ID")
 
 
-def test_read_sheet_csv_multiline_opt_out(spark, tmp_path):
-    """r11: multiline=False restores file splittability for huge
-    machine-generated CSVs known free of embedded newlines — same rows,
-    same row_index, on a newline-free file."""
-    from nci_seronet_proc_data_validator_spark.sources import read_sheet_csv
-    p = str(tmp_path / "plain.csv")
-    with open(p, "w") as f:
-        f.write("Research_Participant_ID,Age\n"
-                "14_000001,30\n"
-                "14_000002,31\n"
-                "14_000003,32\n")
-    ml = {r["row_index"]: r["Age"]
-          for r in read_sheet_csv(spark, p).collect()}
-    nl = {r["row_index"]: r["Age"]
-          for r in read_sheet_csv(spark, p, multiline=False).collect()}
-    assert ml == nl == {2: "30", 3: "31", 4: "32"}
-
-
 def test_read_sheet_csv_tagged_matches_per_file(spark, tmp_path):
     """r12: the batched scan shape — ONE multi-file CSV scan with rows
     tagged by owning submission and row_index counted PER FILE — must
@@ -1095,25 +1077,19 @@ def test_read_sheet_csv_tagged_matches_per_file(spark, tmp_path):
                     read_sheet_csv(spark, p).collect())
         for sid, p in paths.items()}
     assert got == want
+    # both sides share the index code, so pin the literal CSV lines too
+    for i, sid in enumerate(sorted(paths)):
+        assert sorted(r[-1] for r in want[sid]) == list(range(2, 3 + i + 2))
     # the embedded newline parsed as one record on both paths
     assert any("\n" in str(v) for r in want["sub3"]
                for v in r if isinstance(v, str))
 
-    # File-PACKING leg: this Spark's multiLine source happens to give one
-    # file per partition, so the cross-file-ordinal case (several files
-    # sharing a FilePartition — the regression the (partition, file)
-    # min-ordinal join guards) needs the splittable reader. Newline-free
-    # files, multiline=False: tiny splits DO pack, and per-file
-    # row_index must still hold.
-    flat_paths = {}
-    for i in range(8):
-        p = tmp_path / f"sub{i}" / "flat.csv"
-        p.write_text("Research_Participant_ID,Age,Race\n"
-                     + "\n".join(f"14_{i}{r:04d},{20 + r},White"
-                                 for r in range(3 + i)) + "\n")
-        flat_paths[f"sub{i}"] = str(p)
-    # force packing: with the defaults, minPartitionNum ~ core count and
-    # the 4 MiB open cost give every tiny file its own partition
+    # File-PACKING leg: with the default 4 MiB open cost every tiny file
+    # gets its own partition; a zero open cost and one minimum partition
+    # pack several files into one FilePartition, so the per-partition
+    # ordinal runs across files — the case the (partition, file)
+    # min-ordinal join exists for. Each file's index must still be its
+    # own CSV lines 2..n+1.
     olds = {}
     for k, v in (("spark.sql.files.openCostInBytes", "0"),
                  ("spark.sql.files.minPartitionNum", "1")):
@@ -1123,74 +1099,17 @@ def test_read_sheet_csv_tagged_matches_per_file(spark, tmp_path):
             olds[k] = None
         spark.conf.set(k, v)
     try:
-        flat = read_sheet_csv_tagged(spark, flat_paths, "__submission_id",
-                                     multiline=False)
-        n_parts = (flat.select(F.spark_partition_id().alias("p"))
+        packed = read_sheet_csv_tagged(spark, paths, "__submission_id")
+        n_parts = (packed.select(F.spark_partition_id().alias("p"))
                    .distinct().count())
         assert n_parts < 8, n_parts      # packing actually happened
-        got_flat = {
+        got_packed = {
             sid: sorted(
-                tuple(r) for r in flat
+                tuple(r) for r in packed
                 .filter(F.col("__submission_id") == sid)
                 .drop("__submission_id").collect())
-            for sid in flat_paths}
-        want_flat = {
-            sid: sorted(tuple(r) for r in
-                        read_sheet_csv(spark, p,
-                                       multiline=False).collect())
-            for sid, p in flat_paths.items()}
-        assert got_flat == want_flat
-    finally:
-        for k, v in olds.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-
-
-def test_per_file_row_index_split_safe(spark, tmp_path):
-    """r13 (ADVICE): with multiline=False the CSV source is SPLITTABLE —
-    one file can span several FilePartitions. The per-file row_index
-    must stay the file's CSV record number across splits: the
-    (partition, file, _metadata.file_block_start) grouping plus the
-    cumulative earlier-split record count handles it; the pre-r13
-    (partition, file) min-ordinal alone restarted the index at `offset`
-    in every split."""
-    from pyspark.sql import functions as F
-
-    from nci_seronet_proc_data_validator_spark.sources.readers import (
-        read_sheet_csv,
-        read_sheet_csv_tagged,
-    )
-
-    p = tmp_path / "big.csv"
-    rows = [f"14_{r:06d},{20 + r % 60},White" for r in range(4000)]
-    p.write_text("Research_Participant_ID,Age,Race\n"
-                 + "\n".join(rows) + "\n")
-
-    olds = {}
-    for k, v in (("spark.sql.files.maxPartitionBytes", "16384"),
-                 ("spark.sql.files.openCostInBytes", "0"),
-                 ("spark.sql.files.minPartitionNum", "1")):
-        try:
-            olds[k] = spark.conf.get(k)
-        except Exception:
-            olds[k] = None
-        spark.conf.set(k, v)
-    try:
-        tagged = read_sheet_csv_tagged(spark, {"s0": str(p)},
-                                       "__submission_id",
-                                       multiline=False)
-        n_parts = (tagged.select(F.spark_partition_id().alias("p"))
-                   .distinct().count())
-        assert n_parts > 1, n_parts          # the file actually split
-        got = {r["row_index"]: r["Research_Participant_ID"]
-               for r in tagged.collect()}
-        want = {r["row_index"]: r["Research_Participant_ID"]
-                for r in read_sheet_csv(spark, str(p),
-                                        multiline=False).collect()}
-        assert len(got) == len(rows)         # no duplicate indexes
-        assert got == want
+            for sid in paths}
+        assert got_packed == want
     finally:
         for k, v in olds.items():
             if v is None:

@@ -37,7 +37,6 @@ ALLOWED = {
     "repetition_features": "reference for bigram_profile",
     "familiarity_features": "reference for bigram_profile",
     "advise_plan": "the registry's scale-hazard check",
-    "warn_deep_lineage": "the lineage check on the batched compile",
 }
 
 # driver_queries.QUERIES, in registration order: only the first 50
