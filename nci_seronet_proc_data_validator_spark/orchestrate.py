@@ -20,7 +20,7 @@ Three layers, each the only one of its kind:
   its own worker thread inside the SAME SparkSession with a per-group
   FAIR pool (``spark.scheduler.pool``; the session factory enables FAIR
   mode, so a 10-sheet submission cannot starve a 1-sheet one). At most
-  ``max_parallel`` groups run at once, the way ``maxFilesPerTrigger``
+  ``MAX_PARALLEL`` groups run at once, the way ``maxFilesPerTrigger``
   caps the streaming backlog: memory and retry cost stay sized by the
   bound, not the queue length. A failing group is retried member by
   member.
@@ -40,7 +40,7 @@ import threading
 import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
-from typing import Any, Callable
+from typing import Callable
 
 from pyspark.sql import SparkSession
 
@@ -59,20 +59,14 @@ class ConcurrentOutcome:
     """Per-submission outcome of :func:`validate_groups` (and so of
     :func:`validate_dirs`)."""
     result: ValidationResult | None     # None when the submission errored
-    materialized: Any                   # return of the materialize hook
     seconds: float                      # wall time inside the worker
     error: Exception | None = None
 
 
-def _default_materialize(res: ValidationResult) -> dict[str, int]:
-    """Force execution inside the worker (so jobs overlap across pools)
-    and return the error/warning counts — the same numbers the
-    reference's job-status row carries (File_Submission_Object.py:458)."""
-    counts = {r["Message_Type"]: r["n"] for r in
-              (res.findings.groupBy("Message_Type").count()
-               .withColumnRenamed("count", "n").collect())}
-    return {"errors": counts.get("Error", 0),
-            "warnings": counts.get("Warning", 0)}
+# Schema groups validated at once: the per-group work is
+# driver-build-heavy and the GIL serializes builds past ~4 threads
+# (BENCH_NOTES r11).
+MAX_PARALLEL = 4
 
 
 # --------------------------------------------------------------- batched
@@ -692,10 +686,7 @@ def validate_groups(spark: SparkSession,
                     subs: "dict[str, dict]",
                     groups: "list[list[str]]",
                     pretag: "Callable[[list[str]], dict] | None" = None,
-                    combined_out: "list | None" = None,
-                    materialize: "Callable[[ValidationResult], Any] | None"
-                    = None,
-                    max_parallel: int = 4
+                    combined_out: "list | None" = None
                     ) -> "dict[str, ConcurrentOutcome]":
     """Validate ``subs`` one schema group at a time, each group through
     ONE :func:`validate_batched_results` compile, with per-submission
@@ -706,53 +697,32 @@ def validate_groups(spark: SparkSession,
     signature (a group of one is an ordinary N=1 batch). ``pretag``
     optionally builds a group's ``pretagged`` multi-file scans from its
     member ids; ``combined_out`` collects each successful group's
-    combined batch frame. ``materialize(result)`` runs per member inside
-    the group's worker and should touch the findings (e.g. severity
-    counts): plans are lazy, so without an action in the worker the
-    groups' jobs would not overlap.
+    combined batch frame. The compile executes inside the group's
+    worker (the findings checkpoint and the A4 action), so concurrent
+    groups' jobs overlap; each member's findings are then filters of
+    that checkpoint plus driver-built A4 rows.
 
     Each group runs on its own worker thread (the calling thread when
-    there is only one group), at most ``max_parallel`` at once: the
-    per-group work is driver-build-heavy and the GIL serializes builds
-    past ~4 threads (BENCH_NOTES r11). Its jobs carry a job description
-    and a FAIR pool named after the worker thread, so concurrent groups
-    land in distinct pools while the pool tree stays bounded at
-    ``max_parallel`` + 1 (Spark creates an undeclared pool on first use
-    and never removes it; a pool per submission would grow a resident
-    watcher's tree forever). Both are THREAD-LOCAL properties (pinned
-    thread mode) restored when the worker ends, so nothing later on the
-    same thread inherits them.
+    there is only one group), at most ``MAX_PARALLEL`` at once. Its jobs
+    carry a job description and a FAIR pool named after the worker
+    thread, so concurrent groups land in distinct pools while the pool
+    tree stays bounded at ``MAX_PARALLEL`` + 1 (Spark creates an
+    undeclared pool on first use and never removes it; a pool per
+    submission would grow a resident watcher's tree forever). Both are
+    THREAD-LOCAL properties (pinned thread mode) restored when the
+    worker ends, so nothing later on the same thread inherits them.
 
     Isolation (the reference's "Moving onto Next Submitted File" loop,
     nci-seronet-data-validator.py:70,109-111): when a group's compile
     fails, each member is retried as its own group, so only the
     genuinely poisoned member fails — without it one malformed
-    submission would fail every submission sharing its schema. A
-    member whose ``materialize`` raises fails alone too.
+    submission would fail every submission sharing its schema.
 
     Returns a :class:`ConcurrentOutcome` per id: ``result`` set, or
     ``error`` set and ``result`` None; ``seconds`` is the wall time of
     the member's group worker.
     """
     sc = spark.sparkContext
-
-    def settle(members: list, res: dict, t0: float) -> dict:
-        def one(sid: str) -> tuple[str, ConcurrentOutcome]:
-            try:
-                mat = materialize(res[sid]) if materialize else None
-                return sid, ConcurrentOutcome(
-                    result=res[sid], materialized=mat,
-                    seconds=time.time() - t0)
-            except Exception as exc:  # noqa: BLE001 — isolate per submission
-                return sid, ConcurrentOutcome(
-                    result=None, materialized=None,
-                    seconds=time.time() - t0, error=exc)
-        if materialize is None or len(members) == 1:
-            return dict(map(one, members))
-        # independent per-member actions over the shared checkpoint
-        with ThreadPoolExecutor(max_workers=min(8, len(members)),
-                                thread_name_prefix="materialize") as tp:
-            return dict(tp.map(one, members))
 
     def isolated(members: list) -> dict:
         t0 = time.time()
@@ -773,8 +743,7 @@ def validate_groups(spark: SparkSession,
             except Exception as exc:  # noqa: BLE001 — isolate per submission
                 if len(members) == 1:
                     return {members[0]: ConcurrentOutcome(
-                        result=None, materialized=None,
-                        seconds=time.time() - t0, error=exc)}
+                        result=None, seconds=time.time() - t0, error=exc)}
                 log.warning("batched group compile failed (%s); retrying "
                             "each of %s as its own group", exc, members)
                 out: dict = {}
@@ -783,7 +752,9 @@ def validate_groups(spark: SparkSession,
                 return out
             if combined_out is not None:
                 combined_out.extend(frames)
-            return settle(members, res, t0)
+            seconds = time.time() - t0
+            return {sid: ConcurrentOutcome(result=res[sid], seconds=seconds)
+                    for sid in members}
         finally:
             for k, v in prev:
                 sc.setLocalProperty(k, v)
@@ -791,8 +762,7 @@ def validate_groups(spark: SparkSession,
     if len(groups) == 1:
         return isolated(groups[0])
     out: dict = {}
-    with ThreadPoolExecutor(max_workers=max(1, min(max_parallel,
-                                                   len(groups))),
+    with ThreadPoolExecutor(max_workers=min(MAX_PARALLEL, len(groups)),
                             thread_name_prefix="submission") as pool:
         for o in pool.map(isolated, groups):
             out.update(o)
@@ -828,8 +798,6 @@ def validate_dirs(spark: SparkSession,
                   icd10_codes: "DataFrame | None" = None,
                   expected_columns: "dict | None" = None,
                   bind_kwargs: "dict | None" = None,
-                  materialize: "Callable[[ValidationResult], Any] | None"
-                  = None,
                   combined_out: "list | None" = None,
                   meta_out: "dict | None" = None,
                   groups_out: "list | None" = None
@@ -850,7 +818,7 @@ def validate_dirs(spark: SparkSession,
        (``read_sheet_csv_tagged`` with the probed header as ``columns=``,
        so no header-inference job reads every member file);
     5. :func:`validate_groups` compiles each group once, passing
-       ``materialize`` and ``combined_out`` through.
+       ``combined_out`` through.
 
     ``icd10_codes``, ``expected_columns`` and ``bind_kwargs`` (``today``,
     ``fix_reference_bugs``, ``db_merged_tables``) are shared by all.
@@ -899,7 +867,7 @@ def validate_dirs(spark: SparkSession,
         try:
             subs[sid], meta = kwargs_for(sheets)
         except Exception as exc:  # noqa: BLE001 — isolate per submission
-            out[sid] = ConcurrentOutcome(result=None, materialized=None,
+            out[sid] = ConcurrentOutcome(result=None,
                                          seconds=time.time() - t0,
                                          error=exc)
             continue
@@ -918,6 +886,5 @@ def validate_dirs(spark: SparkSession,
 
     if groups:
         out.update(validate_groups(spark, subs, groups, pretag=pretag,
-                                   combined_out=combined_out,
-                                   materialize=materialize))
+                                   combined_out=combined_out))
     return out

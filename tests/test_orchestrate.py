@@ -9,7 +9,7 @@ import threading
 import pytest
 
 from nci_seronet_proc_data_validator_spark.orchestrate import (
-    _default_materialize, validate_groups)
+    validate_groups)
 from nci_seronet_proc_data_validator_spark.sources import read_sheet_csv
 from nci_seronet_proc_data_validator_spark.submission import (
     SubmissionValidator)
@@ -61,9 +61,9 @@ def _run_cli(monkeypatch, argv: list[str]) -> int:
     return rs.main()
 
 
-def _cli_twin(spark, d: str, cbc_map: dict) -> list:
+def _cli_serial(spark, d: str, cbc_map: dict):
     """In-process serial validate() of one submission dir, with the
-    reference data the CLI loads: the findings its parquet must hold."""
+    reference data the CLI loads."""
     import glob
     import os
 
@@ -76,12 +76,21 @@ def _cli_twin(spark, d: str, cbc_map: dict) -> list:
     sheets = {os.path.basename(p): read_sheet_csv(spark, p)
               for p in sorted(glob.glob(os.path.join(d, "*.csv")))}
     meta = parse_submission_metadata(sheets["submission.csv"], cbc_map)
-    return _finding_set(SubmissionValidator(
+    return SubmissionValidator(
         spark, sheets=sheets, cbc_id=meta["cbc_id"],
         declared_participants=meta["declared_participants"],
         declared_biospecimens=meta["declared_biospecimens"],
         icd10_codes=load_icd10_codes(spark),
-        expected_columns=static_expected_columns()).validate().findings)
+        expected_columns=static_expected_columns()).validate()
+
+
+def _cli_twin(spark, d: str, cbc_map: dict) -> list:
+    """The findings one submission dir's CLI parquet must hold."""
+    return _finding_set(_cli_serial(spark, d, cbc_map).findings)
+
+
+def _n_errors(findings) -> int:
+    return findings.filter("Message_Type = 'Error'").count()
 
 
 def _cli_findings(spark, out_dir) -> list:
@@ -99,13 +108,12 @@ def test_concurrent_matches_serial(spark, tmp_path):
     assert all(len(v) > 0 for v in serial.values())
     assert len({tuple(v) for v in serial.values()}) == 3
 
-    out = validate_groups(spark, subs, [[sid] for sid in subs],
-                          materialize=_default_materialize, max_parallel=3)
+    out = validate_groups(spark, subs, [[sid] for sid in subs])
     assert set(out) == set(subs)
     for sid, oc in out.items():
         assert oc.error is None, (sid, oc.error)
         assert _finding_set(oc.result.findings) == serial[sid], sid
-        assert oc.materialized["errors"] > 0
+        assert _n_errors(oc.result.findings) > 0
         assert oc.seconds > 0
 
 
@@ -114,59 +122,45 @@ def test_concurrent_isolates_failures(spark, tmp_path):
     bad = {"sheets": {"demographic.csv": None}, "cbc_id": "14",
            "today": TODAY}    # None sheet -> raises inside the worker
     out = validate_groups(spark, {"ok": good, "broken": bad},
-                          [["ok"], ["broken"]],
-                          materialize=_default_materialize, max_parallel=2)
+                          [["ok"], ["broken"]])
     assert out["broken"].error is not None
     assert out["broken"].result is None
     assert out["ok"].error is None
-    assert out["ok"].materialized["errors"] > 0
+    assert _n_errors(out["ok"].result.findings) > 0
 
 
-def test_group_member_materialize_failure_is_isolated(spark, tmp_path):
-    """A materialize hook that raises for one member of a batched group
-    fails that member alone: the other member keeps its result and its
-    materialized value."""
-    subs = {f"sub{i}": _load(spark, tmp_path, i) for i in range(2)}
-
-    def materialize(res):
-        if "Race_1" in {r["Column_Value"] for r in res.findings.collect()}:
-            raise RuntimeError("severity count failed")
-        return _default_materialize(res)
-
-    out = validate_groups(spark, subs, [["sub0", "sub1"]],
-                          materialize=materialize)
-    assert isinstance(out["sub1"].error, RuntimeError)
-    assert out["sub1"].result is None
-    assert out["sub0"].error is None
-    assert out["sub0"].materialized["errors"] > 0
-
-
-def test_scheduler_pool_set_during_and_cleared_after(spark, tmp_path):
+def test_scheduler_pool_set_during_and_cleared_after(spark, tmp_path,
+                                                     monkeypatch):
     """The worker's finally clears the pool tag — later jobs on the SAME
     thread must not inherit a submission's FAIR pool. Local properties
     are per-thread (pinned mode), so the clear is only observable on the
     thread that set it: a single group's worker runs on the calling
     thread — drive it on THIS thread, assert the pool is tagged while
-    the submission's jobs run (inside the materialize hook) and cleared
-    afterwards."""
+    the group compile runs its jobs and cleared afterwards."""
+    from nci_seronet_proc_data_validator_spark import orchestrate
+
     sc = spark.sparkContext
-    seen = {}
+    seen = []
+    compile_group = orchestrate.validate_batched_results
 
-    def materialize(res):
-        seen["during"] = sc.getLocalProperty("spark.scheduler.pool")
-        return _default_materialize(res)
+    def recording(spark, subs, **kwargs):
+        seen.append(sc.getLocalProperty("spark.scheduler.pool"))
+        return compile_group(spark, subs, **kwargs)
 
+    monkeypatch.setattr(orchestrate, "validate_batched_results", recording)
     oc = validate_groups(spark, {"s0": _load(spark, tmp_path, 0)},
-                         [["s0"]], materialize=materialize)["s0"]
+                         [["s0"]])["s0"]
     assert oc.error is None
-    assert seen["during"] == threading.current_thread().name
+    assert _n_errors(oc.result.findings) > 0
+    assert seen == [threading.current_thread().name]
     assert sc.getLocalProperty("spark.scheduler.pool") in (None, "")
     # the clear also runs on the error path
     oc2 = validate_groups(
         spark, {"bad": {"sheets": {"demographic.csv": None},
                         "cbc_id": "14"}},
-        [["bad"]], materialize=materialize)["bad"]
+        [["bad"]])["bad"]
     assert oc2.error is not None
+    assert seen[1] == threading.current_thread().name
     assert sc.getLocalProperty("spark.scheduler.pool") in (None, "")
 
 
@@ -187,7 +181,7 @@ def test_scheduler_pools_bounded_by_worker_slots(spark, monkeypatch):
 
     monkeypatch.setattr(orchestrate, "validate_batched_results", stub)
     subs = {f"s{i}": {} for i in range(10)}
-    out = validate_groups(spark, subs, [[s] for s in subs], max_parallel=4)
+    out = validate_groups(spark, subs, [[s] for s in subs])
     assert sorted(out) == sorted(subs)
     assert all(oc.error is None for oc in out.values())
     sc.setLocalProperty("spark.scheduler.pool", "outer")
@@ -224,22 +218,20 @@ def test_concurrent_job_status_upserts_one_db(spark, tmp_path):
     def factory():
         return sqlite3.connect(db, timeout=30)
 
-    def materialize_for(sub_id):
-        def materialize(res):
+    def validate_and_upsert(sid, kw):
+        oc = validate_groups(spark, {sid: kw}, [[sid]])[sid]
+        if oc.error is None:
             upsert_job_status(
-                job_status_rows(res.findings, sub_id, f"day-{sub_id}"),
+                job_status_rows(oc.result.findings, sid, f"day-{sid}"),
                 factory, key=["orig_file_id", "file_name"])
-            return sub_id
-        return materialize
+        return oc
 
     subs = {f"sub{i}": _load(spark, tmp_path, i) for i in range(3)}
-    # per-submission materialize: close over the id
     from concurrent.futures import ThreadPoolExecutor
     with ThreadPoolExecutor(max_workers=3) as pool:
-        futs = {sid: pool.submit(validate_groups, spark, {sid: kw}, [[sid]],
-                                 materialize=materialize_for(sid))
+        futs = {sid: pool.submit(validate_and_upsert, sid, kw)
                 for sid, kw in subs.items()}
-        outs = {sid: f.result()[sid] for sid, f in futs.items()}
+        outs = {sid: f.result() for sid, f in futs.items()}
     assert all(oc.error is None for oc in outs.values())
 
     conn = sqlite3.connect(db)
@@ -445,7 +437,10 @@ def test_cli_batched_matches_serial(spark, tmp_path, monkeypatch, capsys):
     """The multi-dir CLI: 8 submissions in two schema groups (5 + 3),
     mixed CBC ids inside the big group, routed through one compiled plan
     per group; each submission's findings parquet must equal its own
-    serial validate()."""
+    serial validate(), and its printed per-sheet Errors/Warnings must
+    equal its serial findings summary."""
+    import re
+
     from pyspark.sql import functions as F
 
     def _mkdir(name: str, csvs: dict[str, str]) -> str:
@@ -473,7 +468,16 @@ def test_cli_batched_matches_serial(spark, tmp_path, monkeypatch, capsys):
     # the fixture sheets don't carry the full expected-column catalog,
     # so the quality gate fails
     assert rc == 1
-    assert "2 schema group(s), sizes [5, 3]" in capsys.readouterr().out
+    text = capsys.readouterr().out
+    assert "2 schema group(s), sizes [5, 3]" in text
+    # the notification lines of ga1 (a LabY submission of group A)
+    report = text.split(f"=== {dirs[1]} (")[1].split("\n=== ")[0]
+    printed = {sheet: (int(e), int(w)) for sheet, e, w in re.findall(
+        r"• `(\S+)` — (\d+) Errors / (\d+) Warnings", report)}
+    assert printed == {
+        r["CSV_Sheet_Name"]: (r["Errors"], r["Warnings"])
+        for r in _cli_serial(spark, dirs[1], cbc).summary.collect()}
+    assert printed, report
 
     for d in dirs:
         base = d.rstrip("/").split("/")[-1]
@@ -911,41 +915,3 @@ def test_validate_stream_multi_dynamic_cbc(spark, tmp_path):
     assert any("Expecting CBC Code (41)" in m for m in msgs["subB"])
     assert all("submission file is missing" not in m
                for m in msgs["subB"])
-
-
-def test_cli_procs_shards_match_serial(spark, tmp_path):
-    """r13: --procs N shards schema groups across child PROCESSES (each
-    its own JVM running the CLI over its shard). Two schema groups x
-    two submissions, 2 procs: the parent shards by driver-side header
-    probe (no JVM), children write the standard per-submission subdirs,
-    and each submission's findings equal its own serial validate()."""
-    import subprocess
-    import sys
-
-    dirs = []
-    for name, header, row in (
-            ("pa0", "Research_Participant_ID,Age,Race", "14_000001,930,White"),
-            ("pa1", "Research_Participant_ID,Age,Race", "14_000002,931,White"),
-            ("pb0", "Research_Participant_ID,Age", "14_000003,932"),
-            ("pb1", "Research_Participant_ID,Age", "14_000004,933")):
-        d = tmp_path / name
-        d.mkdir()
-        (d / "demographic.csv").write_text(f"{header}\n{row}\n")
-        (d / "submission.csv").write_text("key,LabX\np,1\nb,0\n")
-        dirs.append(str(d))
-
-    # run the real CLI as a subprocess (children are subprocesses
-    # anyway; the parent must not touch this session's JVM)
-    proc = subprocess.run(
-        [sys.executable, "tools/run_submission.py", *dirs, "--procs", "2",
-         "--out", str(tmp_path / "procs_out"), "--cbc", "LabX=14"],
-        capture_output=True, text=True, timeout=600)
-    assert "over 2 process(es), shard sizes [2, 2]" in proc.stdout, \
-        proc.stdout[-2000:] + proc.stderr[-2000:]
-    # the fixture sheets fail the quality gate (catalog columns missing)
-    assert proc.returncode == 1, proc.stdout[-2000:]
-
-    for d in dirs:
-        base = d.rstrip("/").split("/")[-1]
-        assert (_cli_findings(spark, tmp_path / "procs_out" / base)
-                == _cli_twin(spark, d, {"LabX": "14"})), base

@@ -2,8 +2,7 @@
 the reference's Lambda flow (nci-seronet-data-validator.py:33-117).
 
     python tools/run_submission.py SUBMISSION_DIR [SUBMISSION_DIR ...]
-        [--out OUT_DIR] [--procs N] [--cbc NAME=ID ...]
-        [--keep-reference-bugs]
+        [--out OUT_DIR] [--cbc NAME=ID ...] [--keep-reference-bugs]
 
 Each SUBMISSION_DIR holds that submission's sheet CSVs (submission.csv,
 demographic.csv, …). Every invocation runs ``orchestrate.validate_dirs``,
@@ -14,12 +13,11 @@ over one multi-file scan per sheet, up to 4 groups at once on FAIR
 scheduler pools. A single submission is a batch of one, so findings per
 submission are identical whichever directories share the run; a
 submission that fails (unreadable sheet, malformed metadata) fails
-alone. Per-sheet error reports + findings parquet land under OUT_DIR —
-directly for one dir (the reference's per-submission layout),
-per-submission subdirs for several.
-
-``--procs N`` shards the schema groups across N child processes, each
-its own JVM: the GIL escape for driver-bound many-tiny-submission runs.
+alone. Everything runs in this one process and SparkSession, the way the
+reference validates submissions one after another in one Lambda
+(nci-seronet-data-validator.py:69). Per-sheet error reports + findings
+parquet land under OUT_DIR — directly for one dir (the reference's
+per-submission layout), per-submission subdirs for several.
 """
 
 from __future__ import annotations
@@ -62,17 +60,18 @@ def _report(result, sheets, meta, sub_dir: str, out: str | None) -> bool:
     from nci_seronet_proc_data_validator_spark.submission import (
         check_submission_quality,
     )
-    n_col_errors = len(result.column_finding_rows)
-    ok, why = check_submission_quality(sheets, n_col_errors,
+    header_rows = result.column_finding_rows
+    ok, why = check_submission_quality(sheets, len(header_rows),
                                        str(meta["cbc_id"]))
     if not ok:
         print(f"QUALITY GATE FAILED: {why}")
-        result.column_findings.show(50, truncate=False)
+        for mt, sheet, col, msg in header_rows[:50]:
+            print(f"  {mt} {sheet} {col}: {msg}")
         # the reference still notifies and records job status on gate
         # failure (nci:76-80) — we print and stop before per-sheet reports
 
+    # one summary action; the notification text prints it per sheet
     summary_rows = [r.asDict() for r in result.summary.collect()]
-    result.summary.show(50, truncate=False)
     payload = build_notification_payload(
         summary_rows, os.path.basename(sub_dir.rstrip("/")))
     print(payload["blocks"][0]["text"]["text"])
@@ -86,92 +85,16 @@ def _report(result, sheets, meta, sub_dir: str, out: str | None) -> bool:
     return ok
 
 
-def _run_procs(args) -> int:
-    """--procs N: shard schema groups across N child PROCESSES, each its
-    own JVM running this CLI over its shard.
-
-    Why processes: the residual serial cost of a run is driver-side
-    Python (plan build, py4j round-trips) under ONE GIL; BENCH_NOTES r12
-    measured two processes composing with batching (24 tiny subs:
-    89.9 -> 63.3 s). Sharding is by SCHEMA GROUP so each child still
-    batches maximally: headers are probed here (``csv_header`` — zero
-    Spark, no JVM in the parent) and grouped by the same
-    ``orchestrate.group_by_schema`` the children use, so parent and
-    children agree on the groups. Groups are dealt largest-first onto
-    the shards; children write the same per-submission subdirs under
-    --out they would in one process, and findings are identical because
-    every submission's findings are independent of its batch.
-    """
-    import subprocess
-
-    from nci_seronet_proc_data_validator_spark.orchestrate import (
-        group_by_schema,
-    )
-    from nci_seronet_proc_data_validator_spark.sources.readers import (
-        csv_header,
-    )
-
-    names = [os.path.basename(d.rstrip("/")) or "submission"
-             for d in args.submission_dirs]
-    if len(set(names)) != len(names):
-        print("--procs needs unique submission dir basenames (children "
-              "resolve output subdirs independently; a collision would "
-              "clobber reports across shards) — rename the duplicates "
-              "or run with --procs 1")
-        return 2
-
-    dirs = {d: _sheet_paths(d) for d in args.submission_dirs}
-    groups = group_by_schema(dirs, {p: csv_header(p) for sheets in
-                                    dirs.values() for p in sheets.values()})
-    # Deal groups largest-first onto the least-loaded shard, SPLITTING a
-    # group when it exceeds the ideal shard size: splitting is safe (the
-    # batched plan keys every join/agg on the submission tag, so any
-    # partition of a group yields per-submission findings identical to
-    # serial — pinned by test_batched_matches_serial) and without it one
-    # dominant schema would collapse --procs N to one busy process.
-    n = len(args.submission_dirs)
-    n_shards = min(args.procs, n)
-    ideal = -(-n // n_shards)          # ceil
-    shards: list[list] = [[] for _ in range(n_shards)]
-    for members in sorted(groups, key=len, reverse=True):
-        for i in range(0, len(members), ideal):
-            min(shards, key=len).extend(members[i:i + ideal])
-    shards = [s for s in shards if s]
-    print(f"procs: {len(groups)} schema group(s) over {len(shards)} "
-          f"process(es), shard sizes {[len(s) for s in shards]}")
-
-    base = [sys.executable, os.path.abspath(__file__)]
-    passthrough = []
-    if args.out:
-        passthrough += ["--out", args.out]
-    for kv in args.cbc:
-        passthrough += ["--cbc", kv]
-    if args.keep_reference_bugs:
-        passthrough += ["--keep-reference-bugs"]
-    procs = [subprocess.Popen(base + shard + passthrough)
-             for shard in shards]
-    return max(p_.wait() for p_ in procs)
-
-
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("submission_dirs", nargs="+")
     ap.add_argument("--out", default=None)
-    ap.add_argument("--procs", type=int, default=1,
-                    help="shard schema groups across N driver PROCESSES "
-                         "(each its own JVM) — the GIL escape for "
-                         "driver-bound many-tiny-submission runs "
-                         "(BENCH_NOTES r12: processes compose with "
-                         "batching); findings identical to one process")
     ap.add_argument("--cbc", action="append", default=[],
                     metavar="NAME=ID", help="CBC name → 2-digit id mapping")
     ap.add_argument("--keep-reference-bugs", action="store_true",
                     help="reproduce the reference's buggy behaviors instead "
                          "of the documented fixes")
     args = ap.parse_args()
-
-    if args.procs > 1 and len(args.submission_dirs) > 1:
-        return _run_procs(args)
 
     single = len(args.submission_dirs) == 1
     dirs: dict[str, dict[str, str]] = {}
@@ -192,7 +115,6 @@ def main() -> int:
         return 2
 
     from nci_seronet_proc_data_validator_spark.orchestrate import (
-        _default_materialize,
         validate_dirs,
     )
     from nci_seronet_proc_data_validator_spark.session import get_spark
@@ -211,12 +133,12 @@ def main() -> int:
         icd10_codes=load_icd10_codes(spark),
         expected_columns=static_expected_columns(),
         bind_kwargs={"fix_reference_bugs": not args.keep_reference_bugs},
-        materialize=_default_materialize, meta_out=meta, groups_out=groups)
+        meta_out=meta, groups_out=groups)
     sizes = sorted((len(m) for m in groups), reverse=True)
     print(f"{len(groups)} schema group(s), sizes {sizes}")
 
-    # Report serially, in input order (driver-side prints; the heavy
-    # lifting overlapped in the groups' materialize hooks). One dir keeps
+    # Report serially, in input order (driver-side prints; the findings
+    # checkpoints already ran inside the groups' workers). One dir keeps
     # the reference's flat layout under --out.
     rc = 1 if load_failed else 0
     out_names = _out_names(list(dirs))
