@@ -1,5 +1,6 @@
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default
-sf0.1) on local[$SPARK_GRAFT_CPUS]. Prints ONE JSON line:
+sf0.1) on ``get_spark``'s local[N] ($SPARK_GRAFT_CPUS, else the usable
+cores). Prints ONE JSON line:
 {"metric": ..., "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}
 
 Queries are executed to completion with the noop sink (full pipeline runs,
@@ -73,12 +74,12 @@ from nci_seronet_proc_data_validator_spark.sources.readers import read_table
 
 def _spread(df, spark):
     """Local testdata is a single parquet with ~3 row groups; scan
-    parallelism is row-group-bound, so CPU-heavy downstream stages idle 29
-    of 32 cores. One narrow repartition spreads the work. On a real
-    cluster (inputs already split into many files) this is a no-op cost.
+    parallelism is row-group-bound, so CPU-heavy downstream stages idle
+    all but ~3 cores. One narrow repartition to the session's
+    parallelism spreads the work. On a real cluster (inputs already split
+    into many files) this is a no-op cost.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    return df.repartition(cpus)
+    return df.repartition(spark.sparkContext.defaultParallelism)
 
 
 def validation_lineitem(spark, sf_dir):
@@ -288,8 +289,7 @@ _DRIFT_CLAMP = (0.8, 1.75)
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = get_spark("bench", cpus=cpus)
+    spark = get_spark("bench")
     # Warm the JVM: run the same plans at the smallest scale factor first
     # so codegen/JIT compilation is excluded from the timed runs.
     warm_dir = "/root/testdata/sf0.001"

@@ -37,21 +37,16 @@ ERROR_MESSAGE = "Error_Message"
 FINDING_COLUMNS = [MESSAGE_TYPE, SHEET_NAME, ROW_INDEX, COLUMN_NAME,
                    COLUMN_VALUE, ERROR_MESSAGE]
 
+# The submission tag a multi-submission findings frame carries beside the
+# six finding columns; the sinks key on it when it is present.
+SUB_COL = "__submission_id"
+
 FINDING_SCHEMA = T.StructType([
     T.StructField(MESSAGE_TYPE, T.StringType(), False),
     T.StructField(SHEET_NAME, T.StringType(), False),
     T.StructField(ROW_INDEX, T.LongType(), False),
     T.StructField(COLUMN_NAME, T.StringType(), False),
     T.StructField(COLUMN_VALUE, T.StringType(), True),
-    T.StructField(ERROR_MESSAGE, T.StringType(), False),
-])
-
-# Column-level findings (header/schema problems): no row identity.
-COLUMN_FINDING_COLUMNS = [MESSAGE_TYPE, SHEET_NAME, COLUMN_NAME, ERROR_MESSAGE]
-COLUMN_FINDING_SCHEMA = T.StructType([
-    T.StructField(MESSAGE_TYPE, T.StringType(), False),
-    T.StructField(SHEET_NAME, T.StringType(), False),
-    T.StructField(COLUMN_NAME, T.StringType(), False),
     T.StructField(ERROR_MESSAGE, T.StringType(), False),
 ])
 
@@ -64,8 +59,8 @@ ROW_CROSS_SHEET = -10
 # Ours, not the reference's: a whole-submission validation FAILURE
 # (unreadable/poisoned sheet, compile error). The reference logs it and
 # moves to the next submission (nci-seronet-data-validator.py:109-111);
-# the streaming watcher additionally records it durably as one finding
-# row so the sink carries the outcome.
+# ``orchestrate.validate_dirs`` additionally records it durably as one
+# finding row, so both directory drivers' sinks carry the outcome.
 ROW_VALIDATION_FAILURE = -99
 
 ERROR = "Error"
@@ -155,14 +150,16 @@ def dedup_findings(findings: DataFrame) -> DataFrame:
 
 
 def findings_summary(findings: DataFrame) -> DataFrame:
-    """Crosstab of sheet × Message_Type with zero backfill.
+    """Crosstab of sheet × Message_Type with zero backfill; per
+    (submission, sheet) when the frame carries the ``SUB_COL`` tag.
 
     Reference: ``pd.crosstab`` + ``fix_table``
     (nci-seronet-data-validator.py:215-231). Spark: groupBy + pivot with an
     explicit value list (avoids the extra distinct-scan pivot pass) +
     ``na.fill(0)``.
     """
-    return (findings.groupBy(SHEET_NAME)
+    return (findings.groupBy(*[c for c in (SUB_COL, SHEET_NAME)
+                               if c in findings.columns])
             .pivot(MESSAGE_TYPE, [ERROR, WARNING])
             .count()
             .na.fill(0, [ERROR, WARNING])

@@ -15,7 +15,8 @@ Three layers, each the only one of its kind:
   driver-side header probe, ``submission.csv`` metadata, the
   order-sensitive :func:`group_by_schema` signature and one pretagged
   multi-file scan per sheet. The batch CLI and the completion watcher
-  both call it.
+  both call it, and both sink the one frame it hands them
+  (``combined_out``).
 - :func:`validate_groups` — one compile per schema group, each group on
   its own worker thread inside the SAME SparkSession with a per-group
   FAIR pool (``spark.scheduler.pool``; the session factory enables FAIR
@@ -44,9 +45,23 @@ from typing import Callable
 
 from pyspark.sql import SparkSession
 
+from nci_seronet_proc_data_validator_spark.errors import (
+    FINDING_COLUMNS,
+    ROW_VALIDATION_FAILURE,
+    SUB_COL,
+    empty_findings,
+    local_rows_df,
+    sql_string_map,
+)
 from nci_seronet_proc_data_validator_spark.submission import (
+    A4_FAMILIES,
+    A4_ROW_SCHEMA,
     SKIP_VALIDATION,
     ValidationResult,
+    a4_mismatch_tuple,
+    column_finding_rows,
+    parse_submission_metadata,
+    parse_submission_metadata_local,
 )
 
 __all__ = ["CBC_COL", "ConcurrentOutcome", "SUB_COL", "group_by_schema",
@@ -62,6 +77,14 @@ class ConcurrentOutcome:
     seconds: float                      # wall time inside the worker
     error: Exception | None = None
 
+    @property
+    def failure(self) -> str | None:
+        """``"ExcType: message"`` (capped at 300 chars), else None: the
+        text of the failure row, ``failed_cb`` and the CLI's ``FAILED:``."""
+        if self.error is None:
+            return None
+        return f"{type(self.error).__name__}: {str(self.error)[:300]}"
+
 
 # Schema groups validated at once: the per-group work is
 # driver-build-heavy and the GIL serializes builds past ~4 threads
@@ -70,7 +93,6 @@ MAX_PARALLEL = 4
 
 
 # --------------------------------------------------------------- batched
-SUB_COL = "__submission_id"
 CBC_COL = "__cbc_id"
 
 log = logging.getLogger(__name__)
@@ -289,12 +311,6 @@ def _compile_batch(spark: SparkSession, subs: "dict[str, dict]",
     ``release_out`` before the first persist."""
     from pyspark.sql import functions as F
 
-    from nci_seronet_proc_data_validator_spark.errors import (
-        FINDING_COLUMNS,
-        empty_findings,
-        local_rows_df,
-        sql_string_map,
-    )
     from nci_seronet_proc_data_validator_spark.functions.checks import (
         PerRowCbc,
     )
@@ -605,14 +621,6 @@ def validate_batched_results(
     """
     from pyspark.sql import functions as F
 
-    from nci_seronet_proc_data_validator_spark.errors import local_rows_df
-    from nci_seronet_proc_data_validator_spark.submission import (
-        A4_FAMILIES,
-        A4_ROW_SCHEMA,
-        a4_mismatch_tuple,
-        column_finding_rows,
-    )
-
     # localCheckpoint, not persist: every per-submission tail/summary
     # action derives a NEW DataFrame from the batched findings, and a
     # persisted df still carries the FULL logical plan (N-leg sheet
@@ -676,7 +684,7 @@ def validate_batched_results(
         return f
 
     return {sid: ValidationResult(
-                spark, findings_thunk=lambda sid=sid: findings_of(sid),
+                findings_thunk=lambda sid=sid: findings_of(sid),
                 column_finding_rows=column_finding_rows(
                     kw["sheets"], kw.get("expected_columns")))
             for sid, kw in subs.items()}
@@ -817,26 +825,29 @@ def validate_dirs(spark: SparkSession,
        reads every sheet as ONE tagged multi-file scan
        (``read_sheet_csv_tagged`` with the probed header as ``columns=``,
        so no header-inference job reads every member file);
-    5. :func:`validate_groups` compiles each group once, passing
-       ``combined_out`` through.
+    5. :func:`validate_groups` compiles each group once.
 
     ``icd10_codes``, ``expected_columns`` and ``bind_kwargs`` (``today``,
     ``fix_reference_bugs``, ``db_merged_tables``) are shared by all.
     ``meta_out`` receives each submission's parsed metadata,
     ``groups_out`` the schema groups. A submission whose kwargs cannot
-    be built (unreadable sheet, malformed metadata) gets its own
-    ``ConcurrentOutcome(error=...)``; the rest still validate. Readers
-    are looked up on their module at call time, so wrappers around them
-    (benchmark spans, test spies) see every read.
+    be built (unreadable sheet, malformed metadata) or whose group
+    member retry failed gets its own ``ConcurrentOutcome(error=...)``;
+    the rest still validate. Readers are looked up on their module at
+    call time, so wrappers around them (benchmark spans, test spies) see
+    every read.
+
+    ``combined_out`` receives the run's findings, tagged
+    ``__submission_id``, to union and sink whole: each group's batch
+    frame plus one local frame with a durable failure row per failed
+    submission (``CSV_Sheet_Name='__submission__'``, ``Row_Index=
+    ROW_VALIDATION_FAILURE``, ``Column_Name='__validation_failure__'``,
+    ``ConcurrentOutcome.failure``; the jobs-table "File_Error" twin).
     """
     from nci_seronet_proc_data_validator_spark.sources.readers import (
         csv_header,
         read_sheet_csv,
         read_sheet_csv_tagged,
-    )
-    from nci_seronet_proc_data_validator_spark.submission import (
-        parse_submission_metadata,
-        parse_submission_metadata_local,
     )
     cbc = {str(k): str(v) for k, v in (cbc_map or {}).items()}
     headers = {pth: csv_header(pth)
@@ -887,4 +898,12 @@ def validate_dirs(spark: SparkSession,
     if groups:
         out.update(validate_groups(spark, subs, groups, pretag=pretag,
                                    combined_out=combined_out))
+    failed = sorted((sid, oc.failure) for sid, oc in out.items()
+                    if oc.error is not None)
+    if failed and combined_out is not None:
+        combined_out.append(local_rows_df(
+            spark,
+            [(sid, "Error", "__submission__", ROW_VALIDATION_FAILURE,
+              "__validation_failure__", None, msg) for sid, msg in failed],
+            f"{SUB_COL} string, {A4_ROW_SCHEMA}"))
     return out

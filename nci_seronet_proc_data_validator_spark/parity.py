@@ -66,6 +66,7 @@ from nci_seronet_proc_data_validator_spark.errors import (
     MESSAGE_TYPE,
     ROW_INDEX,
     SHEET_NAME,
+    SUB_COL,
 )
 from nci_seronet_proc_data_validator_spark.sources.readers import read_table
 
@@ -388,7 +389,6 @@ def _batched_cols() -> "dict[str, str]":
 
 def _batched_arm(spark: SparkSession, sf_dir: str, null_v) -> DataFrame:
     from nci_seronet_proc_data_validator_spark.orchestrate import (
-        SUB_COL,
         validate_batched,
     )
     from nci_seronet_proc_data_validator_spark.plans.fixture import (
@@ -959,7 +959,7 @@ def _watch_multi_arm(spark: SparkSession, sf_dir: str) -> DataFrame:
         sub_pattern=r".*/([^/]+)/[^/]+/[^/]+$")
     q.awaitTermination(600)
     return _multiset_arm(spark.read.parquet(out), "watch_multi",
-                         ("__submission_id", *_FINDING_KEYS))
+                         (SUB_COL, *_FINDING_KEYS))
 
 
 # --- watch_complete: the submission-completeness-gated watcher ----------
@@ -1077,7 +1077,7 @@ def _watch_complete_arm(spark: SparkSession, sf_dir: str) -> DataFrame:
     q.awaitTermination(600)
     return _multiset_arm(
         spark.read.parquet(os.path.join(out, "findings")), "watch_complete",
-        ("__submission_id", "Message_Type", "CSV_Sheet_Name",
+        (SUB_COL, "Message_Type", "CSV_Sheet_Name",
          *_FINDING_KEYS[1:]))
 
 

@@ -17,13 +17,16 @@ def get_spark(app_name: str = "nci_seronet_proc_data_validator_spark",
 
     - AQE on: runtime coalescing of shuffle partitions and skew-join
       splitting, so plans survive data-size changes without retuning.
-    - shuffle.partitions ~ cores locally; a cluster deployment overrides it
-      (or relies on AQE's coalescing from a higher initial value).
+    - ``local[cpus]`` with shuffle.partitions = cpus: ``cpus`` is the
+      argument, else ``$SPARK_GRAFT_CPUS``, else the cores this process
+      may run on; a cluster deployment overrides it (or relies on AQE's
+      coalescing from a higher initial value).
     - UTC session timezone so timestamp semantics match the DuckDB oracle
       and are stable across environments.
     - Arrow enabled for the few Pandas-UDF paths (multimodal decode).
     """
-    cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = (cpus or int(os.environ.get("SPARK_GRAFT_CPUS") or 0)
+            or len(os.sched_getaffinity(0)))
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -31,26 +34,11 @@ def get_spark(app_name: str = "nci_seronet_proc_data_validator_spark",
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # AQE's SMJ -> shuffled-hash rewrite (guide §3.1): removes both
-        # sorts from an iterative keyed join when every post-shuffle
-        # build partition fits under the bound. Exposed as an env knob
-        # for cluster tuning but DEFAULT OFF (the upstream default): a
-        # same-session alternating A/B at 64m on the SMJ-heaviest keys
-        # (graph_metrics 2.85->2.95 s best, dedup_clusters 2.13->2.12 s)
-        # measured it neutral here — the iterative joins' frames are
-        # already small enough that sorting them is not the cost.
-        .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-                os.environ.get("SPARK_GRAFT_SHJ_LOCALMAP", "0"))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Read TIMESTAMP(NANOS) parquet (events table) as long nanos;
         # sources convert to timestamp explicitly.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # Parquet parallelism is bounded by row groups, not byte splits —
-        # keep the default split size; compute-heavy stages over few-row-
-        # group local files should .repartition() explicitly instead.
-        .config("spark.sql.files.maxPartitionBytes",
-                os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "128m"))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         # Collect bound for oracle-parity harnesses that pull full result
         # tables (e.g. the 11M-row sf1 rulebook findings); default

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from nci_seronet_proc_data_validator_spark.errors import (
     ERROR,
     SHEET_NAME,
+    SUB_COL,
 )
 
 
@@ -33,6 +34,8 @@ def write_error_reports(findings: DataFrame, out_dir: str,
     ``CSV_Sheet_Name=<sheet>/``), rows ordered by Row_Index within each
     sheet (the reference sorts cross-sheet reports by accumulator order and
     row reports by Row_Index; we order all by Row_Index — deviation noted).
+    A frame tagged ``__submission_id`` (``SUB_COL``) is partitioned by
+    submission first: ``__submission_id=<id>/CSV_Sheet_Name=<sheet>/``.
 
     ``partitionBy`` writes every sheet's report in ONE job — no per-sheet
     loop, no driver round-trips; at scale each partition writes in
@@ -45,11 +48,12 @@ def write_error_reports(findings: DataFrame, out_dir: str,
     if fmt == "xlsx":
         _write_error_workbook(findings, out_dir)
         return
+    keys = [c for c in (SUB_COL, SHEET_NAME) if c in findings.columns]
     writer = (findings
-              .repartition(SHEET_NAME)
-              .sortWithinPartitions(SHEET_NAME, "Row_Index")
+              .repartition(*keys)
+              .sortWithinPartitions(*keys, "Row_Index")
               .write.mode("overwrite")
-              .partitionBy(SHEET_NAME))
+              .partitionBy(*keys))
     if fmt == "csv":
         writer.option("header", "true").csv(out_dir)
     else:

@@ -292,14 +292,15 @@ def validate_stream_submissions(spark: SparkSession, root_dir: str,
       fires only on batches where submissions completed successfully,
       BEFORE their findings caches are released — the hook for the
       quality gate / notification / jobs-table bookkeeping, with the
-      full result (``column_findings`` included — the P10 header
+      full result (``column_finding_rows`` included — the P10 header
       findings are NOT part of the findings sink, same as the batch
       CLI where they feed the quality gate, so ``expected_columns`` is
       observable only here). Completion reporting must come from this
       callback, not from counting findings rows: a fully CLEAN
       submission completes with an empty findings frame.
     - ``failed_cb({submission_id: "ExcType: message"}, epoch_id)``:
-      fires when a completing submission's VALIDATION ITSELF failed.
+      fires when a completing submission's VALIDATION ITSELF failed
+      (the text is ``ConcurrentOutcome.failure``).
 
     **Per-submission error isolation** (the reference's "Moving onto
     Next Submitted File" loop, nci-seronet-data-validator.py:70,
@@ -308,7 +309,8 @@ def validate_stream_submissions(spark: SparkSession, root_dir: str,
     micro-batch, because a failed batch replays the same input and
     fails identically forever, wedging every LATER submission behind
     it. Each per-submission compile is isolated; a failure is recorded
-    DURABLY as one findings row (``CSV_Sheet_Name='__submission__'``,
+    DURABLY as the one findings row ``orchestrate.validate_dirs`` adds
+    to its frame (``CSV_Sheet_Name='__submission__'``,
     ``Row_Index=ROW_VALIDATION_FAILURE``,
     ``Column_Name='__validation_failure__'``, the exception in
     ``Error_Message``) in the same epoch-keyed sink, and reported via
@@ -421,13 +423,15 @@ def validate_stream_submissions(spark: SparkSession, root_dir: str,
         findings = None
         if complete_now:
             from nci_seronet_proc_data_validator_spark.errors import (
-                FINDING_COLUMNS, FINDING_SCHEMA, ROW_VALIDATION_FAILURE)
+                FINDING_COLUMNS, SUB_COL)
             from nci_seronet_proc_data_validator_spark.orchestrate import (
-                SUB_COL, validate_dirs)
+                validate_dirs)
 
             # sink each group's WHOLE batch frame, not N re-union slices
             # of the same checkpoint (N slices execute as N x its
-            # partitions in one job — the dominant burst cost)
+            # partitions in one job — the dominant burst cost). A failed
+            # submission is one durable row of the same frame,
+            # replay-idempotent like every other row of the epoch.
             parts: list = []
             outcomes = validate_dirs(
                 sess, {sub: have[sub] for sub in complete_now},
@@ -435,40 +439,15 @@ def validate_stream_submissions(spark: SparkSession, root_dir: str,
                 icd10_codes=_resolve(icd10_codes),
                 expected_columns=expected_columns,
                 bind_kwargs=bind_kwargs, combined_out=parts)
-            results = {}
-            failures: dict[str, str] = {}
-            for sub, oc in sorted(outcomes.items()):
-                if oc.error is None:
-                    results[sub] = oc.result
-                    continue
-                # Per-submission error isolation — the reference's
-                # "Moving onto Next Submitted File" loop
-                # (nci-seronet-data-validator.py:70,109-111). Without it
-                # one poisoned submission (unreadable sheet, column name
-                # the rulebook cannot render, ...) fails the micro-batch,
-                # which replays and fails identically forever — a
-                # permanent wedge blocking every LATER submission.
-                # Record the failure (durably, as one finding row below)
-                # and move on.
-                failures[sub] = (f"{type(oc.error).__name__}: "
-                                 f"{str(oc.error)[:300]}")
+            results = {sub: oc.result
+                       for sub, oc in sorted(outcomes.items())
+                       if oc.error is None}
+            failures = {sub: oc.failure
+                        for sub, oc in sorted(outcomes.items())
+                        if oc.error is not None}
+            for sub, msg in failures.items():
                 log.warning("validation FAILED for submission %s: %s; "
-                            "moving on", sub, failures[sub])
-            if failures:
-                # durable failure record: one row per failed submission
-                # in the SAME findings sink (the reference's jobs-table
-                # "File_Error" twin) — replay-idempotent like every
-                # other row of the epoch partition
-                fail_schema = T.StructType(
-                    list(FINDING_SCHEMA.fields)
-                    + [T.StructField(SUB_COL, T.StringType(), False)])
-                parts.append(local_rows_df(
-                    sess,
-                    [("Error", "__submission__",
-                      ROW_VALIDATION_FAILURE, "__validation_failure__",
-                      None, msg, sub)
-                     for sub, msg in sorted(failures.items())],
-                    fail_schema))
+                            "moving on", sub, msg)
             findings = union_findings(parts).select(*FINDING_COLUMNS,
                                                     SUB_COL)
             _epoch_sink(findings, epoch_id, findings_dir)

@@ -20,12 +20,7 @@ from functools import cached_property
 
 from pyspark.sql import DataFrame, SparkSession
 
-from nci_seronet_proc_data_validator_spark.errors import (
-    COLUMN_FINDING_SCHEMA,
-    ROW_COUNT_MISMATCH,
-    findings_summary,
-    local_rows_df,
-)
+from nci_seronet_proc_data_validator_spark.errors import ROW_COUNT_MISMATCH
 
 SKIP_VALIDATION = ("submission.csv", "shipping_manifest.csv")
 
@@ -214,39 +209,25 @@ class ValidationResult:
     """One submission's validation outputs.
 
     - ``findings``: canonical 6-column findings table;
-    - ``column_findings``: header/schema findings (4 columns);
-    - ``summary``: sheet × {Errors, Warnings} crosstab of ``findings``;
     - ``column_finding_rows``: the header/column findings as plain driver
-      tuples (P10 is pure driver-side set algebra on column names, it
-      never touches data). Consumers that only need the VALUES (the
-      watcher's completion printout, the CLI quality gate) read these
-      and skip the DataFrame round trip.
+      tuples ``(Message_Type, CSV_Sheet_Name, Column_Name,
+      Error_Message)`` (P10 is pure driver-side set algebra on column
+      names, it never touches data) — what the watcher's completion
+      printout and the CLI quality gate read.
 
-    Frames are built on first access and memoized: plan construction is
-    tens of py4j round-trips per frame, and a burst consumer (the
-    watcher, which sinks the batch frame and reads only
-    ``column_finding_rows``) never touches them. ``summary`` derives from
-    the memoized ``findings``, so reading both builds one findings plan.
+    ``findings`` is built on first access and memoized: plan
+    construction is tens of py4j round-trips, and a burst consumer (the
+    watcher or the batch CLI, which sink the batch frame and read only
+    ``column_finding_rows``) never touches it.
     """
 
-    def __init__(self, spark: SparkSession, *, findings_thunk,
-                 column_finding_rows: list):
-        self._spark = spark
+    def __init__(self, *, findings_thunk, column_finding_rows: list):
         self._findings_thunk = findings_thunk
         self.column_finding_rows = column_finding_rows
 
     @cached_property
     def findings(self) -> DataFrame:
         return self._findings_thunk()
-
-    @cached_property
-    def column_findings(self) -> DataFrame:
-        return local_rows_df(self._spark, self.column_finding_rows,
-                             COLUMN_FINDING_SCHEMA)
-
-    @cached_property
-    def summary(self) -> DataFrame:
-        return findings_summary(self.findings)
 
     def release(self) -> None:
         """No-op: findings live in the batch compile's local

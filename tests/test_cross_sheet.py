@@ -134,8 +134,7 @@ def test_column_findings(spark):
                                               "Age", "Race"]},
         today=datetime.date(2026, 1, 1))
     res = v.validate()
-    got = {(r["Column_Name"], r["Error_Message"])
-           for r in res.column_findings.collect()}
+    got = {(col, msg) for _mt, _sheet, col, msg in res.column_finding_rows}
     assert ("Race", "This Column is Expected and is missing from CSV File") in got
 
 

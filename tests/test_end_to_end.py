@@ -5,6 +5,7 @@ reference never had, SURVEY.md §5.2)."""
 import datetime
 import os
 
+from nci_seronet_proc_data_validator_spark.errors import findings_summary
 from nci_seronet_proc_data_validator_spark.sources import read_sheet_csv
 from nci_seronet_proc_data_validator_spark.sources.catalog import (
     static_expected_columns,
@@ -71,14 +72,14 @@ def test_full_submission_golden(spark, tmp_path):
     assert len(recon) == 1 and "IDS are valid" in recon[0][1]
 
     # header catalog: demographic is missing many expected columns
-    col_errs = {(r["CSV_Sheet_Name"], r["Column_Name"]): r["Error_Message"]
-                for r in res.column_findings.collect()}
+    col_errs = {(sheet, col): msg
+                for _mt, sheet, col, msg in res.column_finding_rows}
     assert ("demographic.csv", "Gender") in col_errs
     assert col_errs[("demographic.csv", "Gender")] \
         == "This Column is Expected and is missing from CSV File"
 
     # summary pivot is consistent with the findings table
     summary = {r["CSV_Sheet_Name"]: (r["Errors"], r["Warnings"])
-               for r in res.summary.collect()}
+               for r in findings_summary(res.findings).collect()}
     n_demo = sum(1 for k in got if k[0] == "demographic.csv")
     assert summary["demographic.csv"][0] == n_demo

@@ -8,6 +8,8 @@ import threading
 
 import pytest
 
+from nci_seronet_proc_data_validator_spark.errors import (
+    ROW_VALIDATION_FAILURE, findings_summary)
 from nci_seronet_proc_data_validator_spark.orchestrate import (
     validate_groups)
 from nci_seronet_proc_data_validator_spark.sources import read_sheet_csv
@@ -49,16 +51,49 @@ def _finding_set(findings):
         for r in findings.collect())
 
 
-def _run_cli(monkeypatch, argv: list[str]) -> int:
+def _tool(name: str):
+    """Import a ``tools/`` script as a module."""
+    import importlib
     import sys
 
     sys.path.insert(0, "tools")
     try:
-        import run_submission as rs
+        return importlib.import_module(name)
     finally:
         sys.path.pop(0)
+
+
+def _run_cli(monkeypatch, argv: list[str]) -> int:
+    import sys
+
     monkeypatch.setattr(sys, "argv", ["run_submission.py", *argv])
-    return rs.main()
+    return _tool("run_submission").main()
+
+
+def _run_cli_sink_jobs(monkeypatch, spark, argv: list[str]
+                       ) -> tuple[int, int]:
+    """``_run_cli`` plus the number of Spark jobs the CLI starts after
+    ``orchestrate.validate_dirs`` returns: a spy (the CLI imports
+    validate_dirs at call time) puts them in a job group of their own."""
+    import uuid
+
+    from nci_seronet_proc_data_validator_spark import orchestrate
+    sc = spark.sparkContext
+    group = f"cli-sink-{uuid.uuid4().hex}"
+    validate_dirs = orchestrate.validate_dirs
+
+    def spy(*args, **kwargs):
+        out = validate_dirs(*args, **kwargs)
+        sc.setJobGroup(group, "CLI sink")
+        return out
+
+    with monkeypatch.context() as m:
+        m.setattr(orchestrate, "validate_dirs", spy)
+        try:
+            rc = _run_cli(monkeypatch, argv)
+        finally:
+            sc._jsc.clearJobGroup()
+    return rc, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _cli_serial(spark, d: str, cbc_map: dict):
@@ -93,9 +128,42 @@ def _n_errors(findings) -> int:
     return findings.filter("Message_Type = 'Error'").count()
 
 
-def _cli_findings(spark, out_dir) -> list:
+def _cli_findings(spark, out_dir, sid: str) -> list:
+    """Submission ``sid``'s rows of a CLI run's ``OUT/findings.parquet``."""
+    from pyspark.sql import functions as F
     return _finding_set(spark.read.parquet(
-        str(out_dir / "findings.parquet")))
+        str(out_dir / "findings.parquet")).filter(
+            F.col("__submission_id") == sid))
+
+
+def test_cli_submission_ids_unique():
+    """Colliding dir basenames get distinct submission ids, each suffix
+    picked against every name already taken — including a dir whose own
+    basename looks like a suffixed one (the CLI keys the findings and
+    the report partitions by these ids)."""
+    ids = _tool("run_submission")._submission_ids(
+        ["/x/a/s", "/x/b/s", "/x/c/s_1", "/x/d/s/"])
+    assert ids == {"/x/a/s": "s", "/x/b/s": "s_1", "/x/c/s_1": "s_1_1",
+                   "/x/d/s/": "s_2"}
+
+
+@pytest.mark.parametrize("tool, argv", [
+    ("run_submission", ["sub"]),
+    ("run_watcher", ["root", "--complete", "--sheets", "submission.csv",
+                     "--out", "out", "--checkpoint", "cp"])])
+def test_cli_cbc_without_equals_is_usage_error(tool, argv, monkeypatch,
+                                               capsys):
+    """``--cbc LabX`` (no ``=ID``) is a usage error in both CLIs: exit 2
+    with a usage message, before any Spark work."""
+    import sys
+
+    mod = _tool(tool)
+    monkeypatch.setattr(sys, "argv", [f"{tool}.py", *argv, "--cbc", "LabX"])
+    with pytest.raises(SystemExit) as exc:
+        mod.main()
+    assert exc.value.code == 2
+    err = capsys.readouterr().err
+    assert "usage:" in err and "expected NAME=ID, got 'LabX'" in err, err
 
 
 def test_concurrent_matches_serial(spark, tmp_path):
@@ -476,17 +544,19 @@ def test_cli_batched_matches_serial(spark, tmp_path, monkeypatch, capsys):
         r"• `(\S+)` — (\d+) Errors / (\d+) Warnings", report)}
     assert printed == {
         r["CSV_Sheet_Name"]: (r["Errors"], r["Warnings"])
-        for r in _cli_serial(spark, dirs[1], cbc).summary.collect()}
+        for r in findings_summary(
+            _cli_serial(spark, dirs[1], cbc).findings).collect()}
     assert printed, report
 
     for d in dirs:
         base = d.rstrip("/").split("/")[-1]
-        got = _cli_findings(spark, tmp_path / "out" / base)
+        got = _cli_findings(spark, tmp_path / "out", base)
         assert got == _cli_twin(spark, d, cbc), base
         assert got, base                    # every submission has findings
     # the mixed-CBC group really validated against per-submission labs
     ga1 = spark.read.parquet(
-        str(tmp_path / "out" / "ga1" / "findings.parquet"))
+        str(tmp_path / "out" / "findings.parquet")).filter(
+            F.col("__submission_id") == "ga1")
     assert ga1.filter(F.col("Error_Message").contains(
         "Expecting CBC Code (41)")).count() > 0
 
@@ -514,8 +584,14 @@ def test_cli_isolates_unreadable_submission(spark, tmp_path, monkeypatch,
     assert rc == 1
     bad_report = text.split(f"=== {bad} ")[1]
     assert bad_report.lstrip().split("\n")[1].startswith("FAILED"), text
-    assert (_cli_findings(spark, tmp_path / "out" / "good")
+    assert (_cli_findings(spark, tmp_path / "out", "good")
             == _cli_twin(spark, str(good), {"LabX": "14"}))
+    # the failure's durable record: exactly one row, carrying the text
+    # of the printed FAILED line
+    [row] = _cli_findings(spark, tmp_path / "out", "bad")
+    assert row[1:4] == ("__submission__", ROW_VALIDATION_FAILURE,
+                        "__validation_failure__"), row
+    assert f"FAILED: {row[5]}\n" in bad_report, (row, bad_report)
 
 
 def test_batched_db_merged_tables_matches_serial(spark, tmp_path):
@@ -841,26 +917,31 @@ def test_cli_batched_groups_by_column_order(spark, tmp_path, monkeypatch,
         (d / "submission.csv").write_text("key,LabX\np,1\nb,0\n")
         dirs.append(str(d))
 
-    _run_cli(monkeypatch, [*dirs, "--out", str(tmp_path / "out"),
-                           "--cbc", "LabX=14"])
+    _, jobs_two = _run_cli_sink_jobs(
+        monkeypatch, spark,
+        [*dirs, "--out", str(tmp_path / "out"), "--cbc", "LabX=14"])
     text = capsys.readouterr().out
     assert "2 schema group(s), sizes [1, 1]" in text, text
 
     for d in dirs:
         base = d.rstrip("/").split("/")[-1]
-        got = _cli_findings(spark, tmp_path / "out" / base)
+        got = _cli_findings(spark, tmp_path / "out", base)
         assert got == _cli_twin(spark, d, {"LabX": "14"}), base
         # the out-of-range Age was found under the right column — a
         # positional misread would have put '931'/'White' elsewhere
         assert any(r[3] == "Age" and r[4] in ("930", "931")
                    for r in got), base
 
-    # one dir: the same findings, reports flat under --out
-    _run_cli(monkeypatch, [dirs[1], "--out", str(tmp_path / "single"),
-                           "--cbc", "LabX=14"])
+    # one dir: the same findings, in the same layout
+    _, jobs_one = _run_cli_sink_jobs(
+        monkeypatch, spark,
+        [dirs[1], "--out", str(tmp_path / "single"), "--cbc", "LabX=14"])
     assert "1 schema group(s), sizes [1]" in capsys.readouterr().out
-    assert (_cli_findings(spark, tmp_path / "single")
+    assert (_cli_findings(spark, tmp_path / "single", "ob")
             == _cli_twin(spark, dirs[1], {"LabX": "14"}))
+    # the CLI sinks the run's one frame: the jobs after validate_dirs
+    # (summary, findings parquet, reports) do not grow with the dirs
+    assert 0 < jobs_two <= jobs_one, (jobs_two, jobs_one)
 
 
 def test_validate_stream_multi_dynamic_cbc(spark, tmp_path):

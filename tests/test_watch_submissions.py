@@ -8,6 +8,7 @@ completes, and the drained findings hash-match the batch compile."""
 
 import datetime
 import os
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -209,11 +210,13 @@ def test_cli_complete_mode(spark, tmp_path, monkeypatch, capsys):
     """The watcher CLI's --complete mode end-to-end: a partial drain
     reports arrivals-only, the completing drain validates and prints
     per-submission counts for THIS run, and the findings match the
-    batch compile."""
+    batch compile. The batch CLI over the same dir writes the watcher's
+    findings sink shape (no epoch), row for row."""
     import sys
 
     sys.path.insert(0, "tools")
     try:
+        import run_submission as rs
         import run_watcher as rw
     finally:
         sys.path.pop(0)
@@ -250,6 +253,16 @@ def test_cli_complete_mode(spark, tmp_path, monkeypatch, capsys):
         icd10_codes=load_icd10_codes(spark)).validate().findings
     assert _finding_set(got.drop("__submission_id", "epoch")) == \
         _finding_set(want)
+
+    cli_out = str(tmp_path / "cli")
+    monkeypatch.setattr(sys, "argv", [
+        "run_submission.py", os.path.dirname(held), "--out", cli_out,
+        "--cbc", "LabX=14"])
+    rs.main()
+    cli = spark.read.parquet(os.path.join(cli_out, "findings.parquet"))
+    assert cli.columns == got.drop("epoch").columns
+    assert (Counter(map(tuple, cli.collect()))
+            == Counter(map(tuple, got.drop("epoch").collect()))), cli_out
 
 
 def test_two_submissions_complete_in_one_epoch(spark, tmp_path):
@@ -386,7 +399,7 @@ def test_clean_submission_reports_completed(spark, tmp_path, monkeypatch,
     """r13 (review): a fully CLEAN submission (zero findings) must still
     be reported as completed — completion comes from the gate via
     complete_cb, never from counting findings rows. Also pins that
-    complete_cb hands the FULL ValidationResult (column_findings
+    complete_cb hands the FULL ValidationResult (column_finding_rows
     observable) and that results are released after the sink."""
     import sys
 

@@ -29,8 +29,7 @@ def main() -> int:
     from nci_seronet_proc_data_validator_spark.session import get_spark
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = get_spark("dump_plans", cpus=cpus)
+    spark = get_spark("dump_plans")
 
     out_dir = os.path.join(os.path.dirname(os.path.dirname(
         os.path.abspath(__file__))), "plans", tag)

@@ -5,19 +5,26 @@ the reference's Lambda flow (nci-seronet-data-validator.py:33-117).
         [--out OUT_DIR] [--cbc NAME=ID ...] [--keep-reference-bugs]
 
 Each SUBMISSION_DIR holds that submission's sheet CSVs (submission.csv,
-demographic.csv, …). Every invocation runs ``orchestrate.validate_dirs``,
-the driver the completion watcher uses too: headers probed driver-side,
-submissions grouped by schema signature (per-sheet column lists in
-header order — CBC ids MAY differ), each group compiled through ONE plan
-over one multi-file scan per sheet, up to 4 groups at once on FAIR
-scheduler pools. A single submission is a batch of one, so findings per
-submission are identical whichever directories share the run; a
-submission that fails (unreadable sheet, malformed metadata) fails
-alone. Everything runs in this one process and SparkSession, the way the
-reference validates submissions one after another in one Lambda
-(nci-seronet-data-validator.py:69). Per-sheet error reports + findings
-parquet land under OUT_DIR — directly for one dir (the reference's
-per-submission layout), per-submission subdirs for several.
+demographic.csv, …); its id is the dir's basename, as the completion
+watcher derives it (suffixed ``_1``, ``_2``, … when already taken). The
+run is ``orchestrate.validate_dirs``, the completion watcher's driver:
+headers probed driver-side, submissions grouped by schema signature
+(per-sheet column lists in header order — CBC ids MAY differ), each
+group compiled through ONE plan, up to 4 groups at once on FAIR pools,
+all in this one process, the way the reference validates submissions one
+after another in one Lambda (nci-seronet-data-validator.py:69). A
+submission that fails (unreadable sheet, malformed metadata) fails alone
+and becomes one ``__submission__`` findings row.
+
+The CLI sinks the one findings frame ``validate_dirs`` builds, as the
+watcher does: one summary ``collect`` prints every submission's
+notification text, and OUT_DIR gets, for one dir or many,
+``findings.parquet`` (the six finding columns + ``__submission_id``)
+and ``Data_Validation_Results/__submission_id=<id>/CSV_Sheet_Name=<sheet>/``.
+Reports are written for every validated submission; the quality gate
+only sets the exit code: 0 all validated and passed the gate, 1 a dir
+held no CSV or a submission failed validation or the gate, 2 usage or
+no CSV at all.
 """
 
 from __future__ import annotations
@@ -30,18 +37,30 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def _out_names(dirs: list[str]) -> dict[str, str]:
-    """Unique per-submission output subdir names: the basename, suffixed
-    with an index on collision (two dirs named .../sub1 must not clobber
-    each other's reports)."""
-    names: dict[str, str] = {}
-    seen: dict[str, int] = {}
+def cbc_pair(text: str) -> tuple[str, str]:
+    """argparse ``type=`` of ``--cbc NAME=ID``: a malformed pair is a
+    usage error (exit 2), not a traceback."""
+    name, sep, cbc_id = text.partition("=")
+    if not (sep and name and cbc_id):
+        raise argparse.ArgumentTypeError(f"expected NAME=ID, got {text!r}")
+    return name, cbc_id
+
+
+def _submission_ids(dirs: list[str]) -> dict[str, str]:
+    """Unique submission id per dir: the basename, suffixed ``_<n>``
+    with the first n whose name no earlier dir took (two dirs named
+    .../sub1 must not share one id and overwrite each other's reports)."""
+    ids: dict[str, str] = {}
+    taken: set[str] = set()
     for d in dirs:
-        base = os.path.basename(d.rstrip("/")) or "submission"
-        n = seen.get(base, 0)
-        seen[base] = n + 1
-        names[d] = base if n == 0 else f"{base}_{n}"
-    return names
+        base = name = os.path.basename(d.rstrip("/")) or "submission"
+        n = 0
+        while name in taken:
+            n += 1
+            name = f"{base}_{n}"
+        taken.add(name)
+        ids[d] = name
+    return ids
 
 
 def _sheet_paths(d: str) -> dict[str, str]:
@@ -49,114 +68,110 @@ def _sheet_paths(d: str) -> dict[str, str]:
             for p in sorted(glob.glob(os.path.join(d, "*.csv")))}
 
 
-def _report(result, sheets, meta, sub_dir: str, out: str | None) -> bool:
-    """Quality gate + summary + notification + sinks for one result.
-    Returns the quality-gate verdict."""
-    from nci_seronet_proc_data_validator_spark.sinks import (
-        build_notification_payload,
-        write_error_reports,
-        write_findings_parquet,
-    )
-    from nci_seronet_proc_data_validator_spark.submission import (
-        check_submission_quality,
-    )
-    header_rows = result.column_finding_rows
-    ok, why = check_submission_quality(sheets, len(header_rows),
-                                       str(meta["cbc_id"]))
-    if not ok:
-        print(f"QUALITY GATE FAILED: {why}")
-        for mt, sheet, col, msg in header_rows[:50]:
-            print(f"  {mt} {sheet} {col}: {msg}")
-        # the reference still notifies and records job status on gate
-        # failure (nci:76-80) — we print and stop before per-sheet reports
-
-    # one summary action; the notification text prints it per sheet
-    summary_rows = [r.asDict() for r in result.summary.collect()]
-    payload = build_notification_payload(
-        summary_rows, os.path.basename(sub_dir.rstrip("/")))
-    print(payload["blocks"][0]["text"]["text"])
-
-    if out:
-        write_error_reports(result.findings,
-                            os.path.join(out, "Data_Validation_Results"))
-        write_findings_parquet(result.findings,
-                               os.path.join(out, "findings.parquet"))
-        print(f"reports written under {out}")
-    return ok
-
-
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("submission_dirs", nargs="+")
     ap.add_argument("--out", default=None)
-    ap.add_argument("--cbc", action="append", default=[],
+    ap.add_argument("--cbc", action="append", default=[], type=cbc_pair,
                     metavar="NAME=ID", help="CBC name → 2-digit id mapping")
     ap.add_argument("--keep-reference-bugs", action="store_true",
                     help="reproduce the reference's buggy behaviors instead "
                          "of the documented fixes")
     args = ap.parse_args()
 
-    single = len(args.submission_dirs) == 1
-    dirs: dict[str, dict[str, str]] = {}
-    load_failed = False
+    ids = _submission_ids(args.submission_dirs)
+    dirs: dict[str, dict[str, str]] = {}      # submission id → sheets
+    path_of: dict[str, str] = {}
+    rc = 0
     for d in args.submission_dirs:
         sheets = _sheet_paths(d)
         if not sheets:
-            print(f"no CSV sheets found in {d}")
-            if single:
-                return 2
             # per-submission isolation: an empty dir records its own
             # failure and the rest still validate
-            load_failed = True
+            print(f"no CSV sheets found in {d}")
+            rc = 1
             continue
         print(f"{d}: loaded {len(sheets)} sheets: {', '.join(sheets)}")
-        dirs[d] = sheets
+        dirs[ids[d]], path_of[ids[d]] = sheets, d
     if not dirs:
         return 2
 
+    from nci_seronet_proc_data_validator_spark.errors import (
+        FINDING_COLUMNS,
+        SHEET_NAME,
+        SUB_COL,
+        findings_summary,
+        union_findings,
+    )
     from nci_seronet_proc_data_validator_spark.orchestrate import (
         validate_dirs,
     )
     from nci_seronet_proc_data_validator_spark.session import get_spark
+    from nci_seronet_proc_data_validator_spark.sinks import (
+        build_notification_payload,
+        write_error_reports,
+        write_findings_parquet,
+    )
     from nci_seronet_proc_data_validator_spark.sources.catalog import (
         static_expected_columns,
     )
     from nci_seronet_proc_data_validator_spark.sources.icd10 import (
         load_icd10_codes,
     )
+    from nci_seronet_proc_data_validator_spark.submission import (
+        check_submission_quality,
+    )
 
     spark = get_spark("run_submission")
     meta: dict = {}
     groups: list = []
+    frames: list = []
     out = validate_dirs(
-        spark, dirs, cbc_map=dict(kv.split("=", 1) for kv in args.cbc),
+        spark, dirs, cbc_map=dict(args.cbc),
         icd10_codes=load_icd10_codes(spark),
         expected_columns=static_expected_columns(),
         bind_kwargs={"fix_reference_bugs": not args.keep_reference_bugs},
-        meta_out=meta, groups_out=groups)
+        combined_out=frames, meta_out=meta, groups_out=groups)
     sizes = sorted((len(m) for m in groups), reverse=True)
     print(f"{len(groups)} schema group(s), sizes {sizes}")
 
-    # Report serially, in input order (driver-side prints; the findings
-    # checkpoints already ran inside the groups' workers). One dir keeps
-    # the reference's flat layout under --out.
-    rc = 1 if load_failed else 0
-    out_names = _out_names(list(dirs))
-    for d, sheets in dirs.items():
-        oc = out[d]
+    # the run's one findings frame; one summary action for every
+    # submission's notification text
+    findings = union_findings(frames).select(*FINDING_COLUMNS, SUB_COL)
+    summary: dict[str, list] = {}
+    for r in sorted(findings_summary(findings).collect(),
+                    key=lambda r: (r[SUB_COL], r[SHEET_NAME])):
+        summary.setdefault(r[SUB_COL], []).append(r)
+
+    for sid, sheets in dirs.items():
+        d, oc = path_of[sid], out[sid]
         print(f"\n=== {d} ({oc.seconds:.1f}s) ===")
         if oc.error is not None:
-            print(f"FAILED: {type(oc.error).__name__}: {oc.error}")
+            print(f"FAILED: {oc.failure}")
             rc = 1
             continue
-        if meta[d].get("cbc_id") not in (None, "0"):
-            print(f"{d}: submission metadata: {meta[d]}")
-        sub_out = None
-        if args.out:
-            sub_out = (args.out if single
-                       else os.path.join(args.out, out_names[d]))
-        if not _report(oc.result, sheets, meta[d], d, sub_out):
+        if meta[sid].get("cbc_id") not in (None, "0"):
+            print(f"{d}: submission metadata: {meta[sid]}")
+        header_rows = oc.result.column_finding_rows
+        ok, why = check_submission_quality(sheets, len(header_rows),
+                                           str(meta[sid]["cbc_id"]))
+        if not ok:
+            # the reference still notifies on gate failure (nci:76-80);
+            # here the gate sets the exit code and the reports below
+            # are written all the same
+            print(f"QUALITY GATE FAILED: {why}")
+            for mt, sheet, col, msg in header_rows[:50]:
+                print(f"  {mt} {sheet} {col}: {msg}")
             rc = 1
+        payload = build_notification_payload(summary.get(sid, []), sid)
+        print(payload["blocks"][0]["text"]["text"])
+
+    if args.out:
+        write_findings_parquet(findings,
+                               os.path.join(args.out, "findings.parquet"))
+        write_error_reports(findings,
+                            os.path.join(args.out, "Data_Validation_Results"))
+        print(f"reports written under {args.out}")
     return rc
 
 

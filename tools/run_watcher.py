@@ -57,6 +57,8 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from run_submission import cbc_pair  # noqa: E402 — the same NAME=ID parse
+
 
 def _await_drain(q, timeout: int) -> int | None:
     """Wait for the availableNow drain: None once it finished, else the
@@ -95,7 +97,7 @@ def main() -> int:
                          "whose arrival completes a submission")
     ap.add_argument("--out", required=True)
     ap.add_argument("--checkpoint", required=True)
-    ap.add_argument("--cbc", action="append", default=[],
+    ap.add_argument("--cbc", action="append", default=[], type=cbc_pair,
                     metavar="KEY=ID",
                     help="2-digit lab code mapping; the KEY is the "
                          "submission dir name in per-sheet mode, the "
@@ -107,6 +109,7 @@ def main() -> int:
                     help="seconds to wait for the drain to finish")
     args = ap.parse_args()
 
+    from nci_seronet_proc_data_validator_spark.errors import SUB_COL
     from nci_seronet_proc_data_validator_spark.session import get_spark
     from nci_seronet_proc_data_validator_spark.sources.catalog import (
         static_expected_columns,
@@ -129,7 +132,7 @@ def main() -> int:
         print(f"unknown sheet {args.sheet}; catalog has: "
               f"{', '.join(sorted(catalog))}")
         return 2
-    cbc_by_sub = dict(kv.split("=", 1) for kv in args.cbc)
+    cbc_by_sub = dict(args.cbc)
 
     spark = get_spark("run_watcher")
     from nci_seronet_proc_data_validator_spark.sources.icd10 import (
@@ -165,8 +168,8 @@ def main() -> int:
     # epoch is the partition column — this filter prunes to exactly the
     # directories this drain wrote, so re-drains don't overstate counts.
     got = got.filter(F.col("epoch").isin(run_epochs))
-    (got.groupBy("__submission_id", "Message_Type")
-     .count().orderBy("__submission_id", "Message_Type")
+    (got.groupBy(SUB_COL, "Message_Type")
+     .count().orderBy(SUB_COL, "Message_Type")
      .show(100, truncate=False))
     n_err = got.filter(F.col("Message_Type") == "Error").count()
     print(f"drained epoch(s) {sorted(run_epochs)}; findings under "
@@ -180,6 +183,7 @@ def _run_complete(args) -> int:
 
     from pyspark.sql import functions as F
 
+    from nci_seronet_proc_data_validator_spark.errors import SUB_COL
     from nci_seronet_proc_data_validator_spark.session import get_spark
     from nci_seronet_proc_data_validator_spark.sources.catalog import (
         static_expected_columns,
@@ -210,7 +214,7 @@ def _run_complete(args) -> int:
               f"expected-columns catalog — a misspelled name here means "
               f"submissions NEVER complete (known sheets: "
               f"{', '.join(sorted(catalog))})")
-    cbc_map = dict(kv.split("=", 1) for kv in args.cbc)
+    cbc_map = dict(args.cbc)
     spark = get_spark("run_watcher")
     completed: list[str] = []
     failed: dict[str, str] = {}
@@ -218,9 +222,9 @@ def _run_complete(args) -> int:
     def on_complete(results, epoch_id):
         # completion comes from the gate, NOT from counting findings
         # rows — a fully clean submission completes with zero findings.
-        # column_findings (P10 header-vs-catalog) feed the printout the
-        # way the batch CLI's quality gate consumes them; they are not
-        # part of the findings sink there either. The rows are pure
+        # The P10 header-vs-catalog findings feed the printout the way
+        # the batch CLI's quality gate consumes them; they are not part
+        # of the findings sink there either. The rows are pure
         # driver-side set algebra, carried on the result as plain
         # 4-tuples (ValidationResult.column_finding_rows) — no Spark.
         for sub in sorted(results):
@@ -264,10 +268,10 @@ def _run_complete(args) -> int:
         print(f"completed {sorted(set(completed))}; no findings "
               f"(all rows clean)")
         return 0
-    got = got.filter(F.col("__submission_id").isin(
+    got = got.filter(F.col(SUB_COL).isin(
         sorted(set(completed) | set(failed))))
-    (got.groupBy("__submission_id", "Message_Type")
-     .count().orderBy("__submission_id", "Message_Type")
+    (got.groupBy(SUB_COL, "Message_Type")
+     .count().orderBy(SUB_COL, "Message_Type")
      .show(100, truncate=False))
     n_err = got.filter(F.col("Message_Type") == "Error").count()
     print(f"completed {sorted(set(completed))}; findings under "

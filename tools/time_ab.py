@@ -76,7 +76,7 @@ def main() -> int:
     ap.add_argument("--sf", default=os.environ.get(
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     ap.add_argument("--cpus", type=int,
-                    default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+                    help="local[N] (default: get_spark's)")
     args = ap.parse_args()
 
     arms = {}   # label -> {query: fn}
