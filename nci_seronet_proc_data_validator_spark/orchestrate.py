@@ -15,20 +15,24 @@ Three layers, each the only one of its kind:
   driver-side header probe, ``submission.csv`` metadata, the
   order-sensitive :func:`group_by_schema` signature and one pretagged
   multi-file scan per sheet. The batch CLI and the completion watcher
-  both call it, and both sink the one frame it hands them
-  (``combined_out``).
+  both call it and sink the one tagged findings frame it returns
+  (:class:`DirsRun`).
 - :func:`validate_groups` — one compile per schema group, each group on
-  its own worker thread inside the SAME SparkSession with a per-group
+  its own worker thread inside the SAME SparkSession with a per-worker
   FAIR pool (``spark.scheduler.pool``; the session factory enables FAIR
   mode, so a 10-sheet submission cannot starve a 1-sheet one). At most
   ``MAX_PARALLEL`` groups run at once, the way ``maxFilesPerTrigger``
   caps the streaming backlog: memory and retry cost stay sized by the
   bound, not the queue length. A failing group is retried member by
-  member.
+  member. Returns the outcomes and each group's batch frame.
 - :func:`validate_batched_results` / :func:`validate_batched` — THE
   rulebook compile, N >= 1 submissions through one plan
-  (``SubmissionValidator.validate`` is the N=1 call). Its temp views
-  are registered under a per-invocation uuid, so concurrent groups
+  (``SubmissionValidator.validate`` is the N=1 call).
+  :func:`validate_batched` is a context manager: the compiled findings
+  and their cached sheet unions live inside its ``with``, and its exit
+  drops them; :func:`validate_batched_results` runs its checkpoint and
+  A4 in there and returns the results and the batch frame. The temp
+  views are registered under a per-invocation uuid, so concurrent groups
   never touch each other's state; PySpark's pinned-thread mode maps each
   Python thread to its own JVM thread, so the pool-local property
   cannot leak across groups.
@@ -36,12 +40,13 @@ Three layers, each the only one of its kind:
 
 from __future__ import annotations
 
+import contextlib
 import logging
 import threading
 import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
-from typing import Callable
+from typing import Callable, NamedTuple
 
 from pyspark.sql import SparkSession
 
@@ -52,6 +57,7 @@ from nci_seronet_proc_data_validator_spark.errors import (
     empty_findings,
     local_rows_df,
     sql_string_map,
+    union_findings,
 )
 from nci_seronet_proc_data_validator_spark.submission import (
     A4_FAMILIES,
@@ -64,9 +70,9 @@ from nci_seronet_proc_data_validator_spark.submission import (
     parse_submission_metadata_local,
 )
 
-__all__ = ["CBC_COL", "ConcurrentOutcome", "SUB_COL", "group_by_schema",
-           "validate_batched", "validate_batched_results", "validate_dirs",
-           "validate_groups"]
+__all__ = ["CBC_COL", "ConcurrentOutcome", "DirsRun", "SUB_COL",
+           "group_by_schema", "validate_batched", "validate_batched_results",
+           "validate_dirs", "validate_groups"]
 
 
 @dataclass
@@ -84,6 +90,14 @@ class ConcurrentOutcome:
         if self.error is None:
             return None
         return f"{type(self.error).__name__}: {str(self.error)[:300]}"
+
+
+class DirsRun(NamedTuple):
+    """What :func:`validate_dirs` computed for one run of directories."""
+    outcomes: "dict[str, ConcurrentOutcome]"
+    findings: "DataFrame"       # six finding columns + __submission_id
+    meta: "dict[str, dict]"     # parsed submission.csv per id
+    groups: "list[list[str]]"   # the schema groups
 
 
 # Schema groups validated at once: the per-group work is
@@ -213,12 +227,10 @@ def sheet_findings_legs(df: "DataFrame", name: str, columns: "list[str]",
         view, name, bound, codegen_chunk=9, carry_cols=(SUB_COL,))
 
 
+@contextlib.contextmanager
 def validate_batched(spark: SparkSession,
                      subs: "dict[str, dict]",
-                     pretagged: "dict[str, DataFrame] | None" = None,
-                     release_out: "list | None" = None,
-                     clean_out: "dict | None" = None
-                     ) -> "DataFrame":
+                     pretagged: "dict[str, DataFrame] | None" = None):
     """THE rulebook compile: N same-shape submissions (N >= 1) through
     ONE compiled plan — findings for every submission, tagged
     ``__submission_id``, from a single spark.sql statement.
@@ -276,39 +288,20 @@ def validate_batched(spark: SparkSession,
     is read only for its KEYS (its values may be probed column-name
     lists); callers build both structures from the same listing.
 
-    ``clean_out``: optional dict the function fills with its per-sheet
-    CLEANED tagged union frames — the exact frames the findings compiled
-    from (:func:`validate_batched_results`' one-action A4).
+    Yields ``(findings, clean)``: ``findings`` has ``__submission_id`` +
+    the six finding columns, deduplicated per submission with the
+    standard key; ``clean`` maps each sheet name to its CLEANED tagged
+    union, the exact frame the findings compiled from
+    (:func:`validate_batched_results`' one-action A4).
 
     The cleaned unions are persisted for the statement's many
     consumers. They stay cached only while its temp views live, since
-    dropping a view uncaches equal plans (:func:`view_registry`).
-    ``release_out``: optional list the function APPENDS its one release
-    callable to, before anything is persisted; the callable drops the
-    views and unpersists the unions. A caller that passes it runs every
-    action that should read the caches first, then calls the release in
-    a ``finally`` — also when this function raises. Without it the
-    release runs before the function returns, and the returned plan
-    re-reads its sources on every action.
-
-    Returns a DataFrame with ``__submission_id`` + the six finding
-    columns, deduplicated per submission with the standard key.
+    dropping a view uncaches equal plans (:func:`view_registry`). So
+    every action that should read the caches runs inside the ``with``;
+    its exit, also when the body raises, drops the views and then
+    unpersists the unions, and a frame used after it re-reads its
+    sources.
     """
-    releases = [] if release_out is None else release_out
-    try:
-        return _compile_batch(spark, subs, pretagged, releases, clean_out)
-    finally:
-        if release_out is None:
-            for release in releases:
-                release()
-
-
-def _compile_batch(spark: SparkSession, subs: "dict[str, dict]",
-                   pretagged: "dict[str, DataFrame] | None",
-                   release_out: list, clean_out: "dict | None"
-                   ) -> "DataFrame":
-    """The body of :func:`validate_batched`; appends its release to
-    ``release_out`` before the first persist."""
     from pyspark.sql import functions as F
 
     from nci_seronet_proc_data_validator_spark.functions.checks import (
@@ -377,13 +370,6 @@ def _compile_batch(spark: SparkSession, subs: "dict[str, dict]",
 
     clean: dict[str, "DataFrame"] = {}
     reg, drop_views = view_registry(spark)
-
-    def release() -> None:
-        drop_views()
-        for df in clean.values():
-            df.unpersist()
-
-    release_out.append(release)
     if pretagged is not None:
         wanted = next(iter(sheet_sets))
         missing_pre = wanted - set(pretagged)
@@ -413,115 +399,118 @@ def _compile_batch(spark: SparkSession, subs: "dict[str, dict]",
                     by_sheet.setdefault(name, []).append(tag(df, sid))
         tagged_sheets = {name: union_one_schema(name, legs)
                          for name, legs in by_sheet.items()}
-    for name, u in tagged_sheets.items():
-        # Persist: the union is a MULTI-consumer base (findings chunks,
-        # dup-ID leg, Merged_Table projections, submitted-id views,
-        # the caller's A4) — unpersisted, every consumer re-parses N
-        # submissions' multiLine CSVs from text and recomputes the
-        # per-file row index (2 shuffles + a broadcast each). One parse
-        # fills the cache and consumers scan columnar blocks, as long
-        # as the views live: `release` drops them only after the
-        # caller's last action.
-        clean[name] = cleanup_sheet(
-            u, fix_bugs, carry_cols=(SUB_COL, CBC_COL)).persist()
-    if clean_out is not None:
-        clean_out.update(clean)
+    try:
+        for name, u in tagged_sheets.items():
+            # Persist: the union is a MULTI-consumer base (findings chunks,
+            # dup-ID leg, Merged_Table projections, submitted-id views,
+            # the caller's A4) — unpersisted, every consumer re-parses N
+            # submissions' multiLine CSVs from text and recomputes the
+            # per-file row index (2 shuffles + a broadcast each). One parse
+            # fills the cache and consumers scan columnar blocks, as long
+            # as the views live: the `finally` drops them only after the
+            # caller's last action inside the `with`.
+            clean[name] = cleanup_sheet(
+                u, fix_bugs, carry_cols=(SUB_COL, CBC_COL)).persist()
 
-    # -- per-submission-keyed Merged_Tables (tags carried: the submission
-    # id keys every join and spine group; the CBC tag rides along for the
-    # cross-sheet scope CASEs — functionally dependent on the id, so
-    # keying on both never changes multiplicity). DB fallbacks first,
-    # submitted sheets override them.
-    def fallback(name: str):
-        frames = [kw["db_merged_tables"][name] for kw in subs.values()]
-        if len(frames) > 1 and all(f is frames[0] for f in frames):
-            # ONE fallback shared by the batch (the watcher's
-            # bind_kwargs): tag it once against a local (sid, cbc)
-            # relation — a constant-size plan, not an N-leg union of
-            # the same scan
-            ids = local_rows_df(frames[0].sparkSession,
-                                sorted(cbc_by_sub.items()),
-                                f"{SUB_COL} string, {CBC_COL} string")
-            return frames[0].crossJoin(F.broadcast(ids))
-        return union_one_schema(name, [
-            tag(kw["db_merged_tables"][name], sid)
-            for sid, kw in subs.items()])
+        # -- per-submission-keyed Merged_Tables (tags carried: the submission
+        # id keys every join and spine group; the CBC tag rides along for the
+        # cross-sheet scope CASEs — functionally dependent on the id, so
+        # keying on both never changes multiplicity). DB fallbacks first,
+        # submitted sheets override them.
+        def fallback(name: str):
+            frames = [kw["db_merged_tables"][name] for kw in subs.values()]
+            if len(frames) > 1 and all(f is frames[0] for f in frames):
+                # ONE fallback shared by the batch (the watcher's
+                # bind_kwargs): tag it once against a local (sid, cbc)
+                # relation — a constant-size plan, not an N-leg union of
+                # the same scan
+                ids = local_rows_df(frames[0].sparkSession,
+                                    sorted(cbc_by_sub.items()),
+                                    f"{SUB_COL} string, {CBC_COL} string")
+                return frames[0].crossJoin(F.broadcast(ids))
+            return union_one_schema(name, [
+                tag(kw["db_merged_tables"][name], sid)
+                for sid, kw in subs.items()])
 
-    merged: dict[str, "DataFrame"] = {
-        name: fallback(name)
-        for name in sorted(next(iter(db_sets)) - set(clean))}
-    for name, df in clean.items():
-        mc = [c for c in MERGE_COLS.get(name, []) if c in df.columns]
-        if mc:
-            merged[name] = df.select(SUB_COL, CBC_COL, *mc)
+        merged: dict[str, "DataFrame"] = {
+            name: fallback(name)
+            for name in sorted(next(iter(db_sets)) - set(clean))}
+        for name, df in clean.items():
+            mc = [c for c in MERGE_COLS.get(name, []) if c in df.columns]
+            if mc:
+                merged[name] = df.select(SUB_COL, CBC_COL, *mc)
 
-    sql_legs: list[str] = []
-    for name, df in clean.items():
-        original_cols = [c for c in df.columns
-                         if c not in ("row_index", SUB_COL, CBC_COL)]
-        enriched, drop_list = merge_tables(name, df, merged,
-                                           extra_keys=(SUB_COL,))
-        bound, legs = sheet_findings_legs(
-            enriched, name, original_cols, cbc, reg, icd10,
-            drop_list=drop_list, today=today, fix_reference_bugs=fix_bugs)
-        sql_legs.extend(legs)
-        if bound.dup_id_columns:
-            # over the CLEAN sheet, not the enriched one: enrichment
-            # joins must not influence dup multiplicity
-            dview = reg(df)
-            sql_legs.extend(
-                dup_id_findings_sql(dview, name, c, group_cols=(SUB_COL,))
-                for c in bound.dup_id_columns)
+        sql_legs: list[str] = []
+        for name, df in clean.items():
+            original_cols = [c for c in df.columns
+                             if c not in ("row_index", SUB_COL, CBC_COL)]
+            enriched, drop_list = merge_tables(name, df, merged,
+                                               extra_keys=(SUB_COL,))
+            bound, legs = sheet_findings_legs(
+                enriched, name, original_cols, cbc, reg, icd10,
+                drop_list=drop_list, today=today, fix_reference_bugs=fix_bugs)
+            sql_legs.extend(legs)
+            if bound.dup_id_columns:
+                # over the CLEAN sheet, not the enriched one: enrichment
+                # joins must not influence dup multiplicity
+                dview = reg(df)
+                sql_legs.extend(
+                    dup_id_findings_sql(dview, name, c, group_cols=(SUB_COL,))
+                    for c in bound.dup_id_columns)
 
-    # -- cross-sheet, the spine GROUP BY includes the tag
-    def submitted_view(family: tuple, key: str) -> str | None:
-        """Union of IDs present in SUBMITTED sheets (get_submitted_ids
-        intent, File_Submission_Object.py:356-367 — reference bug
-        §2.9.2: its merge result was discarded; we apply the
-        restriction)."""
-        if not fix_bugs:
-            return None
-        parts = [df.select(SUB_COL, CBC_COL, key)
-                 for name, df in clean.items()
-                 if name in family and key in df.columns]
-        if not parts:
-            return None
-        u = parts[0]
-        for p_ in parts[1:]:
-            u = u.unionByName(p_)
-        return reg(u.distinct())
+        # -- cross-sheet, the spine GROUP BY includes the tag
+        def submitted_view(family: tuple, key: str) -> str | None:
+            """Union of IDs present in SUBMITTED sheets (get_submitted_ids
+            intent, File_Submission_Object.py:356-367 — reference bug
+            §2.9.2: its merge result was discarded; we apply the
+            restriction)."""
+            if not fix_bugs:
+                return None
+            parts = [df.select(SUB_COL, CBC_COL, key)
+                     for name, df in clean.items()
+                     if name in family and key in df.columns]
+            if not parts:
+                return None
+            u = parts[0]
+            for p_ in parts[1:]:
+                u = u.unionByName(p_)
+            return reg(u.distinct())
 
-    part_family = ("prior_clinical_test.csv", "demographic.csv",
-                   "biospecimen.csv", "confirmatory_clinical_test.csv")
-    part_srcs = {n: merged.get(n) for n in part_family}
-    if sum(v is not None for v in part_srcs.values()) >= 2:
-        pviews = {n: (reg(src) if src is not None else None)
-                  for n, src in part_srcs.items()}
-        sv = submitted_view(part_family, "Research_Participant_ID")
-        sql_legs.append(participant_cross_sql(
-            pviews, cbc, sv, group_col=SUB_COL, extra_keys=(CBC_COL,)))
-    bio_family = ("biospecimen.csv", "aliquot.csv", "equipment.csv",
-                  "reagent.csv", "consumable.csv")
-    bio_srcs = {n: merged.get(n) for n in bio_family}
-    if sum(v is not None for v in bio_srcs.values()) >= 2:
-        bviews = {n: (reg(src) if src is not None else None)
-                  for n, src in bio_srcs.items()}
-        type_sources = {n for n, src in bio_srcs.items()
-                        if src is not None
-                        and "Biospecimen_Type" in src.columns}
-        sv = submitted_view(bio_family, "Biospecimen_ID")
-        sql_legs.append(biospecimen_cross_sql(
-            bviews, cbc, sv, type_sources=type_sources,
-            group_col=SUB_COL, extra_keys=(CBC_COL,)))
+        part_family = ("prior_clinical_test.csv", "demographic.csv",
+                       "biospecimen.csv", "confirmatory_clinical_test.csv")
+        part_srcs = {n: merged.get(n) for n in part_family}
+        if sum(v is not None for v in part_srcs.values()) >= 2:
+            pviews = {n: (reg(src) if src is not None else None)
+                      for n, src in part_srcs.items()}
+            sv = submitted_view(part_family, "Research_Participant_ID")
+            sql_legs.append(participant_cross_sql(
+                pviews, cbc, sv, group_col=SUB_COL, extra_keys=(CBC_COL,)))
+        bio_family = ("biospecimen.csv", "aliquot.csv", "equipment.csv",
+                      "reagent.csv", "consumable.csv")
+        bio_srcs = {n: merged.get(n) for n in bio_family}
+        if sum(v is not None for v in bio_srcs.values()) >= 2:
+            bviews = {n: (reg(src) if src is not None else None)
+                      for n, src in bio_srcs.items()}
+            type_sources = {n for n, src in bio_srcs.items()
+                            if src is not None
+                            and "Biospecimen_Type" in src.columns}
+            sv = submitted_view(bio_family, "Biospecimen_ID")
+            sql_legs.append(biospecimen_cross_sql(
+                bviews, cbc, sv, type_sources=type_sources,
+                group_col=SUB_COL, extra_keys=(CBC_COL,)))
 
-    findings = spark.sql(" UNION ALL ".join(sql_legs)) if sql_legs else None
-    if findings is None:
-        out = empty_findings(spark).withColumn(SUB_COL, F.lit(""))
-        return out.select(SUB_COL, *FINDING_COLUMNS)
-    # per-submission dedup: the standard key, tag prepended
-    return findings.dropDuplicates(
-        [SUB_COL, "CSV_Sheet_Name", "Row_Index", "Column_Name",
-         "Column_Value"])
+        if not sql_legs:
+            empty = empty_findings(spark).withColumn(SUB_COL, F.lit(""))
+            yield empty.select(SUB_COL, *FINDING_COLUMNS), clean
+        else:
+            # per-submission dedup: the standard key, tag prepended
+            yield spark.sql(" UNION ALL ".join(sql_legs)).dropDuplicates(
+                [SUB_COL, "CSV_Sheet_Name", "Row_Index", "Column_Name",
+                 "Column_Value"]), clean
+    finally:
+        drop_views()
+        for df in clean.values():
+            df.unpersist()
 
 
 def _a4_counts(tagged: "DataFrame", clean: "dict[str, DataFrame]",
@@ -575,15 +564,13 @@ def _a4_counts(tagged: "DataFrame", clean: "dict[str, DataFrame]",
 def validate_batched_results(
         spark: SparkSession,
         subs: "dict[str, dict]",
-        pretagged: "dict[str, DataFrame] | None" = None,
-        combined_out: "list | None" = None
-        ) -> "dict[str, ValidationResult]":
+        pretagged: "dict[str, DataFrame] | None" = None
+        ) -> "tuple[dict[str, ValidationResult], DataFrame]":
     """Full validation of a batch: ONE compiled plan for the findings
     (:func:`validate_batched`), then the per-submission driver tail —
     count reconciliation (A4), header/column findings (P10), and the
-    sheet × severity summary — returning :class:`ValidationResult`
-    objects keyed like ``subs``. ``SubmissionValidator.validate`` is
-    this call with one submission.
+    sheet × severity summary. ``SubmissionValidator.validate`` is this
+    call with one submission.
 
     The tail COMPARISONS are per-submission by contract (the declared
     counts come from each submission's own ``submission.csv``, and the
@@ -609,15 +596,16 @@ def validate_batched_results(
     they must be real DataFrames (the tag+union compile reads their
     rows).
 
-    ``combined_out``: optional list that receives ONE DataFrame holding
-    the whole batch's row findings (the six columns + the
+    Returns ``(results, batch_findings)``: a :class:`ValidationResult`
+    per submission, keyed like ``subs``, and ONE DataFrame holding the
+    whole batch's row findings (the six columns + the
     ``__submission_id`` tag): the checkpointed batch frame unioned with
     a single local relation of every A4 row. A consumer that sinks the
-    batch as a whole (the completion watcher) must use THIS frame, not
+    batch as a whole (the directory drivers) must use THIS frame, not
     a re-union of the per-submission ``findings`` slices — N slices of
     the same checkpoint execute as N× its partitions in one job
     (measured: 96 tiny submissions → ~3000 tasks, 57 s, for 576 rows),
-    while the combined frame is one scan + one local leg.
+    while the batch frame is one scan + one local leg.
     """
     from pyspark.sql import functions as F
 
@@ -631,18 +619,11 @@ def validate_batched_results(
     # leaf scan (executor-resident blocks freed by the ContextCleaner) —
     # findings are error-bounded, not data-scale. The per-sheet union
     # persists (data-scale) have exactly two consumers, the checkpoint
-    # and the A4 action; the one release (views, then caches) runs right
-    # after them, and on every exit path.
-    releases: list = []
-    clean_tagged: dict = {}
-    try:
-        tagged = validate_batched(
-            spark, subs, pretagged=pretagged, release_out=releases,
-            clean_out=clean_tagged).localCheckpoint(eager=True)
-        a4_counts = _a4_counts(tagged, clean_tagged, subs)
-    finally:
-        for release in releases:
-            release()
+    # and the A4 action, so both run inside the `with`, whose exit
+    # releases the views and then the caches.
+    with validate_batched(spark, subs, pretagged) as (findings, clean):
+        tagged = findings.localCheckpoint(eager=True)
+        a4_counts = _a4_counts(tagged, clean, subs)
 
     # A4 comparisons (reference bug §2.9.6: the emitted Column_Value
     # reads an attribute that was never set; we emit the declared count,
@@ -672,10 +653,6 @@ def validate_batched_results(
              for row in rows],
             f"{SUB_COL} string, {A4_ROW_SCHEMA}")
 
-    if combined_out is not None:
-        combined_out.append(tagged if a4_all is None
-                            else tagged.unionByName(a4_all))
-
     def findings_of(sid: str):
         f = tagged.filter(F.col(SUB_COL) == sid).drop(SUB_COL)
         if sid in a4_rows:
@@ -683,19 +660,20 @@ def validate_batched_results(
                 a4_all.filter(F.col(SUB_COL) == sid).drop(SUB_COL))
         return f
 
-    return {sid: ValidationResult(
-                findings_thunk=lambda sid=sid: findings_of(sid),
-                column_finding_rows=column_finding_rows(
-                    kw["sheets"], kw.get("expected_columns")))
-            for sid, kw in subs.items()}
+    results = {sid: ValidationResult(
+                   findings_thunk=lambda sid=sid: findings_of(sid),
+                   column_finding_rows=column_finding_rows(
+                       kw["sheets"], kw.get("expected_columns")))
+               for sid, kw in subs.items()}
+    return results, (tagged if a4_all is None
+                     else tagged.unionByName(a4_all))
 
 
 def validate_groups(spark: SparkSession,
                     subs: "dict[str, dict]",
                     groups: "list[list[str]]",
-                    pretag: "Callable[[list[str]], dict] | None" = None,
-                    combined_out: "list | None" = None
-                    ) -> "dict[str, ConcurrentOutcome]":
+                    pretag: "Callable[[list[str]], dict] | None" = None
+                    ) -> "tuple[dict[str, ConcurrentOutcome], list]":
     """Validate ``subs`` one schema group at a time, each group through
     ONE :func:`validate_batched_results` compile, with per-submission
     failure isolation — the one multi-submission driver, under
@@ -704,21 +682,21 @@ def validate_groups(spark: SparkSession,
     ``groups`` partitions the submission ids by the caller's schema
     signature (a group of one is an ordinary N=1 batch). ``pretag``
     optionally builds a group's ``pretagged`` multi-file scans from its
-    member ids; ``combined_out`` collects each successful group's
-    combined batch frame. The compile executes inside the group's
-    worker (the findings checkpoint and the A4 action), so concurrent
-    groups' jobs overlap; each member's findings are then filters of
-    that checkpoint plus driver-built A4 rows.
+    member ids. The compile executes inside the group's worker (the
+    findings checkpoint and the A4 action), so concurrent groups' jobs
+    overlap; each member's findings are then filters of that checkpoint
+    plus driver-built A4 rows.
 
     Each group runs on its own worker thread (the calling thread when
     there is only one group), at most ``MAX_PARALLEL`` at once. Its jobs
-    carry a job description and a FAIR pool named after the worker
-    thread, so concurrent groups land in distinct pools while the pool
-    tree stays bounded at ``MAX_PARALLEL`` + 1 (Spark creates an
-    undeclared pool on first use and never removes it; a pool per
-    submission would grow a resident watcher's tree forever). Both are
-    THREAD-LOCAL properties (pinned thread mode) restored when the
-    worker ends, so nothing later on the same thread inherits them.
+    carry a job description. On a worker thread they also run in a FAIR
+    pool named after the thread, so concurrent groups land in distinct
+    pools while the pool tree stays bounded at ``MAX_PARALLEL`` (Spark
+    creates an undeclared pool on first use and never removes it; a pool
+    per submission would grow a resident watcher's tree forever); a lone
+    group keeps the caller's pool. Both are THREAD-LOCAL properties
+    (pinned thread mode) restored when the group ends, so nothing later
+    on the same thread inherits them.
 
     Isolation (the reference's "Moving onto Next Submitted File" loop,
     nci-seronet-data-validator.py:70,109-111): when a group's compile
@@ -726,55 +704,60 @@ def validate_groups(spark: SparkSession,
     genuinely poisoned member fails — without it one malformed
     submission would fail every submission sharing its schema.
 
-    Returns a :class:`ConcurrentOutcome` per id: ``result`` set, or
-    ``error`` set and ``result`` None; ``seconds`` is the wall time of
-    the member's group worker.
+    Returns ``(outcomes, frames)``: a :class:`ConcurrentOutcome` per id
+    (``result`` set, or ``error`` set and ``result`` None; ``seconds`` is
+    the wall time of the member's group worker) and the batch findings
+    frame of each compile that succeeded
+    (:func:`validate_batched_results`).
     """
     sc = spark.sparkContext
 
-    def isolated(members: list) -> dict:
+    def isolated(members: list, pooled: bool = False) -> tuple[dict, list]:
         t0 = time.time()
-        prev = [(k, sc.getLocalProperty(k))
-                for k in ("spark.scheduler.pool", "spark.job.description")]
-        sc.setLocalProperty("spark.scheduler.pool",
-                            threading.current_thread().name)
-        sc.setJobDescription(
+        props = {"spark.job.description": (
             f"validate submission {members[0]}" if len(members) == 1
-            else f"validate {len(members)} submissions ({members[0]}, ...)")
+            else f"validate {len(members)} submissions ({members[0]}, ...)")}
+        if pooled:
+            props["spark.scheduler.pool"] = threading.current_thread().name
+        prev = {k: sc.getLocalProperty(k) for k in props}
+        for k, v in props.items():
+            sc.setLocalProperty(k, v)
         try:
             try:
-                frames: list = []
-                res = validate_batched_results(
+                res, frame = validate_batched_results(
                     spark, {s: subs[s] for s in members},
-                    pretagged=pretag(members) if pretag else None,
-                    combined_out=frames)
+                    pretagged=pretag(members) if pretag else None)
             except Exception as exc:  # noqa: BLE001 — isolate per submission
                 if len(members) == 1:
                     return {members[0]: ConcurrentOutcome(
-                        result=None, seconds=time.time() - t0, error=exc)}
+                        result=None, seconds=time.time() - t0,
+                        error=exc)}, []
                 log.warning("batched group compile failed (%s); retrying "
                             "each of %s as its own group", exc, members)
-                out: dict = {}
+                outcomes: dict = {}
+                frames: list = []
                 for sid in members:
-                    out.update(isolated([sid]))
-                return out
-            if combined_out is not None:
-                combined_out.extend(frames)
+                    o, f = isolated([sid])
+                    outcomes.update(o)
+                    frames.extend(f)
+                return outcomes, frames
             seconds = time.time() - t0
             return {sid: ConcurrentOutcome(result=res[sid], seconds=seconds)
-                    for sid in members}
+                    for sid in members}, [frame]
         finally:
-            for k, v in prev:
+            for k, v in prev.items():
                 sc.setLocalProperty(k, v)
 
     if len(groups) == 1:
         return isolated(groups[0])
-    out: dict = {}
+    outcomes: dict = {}
+    frames: list = []
     with ThreadPoolExecutor(max_workers=min(MAX_PARALLEL, len(groups)),
                             thread_name_prefix="submission") as pool:
-        for o in pool.map(isolated, groups):
-            out.update(o)
-    return out
+        for o, f in pool.map(lambda m: isolated(m, pooled=True), groups):
+            outcomes.update(o)
+            frames.extend(f)
+    return outcomes, frames
 
 
 def group_by_schema(dirs: "dict[str, dict[str, str]]",
@@ -805,11 +788,7 @@ def validate_dirs(spark: SparkSession,
                   cbc_map: dict,
                   icd10_codes: "DataFrame | None" = None,
                   expected_columns: "dict | None" = None,
-                  bind_kwargs: "dict | None" = None,
-                  combined_out: "list | None" = None,
-                  meta_out: "dict | None" = None,
-                  groups_out: "list | None" = None
-                  ) -> "dict[str, ConcurrentOutcome]":
+                  bind_kwargs: "dict | None" = None) -> DirsRun:
     """Validate submission DIRECTORIES — the one driver from sheet files
     to findings, shared by the batch CLI and the completion watcher.
     ``dirs`` maps a submission id to ``{sheet file name: path}``:
@@ -828,27 +807,29 @@ def validate_dirs(spark: SparkSession,
     5. :func:`validate_groups` compiles each group once.
 
     ``icd10_codes``, ``expected_columns`` and ``bind_kwargs`` (``today``,
-    ``fix_reference_bugs``, ``db_merged_tables``) are shared by all.
-    ``meta_out`` receives each submission's parsed metadata,
-    ``groups_out`` the schema groups. A submission whose kwargs cannot
-    be built (unreadable sheet, malformed metadata) or whose group
-    member retry failed gets its own ``ConcurrentOutcome(error=...)``;
-    the rest still validate. Readers are looked up on their module at
-    call time, so wrappers around them (benchmark spans, test spies) see
-    every read.
+    ``fix_reference_bugs``, ``db_merged_tables``) are shared by all. A
+    submission whose kwargs cannot be built (unreadable sheet, malformed
+    metadata) or whose group member retry failed gets its own
+    ``ConcurrentOutcome(error=...)``; the rest still validate. Readers
+    are looked up on their module at call time, so wrappers around them
+    (benchmark spans, test spies) see every read.
 
-    ``combined_out`` receives the run's findings, tagged
-    ``__submission_id``, to union and sink whole: each group's batch
-    frame plus one local frame with a durable failure row per failed
-    submission (``CSV_Sheet_Name='__submission__'``, ``Row_Index=
+    Returns a :class:`DirsRun`: the outcome, parsed metadata and schema
+    group of each submission, and the run's ONE findings frame to sink
+    whole (``FINDING_COLUMNS`` + ``__submission_id``): each group's
+    batch frame plus one local frame with a durable failure row per
+    failed submission (``CSV_Sheet_Name='__submission__'``, ``Row_Index=
     ROW_VALIDATION_FAILURE``, ``Column_Name='__validation_failure__'``,
     ``ConcurrentOutcome.failure``; the jobs-table "File_Error" twin).
+    ``dirs`` must not be empty.
     """
     from nci_seronet_proc_data_validator_spark.sources.readers import (
         csv_header,
         read_sheet_csv,
         read_sheet_csv_tagged,
     )
+    if not dirs:
+        raise ValueError("no submission directories")
     cbc = {str(k): str(v) for k, v in (cbc_map or {}).items()}
     headers = {pth: csv_header(pth)
                for sheets in dirs.values() for pth in sheets.values()}
@@ -872,21 +853,17 @@ def validate_dirs(spark: SparkSession,
             **(bind_kwargs or {})), meta
 
     subs: dict[str, dict] = {}
+    meta: dict[str, dict] = {}
     out: dict[str, ConcurrentOutcome] = {}
     for sid, sheets in dirs.items():
         t0 = time.time()
         try:
-            subs[sid], meta = kwargs_for(sheets)
+            subs[sid], meta[sid] = kwargs_for(sheets)
         except Exception as exc:  # noqa: BLE001 — isolate per submission
             out[sid] = ConcurrentOutcome(result=None,
                                          seconds=time.time() - t0,
                                          error=exc)
-            continue
-        if meta_out is not None:
-            meta_out[sid] = meta
     groups = group_by_schema({s: dirs[s] for s in subs}, headers)
-    if groups_out is not None:
-        groups_out.extend(groups)
 
     def pretag(members: list) -> dict:
         first = dirs[members[0]]
@@ -895,15 +872,18 @@ def validate_dirs(spark: SparkSession,
                     columns=headers[first[n]])
                 for n in sorted(first) if n not in SKIP_VALIDATION}
 
+    frames: list = []
     if groups:
-        out.update(validate_groups(spark, subs, groups, pretag=pretag,
-                                   combined_out=combined_out))
+        outcomes, frames = validate_groups(spark, subs, groups,
+                                           pretag=pretag)
+        out.update(outcomes)
     failed = sorted((sid, oc.failure) for sid, oc in out.items()
                     if oc.error is not None)
-    if failed and combined_out is not None:
-        combined_out.append(local_rows_df(
+    if failed:
+        frames.append(local_rows_df(
             spark,
             [(sid, "Error", "__submission__", ROW_VALIDATION_FAILURE,
               "__validation_failure__", None, msg) for sid, msg in failed],
             f"{SUB_COL} string, {A4_ROW_SCHEMA}"))
-    return out
+    findings = union_findings(frames).select(*FINDING_COLUMNS, SUB_COL)
+    return DirsRun(out, findings, meta, groups)

@@ -403,15 +403,17 @@ def _batched_arm(spark: SparkSession, sf_dir: str, null_v) -> DataFrame:
                          raw.filter(f"row_index % 2 = {par}")},
               "cbc_id": cbc, "today": FIXED_TODAY}
         for sid, cbc, par in _BATCHED_SUBS}
-    findings = validate_batched(spark, subs)
-    return findings.select(
-        F.lit("batched").alias("arm"),
-        F.col(ROW_INDEX).alias("k"),
-        F.concat_ws("|", F.col(SUB_COL), F.col(SHEET_NAME),
-                    F.col(COLUMN_NAME), F.col(COLUMN_VALUE)).alias("s1"),
-        F.concat_ws("|", F.col(MESSAGE_TYPE),
-                    F.col(ERROR_MESSAGE)).alias("s2"),
-        null_v.alias("v"))
+    # the caller runs the returned plan after the `with` has released the
+    # sheet caches, so it reads its sources, as this arm always has
+    with validate_batched(spark, subs) as (findings, _clean):
+        return findings.select(
+            F.lit("batched").alias("arm"),
+            F.col(ROW_INDEX).alias("k"),
+            F.concat_ws("|", F.col(SUB_COL), F.col(SHEET_NAME),
+                        F.col(COLUMN_NAME), F.col(COLUMN_VALUE)).alias("s1"),
+            F.concat_ws("|", F.col(MESSAGE_TYPE),
+                        F.col(ERROR_MESSAGE)).alias("s2"),
+            null_v.alias("v"))
 
 
 def _batched_sub_oracle_parts() -> "list[tuple[str, str, str, object]]":

@@ -112,8 +112,11 @@ def validate_stream_multi(spark: SparkSession, input_glob: str,
 
     The production continuous shape: submissions from different CBCs
     land as ``<root>/<submission>/<sheet>`` and ONE resident query
-    validates them all — the streaming twin of batched mode
-    (``orchestrate.validate_batched``), sharing its machinery:
+    validates them all — the per-column streaming twin of the batch
+    compile (``orchestrate.validate_batched``). It shares that compile's
+    per-sheet machinery, not its sheet caches: each micro-batch
+    registers its own views and drops them once its statement is built.
+    In detail:
 
     - ``input_glob`` (e.g. ``<root>/*/demographic.csv``) makes every
       submission's file part of the SAME file source — N submissions
@@ -338,7 +341,6 @@ def validate_stream_submissions(spark: SparkSession, root_dir: str,
     import os
     import re
 
-    from nci_seronet_proc_data_validator_spark.errors import union_findings
     from nci_seronet_proc_data_validator_spark.plans.advisor import (
         warn_nonsplittable_csv)
 
@@ -422,23 +424,20 @@ def validate_stream_submissions(spark: SparkSession, root_dir: str,
 
         findings = None
         if complete_now:
-            from nci_seronet_proc_data_validator_spark.errors import (
-                FINDING_COLUMNS, SUB_COL)
             from nci_seronet_proc_data_validator_spark.orchestrate import (
                 validate_dirs)
 
-            # sink each group's WHOLE batch frame, not N re-union slices
-            # of the same checkpoint (N slices execute as N x its
-            # partitions in one job — the dominant burst cost). A failed
-            # submission is one durable row of the same frame,
-            # replay-idempotent like every other row of the epoch.
-            parts: list = []
-            outcomes = validate_dirs(
+            # sink the run's ONE frame of whole group batches, not N
+            # re-union slices of the same checkpoint (N slices execute
+            # as N x its partitions in one job — the dominant burst
+            # cost). A failed submission is one durable row of the same
+            # frame, replay-idempotent like every other row of the epoch.
+            outcomes, findings, _meta, _groups = validate_dirs(
                 sess, {sub: have[sub] for sub in complete_now},
                 cbc_map=_resolve(cbc_map) or {},
                 icd10_codes=_resolve(icd10_codes),
                 expected_columns=expected_columns,
-                bind_kwargs=bind_kwargs, combined_out=parts)
+                bind_kwargs=bind_kwargs)
             results = {sub: oc.result
                        for sub, oc in sorted(outcomes.items())
                        if oc.error is None}
@@ -448,8 +447,6 @@ def validate_stream_submissions(spark: SparkSession, root_dir: str,
             for sub, msg in failures.items():
                 log.warning("validation FAILED for submission %s: %s; "
                             "moving on", sub, msg)
-            findings = union_findings(parts).select(*FINDING_COLUMNS,
-                                                    SUB_COL)
             _epoch_sink(findings, epoch_id, findings_dir)
             if complete_cb is not None and results:
                 complete_cb(results, epoch_id)

@@ -6,10 +6,12 @@ check → Merged_Tables → per-sheet enrichment + rules → cross-sheet
 integrity → count reconciliation → summary. The reference mutates a
 ``Submission_Object`` sheet-by-sheet, cell-by-cell; here the whole
 rulebook compiles into ONE findings plan, assembled in exactly one place
-(``orchestrate.validate_batched``) — a single submission is the N=1
-batch. This module holds the per-submission driver logic around that
-plan: metadata parsing, the quality gate, the P10 header comparison and
-the A4 count-mismatch rows.
+(``orchestrate.validate_batched``, a context manager that releases the
+plan's cached sheets on exit) — a single submission is the N=1 batch of
+``orchestrate.validate_batched_results``, which returns the results and
+the batch frame. This module holds the per-submission driver logic
+around that plan: metadata parsing, the quality gate, the P10 header
+comparison and the A4 count-mismatch rows.
 """
 
 from __future__ import annotations
@@ -263,5 +265,6 @@ class SubmissionValidator:
 
         kwargs = {f.name: getattr(self, f.name) for f in fields(self)
                   if f.name != "spark"}
-        return orchestrate.validate_batched_results(
-            self.spark, {"submission": kwargs})["submission"]
+        results, _batch = orchestrate.validate_batched_results(
+            self.spark, {"submission": kwargs})
+        return results["submission"]

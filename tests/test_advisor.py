@@ -271,9 +271,9 @@ def test_validate_plan_sweeps_clean_with_row_index_allowance(spark,
     assert advise_plan(res.findings, warn=False) == []
     from nci_seronet_proc_data_validator_spark.orchestrate import (
         validate_batched)
-    compiled = validate_batched(spark, {"s": kw})
-    compiled.count()
-    assert advise_plan(compiled, warn=False) == []
+    with validate_batched(spark, {"s": kw}) as (compiled, _clean):
+        compiled.count()
+        assert advise_plan(compiled, warn=False) == []
 
 
 def test_batched_results_findings_are_lineage_shallow(spark, tmp_path):
@@ -298,7 +298,8 @@ def test_batched_results_findings_are_lineage_shallow(spark, tmp_path):
                            read_sheet_csv(spark, str(d / "demographic.csv"))},
                 "cbc_id": "14", "today": datetime.date(2026, 1, 1)}
 
-    res = validate_batched_results(spark, {f"s{i}": mk(i) for i in range(4)})
+    res, _batch = validate_batched_results(
+        spark, {f"s{i}": mk(i) for i in range(4)})
     for sid, r in res.items():
         plan = r.findings._jdf.queryExecution().analyzed().toString()  # noqa: SLF001
         n = plan.count("\n")

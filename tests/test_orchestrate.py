@@ -4,7 +4,6 @@ identical to the serial loop (the reference's processing model,
 nci-seronet-data-validator.py:69), with per-submission error isolation."""
 
 import datetime
-import threading
 
 import pytest
 
@@ -176,8 +175,9 @@ def test_concurrent_matches_serial(spark, tmp_path):
     assert all(len(v) > 0 for v in serial.values())
     assert len({tuple(v) for v in serial.values()}) == 3
 
-    out = validate_groups(spark, subs, [[sid] for sid in subs])
+    out, frames = validate_groups(spark, subs, [[sid] for sid in subs])
     assert set(out) == set(subs)
+    assert len(frames) == len(subs)
     for sid, oc in out.items():
         assert oc.error is None, (sid, oc.error)
         assert _finding_set(oc.result.findings) == serial[sid], sid
@@ -189,8 +189,9 @@ def test_concurrent_isolates_failures(spark, tmp_path):
     good = _load(spark, tmp_path, 7)
     bad = {"sheets": {"demographic.csv": None}, "cbc_id": "14",
            "today": TODAY}    # None sheet -> raises inside the worker
-    out = validate_groups(spark, {"ok": good, "broken": bad},
-                          [["ok"], ["broken"]])
+    out, frames = validate_groups(spark, {"ok": good, "broken": bad},
+                                  [["ok"], ["broken"]])
+    assert len(frames) == 1     # a failed group has no batch frame
     assert out["broken"].error is not None
     assert out["broken"].result is None
     assert out["ok"].error is None
@@ -199,12 +200,12 @@ def test_concurrent_isolates_failures(spark, tmp_path):
 
 def test_scheduler_pool_set_during_and_cleared_after(spark, tmp_path,
                                                      monkeypatch):
-    """The worker's finally clears the pool tag — later jobs on the SAME
-    thread must not inherit a submission's FAIR pool. Local properties
-    are per-thread (pinned mode), so the clear is only observable on the
-    thread that set it: a single group's worker runs on the calling
-    thread — drive it on THIS thread, assert the pool is tagged while
-    the group compile runs its jobs and cleared afterwards."""
+    """A lone group runs on the calling thread and keeps the caller's
+    FAIR pool: a pool named after the calling thread is one no
+    allocation file declares, and Spark logs a WARN for it. Its job
+    description is set while the group compile runs its jobs and
+    restored afterwards, also on the error path. Local properties are
+    per-thread (pinned mode), so drive the group on THIS thread."""
     from nci_seronet_proc_data_validator_spark import orchestrate
 
     sc = spark.sparkContext
@@ -212,32 +213,42 @@ def test_scheduler_pool_set_during_and_cleared_after(spark, tmp_path,
     compile_group = orchestrate.validate_batched_results
 
     def recording(spark, subs, **kwargs):
-        seen.append(sc.getLocalProperty("spark.scheduler.pool"))
+        seen.append((sc.getLocalProperty("spark.scheduler.pool"),
+                     sc.getLocalProperty("spark.job.description")))
         return compile_group(spark, subs, **kwargs)
 
     monkeypatch.setattr(orchestrate, "validate_batched_results", recording)
-    oc = validate_groups(spark, {"s0": _load(spark, tmp_path, 0)},
-                         [["s0"]])["s0"]
-    assert oc.error is None
-    assert _n_errors(oc.result.findings) > 0
-    assert seen == [threading.current_thread().name]
-    assert sc.getLocalProperty("spark.scheduler.pool") in (None, "")
-    # the clear also runs on the error path
-    oc2 = validate_groups(
-        spark, {"bad": {"sheets": {"demographic.csv": None},
-                        "cbc_id": "14"}},
-        [["bad"]])["bad"]
-    assert oc2.error is not None
-    assert seen[1] == threading.current_thread().name
-    assert sc.getLocalProperty("spark.scheduler.pool") in (None, "")
+    sc.setLocalProperty("spark.scheduler.pool", "caller")
+    sc.setJobDescription("caller job")
+    try:
+        oc = validate_groups(spark, {"s0": _load(spark, tmp_path, 0)},
+                             [["s0"]])[0]["s0"]
+        assert oc.error is None
+        assert _n_errors(oc.result.findings) > 0
+        assert seen == [("caller", "validate submission s0")]
+        assert sc.getLocalProperty("spark.scheduler.pool") == "caller"
+        assert sc.getLocalProperty("spark.job.description") == "caller job"
+        # the restore also runs on the error path
+        oc2 = validate_groups(
+            spark, {"bad": {"sheets": {"demographic.csv": None},
+                            "cbc_id": "14"}},
+            [["bad"]])[0]["bad"]
+        assert oc2.error is not None
+        assert seen[1] == ("caller", "validate submission bad")
+        assert sc.getLocalProperty("spark.scheduler.pool") == "caller"
+        assert sc.getLocalProperty("spark.job.description") == "caller job"
+    finally:
+        sc.setLocalProperty("spark.scheduler.pool", None)
+        sc.setLocalProperty("spark.job.description", None)
 
 
 def test_scheduler_pools_bounded_by_worker_slots(spark, monkeypatch):
     """Spark creates an undeclared FAIR pool on first use and never
     removes it, so the pool must be named after the worker slot, not
-    the submission: 10 groups on 4 workers plus one group on the calling
-    thread use at most 5 pools. No Spark job runs — the group compile
-    is stubbed to record the pool its thread carries."""
+    the submission: 10 groups on 4 workers use at most 4 pools, and one
+    group on the calling thread keeps the caller's. No Spark job runs —
+    the group compile is stubbed to record the pool its thread
+    carries."""
     from nci_seronet_proc_data_validator_spark import orchestrate
 
     sc = spark.sparkContext
@@ -245,11 +256,11 @@ def test_scheduler_pools_bounded_by_worker_slots(spark, monkeypatch):
 
     def stub(spark, subs, **kwargs):
         pools.append(sc.getLocalProperty("spark.scheduler.pool"))
-        return {s: None for s in subs}
+        return {s: None for s in subs}, None
 
     monkeypatch.setattr(orchestrate, "validate_batched_results", stub)
     subs = {f"s{i}": {} for i in range(10)}
-    out = validate_groups(spark, subs, [[s] for s in subs])
+    out, _frames = validate_groups(spark, subs, [[s] for s in subs])
     assert sorted(out) == sorted(subs)
     assert all(oc.error is None for oc in out.values())
     sc.setLocalProperty("spark.scheduler.pool", "outer")
@@ -259,7 +270,8 @@ def test_scheduler_pools_bounded_by_worker_slots(spark, monkeypatch):
     finally:
         sc.setLocalProperty("spark.scheduler.pool", None)
     assert len(pools) == 11
-    assert len(set(pools)) <= 5, sorted(set(pools))
+    assert pools[-1] == "outer"
+    assert len(set(pools[:-1])) <= 4, sorted(set(pools))
 
 
 def test_concurrent_job_status_upserts_one_db(spark, tmp_path):
@@ -287,7 +299,7 @@ def test_concurrent_job_status_upserts_one_db(spark, tmp_path):
         return sqlite3.connect(db, timeout=30)
 
     def validate_and_upsert(sid, kw):
-        oc = validate_groups(spark, {sid: kw}, [[sid]])[sid]
+        oc = validate_groups(spark, {sid: kw}, [[sid]])[0][sid]
         if oc.error is None:
             upsert_job_status(
                 job_status_rows(oc.result.findings, sid, f"day-{sid}"),
@@ -394,9 +406,9 @@ def test_batched_matches_serial(spark, tmp_path):
         for sid, kw in subs.items()}
     assert len({tuple(v) for v in serial.values()}) == 3
 
-    batched = validate_batched(spark, subs).cache()
-    got = {sid: _finding_set(batched.filter(
-        batched[SUB_COL] == sid).drop(SUB_COL)) for sid in subs}
+    with validate_batched(spark, subs) as (batched, _clean):
+        got = {sid: _finding_set(batched.filter(
+            batched[SUB_COL] == sid).drop(SUB_COL)) for sid in subs}
     assert got == serial
 
     # one more input: an all-blank ',,' demographic row kept by
@@ -414,8 +426,8 @@ def test_batched_matches_serial(spark, tmp_path):
              "cbc_id": "14", "today": TODAY, "fix_reference_bugs": False}
     want = _finding_set(SubmissionValidator(spark, **blank).validate()
                         .findings)
-    assert _finding_set(validate_batched(spark, {"blank": blank})
-                        .drop(SUB_COL)) == want
+    with validate_batched(spark, {"blank": blank}) as (batched, _clean):
+        assert _finding_set(batched.drop(SUB_COL)) == want
     assert sorted(r[3] for r in want
                   if r[2] == 3 and r[5].startswith("Missing Values")) == [
         "Age", "Race", "Research_Participant_ID"]
@@ -425,7 +437,8 @@ def test_batched_matches_serial(spark, tmp_path):
     bad = dict(subs)
     bad["sub9"] = {**subs["sub0"], "today": TODAY.replace(year=2027)}
     with pytest.raises(ValueError, match="shared"):
-        validate_batched(spark, bad)
+        with validate_batched(spark, bad):
+            pass
     # identical sheet-name sets are enforced (r12, ADVICE: the family
     # gates and enrichment parents are computed over the batch union)
     lopsided = dict(subs)
@@ -433,7 +446,8 @@ def test_batched_matches_serial(spark, tmp_path):
                         "sheets": {"demographic.csv":
                                    subs["sub0"]["sheets"]["demographic.csv"]}}
     with pytest.raises(ValueError, match="sheet-name set"):
-        validate_batched(spark, lopsided)
+        with validate_batched(spark, lopsided):
+            pass
 
 
 def test_batched_mixed_cbc_and_shared_ids(spark, tmp_path):
@@ -495,9 +509,9 @@ def test_batched_mixed_cbc_and_shared_ids(spark, tmp_path):
     assert any(r[3] == "Research_Participant_ID" and r[4] == "14_777777"
                for r in serial["A"])
 
-    batched = validate_batched(spark, subs).cache()
-    got = {sid: _finding_set(batched.filter(
-        batched[SUB_COL] == sid).drop(SUB_COL)) for sid in subs}
+    with validate_batched(spark, subs) as (batched, _clean):
+        got = {sid: _finding_set(batched.filter(
+            batched[SUB_COL] == sid).drop(SUB_COL)) for sid in subs}
     assert got == serial
 
 
@@ -624,15 +638,16 @@ def test_batched_db_merged_tables_matches_serial(spark, tmp_path):
         .findings)
     assert serial["sub0"] != no_db
 
-    batched = validate_batched(spark, subs).cache()
-    got = {sid: _finding_set(batched.filter(
-        batched[SUB_COL] == sid).drop(SUB_COL)) for sid in subs}
+    with validate_batched(spark, subs) as (batched, _clean):
+        got = {sid: _finding_set(batched.filter(
+            batched[SUB_COL] == sid).drop(SUB_COL)) for sid in subs}
     assert got == serial
 
     lopsided = {"a": subs["sub0"],
                 "b": {**subs["sub1"], "db_merged_tables": {}}}
     with pytest.raises(ValueError, match="db_merged_tables"):
-        validate_batched(spark, lopsided)
+        with validate_batched(spark, lopsided):
+            pass
 
 
 def test_batched_pretagged_matches_serial(spark, tmp_path):
@@ -662,9 +677,9 @@ def test_batched_pretagged_matches_serial(spark, tmp_path):
             spark, {sid: str(tmp_path / sid / n) for sid in subs},
             SUB_COL)
         for n in names}
-    out = validate_batched(spark, subs, pretagged=pretagged).cache()
-    got = {sid: _finding_set(out.filter(
-        out[SUB_COL] == sid).drop(SUB_COL)) for sid in subs}
+    with validate_batched(spark, subs, pretagged) as (out, _clean):
+        got = {sid: _finding_set(out.filter(
+            out[SUB_COL] == sid).drop(SUB_COL)) for sid in subs}
     assert got == serial
     # the scan shape is ONE datasource per sheet name (plus its tiny
     # bases self-join side) — not one scan node per submission
@@ -703,9 +718,11 @@ def test_batched_results_free_data_scale_caches(spark, tmp_path,
     pin them until GC. The call must leave the cache manager EMPTY —
     the checkpointed findings live as RDD blocks outside it — and no
     statement view behind, also when the compile raises after its
-    persists (here: the checkpoint)."""
+    persists (here: the checkpoint). The compile's one way out, the exit
+    of a plain ``with validate_batched(...)``, releases the same way,
+    also when the body of the ``with`` raises."""
     from nci_seronet_proc_data_validator_spark.orchestrate import (
-        validate_batched_results)
+        validate_batched, validate_batched_results)
 
     def batched_views() -> list:
         return [t.name for db in (None, "global_temp")
@@ -714,12 +731,28 @@ def test_batched_results_free_data_scale_caches(spark, tmp_path,
 
     spark.catalog.clearCache()
     subs = {f"sub{i}": _load(spark, tmp_path, i) for i in range(3)}
-    results = validate_batched_results(spark, subs)
+    def released() -> bool:
+        return (spark._jsparkSession.sharedState().cacheManager()  # noqa: SLF001
+                .isEmpty() and batched_views() == [])
+
+    results, batch = validate_batched_results(spark, subs)
     for sid, r in results.items():
         assert r.findings.count() > 0, sid
         r.release()
-    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()  # noqa: SLF001
-    assert batched_views() == []
+    assert batch.count() == sum(r.findings.count()
+                                for r in results.values())
+    assert released()
+
+    with validate_batched(spark, subs) as (findings, clean):
+        assert sorted(clean) == sorted(subs["sub0"]["sheets"])
+        assert findings.count() > 0
+        assert not released()       # the caches live inside the `with`
+    assert released()
+    with pytest.raises(RuntimeError, match="body failed"):
+        with validate_batched(spark, subs) as (findings, _clean):
+            findings.count()
+            raise RuntimeError("body failed")
+    assert released()
 
     def failing_checkpoint(self, *a, **k):
         raise RuntimeError("checkpoint failed")
@@ -728,8 +761,7 @@ def test_batched_results_free_data_scale_caches(spark, tmp_path,
                         failing_checkpoint)
     with pytest.raises(RuntimeError, match="checkpoint failed"):
         validate_batched_results(spark, subs)
-    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()  # noqa: SLF001
-    assert batched_views() == []
+    assert released()
 
 
 def test_validate_stream_multi_mixed_cbc(spark, tmp_path):

@@ -541,19 +541,21 @@ def test_batched_build_py4j_budget(spark, tmp_path):
 
     subs = {f"s{i}": mk(i) for i in range(8)}
     one = {"s0": subs["s0"]}
-    validate_batched(spark, one)            # warm bind + SQL-render caches
 
-    def roundtrips(fn) -> int:
+    def roundtrips(batch) -> int:
+        """py4j round-trips of building the plan and releasing it."""
         pr = cProfile.Profile()
         pr.enable()
-        fn()
+        with validate_batched(spark, batch):
+            pass
         pr.disable()
         stats = pstats.Stats(pr)
         return sum(nc for (f, _l, n), (nc, *_r) in stats.stats.items()
                    if n == "send_command" and "java_gateway" in f)
 
-    n1 = roundtrips(lambda: validate_batched(spark, one))
-    n8 = roundtrips(lambda: validate_batched(spark, subs))
+    roundtrips(one)                         # warm bind + SQL-render caches
+    n1 = roundtrips(one)
+    n8 = roundtrips(subs)
     assert 0 < n1 < 800, f"1-sub batched build used {n1} round-trips"
     assert n8 < 2.2 * n1, (f"8-sub batched build used {n8} round-trips "
                            f"vs {n1} for 1 sub — per-submission driver "
@@ -634,7 +636,7 @@ def test_batched_compile_reads_its_sheet_caches(spark, tmp_path,
     monkeypatch.setattr(cls, "collect", collect_hook)
     for label, run in (
             ("3 pretagged", lambda: validate_batched_results(
-                spark, subs, pretagged=pretagged)),
+                spark, subs, pretagged=pretagged)[0]),
             ("N=1 validate()", lambda: {"s0": SubmissionValidator(
                 spark, **subs["s0"]).validate()})):
         persisted.clear()

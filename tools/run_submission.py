@@ -97,11 +97,9 @@ def main() -> int:
         return 2
 
     from nci_seronet_proc_data_validator_spark.errors import (
-        FINDING_COLUMNS,
         SHEET_NAME,
         SUB_COL,
         findings_summary,
-        union_findings,
     )
     from nci_seronet_proc_data_validator_spark.orchestrate import (
         validate_dirs,
@@ -123,21 +121,16 @@ def main() -> int:
     )
 
     spark = get_spark("run_submission")
-    meta: dict = {}
-    groups: list = []
-    frames: list = []
-    out = validate_dirs(
+    out, findings, meta, groups = validate_dirs(
         spark, dirs, cbc_map=dict(args.cbc),
         icd10_codes=load_icd10_codes(spark),
         expected_columns=static_expected_columns(),
-        bind_kwargs={"fix_reference_bugs": not args.keep_reference_bugs},
-        combined_out=frames, meta_out=meta, groups_out=groups)
+        bind_kwargs={"fix_reference_bugs": not args.keep_reference_bugs})
     sizes = sorted((len(m) for m in groups), reverse=True)
     print(f"{len(groups)} schema group(s), sizes {sizes}")
 
-    # the run's one findings frame; one summary action for every
+    # one summary action over the run's one findings frame for every
     # submission's notification text
-    findings = union_findings(frames).select(*FINDING_COLUMNS, SUB_COL)
     summary: dict[str, list] = {}
     for r in sorted(findings_summary(findings).collect(),
                     key=lambda r: (r[SUB_COL], r[SHEET_NAME])):

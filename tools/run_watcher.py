@@ -83,6 +83,36 @@ def _await_drain(q, timeout: int) -> int | None:
     return None
 
 
+def _print_summary(spark, path: str, col: str, keep: list
+                   ) -> "tuple[int, int] | None":
+    """Print the submission x sheet Errors/Warnings table of the
+    findings sink at ``path``, over the rows whose ``col`` is in
+    ``keep``, from ONE collect. Returns the (rows, errors) totals of
+    that table, or None when the sink holds no files to read."""
+    from pyspark.errors import AnalysisException
+    from pyspark.sql import functions as F
+
+    from nci_seronet_proc_data_validator_spark.errors import (
+        SHEET_NAME,
+        SUB_COL,
+        findings_summary,
+    )
+    try:
+        got = spark.read.parquet(path)
+    except AnalysisException:
+        # narrowed on purpose: the empty-sink case (no part files to
+        # infer a schema from) is an AnalysisException; a real IO
+        # failure must NOT print "all clean" and exit 0
+        return None
+    rows = sorted(findings_summary(got.filter(F.col(col).isin(keep)))
+                  .collect(), key=lambda r: (r[SUB_COL], r[SHEET_NAME]))
+    for r in rows:
+        print(f"  {r[SUB_COL]}  {r[SHEET_NAME]}: {r['Errors']} errors, "
+              f"{r['Warnings']} warnings")
+    errors = sum(r["Errors"] for r in rows)
+    return errors + sum(r["Warnings"] for r in rows), errors
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("root_dir")
@@ -109,7 +139,6 @@ def main() -> int:
                     help="seconds to wait for the drain to finish")
     args = ap.parse_args()
 
-    from nci_seronet_proc_data_validator_spark.errors import SUB_COL
     from nci_seronet_proc_data_validator_spark.session import get_spark
     from nci_seronet_proc_data_validator_spark.sources.catalog import (
         static_expected_columns,
@@ -151,38 +180,23 @@ def main() -> int:
     rc = _await_drain(q, args.timeout)
     if rc is not None:
         return rc
-    from pyspark.errors import AnalysisException
-    from pyspark.sql import functions as F
-    try:
-        got = spark.read.parquet(args.out)
-    except AnalysisException:
-        # narrowed on purpose: the empty-sink case (no part files to
-        # infer a schema from) is an AnalysisException; a real IO
-        # failure must NOT print "all clean" and exit 0
+    if not run_epochs:
+        print(f"drained: no new files this run (earlier drains' "
+              f"findings, if any, remain under {args.out})")
+        return 0
+    # epoch is the partition column — the filter prunes to exactly the
+    # directories this drain wrote, so re-drains don't overstate counts.
+    totals = _print_summary(spark, args.out, "epoch", run_epochs)
+    if totals is None:
         print("drained: no findings written (no files, or all rows clean)")
         return 0
-    if not run_epochs:
-        print(f"drained: no new files this run; cumulative findings "
-              f"remain under {args.out} ({got.count()} rows)")
-        return 0
-    # epoch is the partition column — this filter prunes to exactly the
-    # directories this drain wrote, so re-drains don't overstate counts.
-    got = got.filter(F.col("epoch").isin(run_epochs))
-    (got.groupBy(SUB_COL, "Message_Type")
-     .count().orderBy(SUB_COL, "Message_Type")
-     .show(100, truncate=False))
-    n_err = got.filter(F.col("Message_Type") == "Error").count()
     print(f"drained epoch(s) {sorted(run_epochs)}; findings under "
-          f"{args.out} ({got.count()} rows this run, {n_err} errors)")
+          f"{args.out} ({totals[0]} rows this run, {totals[1]} errors)")
     return 0
 
 
 def _run_complete(args) -> int:
     """Complete-submission mode body (validate_stream_submissions)."""
-    import os
-
-    from pyspark.sql import functions as F
-
     from nci_seronet_proc_data_validator_spark.errors import SUB_COL
     from nci_seronet_proc_data_validator_spark.session import get_spark
     from nci_seronet_proc_data_validator_spark.sources.catalog import (
@@ -257,26 +271,17 @@ def _run_complete(args) -> int:
         print("drained: no submission completed this run (arrivals "
               "recorded; re-run once the remaining sheets land)")
         return 0
-    from pyspark.errors import AnalysisException
-    try:
-        got = spark.read.parquet(os.path.join(args.out, "findings"))
-    except AnalysisException:
+    findings_dir = os.path.join(args.out, "findings")
+    totals = _print_summary(spark, findings_dir, SUB_COL,
+                            sorted(set(completed) | set(failed)))
+    if totals is None:
         # every completed submission was CLEAN: the epoch-keyed sink
-        # wrote an empty frame (no part files to infer a schema from).
-        # Narrowed on purpose: a real IO failure must NOT print "all
-        # rows clean" and exit 0.
+        # wrote an empty frame (no part files to infer a schema from)
         print(f"completed {sorted(set(completed))}; no findings "
               f"(all rows clean)")
         return 0
-    got = got.filter(F.col(SUB_COL).isin(
-        sorted(set(completed) | set(failed))))
-    (got.groupBy(SUB_COL, "Message_Type")
-     .count().orderBy(SUB_COL, "Message_Type")
-     .show(100, truncate=False))
-    n_err = got.filter(F.col("Message_Type") == "Error").count()
     print(f"completed {sorted(set(completed))}; findings under "
-          f"{os.path.join(args.out, 'findings')} "
-          f"({got.count()} rows this run, {n_err} errors)")
+          f"{findings_dir} ({totals[0]} rows this run, {totals[1]} errors)")
     if failed:
         print(f"{len(failed)} submission(s) FAILED validation: "
               f"{sorted(failed)} — see the '__submission__' rows above "
