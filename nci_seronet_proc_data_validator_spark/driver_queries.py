@@ -801,15 +801,6 @@ ORDER BY doc_id
 SQL_TEXT_STATS = _sql_text_stats()
 
 
-def q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher-style per-document quality features + composite gate
-    (map-only array algebra; see operators/text_quality.py)."""
-    from nci_seronet_proc_data_validator_spark.operators.text_quality import (
-        quality_features)
-    docs = read_table(spark, sf_dir, "documents")
-    return quality_features(docs).orderBy("doc_id")
-
-
 def q_quality_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The per-document curation profile in ONE result row per doc:
     Gopher-style quality gates (``quality_features``) joined with the
@@ -851,23 +842,6 @@ def q_substr_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # duplicated spans, not one lucky phrase.
     return (substr_dup_pairs(docs, k=20, w=8, min_shared=4, max_df=64)
             .orderBy("id_a", "id_b"))
-
-
-def q_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DSIR-style hashed-bigram importance of every document w.r.t. the
-    English slice (``lang = 'en'`` as the target domain) — the
-    "make the crawl look like the target corpus" data-selection
-    primitive (operators/importance.py). Integer-exact Σ-ratio scoring;
-    two keyed shuffles + one bounded broadcast, corpus-size-independent.
-    """
-    from nci_seronet_proc_data_validator_spark.operators.importance import (
-        hashed_ngram_importance)
-    from nci_seronet_proc_data_validator_spark.operators.dedup import (
-        spread_small_input)
-    docs = spread_small_input(read_table(spark, sf_dir, "documents"))
-    return (hashed_ngram_importance(docs, F.col("lang") == "en",
-                                    n=2, buckets=4096)
-            .orderBy("doc_id"))
 
 
 def q_doc_scoring(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1114,20 +1088,6 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = (temperature_sample(docs, "lang")
          .select(F.lit("temperature").alias("part"), "doc_id", "lang"))
     return s.unionByName(m).unionByName(t)
-
-
-def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup pairs → cluster assignments: MinHash-LSH edges fed through
-    iterative min-label propagation (operators/graph.py); the oracle
-    recomputes the same pipeline with a recursive CTE."""
-    from nci_seronet_proc_data_validator_spark.operators.dedup import (
-        minhash_lsh_pairs)
-    from nci_seronet_proc_data_validator_spark.operators.graph import (
-        connected_components)
-    docs = read_table(spark, sf_dir, "documents")
-    cc = connected_components(minhash_lsh_pairs(docs))
-    return (cc.select(F.col("id").alias("doc_id"), "cluster_id")
-            .orderBy("doc_id"))
 
 
 def q_skew_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1415,21 +1375,6 @@ ORDER BY l.event_id
 """
 
 
-def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN: centroids/queries = the first 16/5 vectors (deterministic
-    stand-ins for a k-means build)."""
-    from nci_seronet_proc_data_validator_spark.operators.similarity import (
-        ivf_topk)
-    emb = read_table(spark, sf_dir, "embeddings")
-    centroids = (emb.filter(F.col("vec_id") < 16)
-                 .select(F.col("vec_id").alias("centroid_id"),
-                         F.col("embedding").alias("ce")))
-    queries_df = (emb.filter(F.col("vec_id") < 5)
-                  .select(F.col("vec_id").alias("query_id"),
-                          F.col("embedding").alias("qe")))
-    return ivf_topk(emb, centroids, queries_df).orderBy("query_id", "rank")
-
-
 # ------------------------------------------ round-2 pipeline operators
 # The synthetic corpus carries no organic PII, so the PII query injects
 # deterministic spans (emails/phones/SSNs/IPs keyed off doc_id) with the
@@ -1550,16 +1495,6 @@ GROUP BY 1 ORDER BY 1
 """
 
 
-def q_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two Lloyd iterations, k=8, over the embeddings table — the
-    centroid-training step for the IVF index, integer-exact on both
-    engines (see operators/kmeans.py)."""
-    from nci_seronet_proc_data_validator_spark.operators.kmeans import (
-        kmeans_fit)
-    emb = read_table(spark, sf_dir, "embeddings")
-    return kmeans_fit(emb, k=8, iters=2)
-
-
 def q_events_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hopping-window rollup (1 h window, 30 min slide) via ``F.window`` —
     the batch twin of the streaming windowed agg. Each event lands in
@@ -1624,22 +1559,6 @@ UNION ALL
 SELECT 'best' AS arm, doc_id, lang FROM ({best.strip()})
 ORDER BY arm, doc_id
 """
-
-
-def q_vocab_topn(spark: SparkSession, sf_dir: str, n: int = 200) -> DataFrame:
-    """Corpus vocabulary: top-N tokens by occurrence count (ties → token
-    asc) with document frequency — the tokenizer-training precursor. One
-    explode → one keyed agg (map-side partial + distinct expansion);
-    top-N is a TakeOrdered, never a full sort materialization."""
-    from nci_seronet_proc_data_validator_spark.operators.dedup import (
-        spread_small_input, tokens)
-    docs = spread_small_input(read_table(spark, sf_dir, "documents"))
-    return (docs.select("doc_id", F.explode(tokens("text")).alias("token"))
-            .groupBy("token")
-            .agg(F.count(F.lit(1)).alias("n_occ"),
-                 F.countDistinct("doc_id").alias("n_docs"))
-            .orderBy(F.col("n_occ").desc(), "token")
-            .limit(n))
 
 
 def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2954,8 +2873,7 @@ def _profile_constraints():
     ]
 
 
-def q_data_profile(spark: SparkSession, sf_dir: str,
-                   approx: bool = False) -> DataFrame:
+def q_data_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deequ-style schema-driven data-quality tier (operators/profiler.py)
     in one tagged union of ``(arm, col_name, metric, value BIGINT)``:
 
@@ -2992,22 +2910,9 @@ def q_data_profile(spark: SparkSession, sf_dir: str,
     orders = read_table(spark, sf_dir, "orders").withColumn(
         "o_orderdate_d", F.to_date("o_orderdate"))
     assert [c for c, _ in orders.dtypes] == [c for c, _ in _PROFILE_DTYPES]
-    # approx=True swaps the FUSED pass's distinct metric for
-    # approx_count_distinct. Do NOT copy it as an unconditional
-    # "production switch": the sf10 A/B measured it SLOWER once the
-    # global profile is scan-bound (SCALING_r09, 56.7 vs 31.3 s) —
-    # production callers should pass approx_distinct="auto" to
-    # fused_quality_pass, which applies the measured decision rule
-    # (profiler.decide_approx_distinct: sketch for grouped/wide, exact
-    # for narrow global). Exact stays the registered default because it
-    # is oracle-checkable. bench key: data_profile_approx
-    # (non-canonical, scale evidence only). Note the anomaly leg keeps
-    # its masked exact distincts in BOTH arms, so this composite's
-    # approx arm measures HLL cost ON TOP of a retained Expand.
     fused = fused_quality_pass(orders, _profile_constraints(),
                                slice_sql="o_orderkey % 2 = 0",
-                               drift_added=("o_orderdate_d",),
-                               approx_distinct=approx)
+                               drift_added=("o_orderdate_d",))
     anom = anomaly_slices_pass(
         orders, [f"o_orderkey % 4 = {j}" for j in range(3)],
         "o_orderkey % 4 = 3", columns=list(_ANOM_COLS), k=3).select(

@@ -49,19 +49,14 @@ def quantize(vec_col: Column) -> Column:
         lambda x: F.round(x.cast("double") * QUANT).cast("long"))
 
 
-def _sqdist(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("long"), lambda acc, v: acc + v)
-
-
 def sqdist_sql(a: str, b: str) -> str:
-    """``_sqdist`` as SQL text. Building the Column form costs ~30 py4j
-    round-trips (each higher-order lambda is its own JVM call); the PQ
-    code/LUT builders instantiate it m·ksub ≈ 100+ times per model, which
-    made driver build — not execution — pq_ann's dominant cost (7.7 s
-    construct vs 0.9 s execute, cProfile r8). Text instantiation is
-    driver-free until one final parse."""
+    """Integer squared distance of two array<long> expressions, as SQL
+    text. Building it as a Column costs ~30 py4j round-trips (each
+    higher-order lambda is its own JVM call); the PQ code/LUT builders
+    instantiate it m·ksub ≈ 100+ times per model, which made driver
+    build — not execution — pq_ann's dominant cost (7.7 s construct vs
+    0.9 s execute, cProfile r8). Text instantiation is driver-free until
+    one final parse."""
     return (f"aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)), "
             f"0L, (acc, v) -> acc + v)")
 

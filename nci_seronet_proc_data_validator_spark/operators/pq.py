@@ -168,9 +168,9 @@ def _quantize_sql(vec: str) -> str:
 def _code_col(qv_sql: str, codebooks: list[list[list[int]]]) -> Column:
     """m argmins over the codebook literals — ONE array<int> expression.
 
-    Instantiated as text: the Column form built m·ksub ``_sqdist`` trees
-    (~30 py4j round-trips each — the dominant pq_ann driver cost, r8
-    cProfile). ``qv_sql`` should reference a STAGED projection column,
+    Instantiated as text: the Column form built m·ksub squared-distance
+    trees (~30 py4j round-trips each — the dominant pq_ann driver cost,
+    r8 cProfile). ``qv_sql`` should reference a STAGED projection column,
     not an inline expression, or each of the m·ksub distance terms
     re-embeds (and without CSE re-evaluates) the whole quantize tree."""
     dsub = len(codebooks[0][0])

@@ -18,12 +18,9 @@ Why these shapes at scale:
   shuffle carries #partitions rows regardless of input size. The only
   scale caveat is ``count(DISTINCT ...)`` over k columns, which Spark
   plans as an Expand (k+1 rows per input row) before the partial agg;
-  at 100 TB use ``fused_quality_pass(approx_distinct=True)``
-  (``approx_count_distinct`` — one pass, mergeable HLL++ state, no
-  Expand; plan pinned by
-  ``test_fused_quality_pass_approx_distinct_no_expand``) or the HLL
-  register sketch (``operators/sketches.py``). The exact form stays the
-  default because it is oracle-checkable bit-for-bit.
+  where that Expand dominates, the HLL register sketch
+  (``operators/sketches.py``) counts distincts in one mergeable pass.
+  The profile stays exact because exact is oracle-checkable bit-for-bit.
 - **verify_constraints** is conditional-count algebra: every
   constraint becomes a ``sum(CASE WHEN violated THEN 1 END)`` column in
   the same single-pass aggregate — adding a constraint adds zero scans
@@ -205,41 +202,6 @@ def _qs(v: str) -> str:
     return _sql_quote(v)
 
 
-#: Global-aggregate Expand-width budget for ``decide_approx_distinct``.
-#: Between the two measured regimes: at ~26 distinct groups a scan-bound
-#: GLOBAL profile still favors exact (SCALING_r09 sf10 A/B: exact 31.3 s
-#: vs approx 56.7 s, n=3 alternating — HLL register maintenance costs
-#: more than the narrow Expand), while by 32 mod-class groups exact
-#: degrades superlinearly (width sweep at 600k rows, one global
-#: aggregate of W count-distincts, recorded in BENCH_NOTES round 8:
-#: exact/approx 2.0x at W=8, 8.6x at W=32, 15x at W=64 — the Expand
-#: evaluates (W+1) output slots per branch, O(W^2) per input row).
-APPROX_DISTINCT_WIDTH_BUDGET = 32
-
-
-def decide_approx_distinct(n_distinct_groups: int,
-                           grouped: bool = False) -> bool:
-    """Measured decision rule for exact ``count(DISTINCT)`` vs
-    ``approx_count_distinct`` in a profile pass (the judge-visible form
-    of the SCALING_r09 crossover):
-
-    - **grouped** aggregation (per-key profiles) → approx, always: the
-      Expand multiplies the SHUFFLE by (width+1) rows per input row, and
-      only mergeable sketch state rolls up across batches.
-    - **global** aggregation → exact while the distinct-group width is
-      within :data:`APPROX_DISTINCT_WIDTH_BUDGET`: the Expand is
-      map-local (no shuffle amplification), exact is oracle-checkable,
-      and the sf10 A/B measured exact FASTER once scan-bound (31.3 vs
-      56.7 s, SCALING_r09 — ~26 HLL updates/row cost more than the
-      narrow Expand). Beyond the budget the Expand's O(W²)-per-row slot
-      evaluation dominates (probe: 8.6x slower at W=32, 15x at W=64) →
-      approx.
-    """
-    if grouped:
-        return True
-    return n_distinct_groups > APPROX_DISTINCT_WIDTH_BUDGET
-
-
 def _masked(tpl: str, slice_sql: str) -> str:
     """Rewrite a metric template to aggregate only rows satisfying
     ``slice_sql``: column references become CASE-masked (aggregates
@@ -253,9 +215,7 @@ def _masked(tpl: str, slice_sql: str) -> str:
 def fused_quality_pass(df: DataFrame, constraints: list[Constraint],
                        slice_sql: str | None = None,
                        drift_added: tuple[str, ...] = (),
-                       columns: list[str] | None = None,
-                       approx_distinct: bool | str = False,
-                       rsd: float = 0.05) -> DataFrame:
+                       columns: list[str] | None = None) -> DataFrame:
     """The whole quality tier in ONE aggregation pass → long form
     ``(arm, col_name, metric, value BIGINT)``:
 
@@ -279,36 +239,10 @@ def fused_quality_pass(df: DataFrame, constraints: list[Constraint],
 
     The one CPU caveat: fusing doubles the DISTINCT-aggregate groups
     (full + slice-masked per column), and every distinct group widens
-    the Expand. ``approx_distinct=True`` forces ``approx_count_distinct``
-    for both twins (no Expand from the PROFILE metrics — ``unique()``
-    constraints keep their exact DISTINCT, and with it a residual
-    Expand, in either arm: a correctness constraint cannot be
-    approximated); ``"auto"`` applies the measured decision rule
-    :func:`decide_approx_distinct` on the pass's own distinct-group
-    width (slice twin and constraint DISTINCTs counted). Exact stays
-    the default because it is oracle-checkable."""
-    base_plan = _metric_tpl_plan(df.dtypes, columns)
-    if approx_distinct == "auto":
-        # Expand width = profile distincts (doubled by the slice twin)
-        # PLUS any exact DISTINCT aggregates the constraints contribute
-        # (e.g. unique()) — those stay exact either way (a correctness
-        # constraint cannot be approximated), so they widen the Expand
-        # in BOTH arms and count toward the calibrated budget. Only
-        # exact COUNT(DISTINCT ...) adds an Expand group; a constraint
-        # spelled approx_count_distinct must not inflate the width.
-        n_distinct = (sum(1 for (_c, n, _s, _d) in base_plan
-                          if n == "distinct")
-                      * (2 if slice_sql else 1)
-                      + sum(1 for k in constraints
-                            if _EXACT_DISTINCT_RE.search(k.spark_sql)))
-        approx_distinct = decide_approx_distinct(n_distinct, grouped=False)
-
-    def _tpl(name: str, s_tpl: str) -> tuple[str, str]:
-        if approx_distinct and name == "distinct":
-            return "distinct_approx", f"approx_count_distinct({{c}}, {rsd})"
-        return name, s_tpl
-    tpl_plan = [(c, *_tpl(name, s_tpl))
-                for (c, name, s_tpl, _) in base_plan]
+    the Expand. The distincts stay exact because exact is
+    oracle-checkable."""
+    tpl_plan = [(c, name, s_tpl) for (c, name, s_tpl, _)
+                in _metric_tpl_plan(df.dtypes, columns)]
     plan = [(c, name, s_tpl.format(c=c)) for (c, name, s_tpl) in tpl_plan]
     # Assemble the whole pass as TWO generated SQL expressions (a
     # struct-of-aggregates and an inline(array(named_struct...))) instead

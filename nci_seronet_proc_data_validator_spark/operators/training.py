@@ -185,7 +185,7 @@ def build_vocab(docs: DataFrame, n: int = 50_000,
     """Frequency-truncated vocabulary with dense integer ids.
 
     Tokens = lowercase [a-z0-9]+ runs (the same regex family as
-    ``vocab_topn``); ids are 1..n by (count desc, token) — deterministic.
+    ``dedup.tokens``); ids are 1..n by (count desc, token) — deterministic.
     The corpus-wide part is one keyed agg + TakeOrdered top-n; id
     assignment then runs on the ALREADY-truncated vocab (bounded by n,
     not the corpus) as a broadcast rank-count self-join — the same

@@ -123,12 +123,13 @@ def test_stratified_sample_pushes_to_scan(spark, sf_dir):
     assert plan.count("Scan parquet") == 1
 
 
-def test_vocab_topn_is_take_ordered(spark, sf_dir):
-    """Top-N vocab must be a TakeOrderedAndProject (bounded per-partition
-    heaps), never a full global sort materialization."""
+def test_vocab_pipeline_top_n_is_take_ordered(spark, sf_dir):
+    """The vocabulary's top-N must be a TakeOrderedAndProject (bounded
+    per-partition heaps), never a full global sort materialization."""
     from nci_seronet_proc_data_validator_spark.driver_queries import (
-        q_vocab_topn)
-    plan = _plan(q_vocab_topn(spark, sf_dir))
+        q_vocab_pipeline)
+    plan = _plan(q_vocab_pipeline(spark, sf_dir))
+    spark.catalog.clearCache()    # the query persists its token counts
     assert "TakeOrderedAndProject" in plan
     assert "BatchEvalPython" not in plan
 

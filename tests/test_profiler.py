@@ -176,120 +176,6 @@ def test_fused_quality_pass_matches_composition(typed_df):
         assert "Join" not in plan
 
 
-def test_fused_quality_pass_approx_distinct_no_expand(spark, sf_dir):
-    """The production switch: approx_distinct=True removes every
-    DISTINCT aggregate (no Expand), keeps all other metrics bit-equal to
-    the exact fused pass, and bounds distinct_approx by HLL++ error."""
-    from nci_seronet_proc_data_validator_spark.operators.profiler import (
-        fused_quality_pass)
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    cons = [not_null("o_orderkey")]
-    exact = {(r["arm"], r["col_name"], r["metric"]): r["value"]
-             for r in fused_quality_pass(
-                 orders, cons, slice_sql="o_orderkey % 2 = 0").collect()}
-    approx_df = fused_quality_pass(orders, cons,
-                                   slice_sql="o_orderkey % 2 = 0",
-                                   approx_distinct=True)
-    plan = approx_df._jdf.queryExecution().executedPlan().toString()
-    assert "Expand" not in plan
-    for (arm, c, m), v in {(r["arm"], r["col_name"], r["metric"]):
-                           r["value"] for r in approx_df.collect()}.items():
-        if "distinct_approx" in m:
-            base = m.replace("distinct_approx", "distinct")
-            if arm == "drift":
-                continue    # drift deltas of approx counts aren't comparable
-            ex = exact[(arm, c, base)]
-            assert abs(v - ex) <= max(3, 0.2 * ex), (arm, c, m)
-        else:
-            assert v == exact[(arm, c, m)], (arm, c, m)
-
-
-def test_decide_approx_distinct_regimes():
-    """Pin the measured decision rule (verdict-r9 ask 3) on both regimes:
-    grouped always sketches; global stays exact up to the width budget
-    (sf10 A/B: exact faster at ~26 groups scan-bound) and switches to
-    approx beyond it (width probe: exact superlinear by W=32)."""
-    from nci_seronet_proc_data_validator_spark.operators.profiler import (
-        APPROX_DISTINCT_WIDTH_BUDGET, decide_approx_distinct)
-    # global / narrow: exact (the sf10-measured regime, ~26 groups)
-    assert decide_approx_distinct(26, grouped=False) is False
-    assert decide_approx_distinct(APPROX_DISTINCT_WIDTH_BUDGET,
-                                  grouped=False) is False
-    # global / wide: approx (probe: 8.6x at W=32+, 15x at W=64)
-    assert decide_approx_distinct(APPROX_DISTINCT_WIDTH_BUDGET + 1,
-                                  grouped=False) is True
-    assert decide_approx_distinct(64, grouped=False) is True
-    # grouped: always approx, at any width
-    assert decide_approx_distinct(2, grouped=True) is True
-
-
-def test_fused_quality_pass_auto_picks_by_width(spark, sf_dir):
-    """approx_distinct='auto' applies decide_approx_distinct to the
-    pass's own distinct-group width (slice twin doubles it): orders'
-    ~10-column profile stays exact (Expand present, oracle-comparable);
-    a wide frame flips to distinct_approx (no Expand)."""
-    from nci_seronet_proc_data_validator_spark.operators.profiler import (
-        fused_quality_pass)
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    narrow = fused_quality_pass(orders, [], approx_distinct="auto")
-    nplan = narrow._jdf.queryExecution().executedPlan().toString()
-    nmetrics = {r["metric"] for r in narrow.collect()}
-    assert "distinct" in nmetrics and "distinct_approx" not in nmetrics
-    assert "Expand" in nplan
-    # 40 string columns -> 40 distinct groups > budget -> approx
-    wide = orders.selectExpr(
-        *[f"CAST(o_orderkey % {3 + i} AS STRING) AS w{i}"
-          for i in range(40)])
-    auto = fused_quality_pass(wide, [], approx_distinct="auto")
-    aplan = auto._jdf.queryExecution().executedPlan().toString()
-    ametrics = {r["metric"] for r in auto.collect()}
-    assert "distinct_approx" in ametrics and "distinct" not in ametrics
-    assert "Expand" not in aplan
-    # slice twin counts toward the width: 17 columns x 2 twins = 34 > 32
-    mid = orders.selectExpr(
-        *[f"CAST(o_orderkey % {3 + i} AS STRING) AS w{i}"
-          for i in range(17)])
-    sliced = fused_quality_pass(mid, [], slice_sql="w0 = '1'",
-                                approx_distinct="auto")
-    smetrics = {r["metric"] for r in sliced.collect()}
-    assert "distinct_approx" in smetrics
-
-
-def test_fused_auto_counts_constraint_distincts(spark, sf_dir):
-    """Review fix: unique() constraints contribute exact DISTINCT groups
-    to the Expand in BOTH arms, so 'auto' must count them toward the
-    width budget: one profiled column + 40 unique() constraints is a
-    wide pass and flips to approx for the profile metric."""
-    from nci_seronet_proc_data_validator_spark.operators.profiler import (
-        fused_quality_pass, unique)
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    wide_cons = [unique("o_orderkey") for _ in range(40)]
-    auto = fused_quality_pass(orders, wide_cons, columns=["o_orderkey"],
-                              approx_distinct="auto")
-    metrics = {r["metric"] for r in auto.collect()}
-    assert "distinct_approx" in metrics and "distinct" not in metrics
-
-
-def test_fused_auto_ignores_approx_spelled_constraints(spark, sf_dir):
-    """r11 (ADVICE): 'auto' counts only exact-DISTINCT syntax toward the
-    Expand width — a constraint spelled approx_count_distinct adds no
-    Expand group and must not flip the decision. 40 approx-spelled
-    constraints + 1 profiled column stays narrow → exact distinct."""
-    from nci_seronet_proc_data_validator_spark.operators.profiler import (
-        Constraint, fused_quality_pass)
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    approx_cons = [
-        Constraint("adx", "o_orderkey",
-                   "approx_count_distinct(o_orderkey) - "
-                   "approx_count_distinct(o_orderkey)",
-                   "0")
-        for _ in range(40)]
-    auto = fused_quality_pass(orders, approx_cons, columns=["o_orderkey"],
-                              approx_distinct="auto")
-    metrics = {r["metric"] for r in auto.collect()}
-    assert "distinct" in metrics and "distinct_approx" not in metrics
-
-
 def test_struct_agg_split_matches_single_aggregate(spark):
     """The r13 split-DISTINCT planning (_struct_agg: algebraic and exact-
     DISTINCT aggregates as two 1-row aggregates stitched by cross join)

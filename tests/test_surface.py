@@ -2,13 +2,16 @@
 package is referenced from code outside the tests — the package itself,
 the top-level scripts (``bench.py``, ``__spark_entry__.py``), ``tools/``
 or ``perfbench/`` — so surface that only tests call cannot grow back.
+Every private top-level function and class is referenced from that code
+or from the tests, so dead helpers cannot pile up either.
 
 A reference is an AST ``Name``, ``Attribute`` or ``import`` node, or a
 string literal equal to the name (``perfbench/run.py`` wraps functions by
 attribute string). Docstrings, comments, ``__all__`` and ``__init__.py``
 re-exports do not count, nor does a name's use inside its own body.
 
-Also pins the driver-contract registry (``driver_queries.QUERIES``)."""
+Also pins the driver-contract registry (``driver_queries.QUERIES``) and
+that ``bench.py`` times registered queries only."""
 
 import ast
 import pathlib
@@ -98,12 +101,15 @@ def _references(path: pathlib.Path) -> list[tuple[str, int]]:
     return out
 
 
-def _unreferenced() -> dict[str, str]:
-    """name -> defining file, for each public top-level def or class
-    with no code reference outside the tests and its own body."""
-    files = [*ROOT.glob("*.py"), *PKG.rglob("*.py"),
-             *(ROOT / "tools").rglob("*.py"),
-             *(ROOT / "perfbench").rglob("*.py")]
+def _unreferenced(public: bool) -> dict[str, str]:
+    """name -> defining file, for each public (or private) top-level def
+    or class with no code reference outside its own body. A public name
+    needs a reference outside the tests; a private one may have it in
+    the tests too."""
+    dirs = [PKG, ROOT / "tools", ROOT / "perfbench"]
+    if not public:
+        dirs.append(ROOT / "tests")
+    files = [*ROOT.glob("*.py"), *(p for d in dirs for p in d.rglob("*.py"))]
     refs: dict[str, list[tuple[pathlib.Path, int]]] = {}
     for p in files:
         for name, line in _references(p):
@@ -112,7 +118,7 @@ def _unreferenced() -> dict[str, str]:
     for path in sorted(PKG.rglob("*.py")):
         for node in ast.parse(path.read_text()).body:
             if (not isinstance(node, (ast.FunctionDef, ast.ClassDef))
-                    or node.name.startswith("_")):
+                    or node.name.startswith("_") == public):
                 continue
             if not any(not (p == path
                             and node.lineno <= i <= node.end_lineno)
@@ -122,7 +128,7 @@ def _unreferenced() -> dict[str, str]:
 
 
 def test_public_package_names_have_a_caller_outside_tests():
-    unused = _unreferenced()
+    unused = _unreferenced(public=True)
     extra = {n: f for n, f in unused.items() if n not in ALLOWED}
     assert not extra, (
         f"public names only tests use (delete them with their tests, or "
@@ -131,9 +137,20 @@ def test_public_package_names_have_a_caller_outside_tests():
     assert set(unused) == set(ALLOWED)
 
 
+def test_private_package_names_are_referenced():
+    unused = _unreferenced(public=False)
+    assert not unused, f"private names nothing references: {unused}"
+
+
 def test_registry_is_the_pinned_contract():
     from nci_seronet_proc_data_validator_spark.driver_queries import QUERIES
     assert list(QUERIES) == REGISTRY
     for name, (fn, sql) in QUERIES.items():
         assert callable(fn), name
         assert isinstance(sql, str) and sql.strip(), name
+
+
+def test_bench_times_registered_queries_only():
+    from bench import BENCH_QUERIES
+    assert BENCH_QUERIES and set(BENCH_QUERIES) <= set(REGISTRY)
+    assert len(set(BENCH_QUERIES)) == len(BENCH_QUERIES)

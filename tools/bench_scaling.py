@@ -36,7 +36,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-HEAVY = ["rulebook_full", "dedup_clusters", "substr_dup_pairs", "pq_ann",
+HEAVY = ["rulebook_full", "dedup_keep_canonical", "substr_dup_pairs", "pq_ann",
          "data_profile", "graph_metrics"]
 
 
@@ -59,9 +59,8 @@ def main() -> int:
     if not args.in_session:
         return _fresh_jvm_sweep(args)
 
-    from bench import BENCH_QUERIES  # noqa: E402  (repo root on path)
-
     from nci_seronet_proc_data_validator_spark import get_spark
+    from nci_seronet_proc_data_validator_spark.driver_queries import QUERIES
 
     spark = get_spark("bench_scaling", cpus=args.cpus)
 
@@ -70,7 +69,7 @@ def main() -> int:
     warm = "/root/testdata/sf0.001"
     for q in args.queries:
         try:
-            BENCH_QUERIES[q](spark, warm).write.format("noop") \
+            QUERIES[q][0](spark, warm).write.format("noop") \
                 .mode("overwrite").save()
         except Exception as e:  # pragma: no cover - warmup best-effort
             print(f"warmup {q}: {e}", file=sys.stderr)
@@ -90,7 +89,7 @@ def main() -> int:
             # the timed samples measure the engine, not the JIT ramp.
             spark.catalog.clearCache()
             try:
-                BENCH_QUERIES[q](spark, d).write.format("noop") \
+                QUERIES[q][0](spark, d).write.format("noop") \
                     .mode("overwrite").save()
             except Exception as e:  # pragma: no cover
                 print(f"volume warmup {q}@{d}: {e}", file=sys.stderr)
@@ -98,7 +97,7 @@ def main() -> int:
             for _ in range(args.n):
                 spark.catalog.clearCache()
                 t0 = time.time()
-                BENCH_QUERIES[q](spark, d).write.format("noop") \
+                QUERIES[q][0](spark, d).write.format("noop") \
                     .mode("overwrite").save()
                 samples.append(time.time() - t0)
             best = round(min(samples), 3)

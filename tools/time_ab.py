@@ -2,7 +2,7 @@
 
     git worktree add /tmp/r7tree <r7-sha>
     python tools/time_ab.py --trees r9=/root/repo r7=/tmp/r7tree \
-        --queries vocab_pipeline events_sliding --n 5
+        --queries vocab_pipeline events_windows --n 5
 
 Verdict-r8 item 1: a round-over-round drift read off two different bench
 runs can't separate code from environment (the documented 1.09-1.24 env
@@ -56,13 +56,7 @@ def _load_tree(path: str, queries: list[str]):
         dq = importlib.import_module(PKG + ".driver_queries")
         assert dq.__file__ and dq.__file__.startswith(path), (
             f"resolved {dq.__file__}, wanted a module under {path}")
-        out = {}
-        for q in queries:
-            fn = getattr(dq, f"q_{q}", None)
-            if fn is None:
-                fn = dq.QUERIES[q][0]
-            out[q] = fn
-        return out, _pkg_modules()
+        return {q: dq.QUERIES[q][0] for q in queries}, _pkg_modules()
     finally:
         sys.path.remove(path)
 
